@@ -188,26 +188,6 @@ def _warm(spark, sf_dir: str) -> None:
     ).save()
 
 
-def _staged_modules() -> list[str]:
-    """Every staged slate module on disk (``llm/staged_rN.py``), oldest
-    first — discovered by glob so run_one/run_staged pick a new slate up
-    the day it lands instead of waiting for a hard-coded list edit."""
-    import glob as _glob
-    import re as _re
-
-    pkg = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "python_nyc_taxi_data_pipeline_spark",
-        "llm",
-    )
-    nums = []
-    for p in _glob.glob(os.path.join(pkg, "staged_r*.py")):
-        m = _re.match(r"^staged_r(\d+)\.py$", os.path.basename(p))
-        if m:
-            nums.append(int(m.group(1)))
-    return [f"r{n}" for n in sorted(nums)]
-
-
 def run_one(name: str, sf_dir: str, repeats: int = 3) -> int:
     """Isolated mode: run ONE query in this (fresh) JVM after warmup.
     Prints a single JSON line with the cold time and min warm time —
@@ -246,38 +226,23 @@ def run_one(name: str, sf_dir: str, repeats: int = 3) -> int:
     if name in qs:
         q = qs[name]
     else:
-        # staged candidates are benchable too (--staged mode). Discover
-        # slates the same way run_staged does — importlib over every
-        # staged_rN that exists — so a new slate module is benchable the
-        # day it lands (a hard-coded tuple here once dropped r11 and made
-        # `--staged r11` record error entries instead of timings).
-        import importlib
+        # Fallback: stress-harness production variants
+        # (tools/scale_stress.py EXTRA_FNS — e.g. the scaled-k SemDeDup
+        # or fixed-query margin-mining shapes), so scale rungs can probe
+        # the adjudicated production shapes with the same fresh-JVM
+        # harness as registered queries.
+        import types
 
-        for cand in _staged_modules():
-            slate = importlib.import_module(
-                f"python_nyc_taxi_data_pipeline_spark.llm.staged_{cand}"
-            ).STAGED
-            if name in slate:
-                q = slate[name]
-                break
-        else:
-            # Last fallback: stress-harness production variants
-            # (tools/scale_stress.py EXTRA_FNS — e.g. the scaled-k
-            # SemDeDup or fixed-query margin-mining shapes), so scale
-            # rungs can probe the adjudicated production shapes with
-            # the same fresh-JVM harness as registered queries.
-            import types
+        tools_dir = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "tools"
+        )
+        if tools_dir not in sys.path:
+            sys.path.insert(0, tools_dir)
+        from scale_stress import EXTRA_FNS
 
-            tools_dir = os.path.join(
-                os.path.dirname(os.path.abspath(__file__)), "tools"
-            )
-            if tools_dir not in sys.path:
-                sys.path.insert(0, tools_dir)
-            from scale_stress import EXTRA_FNS
-
-            if name not in EXTRA_FNS:
-                raise KeyError(name)
-            q = types.SimpleNamespace(fn=EXTRA_FNS[name])
+        if name not in EXTRA_FNS:
+            raise KeyError(name)
+        q = types.SimpleNamespace(fn=EXTRA_FNS[name])
     for _ in range(repeats):
         t0 = time.perf_counter()
         q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -561,11 +526,9 @@ def current_round(repo: str) -> int:
             pass
     newest = {"BENCH": 0, "CORRECTNESS": 0}
     for p in glob.glob(os.path.join(repo, "*_r*.json")):
-        # Only the driver's round artifacts count. BENCH_isolated_rN /
-        # BENCH_staged_rN carry an N that is a snapshot-round or SLATE
-        # number respectively (e.g. BENCH_staged_r10.json was benched
-        # during round 7) — inferring from them mislabels every later
-        # unlabeled run.
+        # Only the driver's round artifacts count. BENCH_isolated_rN
+        # carries a snapshot-round N — inferring from it mislabels
+        # every later unlabeled run.
         m = re.match(r"^(BENCH|CORRECTNESS)_r(\d+)\.json$", os.path.basename(p))
         if m:
             kind, rnd = m.group(1), int(m.group(2))
@@ -579,73 +542,6 @@ def current_round(repo: str) -> int:
     if newest["BENCH"] != newest["CORRECTNESS"]:
         return max(newest.values())
     return newest["BENCH"] + 1
-
-
-def run_staged(sf_dir: str, module_arg: str | None = None) -> int:
-    """Fresh-JVM warm timings for a STAGED slate (default: the first
-    slate not yet promoted into the live registry — self-healing as
-    slates register; ``--staged r9`` pins one), written to
-    BENCH_staged.json (next-to-register slate) / BENCH_staged_rN.json
-    — the per-round cost record the registration decision reads."""
-    import importlib
-    import subprocess
-
-    module = module_arg
-    if module is None:
-        live = set(all_queries())
-        mods = _staged_modules()
-        module = mods[-1]
-        for cand in mods:
-            mod = importlib.import_module(
-                f"python_nyc_taxi_data_pipeline_spark.llm.staged_{cand}"
-            )
-            if any(n not in live for n in mod.STAGED):
-                module = cand
-                break
-
-    STAGED = importlib.import_module(
-        f"python_nyc_taxi_data_pipeline_spark.llm.staged_{module}"
-    ).STAGED
-
-    results = {}
-    for name in STAGED:
-        try:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--one", name],
-                env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-                capture_output=True,
-                text=True,
-                timeout=900,
-            )
-        except subprocess.TimeoutExpired:
-            results[name] = {"error": "timeout after 900s"}
-            print(f"# staged {name}: TIMEOUT", file=sys.stderr)
-            continue
-        last = proc.stdout.strip().splitlines()[-1] if proc.stdout.strip() else "{}"
-        try:
-            results[name] = json.loads(last)
-        except ValueError:
-            results[name] = {"error": proc.stderr[-500:]}
-        print(f"# staged {name}: {results[name]}", file=sys.stderr)
-    repo = os.path.dirname(os.path.abspath(__file__))
-    out = {
-        "metric": "staged_queries_isolated",
-        "unit": "sec",
-        "sf": sf_of(sf_dir),
-        "round": current_round(repo),
-        "queries": results,
-    }
-    # The auto-resolved next-to-register slate owns the canonical
-    # filename; explicitly pinned slates get suffixed snapshots.
-    fname = (
-        "BENCH_staged.json"
-        if module_arg is None
-        else f"BENCH_staged_{module}.json"
-    )
-    with open(os.path.join(repo, fname), "w") as f:
-        f.write(json.dumps(out) + "\n")
-    print(json.dumps({k: v.get("warm_min") for k, v in results.items()}))
-    return 0
 
 
 def _plan_tripwire() -> dict:
@@ -681,8 +577,6 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if len(sys.argv) >= 3 and sys.argv[1] == "--one":
         return run_one(sys.argv[2], sf_dir)
-    if len(sys.argv) >= 2 and sys.argv[1] == "--staged":
-        return run_staged(sf_dir, sys.argv[2] if len(sys.argv) >= 3 else None)
     if len(sys.argv) >= 2 and sys.argv[1] == "--isolated":
         arg = sys.argv[2] if len(sys.argv) >= 3 else "curated"
         if arg == "curated":

@@ -30,6 +30,9 @@ FIXTURE_TABLES = (
     "embeddings",
 )
 
+# Length of every ``embeddings.embedding`` vector in the fixtures.
+EMB_DIM = 64
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -94,8 +97,6 @@ def load_fanned(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     frame with exchanges the probe could trigger execution.
     """
     df = load(spark, sf_dir, name)
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):  # r12 A/B harness toggle
-        return df
     par = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
@@ -110,8 +111,6 @@ def fan_out_if_narrow(scan_df: DataFrame, df: DataFrame) -> DataFrame:
     broadcast joins/filters). Fires only in the small-input regime
     where the added exchange is KB–MB; at production scale the scan is
     already wide and the frame passes through untouched."""
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):  # r12 A/B harness toggle
-        return df
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism
     if scan_df.rdd.getNumPartitions() < par:

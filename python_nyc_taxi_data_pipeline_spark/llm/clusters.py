@@ -16,8 +16,6 @@ driver, not the data, becomes the bottleneck.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -31,9 +29,8 @@ from ..registry import register
 # before round 3), so the early rounds run the plain 2-shuffle pass and
 # the jump arms only for the long-chain tail where its O(log diameter)
 # collapse actually pays (r12 interleaved A/B: always-jump vs never-jump
-# vs gate — numbers in OPTIMIZATION_r12.md; the env override exists for
-# that A/B harness, not for tuning).
-CC_JUMP_AFTER = int(os.environ.get("SPARK_GRAFT_CC_JUMP_AFTER", "3"))
+# vs gate — numbers in OPTIMIZATION_r12.md).
+CC_JUMP_AFTER = 3
 
 
 def connected_components(

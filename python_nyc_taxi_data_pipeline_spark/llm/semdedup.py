@@ -32,7 +32,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import EMB_DIM, load
 from ..registry import register
 from .similarity import _as_double, _dot, _norm
 
@@ -42,6 +42,8 @@ SEMDEDUP_COSINE = 0.42  # ε-ball threshold (fixture p99.9+, cf. NEARDUP_COSINE)
 # cluster size), which bounds the within-cluster quadratic pair scan at
 # O(n · target_cluster_size) regardless of corpus scale.
 SEMDEDUP_TARGET_CLUSTER_SIZE = 64
+# Most seed doubles (k·d) the fixed-seed path folds into one broadcast row.
+SEED_ROW_MAX_DOUBLES = 50_000_000
 
 
 def _semdedup_oracle() -> str:
@@ -144,16 +146,18 @@ def semdedup(
     #
     # LIMIT (tighter than the k-row broadcast relation it replaced):
     # collect_list folds all k seeds into ONE array cell, so k·d seed
-    # doubles must fit a single row value (Spark's ~2 GB single-value
-    # ceiling, and a one-task final agg). At d=64 that is k ≲ 4e6 —
-    # far above any sane SemDeDup seed count (k ≈ n/target_cluster);
-    # the assert makes the ceiling loud instead of an executor OOM,
-    # and past it the IVF contract variant is the right tool.
-    _dim = 64  # fixture embedding dim (staged_r7.EMB_DIM; no cyclic import)
-    assert k * _dim <= 50_000_000, (
-        f"semdedup fixed-seed path folds k*d={k * _dim} doubles into one "
-        "broadcast row (~2GB single-value ceiling); use the IVF variant"
-    )
+    # doubles must fit a single row value, built by a one-task final
+    # agg. The guard stops at SEED_ROW_MAX_DOUBLES (400 MB of doubles,
+    # a 5x margin under Spark's ~2 GB single-value ceiling): at
+    # d = EMB_DIM = 64 that is k ≤ 781,250, far above any sane SemDeDup
+    # seed count (k ≈ n/target_cluster). It raises instead of letting an
+    # executor OOM; past it the IVF contract variant is the right tool.
+    if k * EMB_DIM > SEED_ROW_MAX_DOUBLES:
+        raise ValueError(
+            f"semdedup fixed-seed path would fold k*d={k * EMB_DIM} doubles "
+            f"into one broadcast row (limit {SEED_ROW_MAX_DOUBLES}); use the "
+            "IVF variant"
+        )
     seed_mat = F.broadcast(
         k_seeds.agg(
             F.array_sort(

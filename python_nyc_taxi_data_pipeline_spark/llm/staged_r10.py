@@ -1,14 +1,7 @@
-"""Round-10 registration candidates — implemented and oracle-twinned
-in round 7, REGISTERED in round 10 (after the r8 and r9 slates land).
+"""Domain-reweighting, n-gram and SemDeDup-contract queries, each
+registered with its DuckDB oracle.
 
-Same staging mechanism as ``staged_r8``/``staged_r9``. Rotation math:
-r8 registers 17 (retiring all r4 evidence), r9 registers 10
-(refreshing 40 of the 50 r5 rows); r10 registering this slate of ≤ 10
-makes the r10 window = |slate| new + the 10 remaining r5 rows + the
-oldest r6 rows — staleness stays bounded at two rounds throughout.
-Promotion: ``staged_r10.promote_to_registry(R10_BATCH)``.
-
-The slate (operator families the engine does not cover yet):
+The operators:
 
 - ``docs_doremi_reweight_step``: ONE linearized DoReMi /
   multiplicative-weights domain-reweighting step — per-source excess
@@ -54,76 +47,16 @@ The slate (operator families the engine does not cover yet):
 - ``embeddings_semdedup_hier_contract``: driver-checkable contract
   over the hierarchical (RP-tree) SemDeDup clusterer — the at-scale
   path the 16× rung adjudication names (hier implied exponent 0.236
-  vs flat scaled-k IVF 1.195). PULLED FORWARD from the r16 seed per
-  the r9 VERDICT (directive #2): the production-path answer to the
-  engine's only adjudicated quadratic should not carry the weakest
-  registration evidence. Swapped out in exchange:
-  ``embeddings_quantization_sweep`` now rides the r16 slate.
+  vs flat scaled-k IVF 1.195).
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import QueryFn
-
-
-@dataclass(frozen=True)
-class StagedQuery:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = ()
-
-
-STAGED: dict[str, StagedQuery] = {}
-
-R10_BATCH: tuple[str, ...] = (
-    "docs_doremi_reweight_step",
-    "embeddings_ivf_balance_report",
-    "docs_dedup_graph_degrees",
-    "events_dau_wau_stickiness",
-    "corpus_token_budget_plan",
-    "docs_contamination_attribution",
-    "events_power_user_pareto",
-    "orders_priority_sla",
-    "docs_curriculum_shard_manifest",
-    "embeddings_semdedup_hier_contract",
-)
-
-
-def promote_to_registry(names: list[str]) -> list[str]:
-    """Round-10 registration in one call; ``names`` is REQUIRED —
-    whole-slate promotion must be spelled out (``list(STAGED)``)."""
-    from ..registry import register
-
-    if names is None:
-        raise ValueError(
-            "promote_to_registry requires an explicit name batch; "
-            "spell out whole-slate promotion as list(STAGED)"
-        )
-    promoted = []
-    for name in names:
-        q = STAGED[name]
-        register(name, q.oracle, q.tags)(q.fn)
-        promoted.append(name)
-    return promoted
-
-
-def stage(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Mirror of ``registry.register`` that records into ``STAGED``."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        STAGED[name] = StagedQuery(name, fn, oracle, tags)
-        return fn
-
-    return deco
+from ..registry import register
 
 
 # --------------------------------------------------------------------
@@ -174,7 +107,7 @@ def _doremi_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_doremi_reweight_step",
     oracle=_doremi_oracle(),
     tags=("llm", "mixture", "selection"),
@@ -291,7 +224,7 @@ def _ivf_balance_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "embeddings_ivf_balance_report",
     oracle=_ivf_balance_oracle(),
     tags=("llm", "embedding", "index", "report"),
@@ -367,7 +300,7 @@ def _graph_degrees_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_dedup_graph_degrees",
     oracle=_graph_degrees_oracle(),
     tags=("llm", "dedup", "report"),
@@ -457,7 +390,7 @@ def _stickiness_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_dau_wau_stickiness",
     oracle=_stickiness_oracle(),
     tags=("events", "analytics", "report"),
@@ -569,7 +502,7 @@ def _budget_plan_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "corpus_token_budget_plan",
     oracle=_budget_plan_oracle(),
     tags=("llm", "selection", "mixture"),
@@ -717,7 +650,7 @@ def _attribution_oracle() -> str:
     )
 
 
-@stage(
+@register(
     "docs_contamination_attribution",
     oracle=_attribution_oracle(),
     tags=("llm", "decontamination", "tokenizer"),
@@ -852,7 +785,7 @@ def _power_user_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_power_user_pareto",
     oracle=_power_user_oracle(),
     tags=("events", "analytics", "report"),
@@ -944,7 +877,7 @@ def _sla_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_priority_sla",
     oracle=_sla_oracle(),
     tags=("analytics", "report"),
@@ -1039,7 +972,7 @@ def _curriculum_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_curriculum_shard_manifest",
     oracle=_curriculum_oracle(),
     tags=("llm", "selection", "curriculum"),
@@ -1107,7 +1040,7 @@ def docs_curriculum_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFram
 HIER_KEPT_BAND_PPM = 100000  # kept-rate agreement band vs flat: 10%
 
 
-@stage(
+@register(
     "embeddings_semdedup_hier_contract",
     oracle="""
     SELECT CAST(count(*) AS BIGINT) AS total_points,

@@ -1,12 +1,7 @@
-"""Round-11 registration candidates — seed slate started in round 7.
+"""Multimodal-contract, privacy and distillation queries, each
+registered with its DuckDB oracle.
 
-Same staging mechanism as ``staged_r8``/``staged_r9``/``staged_r10``;
-see those docstrings for the evidence-window rotation math (after the
-r8/r9/r10 registrations the window is comfortably self-sustaining, so
-this slate can grow opportunistically). Promotion:
-``staged_r11.promote_to_registry(R11_BATCH)``.
-
-The slate:
+The operators:
 
 - ``docs_frame_sample_contract``: the video frame-sampling plumbing
   (``multimodal.sample_frames`` — the 1→N mapInPandas demuxer stub),
@@ -72,7 +67,6 @@ The slate:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -80,61 +74,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load
-from ..registry import QueryFn
-
-
-@dataclass(frozen=True)
-class StagedQuery:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = ()
-
-
-STAGED: dict[str, StagedQuery] = {}
-
-R11_BATCH: tuple[str, ...] = (
-    "customer_t_closeness",
-    "docs_audio_window_features",
-    "docs_frame_sample_contract",
-    "docs_minhash_stream_batch_parity",
-    "docs_ngram_novelty",
-    "docs_repetition_profile",
-    "docs_short_frame_contract",
-    "embeddings_ivf_recall_probe_curve",
-    "lineitem_salted_distinct_contract",
-    "retrieval_distillation_labels",
-)
-
-
-def promote_to_registry(names: list[str]) -> list[str]:
-    """Round-11 registration in one call; ``names`` is REQUIRED —
-    whole-slate promotion must be spelled out (``list(STAGED)``)."""
-    from ..registry import register
-
-    if names is None:
-        raise ValueError(
-            "promote_to_registry requires an explicit name batch; "
-            "spell out whole-slate promotion as list(STAGED)"
-        )
-    promoted = []
-    for name in names:
-        q = STAGED[name]
-        register(name, q.oracle, q.tags)(q.fn)
-        promoted.append(name)
-    return promoted
-
-
-def stage(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Mirror of ``registry.register`` that records into ``STAGED``."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        STAGED[name] = StagedQuery(name, fn, oracle, tags)
-        return fn
-
-    return deco
+from ..registry import register
 
 
 # --------------------------------------------------------------------
@@ -167,7 +107,7 @@ def _frame_sample_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_frame_sample_contract",
     oracle=_frame_sample_oracle(),
     tags=("llm", "multimodal", "contract"),
@@ -303,7 +243,7 @@ def _short_frame_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_short_frame_contract",
     oracle=_short_frame_oracle(),
     tags=("llm", "multimodal", "contract"),
@@ -442,7 +382,7 @@ def _audio_window_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_audio_window_features",
     oracle=_audio_window_oracle(),
     tags=("llm", "multimodal", "audio"),
@@ -539,7 +479,7 @@ def _distillation_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "retrieval_distillation_labels",
     oracle=_distillation_oracle(),
     tags=("llm", "retrieval", "distillation"),
@@ -626,7 +566,7 @@ def _stream_parity_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_minhash_stream_batch_parity",
     oracle=_stream_parity_oracle(),
     tags=("llm", "dedup", "lsh", "incremental", "streaming"),
@@ -767,7 +707,7 @@ def _repetition_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_repetition_profile",
     oracle=_repetition_oracle(),
     tags=("llm", "quality", "repetition"),
@@ -884,7 +824,7 @@ def _novelty_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_ngram_novelty",
     oracle=_novelty_oracle(),
     tags=("llm", "dedup", "novelty"),
@@ -1025,7 +965,7 @@ def _ivf_recall_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "embeddings_ivf_recall_probe_curve",
     oracle=_ivf_recall_oracle(),
     tags=("llm", "similarity", "ann", "ivf"),
@@ -1187,7 +1127,7 @@ def embeddings_ivf_recall_probe_curve(
 SALT_BUCKETS = 16
 
 
-@stage(
+@register(
     "lineitem_salted_distinct_contract",
     oracle="""
     SELECT l_returnflag,
@@ -1287,7 +1227,7 @@ def _t_closeness_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "customer_t_closeness",
     oracle=_t_closeness_oracle(),
     tags=("analytics", "privacy", "report"),

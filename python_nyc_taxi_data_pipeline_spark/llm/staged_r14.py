@@ -1,25 +1,8 @@
-"""Round-14 registration candidates — seed slate started in round 8.
+"""Compliance, tokenizer, cross-modal and join-shape contract queries,
+each registered with its DuckDB oracle.
 
-Same staging mechanism as ``staged_r8``–``staged_r13``; the
-evidence-window rotation is self-sustaining, so this slate grows
-opportunistically. Promotion in round 14 via
-``staged_r14.promote_to_registry(R14_BATCH)``.
+The operators:
 
-The seed slate:
-
-- ``embeddings_pq_adc_recall_curve``: the PQ design table — recall@5
-  of asymmetric-distance (ADC) ranking vs the exact-L2 truth for
-  M ∈ {2, 4, 8} subquantizers, over the bounded probe block. The
-  registered PQ trio (codes → distortion → ADC search) prices ONE
-  configuration; this curve prices the M axis, the byte-budget knob
-  an IVF-PQ deployment actually turns (Jégou et al. '11).
-- ``docs_string_pruning_contract``: zone-map file skipping for STRING
-  predicates — per pseudo-file min/max text footers, the
-  ``LIKE 'p%'`` qualification rule (min ≤ p‖'{' AND max ≥ p), and
-  per-prefix counts of qualifying vs truly-matching files. The
-  numeric z-order contract (registered r7) covers numeric zone maps;
-  strings are where engines drift (collation, prefix-increment
-  upper bounds), so the arithmetic gets its own oracle.
 - ``docs_license_propagation_contract``: compliance propagation
   through dedup — each near-dup cluster's kept representative must
   carry the MOST RESTRICTIVE license among its members (max rank
@@ -52,9 +35,6 @@ The seed slate:
   over the registered PageRank's trade edges (Σ min(w_ij, w_ji) /
   Σ w_ij) — hub-and-spoke vs balanced bilateral trade, the
   complementary structural read to PageRank's importance ranking.
-
-Round-11 growth (slate 9 -> 10):
-
 - ``docs_simhash_bit_bias``: fingerprint-health screen — per SimHash
   bit lane, the fraction of documents setting it (a healthy Charikar
   sketch is ≈50% everywhere); runs the production vote pipeline over
@@ -63,460 +43,11 @@ Round-11 growth (slate 9 -> 10):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import QueryFn
-
-
-@dataclass(frozen=True)
-class StagedQuery:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = ()
-
-
-STAGED: dict[str, StagedQuery] = {}
-
-R14_BATCH: tuple[str, ...] = (
-    "docs_bpe_vocab_size_curve",
-    "docs_image_text_alignment_contract",
-    "docs_license_propagation_contract",
-    "docs_simhash_bit_bias",
-    "docs_string_pruning_contract",
-    "embeddings_pq_adc_recall_curve",
-    "events_session_survival_curve",
-    "lineitem_salted_join_contract",
-    "nation_trade_reciprocity",
-    "orders_temporal_dim_join",
-)
-
-
-def promote_to_registry(names: list[str]) -> list[str]:
-    """Round-14 registration in one call; ``names`` is REQUIRED —
-    whole-slate promotion must be spelled out (``list(STAGED)``)."""
-    from ..registry import register
-
-    if names is None:
-        raise ValueError(
-            "promote_to_registry requires an explicit name batch; "
-            "spell out whole-slate promotion as list(STAGED)"
-        )
-    promoted = []
-    for name in names:
-        q = STAGED[name]
-        register(name, q.oracle, q.tags)(q.fn)
-        promoted.append(name)
-    return promoted
-
-
-def stage(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Mirror of ``registry.register`` that records into ``STAGED``."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        STAGED[name] = StagedQuery(name, fn, oracle, tags)
-        return fn
-
-    return deco
-
-
-# --------------------------------------------------------------------
-# PQ-ADC recall curve over the subquantizer-count ladder
-# --------------------------------------------------------------------
-
-PQR_K = 5
-PQR_N_PROBES = 10
-PQR_MS = (2, 4, 8)  # subquantizer counts (d=64 divides all)
-PQR_CODES = 4  # codebook entries per subspace: sub-vectors of vec_id < 4
-
-# Distances compared as 6-dp-rounded micro ints (the established
-# exactness pattern), with vec_id tie-breaks everywhere.
-_D2_MICRO = "CAST(round(round({expr}, 6) * 1000000.0, 0) AS BIGINT)"
-
-
-def _pq_recall_oracle() -> str:
-    def sub_d2(av: str, bv: str, m: str, sd: str) -> str:
-        """Squared L2 between subspace m of two DOUBLE[] lists."""
-        return (
-            f"list_reduce([({av}[{m} * {sd} + i] - {bv}[{m} * {sd} + i])"
-            f" * ({av}[{m} * {sd} + i] - {bv}[{m} * {sd} + i])"
-            f" for i in generate_series(1, {sd})], (a, b) -> a + b)"
-        )
-
-    def block(mm: int) -> str:
-        sd = f"(64 // {mm})"
-        d2_vs = sub_d2("v.v", "s.v", "sub.m", sd)
-        d2_ps = sub_d2("p.v", "s.v", "sub.m", sd)
-        return f"""
-    codes_{mm} AS (
-      SELECT v.vec_id, sub.m, s.code
-      FROM e v
-      CROSS JOIN (SELECT unnest(generate_series(0, {mm - 1})) AS m) sub
-      CROSS JOIN seeds s
-      QUALIFY row_number() OVER (
-        PARTITION BY v.vec_id, sub.m
-        ORDER BY {_D2_MICRO.format(expr=d2_vs)}, s.code) = 1
-    ),
-    lut_{mm} AS (
-      SELECT p.probe_id, sub.m, s.code,
-             {_D2_MICRO.format(expr=d2_ps)} AS d2_micro
-      FROM probes p
-      CROSS JOIN (SELECT unnest(generate_series(0, {mm - 1})) AS m) sub
-      CROSS JOIN seeds s
-    ),
-    adc_{mm} AS (
-      SELECT l.probe_id, c.vec_id,
-             row_number() OVER (
-               PARTITION BY l.probe_id
-               ORDER BY sum(l.d2_micro) ASC, c.vec_id) AS rk
-      FROM codes_{mm} c
-      JOIN lut_{mm} l ON l.m = c.m AND l.code = c.code
-      WHERE c.vec_id <> l.probe_id
-      GROUP BY l.probe_id, c.vec_id
-      QUALIFY rk <= {PQR_K}
-    ),
-    r_{mm} AS (
-      SELECT CAST({mm} AS BIGINT) AS m_subq,
-             CAST(count(*) AS BIGINT) AS n_true,
-             CAST(sum(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_found
-      FROM truth t
-      LEFT JOIN adc_{mm} a ON a.probe_id = t.probe_id
-                          AND a.vec_id = t.neighbor_id
-    )"""
-
-    full_d2 = (
-        "list_reduce(list_transform(list_zip(p.v, n.v),"
-        " z -> (z[1] - z[2]) * (z[1] - z[2])), (a, b) -> a + b)"
-    )
-    hh = "substr(md5(CAST(vec_id AS VARCHAR)), 1, 2)"
-    blocks = ",".join(block(mm) for mm in PQR_MS)
-    unions = "\n    UNION ALL\n    ".join(
-        f"SELECT m_subq, n_true, n_found,"
-        f" n_found * 1000000 // n_true AS recall_micro FROM r_{mm}"
-        for mm in PQR_MS
-    )
-    return f"""
-    WITH e AS (
-      SELECT vec_id, {hh} AS hh,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ), seeds AS (
-      SELECT vec_id AS code, v FROM e WHERE vec_id < {PQR_CODES}
-    ), probes AS (
-      SELECT vec_id AS probe_id, v FROM e
-      WHERE hh >= 'e6' ORDER BY vec_id LIMIT {PQR_N_PROBES}
-    ), truth AS (
-      SELECT p.probe_id, n.vec_id AS neighbor_id,
-             row_number() OVER (
-               PARTITION BY p.probe_id
-               ORDER BY {_D2_MICRO.format(expr=full_d2)} ASC, n.vec_id
-             ) AS rk
-      FROM probes p JOIN e n ON n.vec_id <> p.probe_id
-      QUALIFY rk <= {PQR_K}
-    ),{blocks}
-    {unions}
-    """
-
-
-@stage(
-    "embeddings_pq_adc_recall_curve",
-    oracle=_pq_recall_oracle(),
-    tags=("llm", "similarity", "ann", "pq"),
-)
-def embeddings_pq_adc_recall_curve(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The PQ byte-budget design table: recall@{PQR_K} of
-    asymmetric-distance (ADC) ranking vs the exact-L2 truth, for
-    M ∈ {PQR_MS} subquantizers (codebook = sub-vectors of the
-    {PQR_CODES} lowest vec_ids per subspace — the registered
-    ``embeddings_pq_codes`` seeding convention). ADC sums the
-    probe's per-subspace distance to each CANDIDATE'S CODE (not its
-    raw sub-vector): the exact search a PQ index executes, where the
-    probe side is exact and the corpus side is quantized (Jégou,
-    Douze & Schmid '11). More subquantizers = finer quantization =
-    higher recall at M bytes/vector; this curve prices that axis the
-    way the registered IVF nprobe and Matryoshka dim curves price
-    theirs.
-
-    Exactness: every distance is a 6-dp-round micro int (per
-    subspace BEFORE summation, so the ADC accumulation is integer);
-    ranks tie-break on vec_id; recall is integer micro DIV.
-
-    Scale (100 TB): per rung, assignment streams the corpus once
-    against the broadcast M·{PQR_CODES}-entry codebook (zero
-    shuffle), the probe LUT is |probes|·M·{PQR_CODES} rows
-    (broadcast), and ADC is one (probe, vec) hash aggregate over the
-    coded corpus + a per-probe top-k window — never a raw-vector
-    pair join."""
-    e = load(spark, sf_dir, "embeddings")
-    vecs = e.select(
-        "vec_id",
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 2).alias("hh"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    ).localCheckpoint(eager=True)
-    seeds = vecs.filter(F.col("vec_id") < PQR_CODES).select(
-        F.col("vec_id").alias("code"), F.col("v").alias("sv")
-    )
-    probes = (
-        vecs.filter(F.col("hh") >= "e6")
-        .orderBy("vec_id")
-        .limit(PQR_N_PROBES)
-        .select(F.col("vec_id").alias("probe_id"), F.col("v").alias("pv"))
-    )
-
-    def d2_micro(av, bv, m: int, sd: int):
-        return F.round(
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.slice(av, m * sd + 1, sd),
-                        F.slice(bv, m * sd + 1, sd),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            )
-            * 1e6,
-            0,
-        ).cast("bigint")
-
-    full = F.round(
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("pv"), F.col("v"), lambda a, b: (a - b) * (a - b)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        )
-        * 1e6,
-        0,
-    ).cast("bigint")
-    w_truth = Window.partitionBy("probe_id").orderBy(
-        F.asc("d2"), F.asc("vec_id")
-    )
-    truth = (
-        vecs.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "vec_id", full.alias("d2"))
-        .withColumn("rk", F.row_number().over(w_truth))
-        .filter(F.col("rk") <= PQR_K)
-        .select("probe_id", F.col("vec_id").alias("neighbor_id"))
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for mm in PQR_MS:
-        sd = 64 // mm
-        m_ids = spark.createDataFrame([(m,) for m in range(mm)], "m int")
-        # corpus -> per-subspace code (argmin over the broadcast codebook)
-        w_code = Window.partitionBy("vec_id", "m").orderBy(
-            F.asc("d2"), F.asc("code")
-        )
-        codes = None
-        lut = None
-        for m in range(mm):
-            c_m = (
-                vecs.crossJoin(F.broadcast(seeds))
-                .select(
-                    "vec_id",
-                    F.lit(m).alias("m"),
-                    "code",
-                    d2_micro(F.col("v"), F.col("sv"), m, sd).alias("d2"),
-                )
-            )
-            codes = c_m if codes is None else codes.unionByName(c_m)
-            l_m = (
-                probes.crossJoin(F.broadcast(seeds))
-                .select(
-                    "probe_id",
-                    F.lit(m).alias("m"),
-                    "code",
-                    d2_micro(F.col("pv"), F.col("sv"), m, sd).alias(
-                        "d2_micro"
-                    ),
-                )
-            )
-            lut = l_m if lut is None else lut.unionByName(l_m)
-        codes = (
-            codes.withColumn("rn", F.row_number().over(w_code))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "m", "code")
-        )
-        w_adc = Window.partitionBy("probe_id").orderBy(
-            F.asc("adc"), F.asc("vec_id")
-        )
-        adc = (
-            codes.join(F.broadcast(lut), ["m", "code"])
-            .filter(F.col("vec_id") != F.col("probe_id"))
-            .groupBy("probe_id", "vec_id")
-            .agg(F.sum("d2_micro").alias("adc"))
-            .withColumn("rk", F.row_number().over(w_adc))
-            .filter(F.col("rk") <= PQR_K)
-            .select("probe_id", F.col("vec_id").alias("neighbor_id"))
-        )
-        row = (
-            truth.join(
-                adc.withColumn("hit", F.lit(1)),
-                ["probe_id", "neighbor_id"],
-                "left",
-            )
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_true"),
-                F.sum(F.coalesce("hit", F.lit(0)))
-                .cast("bigint")
-                .alias("n_found"),
-            )
-            .select(
-                F.lit(mm).cast("bigint").alias("m_subq"),
-                "n_true",
-                "n_found",
-                F.expr("n_found * 1000000 DIV n_true").alias(
-                    "recall_micro"
-                ),
-            )
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
-
-
-# --------------------------------------------------------------------
-# String zone-map pruning contract
-# --------------------------------------------------------------------
-
-SPC_FILE_MOD = 24
-SPC_PREFIXES = ("spark", "key", "zz")  # hit-heavy, hit-light, miss
-
-
-def _string_pruning_oracle() -> str:
-    rows = ", ".join(f"('{p}')" for p in SPC_PREFIXES)
-    return f"""
-    WITH files AS (
-      SELECT doc_id % {SPC_FILE_MOD} AS file_id, text FROM documents
-    ), footers AS (
-      SELECT file_id, min(text) AS mn, max(text) AS mx,
-             CAST(count(*) AS BIGINT) AS n_rows
-      FROM files GROUP BY 1
-    ), preds AS (
-      SELECT * FROM (VALUES {rows}) AS p(prefix)
-    ), qual AS (
-      SELECT p.prefix, f.file_id, f.n_rows,
-             (f.mn <= p.prefix || '{{' AND f.mx >= p.prefix) AS qualifies
-      FROM footers f CROSS JOIN preds p
-    ), matches AS (
-      SELECT p.prefix, fl.file_id,
-             CAST(count(*) AS BIGINT) AS n_match_rows
-      FROM files fl
-      CROSS JOIN preds p
-      WHERE fl.text LIKE p.prefix || '%'
-      GROUP BY 1, 2
-    )
-    SELECT q.prefix,
-           CAST(count(*) AS BIGINT) AS n_files,
-           CAST(sum(CASE WHEN q.qualifies THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_files_qualifying,
-           CAST(sum(CASE WHEN m.file_id IS NOT NULL THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_files_matching,
-           CAST(COALESCE(sum(m.n_match_rows), 0) AS BIGINT) AS n_match_rows,
-           CAST(sum(CASE WHEN m.file_id IS NOT NULL AND NOT q.qualifies
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_false_prunes
-    FROM qual q
-    LEFT JOIN matches m ON m.prefix = q.prefix AND m.file_id = q.file_id
-    GROUP BY q.prefix
-    """
-
-
-@stage(
-    "docs_string_pruning_contract",
-    oracle=_string_pruning_oracle(),
-    tags=("layout", "pruning", "contract"),
-)
-def docs_string_pruning_contract(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Zone-map file skipping for STRING predicates, oracle-pinned:
-    pseudo-files (doc_id mod {SPC_FILE_MOD}) publish min/max text
-    footers, and a ``LIKE 'p%'`` predicate may skip any file failing
-    ``min ≤ p‖'{{' AND max ≥ p`` (the prefix-increment upper bound —
-    '{{' sorts just above 'z', so every string starting with p is
-    < p‖'{{' on this all-lowercase fixture; a production engine uses
-    the successor byte, same arithmetic). Per prefix the contract
-    reports total/qualifying/truly-matching file counts, matching
-    rows, and — the invariant the whole technique rests on —
-    ``n_false_prunes`` (files with matches that the zone map would
-    have skipped), pinned at ZERO by the oracle. The registered
-    z-order contract proves numeric zone maps; strings are where
-    engines actually drift (collation, truncated footers, successor
-    computation), so the string rule gets its own oracle.
-
-    Exactness: lexicographic string comparison over ASCII text is
-    identical in both engines; counts only.
-
-    Scale (100 TB): one scan to per-file min/max/count footers (the
-    metadata a real writer persists anyway), one predicate-ladder
-    fanout on the footer frame, one scan for the truth side — and at
-    scale the truth side IS the skipped scan, so the contract costs
-    what it saves."""
-    d = load(spark, sf_dir, "documents").select(
-        (F.col("doc_id") % SPC_FILE_MOD).alias("file_id"), "text"
-    )
-    footers = d.groupBy("file_id").agg(
-        F.min("text").alias("mn"),
-        F.max("text").alias("mx"),
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-    )
-    preds = spark.createDataFrame(
-        [(p,) for p in SPC_PREFIXES], "prefix string"
-    )
-    qual = footers.crossJoin(F.broadcast(preds)).select(
-        "prefix",
-        "file_id",
-        (
-            (F.col("mn") <= F.concat(F.col("prefix"), F.lit("{")))
-            & (F.col("mx") >= F.col("prefix"))
-        ).alias("qualifies"),
-    )
-    matches = (
-        d.crossJoin(F.broadcast(preds))
-        .filter(F.col("text").startswith(F.col("prefix")))
-        .groupBy("prefix", "file_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_match_rows"))
-    )
-    return (
-        qual.join(matches, ["prefix", "file_id"], "left")
-        .groupBy("prefix")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_files"),
-            F.sum(F.col("qualifies").cast("int"))
-            .cast("bigint")
-            .alias("n_files_qualifying"),
-            F.sum(F.col("n_match_rows").isNotNull().cast("int"))
-            .cast("bigint")
-            .alias("n_files_matching"),
-            F.coalesce(F.sum("n_match_rows"), F.lit(0))
-            .cast("bigint")
-            .alias("n_match_rows"),
-            F.sum(
-                (
-                    F.col("n_match_rows").isNotNull()
-                    & ~F.col("qualifies")
-                ).cast("int")
-            )
-            .cast("bigint")
-            .alias("n_false_prunes"),
-        )
-    )
+from ..registry import register
 
 
 # --------------------------------------------------------------------
@@ -560,7 +91,7 @@ def _license_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_license_propagation_contract",
     oracle=_license_oracle(),
     tags=("llm", "governance", "contract"),
@@ -646,7 +177,7 @@ def _bpe_vocab_curve_oracle() -> str:
     return _bpe_oracle(max(BVC_BUDGETS)) + f"\n    {rows}"
 
 
-@stage(
+@register(
     "docs_bpe_vocab_size_curve",
     oracle=_bpe_vocab_curve_oracle(),
     tags=("llm", "tokenizer", "eval"),
@@ -759,7 +290,7 @@ def _alignment_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_image_text_alignment_contract",
     oracle=_alignment_oracle(),
     tags=("llm", "multimodal", "retrieval", "contract"),
@@ -893,7 +424,7 @@ def _session_survival_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_session_survival_curve",
     oracle=_session_survival_oracle(),
     tags=("events", "analytics", "sessions"),
@@ -997,7 +528,7 @@ def _salted_join_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "lineitem_salted_join_contract",
     oracle=_salted_join_oracle(),
     tags=("tpch", "skew", "contract"),
@@ -1016,14 +547,15 @@ def lineitem_salted_join_contract(
     three-table join aggregate, so the hash proves the
     salt-replicate-join decomposition loses and duplicates nothing.
     (AQE's skew-join split does this adaptively for sort-merge
-    joins; the explicit form is how you write it when the dim is
-    broadcastable and the skew is known — the documented pattern for
-    hot-key fact-dim joins.)
+    joins; the explicit form is how you write it when the skew is
+    known — the documented pattern for hot-key fact-dim joins. The
+    replicated dim carries no broadcast hint: supplier grows with SF,
+    so the planner and AQE pick the join from size stats.)
 
     Exactness: integer counts and BIGINT quantity sums.
 
-    Scale (100 TB): the dim side is |suppliers|·{SJC_SALTS} rows
-    (still broadcast-sized for a real dim); the fact side shuffles
+    Scale (100 TB): the dim side is |suppliers|·{SJC_SALTS} rows;
+    the fact side shuffles
     once on the salted key with bounded per-reducer skew — the whole
     point. The final rollup is a |flags|·|nations| hash aggregate."""
     li = load(spark, sf_dir, "lineitem").select(
@@ -1051,7 +583,7 @@ def lineitem_salted_join_contract(
     dim_rep = dim.crossJoin(F.broadcast(salts))
     return (
         li.join(
-            F.broadcast(dim_rep),
+            dim_rep,
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (li["salt"] == dim_rep["salt"]),
         )
@@ -1100,7 +632,7 @@ def _temporal_join_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_temporal_dim_join",
     oracle=_temporal_join_oracle(),
     tags=("warehouse", "scd2", "range-join"),
@@ -1204,7 +736,7 @@ def _reciprocity_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "nation_trade_reciprocity",
     oracle=_reciprocity_oracle(),
     tags=("tpch", "graph", "report"),
@@ -1296,7 +828,7 @@ def nation_trade_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# SimHash bit-bias health screen (round-11 growth: slate 9 -> 10)
+# SimHash bit-bias health screen
 # --------------------------------------------------------------------
 
 SIMHASH_BIAS_BITS = 60  # md5's first 15 hex digits -> 60 exact bits
@@ -1336,7 +868,7 @@ def _bit_bias_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_simhash_bit_bias",
     oracle=_bit_bias_oracle(),
     tags=("llm", "dedup", "sketch", "diagnostics"),

@@ -1,9 +1,7 @@
-"""Round-15 registration candidates — seed slate started in round 8.
+"""Dispersion, concentration, drift and trend queries, each registered
+with its DuckDB oracle.
 
-Same staging mechanism as ``staged_r8``–``staged_r14``; promotion in
-round 15 via ``staged_r15.promote_to_registry(R15_BATCH)``.
-
-The seed:
+The operators:
 
 - ``events_burstiness_fano``: the Fano factor (variance-to-mean
   ratio of per-hour event counts) per event type — the burstiness
@@ -17,25 +15,11 @@ The seed:
 - ``part_type_brand_hhi``: Herfindahl–Hirschman market concentration
   per part-type market (brand revenue shares, HHI = Σ share², top
   share) — the market-structure statistic; swap part→source for the
-  data-mixture source-concentration check.
-- ``orders_backlog_timeseries``: open-order backlog per day (the
-  +1/−1 event-difference array over [order date, last ship + 1)),
-  rolled up monthly with peak and end-of-month levels — the WIP
-  curve, with the global cumulative computed on the two-level
-  prefix-sum scaffold (no global-order window).
-
-Round-9 growth (r8 VERDICT directive #5 — slate to ≥8):
-
-- ``corpus_filter_ablation_lattice``: the 3-bit survivorship lattice
+  data-mixture source-concentration check.- ``corpus_filter_ablation_lattice``: the 3-bit survivorship lattice
   over quality gate × exact-dup survivorship × lang allowlist — per
   combo: docs and token mass (micro share). The standard curation
   ablation table ("what does each filter uniquely remove"), one
   level up from the registered pairwise filter-agreement matrix.
-- ``docs_split_leakage_contract``: content-hash-keyed
-  train/val/test split vs the naive id-keyed split — per source:
-  split counts, dup groups, and the leakage certificate (dup groups
-  straddling content splits MUST be zero; the id-split straddle
-  count shows what the naive split would leak).
 - ``orders_priority_mix_drift_tvd``: monthly order-priority mix vs
   the global mix as total-variation distance in micro units over
   the dense month×priority spine — the categorical drift lens
@@ -49,9 +33,6 @@ Round-9 growth (r8 VERDICT directive #5 — slate to ≥8):
   lexical-diversity profile (vocabulary richness), complementary to
   the repetition-mass profile (r11) which measures the opposite
   failure mode.
-
-Round-11 growth (slate 8 -> 10):
-
 - ``orders_theil_sen_trend``: Theil–Sen robust weekly trend per
   priority — median of all pairwise slopes over the zero-filled week
   spine (29% breakdown point) + median-residual intercept; the
@@ -66,67 +47,11 @@ Round-11 growth (slate 8 -> 10):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import QueryFn
-
-
-@dataclass(frozen=True)
-class StagedQuery:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = ()
-
-
-STAGED: dict[str, StagedQuery] = {}
-
-R15_BATCH: tuple[str, ...] = (
-    "corpus_filter_ablation_lattice",
-    "docs_split_leakage_contract",
-    "docs_ttr_window_profile",
-    "events_burstiness_fano",
-    "events_halflife_engagement",
-    "orders_backlog_timeseries",
-    "orders_priority_mix_drift_tvd",
-    "orders_theil_sen_trend",
-    "orders_volume_changepoint",
-    "part_type_brand_hhi",
-)
-
-
-def promote_to_registry(names: list[str]) -> list[str]:
-    """Round-15 registration in one call; ``names`` is REQUIRED —
-    whole-slate promotion must be spelled out (``list(STAGED)``)."""
-    from ..registry import register
-
-    if names is None:
-        raise ValueError(
-            "promote_to_registry requires an explicit name batch; "
-            "spell out whole-slate promotion as list(STAGED)"
-        )
-    promoted = []
-    for name in names:
-        q = STAGED[name]
-        register(name, q.oracle, q.tags)(q.fn)
-        promoted.append(name)
-    return promoted
-
-
-def stage(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Mirror of ``registry.register`` that records into ``STAGED``."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        STAGED[name] = StagedQuery(name, fn, oracle, tags)
-        return fn
-
-    return deco
+from ..registry import register
 
 
 # --------------------------------------------------------------------
@@ -172,7 +97,7 @@ def _fano_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_burstiness_fano",
     oracle=_fano_oracle(),
     tags=("events", "analytics", "timeseries"),
@@ -279,7 +204,7 @@ def _hhi_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "part_type_brand_hhi",
     oracle=_hhi_oracle(),
     tags=("tpch", "analytics", "report"),
@@ -304,8 +229,9 @@ def part_type_brand_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH engines, so each share rounds before the square
     identically.
 
-    Scale (100 TB): one lineitem scan joined to the broadcast part
-    dim, hash-aggregated to the (type, brand) domain (≤ 150·25 rows
+    Scale (100 TB): one lineitem scan joined to the part dim (no
+    broadcast hint: part grows with SF, so the planner and AQE pick
+    the join from size stats), hash-aggregated to the (type, brand) domain (≤ 150·25 rows
     at any SF — part types and brands are fixed vocabularies);
     everything after is metadata arithmetic."""
     li = load(spark, sf_dir, "lineitem").select(
@@ -313,7 +239,7 @@ def part_type_brand_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = load(spark, sf_dir, "part").select("p_partkey", "p_type", "p_brand")
     rev = (
-        li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
+        li.join(p, li["l_partkey"] == p["p_partkey"])
         .groupBy("p_type", "p_brand")
         .agg(
             (
@@ -350,183 +276,6 @@ def part_type_brand_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("share_micro").cast("bigint").alias("top_share_micro"),
         F.expr("CAST(sum(share_micro * share_micro) DIV 1000000 AS BIGINT)")
         .alias("hhi_micro"),
-    )
-
-
-# --------------------------------------------------------------------
-# Order-backlog time series (open-interval counting, two-level prefix)
-# --------------------------------------------------------------------
-
-BKL_BAND_DAYS = 32  # prefix-sum bands over the day spine
-
-
-def _backlog_oracle() -> str:
-    return """
-    WITH spans AS (
-      SELECT o.o_orderkey,
-             date_diff('day', DATE '1970-01-01',
-                       CAST(o.o_orderdate AS DATE)) AS open_day,
-             date_diff('day', DATE '1970-01-01',
-                       CAST(max(l.l_shipdate) AS DATE)) + 1 AS close_day
-      FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      GROUP BY o.o_orderkey, o.o_orderdate
-    ), bounds AS (
-      SELECT min(open_day) AS d0, max(close_day) AS d1 FROM spans
-    ), deltas AS (
-      SELECT day, CAST(sum(d) AS BIGINT) AS delta,
-             CAST(sum(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS opened,
-             CAST(sum(CASE WHEN d < 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS closed
-      FROM (
-        SELECT open_day AS day, 1 AS d FROM spans
-        UNION ALL
-        SELECT close_day AS day, -1 AS d FROM spans
-      ) GROUP BY day
-    ), spine AS (
-      SELECT unnest(generate_series((SELECT d0 FROM bounds),
-                                    (SELECT d1 FROM bounds))) AS day
-    ), daily AS (
-      SELECT s.day,
-             COALESCE(d.delta, 0) AS delta,
-             COALESCE(d.opened, 0) AS opened,
-             COALESCE(d.closed, 0) AS closed
-      FROM spine s LEFT JOIN deltas d ON d.day = s.day
-    ), cum AS (
-      SELECT day, opened, closed,
-             CAST(sum(delta) OVER (ORDER BY day) AS BIGINT) AS backlog
-      FROM daily
-    )
-    SELECT CAST(date_trunc('month', DATE '1970-01-01'
-                 + to_days(CAST(day AS INT))) AS DATE) AS month_start,
-           CAST(sum(opened) AS BIGINT) AS opened,
-           CAST(sum(closed) AS BIGINT) AS closed,
-           CAST(max(backlog) AS BIGINT) AS peak_backlog,
-           CAST(arg_max(backlog, day) AS BIGINT) AS end_backlog
-    FROM cum GROUP BY 1
-    """
-
-
-@stage(
-    "orders_backlog_timeseries",
-    oracle=_backlog_oracle(),
-    tags=("warehouse", "timeseries", "report"),
-)
-def orders_backlog_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Open-order BACKLOG over time — the interval-counting staple
-    (how many orders are open each day, where an order is open from
-    its order date until the day after its LAST line ships), rolled
-    up monthly: orders opened, orders closed, peak backlog, and
-    end-of-month backlog. This is the WIP/inventory curve every
-    operations dashboard draws, and the computation is the classic
-    +1/−1 event-difference array: deltas per day, then a cumulative
-    sum over the day spine.
-
-    The cumulative is the banned global-order window — so it runs on
-    the TWO-LEVEL PREFIX SUM scaffold the rank-AUC query established
-    (bands of {BKL_BAND_DAYS} days: intra-band partitioned window +
-    broadcast band offsets); DuckDB's oracle uses its plain
-    single-node cumulative window, so the hash again pins the
-    decomposition's exactness. End-of-month = max_by(backlog, day)
-    (the spine is dense, so the month's last day is always present).
-
-    Exactness: integer day indexing from the epoch anchor (DATE
-    arithmetic, identical in both engines); counts and sums only.
-
-    Scale (100 TB): one orders⋈lineitem aggregate to per-order spans
-    (the join is orderkey-co-partitioned), one hash aggregate to the
-    DAY domain (calendar-bounded — a century is 36.5k rows), and all
-    prefix machinery runs on that day-domain frame. No global
-    window, no collect."""
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01"))
-        .alias("open_day"),
-    )
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    spans = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .groupBy("o_orderkey", "open_day")
-        .agg(
-            (
-                F.datediff(
-                    F.max("l_shipdate").cast("date"), F.lit("1970-01-01")
-                )
-                + 1
-            ).alias("close_day")
-        )
-    )
-    opens = spans.select(F.col("open_day").alias("day"), F.lit(1).alias("d"))
-    closes = spans.select(
-        F.col("close_day").alias("day"), F.lit(-1).alias("d")
-    )
-    deltas = (
-        opens.unionByName(closes)
-        .groupBy("day")
-        .agg(
-            F.sum("d").cast("bigint").alias("delta"),
-            F.sum(F.when(F.col("d") > 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("opened"),
-            F.sum(F.when(F.col("d") < 0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("closed"),
-        )
-    )
-    bounds = spans.agg(
-        F.min("open_day").alias("d0"), F.max("close_day").alias("d1")
-    )
-    spine = bounds.select(
-        F.explode(F.sequence(F.col("d0"), F.col("d1"))).alias("day")
-    )
-    daily = (
-        spine.join(deltas, "day", "left")
-        .select(
-            "day",
-            F.coalesce("delta", F.lit(0)).alias("delta"),
-            F.coalesce("opened", F.lit(0)).alias("opened"),
-            F.coalesce("closed", F.lit(0)).alias("closed"),
-        )
-        .withColumn("band", F.expr(f"day DIV {BKL_BAND_DAYS}"))
-    )
-    from pyspark.sql import Window
-
-    intra = daily.withColumn(
-        "in_band_cum",
-        F.sum("delta").over(
-            Window.partitionBy("band")
-            .orderBy("day")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    band_tot = daily.groupBy("band").agg(F.sum("delta").alias("bd"))
-    lower = band_tot.select(
-        F.col("band").alias("l_band"), F.col("bd").alias("l_bd")
-    )
-    offsets = (
-        band_tot.join(
-            F.broadcast(lower), F.col("l_band") < F.col("band"), "left"
-        )
-        .groupBy("band")
-        .agg(F.coalesce(F.sum("l_bd"), F.lit(0)).alias("offset"))
-    )
-    cum = intra.join(offsets, "band").withColumn(
-        "backlog",
-        (F.col("offset") + F.col("in_band_cum")).cast("bigint"),
-    )
-    month = F.trunc(
-        F.expr("date_add(DATE '1970-01-01', CAST(day AS INT))"), "month"
-    )
-    return (
-        cum.groupBy(month.alias("month_start"))
-        .agg(
-            F.sum("opened").cast("bigint").alias("opened"),
-            F.sum("closed").cast("bigint").alias("closed"),
-            F.max("backlog").cast("bigint").alias("peak_backlog"),
-            F.expr("max_by(backlog, day)").cast("bigint").alias(
-                "end_backlog"
-            ),
-        )
     )
 
 
@@ -568,7 +317,7 @@ def _ablation_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "corpus_filter_ablation_lattice",
     oracle=_ablation_oracle(),
     tags=("llm", "curation", "quality", "report"),
@@ -640,149 +389,6 @@ def corpus_filter_ablation_lattice(
 
 
 # --------------------------------------------------------------------
-# Train/val/test split leakage contract (content-hash vs naive keying)
-# --------------------------------------------------------------------
-
-SPLIT_TRAIN_BUCKETS = 8  # of 10: 80/10/10
-
-
-def _split_leakage_oracle() -> str:
-    return f"""
-    WITH keyed AS (
-      SELECT doc_id, source, md5(text) AS h,
-             CAST(('0x' || substr(md5(text), 1, 4)) AS UBIGINT) % 10
-               AS cb,
-             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))
-                  AS UBIGINT) % 10 AS nb
-      FROM documents
-    ), lab AS (
-      SELECT source, h,
-             CASE WHEN cb < {SPLIT_TRAIN_BUCKETS} THEN 'train'
-                  WHEN cb = {SPLIT_TRAIN_BUCKETS} THEN 'val'
-                  ELSE 'test' END AS c_split,
-             CASE WHEN nb < {SPLIT_TRAIN_BUCKETS} THEN 'train'
-                  WHEN nb = {SPLIT_TRAIN_BUCKETS} THEN 'val'
-                  ELSE 'test' END AS n_split
-      FROM keyed
-    ), per_doc AS (
-      SELECT source,
-             CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(CASE WHEN c_split = 'train' THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_train,
-             CAST(sum(CASE WHEN c_split = 'val' THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_val,
-             CAST(sum(CASE WHEN c_split = 'test' THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_test
-      FROM lab GROUP BY 1
-    ), groups AS (
-      SELECT source, h, count(*) AS sz,
-             count(DISTINCT c_split) AS c_k,
-             count(DISTINCT n_split) AS n_k
-      FROM lab GROUP BY 1, 2
-    ), per_group AS (
-      SELECT source,
-             CAST(sum(CASE WHEN sz > 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dup_groups,
-             CAST(sum(CASE WHEN sz > 1 AND c_k > 1 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS leak_groups_content,
-             CAST(sum(CASE WHEN sz > 1 AND n_k > 1 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS leak_groups_naive
-      FROM groups GROUP BY 1
-    )
-    SELECT d.source, d.n_docs, d.n_train, d.n_val, d.n_test,
-           g.n_dup_groups, g.leak_groups_content, g.leak_groups_naive
-    FROM per_doc d JOIN per_group g USING (source)
-    """
-
-
-@stage(
-    "docs_split_leakage_contract",
-    oracle=_split_leakage_oracle(),
-    tags=("llm", "curation", "contract", "sampling"),
-)
-def docs_split_leakage_contract(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Train/val/test SPLIT assignment with the leakage certificate:
-    docs are bucketed 80/10/10 by a hash of their CONTENT (md5 of the
-    text), so exact duplicates always land in the same split — per
-    source the contract reports split counts, the number of exact-dup
-    groups, the count of dup groups straddling content-keyed splits
-    (MUST be 0 — the certificate), and the count that the naive
-    id-keyed split would have straddled (the leak the content key
-    prevents). Split-by-content-hash is the eval-hygiene rule every
-    training pipeline needs once dedup is not perfect upstream.
-
-    Exactness: the established cross-engine bucket hash (Spark
-    ``conv(substr(md5,1,4),16,10)`` = DuckDB ``('0x'||substr)::
-    UBIGINT``, 16 bits so the value is exact in both); counts only.
-
-    Scale (100 TB): one scan to per-doc labels (hashing is
-    map-side), one hash aggregate per source and one per
-    (source, text-hash) group — the group aggregate is the same
-    shuffle exact dedup already pays. No windows, no collect."""
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.md5("text").alias("h"),
-        (
-            F.conv(F.substring(F.md5("text"), 1, 4), 16, 10).cast("bigint")
-            % 10
-        ).alias("cb"),
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4),
-                16,
-                10,
-            ).cast("bigint")
-            % 10
-        ).alias("nb"),
-    )
-    tb = SPLIT_TRAIN_BUCKETS
-    lab = d.select(
-        "source",
-        "h",
-        F.when(F.col("cb") < tb, "train")
-        .when(F.col("cb") == tb, "val")
-        .otherwise("test")
-        .alias("c_split"),
-        F.when(F.col("nb") < tb, "train")
-        .when(F.col("nb") == tb, "val")
-        .otherwise("test")
-        .alias("n_split"),
-    )
-    per_doc = lab.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum((F.col("c_split") == "train").cast("int"))
-        .cast("bigint")
-        .alias("n_train"),
-        F.sum((F.col("c_split") == "val").cast("int"))
-        .cast("bigint")
-        .alias("n_val"),
-        F.sum((F.col("c_split") == "test").cast("int"))
-        .cast("bigint")
-        .alias("n_test"),
-    )
-    groups = lab.groupBy("source", "h").agg(
-        F.count(F.lit(1)).alias("sz"),
-        F.countDistinct("c_split").alias("c_k"),
-        F.countDistinct("n_split").alias("n_k"),
-    )
-    per_group = groups.groupBy("source").agg(
-        F.sum((F.col("sz") > 1).cast("int"))
-        .cast("bigint")
-        .alias("n_dup_groups"),
-        F.sum(((F.col("sz") > 1) & (F.col("c_k") > 1)).cast("int"))
-        .cast("bigint")
-        .alias("leak_groups_content"),
-        F.sum(((F.col("sz") > 1) & (F.col("n_k") > 1)).cast("int"))
-        .cast("bigint")
-        .alias("leak_groups_naive"),
-    )
-    return per_doc.join(per_group, "source")
-
-
-# --------------------------------------------------------------------
 # Monthly priority-mix drift as total-variation distance (categorical)
 # --------------------------------------------------------------------
 
@@ -825,7 +431,7 @@ def _priority_tvd_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_priority_mix_drift_tvd",
     oracle=_priority_tvd_oracle(),
     tags=("warehouse", "drift", "timeseries"),
@@ -925,7 +531,7 @@ def _halflife_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_halflife_engagement",
     oracle=_halflife_oracle(),
     tags=("events", "analytics", "scoring"),
@@ -1014,7 +620,7 @@ def _ttr_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_ttr_window_profile",
     oracle=_ttr_oracle(),
     tags=("llm", "quality", "textstats"),
@@ -1075,7 +681,7 @@ def docs_ttr_window_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# Theil–Sen robust weekly trend (round-11 growth: slate 8 -> 10)
+# Theil–Sen robust weekly trend
 # --------------------------------------------------------------------
 
 
@@ -1130,7 +736,7 @@ def _theil_sen_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_theil_sen_trend",
     oracle=_theil_sen_oracle(),
     tags=("warehouse", "statistics", "regression", "robust"),
@@ -1216,7 +822,7 @@ def orders_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# Binary-segmentation changepoint (round-11 growth)
+# Binary-segmentation changepoint
 # --------------------------------------------------------------------
 
 
@@ -1277,7 +883,7 @@ def _changepoint_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_volume_changepoint",
     oracle=_changepoint_oracle(),
     tags=("warehouse", "statistics", "changepoint", "timeseries"),

@@ -1,96 +1,24 @@
-"""Round-16 registration candidates — seed slate started in round 9.
+"""Percentile, temperature-sampling, cohort and quantization queries,
+each registered with its DuckDB oracle.
 
-Same staging mechanism as ``staged_r8``–``staged_r15``; promotion in
-round 16 via ``staged_r16.promote_to_registry(R16_BATCH)``.
-
-The seed:
+Some of the operators:
 
 - ``embeddings_quantization_sweep``: e1…e4 fixed-point precision
   sweep (exact-representation counts + integer reconstruction-error
   mass) — the how-many-bits table read before choosing int8/fp16/PQ.
-  Moved here from the r10 slate in the round-10 swap that pulled
-  ``embeddings_semdedup_hier_contract`` forward (r9 VERDICT
-  directive #2).
 - ``customer_order_gap_percentiles``: exact inter-order-gap
   percentiles (p50/p75) per market segment — repeat-purchase latency
   profiling: per-customer consecutive-order day gaps via a keyed lag
   window, then the engine's exact-percentile convention per segment.
-- ``events_session_type_lift``: session-level event-type association
-  — for each type pair, sessions containing both vs the independence
-  expectation, support/confidence/lift in exact micro units (the
-  ``orders_basket_lift`` operator family lifted onto sessionized
-  behavioral data).
-- ``events_concurrency_time_integral`` (added in round 10, closing
-  the slate at 10): per-day busy user-µs (∫ concurrency dt) and exact
-  time-weighted average concurrency — the capacity twin of
-  ``events_peak_concurrency``; the engine's per-span day clipping and
-  the oracle's sweep-line are different algebras producing the same
-  integers (a cross-method identity, Little's-law bookkeeping).
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import QueryFn
-
-
-@dataclass(frozen=True)
-class StagedQuery:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = ()
-
-
-STAGED: dict[str, StagedQuery] = {}
-
-R16_BATCH: tuple[str, ...] = (
-    "customer_cohort_repeat_rate",
-    "customer_order_gap_percentiles",
-    "docs_lang_temperature_ladder",
-    "docs_source_lang_association",
-    "docs_vocab_coverage_ladder",
-    "embeddings_quantization_sweep",
-    "events_concurrency_time_integral",
-    "events_peak_concurrency",
-    "events_session_type_lift",
-    "events_value_iqr_trimmed_stats",
-)
-
-
-def promote_to_registry(names: list[str]) -> list[str]:
-    """Round-16 registration in one call; ``names`` is REQUIRED —
-    whole-slate promotion must be spelled out (``list(STAGED)``)."""
-    from ..registry import register
-
-    if names is None:
-        raise ValueError(
-            "promote_to_registry requires an explicit name batch; "
-            "spell out whole-slate promotion as list(STAGED)"
-        )
-    promoted = []
-    for name in names:
-        q = STAGED[name]
-        register(name, q.oracle, q.tags)(q.fn)
-        promoted.append(name)
-    return promoted
-
-
-def stage(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Mirror of ``registry.register`` that records into ``STAGED``."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        STAGED[name] = StagedQuery(name, fn, oracle, tags)
-        return fn
-
-    return deco
+from ..registry import register
 
 
 # --------------------------------------------------------------------
@@ -121,7 +49,7 @@ def _order_gap_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "customer_order_gap_percentiles",
     oracle=_order_gap_oracle(),
     tags=("warehouse", "analytics", "percentile"),
@@ -183,177 +111,6 @@ def customer_order_gap_percentiles(
 
 
 # --------------------------------------------------------------------
-# Session-level event-type association (lift over sessionized streams)
-# --------------------------------------------------------------------
-
-STL_GAP_S = 1800  # the registered 30-minute session gap
-
-
-def _session_lift_oracle() -> str:
-    return f"""
-    WITH e AS (
-      SELECT user_id, event_id, event_type,
-             date_diff('microsecond',
-                       TIMESTAMP '1970-01-01 00:00:00', ts) AS ts_us
-      FROM events
-    ), marked AS (
-      SELECT user_id, event_id, event_type, ts_us,
-             CASE WHEN ts_us - lag(ts_us) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id)
-                  > {STL_GAP_S} * 1000000 OR lag(ts_us) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id)
-                  IS NULL THEN 1 ELSE 0 END AS new_sess
-      FROM e
-    ), sess AS (
-      SELECT user_id, event_type,
-             sum(new_sess) OVER (
-               PARTITION BY user_id ORDER BY ts_us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS sess_id
-      FROM marked
-    ), st AS (
-      SELECT DISTINCT user_id, sess_id, event_type FROM sess
-    ), ns AS (
-      SELECT CAST(count(DISTINCT (user_id, sess_id)) AS BIGINT) AS n
-      FROM st
-    ), singles AS (
-      SELECT event_type, CAST(count(*) AS BIGINT) AS cnt
-      FROM st GROUP BY 1
-    ), pairs AS (
-      SELECT a.event_type AS type_a, b.event_type AS type_b,
-             CAST(count(*) AS BIGINT) AS both_cnt
-      FROM st a
-      JOIN st b ON a.user_id = b.user_id AND a.sess_id = b.sess_id
-               AND a.event_type < b.event_type
-      GROUP BY 1, 2
-    )
-    SELECT p.type_a, p.type_b, p.both_cnt,
-           CAST(p.both_cnt * 1000000 // (SELECT n FROM ns) AS BIGINT)
-             AS support_micro,
-           CAST(p.both_cnt * 1000000 // sa.cnt AS BIGINT)
-             AS confidence_micro,
-           CAST(p.both_cnt * (SELECT n FROM ns) * 1000000
-                // (sa.cnt * sb.cnt) AS BIGINT) AS lift_micro
-    FROM pairs p
-    JOIN singles sa ON sa.event_type = p.type_a
-    JOIN singles sb ON sb.event_type = p.type_b
-    """
-
-
-@stage(
-    "events_session_type_lift",
-    oracle=_session_lift_oracle(),
-    tags=("events", "analytics", "association", "sessions"),
-)
-def events_session_type_lift(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Session-level event-type ASSOCIATION rules: sessions cut at the
-    registered {STL_GAP_S}-second gap (tie-broken on event_id like
-    every sessionization here), each session reduced to its distinct
-    type set, then for every type pair: co-occurring sessions,
-    support, confidence (P(b|a)), and lift vs independence — the
-    ``orders_basket_lift`` operator family on behavioral baskets
-    (what a recommender or funnel designer reads to find coupled
-    actions).
-
-    Exactness: integer counts; support/confidence/lift in micro
-    units by integer DIV (lift's cross-multiplication stays in
-    BIGINT: both_cnt·n·1e6 ≤ sessions²·1e6, ~1e17 at sf0.1's ~40k
-    sessions — inside int64; the stress inflater shifts user ids so
-    sessions scale ~k and the product's headroom holds to ~3e9
-    sessions).
-
-    Scale (100 TB): sessionization is the shared keyed window pass;
-    the distinct (session, type) reduction collapses the stream to
-    ≤|types| rows per session; the pair join is keyed by session
-    with ≤C(|types|,2) emits per session (type vocabulary is fixed),
-    so the shuffle is ~linear in sessions. Totals are broadcast
-    one-row/|types|-row frames."""
-    from pyspark.sql import Window
-
-    e = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
-    )
-    w_order = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    w_cum = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    marked = e.withColumn(
-        "new_sess",
-        F.when(
-            F.lag("ts_us").over(w_order).isNull()
-            | (
-                F.col("ts_us") - F.lag("ts_us").over(w_order)
-                > STL_GAP_S * 1000000
-            ),
-            1,
-        ).otherwise(0),
-    )
-    st = (
-        marked.withColumn("sess_id", F.sum("new_sess").over(w_cum))
-        .select("user_id", "sess_id", "event_type")
-        .distinct()
-    )
-    ns = st.select("user_id", "sess_id").distinct().agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    singles = st.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    a = st.select(
-        "user_id", "sess_id", F.col("event_type").alias("type_a")
-    )
-    b = st.select(
-        "user_id", "sess_id", F.col("event_type").alias("type_b")
-    )
-    pairs = (
-        a.join(b, ["user_id", "sess_id"])
-        .filter(F.col("type_a") < F.col("type_b"))
-        .groupBy("type_a", "type_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("both_cnt"))
-    )
-    sa = singles.select(
-        F.col("event_type").alias("type_a"), F.col("cnt").alias("cnt_a")
-    )
-    sb = singles.select(
-        F.col("event_type").alias("type_b"), F.col("cnt").alias("cnt_b")
-    )
-    return (
-        pairs.join(F.broadcast(sa), "type_a")
-        .join(F.broadcast(sb), "type_b")
-        .crossJoin(F.broadcast(ns))
-        .select(
-            "type_a",
-            "type_b",
-            "both_cnt",
-            F.expr("both_cnt * 1000000 DIV n")
-            .cast("bigint")
-            .alias("support_micro"),
-            F.expr("both_cnt * 1000000 DIV cnt_a")
-            .cast("bigint")
-            .alias("confidence_micro"),
-            F.expr("both_cnt * n * 1000000 DIV (cnt_a * cnt_b)")
-            .cast("bigint")
-            .alias("lift_micro"),
-        )
-    )
-
-
-events_session_type_lift.__doc__ = events_session_type_lift.__doc__.format(
-    STL_GAP_S=STL_GAP_S
-)
-
-
-# --------------------------------------------------------------------
 # Vocabulary coverage ladder (top-k token-mass coverage)
 # --------------------------------------------------------------------
 
@@ -386,7 +143,7 @@ def _vocab_coverage_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_vocab_coverage_ladder",
     oracle=_vocab_coverage_oracle(),
     tags=("llm", "textstats", "tokenizer"),
@@ -462,164 +219,6 @@ def docs_vocab_coverage_ladder(
 
 
 # --------------------------------------------------------------------
-# Peak concurrent sessions per day (interval counting, banded prefix)
-# --------------------------------------------------------------------
-
-PCC_GAP_S = 1800  # the registered 30-minute session gap
-
-
-def _peak_concurrency_oracle() -> str:
-    return f"""
-    WITH e AS (
-      SELECT user_id, event_id,
-             date_diff('microsecond',
-                       TIMESTAMP '1970-01-01 00:00:00', ts) AS ts_us
-      FROM events
-    ), marked AS (
-      SELECT user_id, ts_us,
-             CASE WHEN ts_us - lag(ts_us) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id)
-                  > {PCC_GAP_S} * 1000000 OR lag(ts_us) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id)
-                  IS NULL THEN 1 ELSE 0 END AS new_sess,
-             event_id
-      FROM e
-    ), sess AS (
-      SELECT user_id, ts_us,
-             sum(new_sess) OVER (
-               PARTITION BY user_id ORDER BY ts_us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS sess_id
-      FROM marked
-    ), spans AS (
-      SELECT user_id, sess_id,
-             min(ts_us) AS t0, max(ts_us) + 1 AS t1
-      FROM sess GROUP BY 1, 2
-    ), bounds AS (
-      SELECT t0 AS ts_us, 1 AS delta FROM spans
-      UNION ALL
-      SELECT t1 AS ts_us, -1 AS delta FROM spans
-    ), cum AS (
-      SELECT ts_us, delta,
-             sum(delta) OVER (
-               ORDER BY ts_us, delta
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS conc
-      FROM bounds
-    )
-    SELECT CAST(ts_us // 86400000000 AS BIGINT) AS day,
-           CAST(sum(CASE WHEN delta > 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS sessions_started,
-           CAST(max(conc) AS BIGINT) AS peak_concurrent
-    FROM cum GROUP BY 1
-    """
-
-
-@stage(
-    "events_peak_concurrency",
-    oracle=_peak_concurrency_oracle(),
-    tags=("events", "analytics", "timeseries", "sessions"),
-)
-def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PEAK CONCURRENT SESSIONS per day — the capacity-planning curve:
-    sessions (the registered 30-minute-gap cut, event_id tie-broken)
-    become [first event, last event] intervals, interval endpoints
-    become a ±1 delta stream, and the running concurrency is the
-    global cumulative sum over time — computed on the banded
-    TWO-LEVEL PREFIX scaffold (intra-day keyed window + broadcast
-    day offsets), never a single-partition global window; DuckDB's
-    oracle uses its plain single-node cumulative, so the hash pins
-    the decomposition exactly. Ties at identical microseconds order
-    (−1 before +1) — the conservative convention, identical in both
-    engines.
-
-    Exactness: integer micros from the naive epoch anchor; counts
-    and one max.
-
-    Scale (100 TB): sessionization is the shared keyed window pass;
-    the boundary stream is 2 rows per session (the corpus compressed
-    by the events-per-session fold); the prefix machinery runs on
-    that boundary frame with day-keyed bands. No collect."""
-    from pyspark.sql import Window
-
-    e = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
-    )
-    w_order = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    w_cum = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sess = (
-        e.withColumn(
-            "new_sess",
-            F.when(
-                F.lag("ts_us").over(w_order).isNull()
-                | (
-                    F.col("ts_us") - F.lag("ts_us").over(w_order)
-                    > PCC_GAP_S * 1000000
-                ),
-                1,
-            ).otherwise(0),
-        )
-        .withColumn("sess_id", F.sum("new_sess").over(w_cum))
-    )
-    spans = sess.groupBy("user_id", "sess_id").agg(
-        F.min("ts_us").alias("t0"),
-        (F.max("ts_us") + 1).alias("t1"),
-    )
-    bounds = spans.select(
-        F.col("t0").alias("ts_us"), F.lit(1).alias("delta")
-    ).unionByName(
-        spans.select(F.col("t1").alias("ts_us"), F.lit(-1).alias("delta"))
-    )
-    banded = bounds.withColumn(
-        "band", F.expr("ts_us DIV 86400000000")
-    )
-    intra = banded.withColumn(
-        "in_band_cum",
-        F.sum("delta").over(
-            Window.partitionBy("band")
-            .orderBy("ts_us", "delta")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    band_tot = banded.groupBy("band").agg(F.sum("delta").alias("bd"))
-    lower = band_tot.select(
-        F.col("band").alias("l_band"), F.col("bd").alias("l_bd")
-    )
-    offsets = (
-        band_tot.join(
-            F.broadcast(lower), F.col("l_band") < F.col("band"), "left"
-        )
-        .groupBy("band")
-        .agg(F.coalesce(F.sum("l_bd"), F.lit(0)).alias("offset"))
-    )
-    cum = intra.join(offsets, "band").withColumn(
-        "conc", (F.col("offset") + F.col("in_band_cum")).cast("bigint")
-    )
-    return cum.groupBy(
-        F.expr("CAST(ts_us DIV 86400000000 AS BIGINT)").alias("day")
-    ).agg(
-        F.sum(F.when(F.col("delta") > 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("sessions_started"),
-        F.max("conc").cast("bigint").alias("peak_concurrent"),
-    )
-
-
-docs_vocab_coverage_ladder.__doc__ = (
-    docs_vocab_coverage_ladder.__doc__.replace("{VCL_KS}", str(VCL_KS))
-)
-
-
-# --------------------------------------------------------------------
 # Temperature-mixture ladder (the alpha design table)
 # --------------------------------------------------------------------
 
@@ -660,7 +259,7 @@ def _temperature_ladder_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_lang_temperature_ladder",
     oracle=_temperature_ladder_oracle(),
     tags=("llm", "selection", "sampling", "report"),
@@ -777,7 +376,7 @@ def _cohort_repeat_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "customer_cohort_repeat_rate",
     oracle=_cohort_repeat_oracle(),
     tags=("warehouse", "analytics", "cohorts"),
@@ -905,7 +504,7 @@ def _trimmed_stats_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_value_iqr_trimmed_stats",
     oracle=_trimmed_stats_oracle(),
     tags=("events", "analytics", "robust"),
@@ -1004,7 +603,7 @@ def _source_lang_assoc_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_source_lang_association",
     oracle=_source_lang_assoc_oracle(),
     tags=("llm", "quality", "drift", "contract"),
@@ -1105,7 +704,7 @@ def _quant_sweep_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "embeddings_quantization_sweep",
     oracle=_quant_sweep_oracle(),
     tags=("llm", "embedding", "quantization", "report"),
@@ -1155,181 +754,4 @@ def embeddings_quantization_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
         .alias("n_exact"),
         F.max("e_e4s").alias("max_abs_err_e4s"),
         F.sum("e_e4s").alias("sum_abs_err_e4s"),
-    )
-
-
-# --------------------------------------------------------------------
-# Time-integral concurrency per day (the capacity twin of the peak)
-# --------------------------------------------------------------------
-
-ECI_DAY_US = 86_400_000_000
-
-
-def _concurrency_integral_oracle() -> str:
-    """Sweep-line replay: running concurrency over the ±1 boundary
-    stream (DuckDB's plain global cumulative), each constant-level
-    segment clipped to the days it spans — a genuinely DIFFERENT
-    algebra from the engine's per-span day clipping, so the hash
-    match is a cross-METHOD identity (∫conc dt == Σ span∩day), not
-    an implementation echo."""
-    return f"""
-    WITH e AS (
-      SELECT user_id, event_id,
-             date_diff('microsecond',
-                       TIMESTAMP '1970-01-01 00:00:00', ts) AS ts_us
-      FROM events
-    ), marked AS (
-      SELECT user_id, ts_us, event_id,
-             CASE WHEN ts_us - lag(ts_us) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id)
-                  > {PCC_GAP_S} * 1000000 OR lag(ts_us) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id)
-                  IS NULL THEN 1 ELSE 0 END AS new_sess
-      FROM e
-    ), sess AS (
-      SELECT user_id, ts_us,
-             sum(new_sess) OVER (
-               PARTITION BY user_id ORDER BY ts_us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS sess_id
-      FROM marked
-    ), spans AS (
-      SELECT user_id, sess_id,
-             min(ts_us) AS t0, max(ts_us) + 1 AS t1
-      FROM sess GROUP BY 1, 2
-    ), bounds AS (
-      SELECT t0 AS ts_us, 1 AS delta FROM spans
-      UNION ALL
-      SELECT t1 AS ts_us, -1 AS delta FROM spans
-    ), swept AS (
-      SELECT ts_us, delta,
-             sum(delta) OVER (
-               ORDER BY ts_us, delta
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS conc,
-             lead(ts_us) OVER (ORDER BY ts_us, delta) AS nxt
-      FROM bounds
-    ), segs AS (
-      SELECT ts_us AS s, nxt AS t, conc
-      FROM swept WHERE nxt IS NOT NULL AND nxt > ts_us AND conc > 0
-    ), segfan AS (
-      SELECT s, t, conc,
-             unnest(generate_series(s // {ECI_DAY_US},
-                                    (t - 1) // {ECI_DAY_US})) AS day
-      FROM segs
-    ), segdays AS (
-      SELECT day,
-             conc * (least(t, (day + 1) * {ECI_DAY_US})
-                     - greatest(s, day * {ECI_DAY_US})) AS busy
-      FROM segfan
-    ), per_day AS (
-      SELECT day, CAST(sum(busy) AS BIGINT) AS busy_user_us
-      FROM segdays GROUP BY 1
-    ), spanfan AS (
-      SELECT unnest(generate_series(t0 // {ECI_DAY_US},
-                                    (t1 - 1) // {ECI_DAY_US})) AS day
-      FROM spans
-    ), active AS (
-      SELECT day, CAST(count(*) AS BIGINT) AS n_sessions_active
-      FROM spanfan GROUP BY 1
-    )
-    SELECT CAST(p.day AS BIGINT) AS day,
-           a.n_sessions_active,
-           p.busy_user_us,
-           CAST(p.busy_user_us // 86400 AS BIGINT)
-             AS avg_concurrency_micro
-    FROM per_day p JOIN active a ON a.day = p.day
-    """
-
-
-@stage(
-    "events_concurrency_time_integral",
-    oracle=_concurrency_integral_oracle(),
-    tags=("events", "analytics", "timeseries", "sessions", "contract"),
-)
-def events_concurrency_time_integral(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """TIME-INTEGRAL of session concurrency per day — the capacity
-    number the peak hides: busy user-microseconds (∫ concurrency dt)
-    and the day's time-WEIGHTED average concurrency in exact micro
-    units (busy_us DIV 86400, since a day is 86400e6 µs). Peak says
-    "provision for N"; the integral says what utilization actually
-    was — together they are the capacity-planning pair.
-
-    Method identity (the contract): the ENGINE computes the integral
-    WITHOUT ever materializing running concurrency — each session
-    span clips against the days it touches (explode + least/greatest,
-    all map-side after the shared keyed sessionization window) and
-    per-day overlap sums; the ORACLE computes the same integers by
-    sweep-line (global running ±1 cumulative × segment lengths, day-
-    clipped). ∫conc dt == Σ|span ∩ day| is Little's-law bookkeeping —
-    two independent algebras hashing identical means both are right.
-
-    Exactness: integer µs end to end; the only division is the final
-    DIV 86400 (truncating identically in both engines).
-
-    Scale (100 TB): sessionization is the shared keyed window; spans
-    compress the corpus to one row per session; the day explode fans
-    each span only to the days it ACTUALLY touches (sessions are
-    minutes long — fan-out ≈ 1); one hash aggregate on day. No global
-    windows, no collect — the engine-side plan never needs the
-    sweep-line's total order, which is exactly why this shape scales
-    where a naive port of the oracle would not."""
-    from pyspark.sql import Window
-
-    e = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
-    )
-    w_order = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    w_cum = w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = e.withColumn(
-        "new_sess",
-        F.when(
-            F.lag("ts_us").over(w_order).isNull()
-            | (
-                F.col("ts_us") - F.lag("ts_us").over(w_order)
-                > PCC_GAP_S * 1000000
-            ),
-            1,
-        ).otherwise(0),
-    ).withColumn("sess_id", F.sum("new_sess").over(w_cum))
-    spans = sess.groupBy("user_id", "sess_id").agg(
-        F.min("ts_us").alias("t0"),
-        (F.max("ts_us") + 1).alias("t1"),
-    )
-    clipped = spans.select(
-        "t0",
-        "t1",
-        F.explode(
-            F.expr(
-                f"sequence(t0 DIV {ECI_DAY_US}, (t1 - 1) DIV {ECI_DAY_US})"
-            )
-        ).alias("day"),
-    ).select(
-        "day",
-        (
-            F.least(F.col("t1"), (F.col("day") + 1) * F.lit(ECI_DAY_US))
-            - F.greatest(F.col("t0"), F.col("day") * F.lit(ECI_DAY_US))
-        ).alias("ov"),
-    )
-    return (
-        clipped.groupBy("day")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_sessions_active"),
-            F.sum("ov").cast("bigint").alias("busy_user_us"),
-        )
-        .select(
-            F.col("day").cast("bigint").alias("day"),
-            "n_sessions_active",
-            "busy_user_us",
-            F.expr("CAST(busy_user_us DIV 86400 AS BIGINT)").alias(
-                "avg_concurrency_micro"
-            ),
-        )
     )

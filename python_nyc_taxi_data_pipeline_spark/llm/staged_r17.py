@@ -1,19 +1,8 @@
-"""Round-17 registration candidates — seed slate started in round 10.
+"""Autocorrelation, range-join, calendar, entropy and approximate-
+percentile contract queries, each registered with its DuckDB oracle.
 
-Same staging mechanism as ``staged_r8``–``staged_r16``; promotion in
-round 17 via ``staged_r17.promote_to_registry(R17_BATCH)``.
+The operators:
 
-The seed (operator families the engine does not cover yet):
-
-- ``events_concurrent_user_pairs``: INTERVAL-OVERLAP SELF-JOIN (the
-  range-join family — the engine has as-of joins but no interval
-  joins): pairs of users whose sessions overlap in time, found by
-  hour-band blocking + an overlap theta inside each band, with each
-  overlapping pair attributed to exactly the band where the overlap
-  STARTS (the classic dedup-free interval-join trick — no distinct
-  pass). The oracle takes the opposite road (direct pair join over
-  the span list, no banding), so the hash pins the band decomposition
-  against the naive algebra.
 - ``orders_daily_autocorr``: temporal AUTOCORRELATION of the daily
   order-count series at lags 1/7/28 — the periodicity/drift detector
   the seasonality profile cannot express (it averages by weekday; the
@@ -21,16 +10,6 @@ The seed (operator families the engine does not cover yet):
   Zero-filled day spine; numerator/denominator accumulated as EXACT
   integers via n-scaled residuals (n·c_t − S), only the final ratio a
   rounded double (the cosine pattern).
-- ``docs_image_ahash_neardup``: IMAGE near-duplicate detection — the
-  multimodal member the dedup family lacks (text has MinHash/SimHash/
-  semantic; images had nothing): deterministic per-template PPM
-  rasters with per-doc single-byte perturbations run through the REAL
-  decode→resize pipeline (``multimodal.resize_images``), then an
-  average-hash (4×4 grayscale, mean threshold, 16-bit signature) and
-  a signature-bucket report. The oracle replays the full chain —
-  nearest-neighbor resample arithmetic, integer grayscale, mean
-  threshold, bit packing — in pure SQL, so the driver hash verifies
-  the perceptual-hash GEOMETRY end to end.
 - ``events_error_context_window``: the windowed-count RANGE join
   (stream-stream-join shape in batch) — per error event, the count /
   error-share / recency-gap of same-user events in the 5 minutes
@@ -42,11 +21,6 @@ The seed (operator families the engine does not cover yet):
   5·(d DIV 7) + cum[d mod 7] (epoch-anchored) turns business-days-
   between into two O(1) integer evaluations; no calendar table, no
   UDF.
-- ``docs_length_bootstrap_ci``: deterministic POISSON BOOTSTRAP of
-  the mean document length (the resampling family): per-(doc, rep)
-  Poisson(1) weights from md5-derived uniforms via repr()-exact
-  inverse-CDF literals — identical integer weights on both engines,
-  pure map-side, no shared state.
 - ``docs_char_entropy_quality``: character-entropy compression proxy
   per source (low entropy = boilerplate/padding/keyword stuffing) —
   per-term micro rounding before the sum (the interarrival-entropy
@@ -65,231 +39,11 @@ The seed (operator families the engine does not cover yet):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import QueryFn
-
-
-@dataclass(frozen=True)
-class StagedQuery:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = ()
-
-
-STAGED: dict[str, StagedQuery] = {}
-
-R17_BATCH: tuple[str, ...] = (
-    "customer_churn_training_frame",
-    "docs_char_entropy_quality",
-    "docs_image_ahash_neardup",
-    "docs_length_bootstrap_ci",
-    "events_concurrent_user_pairs",
-    "events_error_context_window",
-    "lineitem_approx_percentile_contract",
-    "lineitem_business_day_latency",
-    "orders_daily_autocorr",
-    "orders_dow_adjusted_anomalies",
-)
-
-
-def promote_to_registry(names: list[str]) -> list[str]:
-    """Round-17 registration in one call; ``names`` is REQUIRED —
-    whole-slate promotion must be spelled out (``list(STAGED)``)."""
-    from ..registry import register
-
-    if names is None:
-        raise ValueError(
-            "promote_to_registry requires an explicit name batch; "
-            "spell out whole-slate promotion as list(STAGED)"
-        )
-    promoted = []
-    for name in names:
-        q = STAGED[name]
-        register(name, q.oracle, q.tags)(q.fn)
-        promoted.append(name)
-    return promoted
-
-
-def stage(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Mirror of ``registry.register`` that records into ``STAGED``."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        STAGED[name] = StagedQuery(name, fn, oracle, tags)
-        return fn
-
-    return deco
-
-
-# --------------------------------------------------------------------
-# Concurrent-user pairs (banded interval-overlap self-join)
-# --------------------------------------------------------------------
-
-CUP_GAP_S = 1800  # the registered 30-minute session gap
-CUP_BAND_US = 3_600_000_000  # 1-hour blocking bands
-
-
-def _concurrent_pairs_oracle() -> str:
-    """The NAIVE algebra: sessionize, then join the span list to
-    itself directly on the overlap predicate — no banding, no
-    start-band attribution. DuckDB handles the quadratic form fine at
-    oracle scale; matching hashes prove the engine's banded
-    decomposition loses and invents nothing."""
-    return f"""
-    WITH e AS (
-      SELECT user_id, event_id,
-             date_diff('microsecond',
-                       TIMESTAMP '1970-01-01 00:00:00', ts) AS ts_us
-      FROM events
-    ), marked AS (
-      SELECT user_id, ts_us, event_id,
-             CASE WHEN ts_us - lag(ts_us) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id)
-                  > {CUP_GAP_S} * 1000000 OR lag(ts_us) OVER (
-                    PARTITION BY user_id ORDER BY ts_us, event_id)
-                  IS NULL THEN 1 ELSE 0 END AS new_sess
-      FROM e
-    ), sess AS (
-      SELECT user_id, ts_us,
-             sum(new_sess) OVER (
-               PARTITION BY user_id ORDER BY ts_us, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) AS sess_id
-      FROM marked
-    ), spans AS (
-      SELECT user_id, sess_id,
-             min(ts_us) AS t0, max(ts_us) + 1 AS t1
-      FROM sess GROUP BY 1, 2
-    )
-    SELECT a.user_id AS user_a, b.user_id AS user_b,
-           CAST(count(*) AS BIGINT) AS n_overlaps,
-           CAST(sum(least(a.t1, b.t1) - greatest(a.t0, b.t0))
-                AS BIGINT) AS overlap_us
-    FROM spans a
-    JOIN spans b
-      ON a.user_id < b.user_id AND a.t0 < b.t1 AND b.t0 < a.t1
-    GROUP BY 1, 2
-    """
-
-
-@stage(
-    "events_concurrent_user_pairs",
-    oracle=_concurrent_pairs_oracle(),
-    tags=("events", "join", "interval", "sessions"),
-)
-def events_concurrent_user_pairs(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """CONCURRENT-USER pairs — the INTERVAL-OVERLAP self-join: for
-    every pair of users with overlapping sessions, how many session
-    overlaps and how much total concurrent time. The co-presence
-    signal (shared-account detection, fraud rings, social proximity)
-    that needs a RANGE join, which Spark does not natively optimize —
-    expressed here as the standard scalable decomposition:
-
-    - sessions → [t0, t1) spans (the shared keyed sessionization);
-    - each span explodes to the 1-hour BANDS it touches, making the
-      pair join an EQUI-join on band (distributes; per-band work is
-      bounded by the hour's concurrency, the physically meaningful
-      skew measure);
-    - a pair overlapping several bands is counted ONCE: only the band
-      containing the overlap START keeps it (greatest(t0a, t0b) DIV
-      band == band) — the attribution trick that removes the global
-      DISTINCT a naive banded join needs;
-    - per-pair aggregate: overlap count + total overlapped µs.
-
-    The oracle joins the span list to itself directly (no banding) —
-    a genuinely different join algebra, so the hash match proves the
-    band decomposition exact, not just self-consistent.
-
-    Exactness: integer µs; half-open spans make `a.t0 < b.t1 AND
-    b.t0 < a.t1` the exact overlap predicate (touching endpoints are
-    NOT overlap).
-
-    Scale (100 TB): band fan-out ≈ 1 for minutes-long sessions; the
-    band hash-join shuffles spans once; within-band pair work is
-    O(concurrency²) per hour — the intrinsic output-complexity of the
-    query, paid only where users actually co-occur. No global
-    windows, no distinct over pairs."""
-    from pyspark.sql import Window
-
-    e = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-        ).alias("ts_us"),
-    )
-    w_order = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    w_cum = w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = e.withColumn(
-        "new_sess",
-        F.when(
-            F.lag("ts_us").over(w_order).isNull()
-            | (
-                F.col("ts_us") - F.lag("ts_us").over(w_order)
-                > CUP_GAP_S * 1000000
-            ),
-            1,
-        ).otherwise(0),
-    ).withColumn("sess_id", F.sum("new_sess").over(w_cum))
-    spans = sess.groupBy("user_id", "sess_id").agg(
-        F.min("ts_us").alias("t0"),
-        (F.max("ts_us") + 1).alias("t1"),
-    )
-    banded = spans.select(
-        "user_id",
-        "t0",
-        "t1",
-        F.explode(
-            F.expr(
-                f"sequence(t0 DIV {CUP_BAND_US}, (t1 - 1) DIV {CUP_BAND_US})"
-            )
-        ).alias("band"),
-    ).localCheckpoint(eager=True)
-    a = banded.select(
-        "band",
-        F.col("user_id").alias("user_a"),
-        F.col("t0").alias("a_t0"),
-        F.col("t1").alias("a_t1"),
-    )
-    b = banded.select(
-        "band",
-        F.col("user_id").alias("user_b"),
-        F.col("t0").alias("b_t0"),
-        F.col("t1").alias("b_t1"),
-    )
-    pairs = (
-        a.join(b, "band")
-        .filter(F.col("user_a") < F.col("user_b"))
-        .filter(
-            (F.col("a_t0") < F.col("b_t1")) & (F.col("b_t0") < F.col("a_t1"))
-        )
-        # start-band attribution: exactly one band keeps each pair
-        .filter(
-            F.expr(
-                f"greatest(a_t0, b_t0) DIV {CUP_BAND_US}"
-            )
-            == F.col("band")
-        )
-    )
-    return pairs.groupBy("user_a", "user_b").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_overlaps"),
-        F.sum(
-            F.least(F.col("a_t1"), F.col("b_t1"))
-            - F.greatest(F.col("a_t0"), F.col("b_t0"))
-        )
-        .cast("bigint")
-        .alias("overlap_us"),
-    )
+from ..registry import register
 
 
 # --------------------------------------------------------------------
@@ -342,7 +96,7 @@ def _autocorr_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_daily_autocorr",
     oracle=_autocorr_oracle(),
     tags=("warehouse", "analytics", "timeseries"),
@@ -422,193 +176,6 @@ orders_daily_autocorr.__doc__ = orders_daily_autocorr.__doc__.replace(
 
 
 # --------------------------------------------------------------------
-# Image average-hash near-dup (the multimodal dedup family member)
-# --------------------------------------------------------------------
-
-AH_GROUPS = 24  # synthetic image templates (near-dup ground truth)
-AH_TW = AH_TH = 4  # aHash grid (16-bit signature)
-
-
-def _ahash_oracle() -> str:
-    """Pure-SQL replay of synth → nearest-neighbor resize → grayscale
-    → mean threshold → bit packing. Source raster byte i of doc d is
-    (g·131 + i·7) % 256 with g = d % {AH_GROUPS}, except the single
-    perturbed index p = d % (w·h·3) where (d DIV {AH_GROUPS}) % 7 is
-    added mod 256 — the per-doc "scratch" that makes group members
-    near-duplicates rather than copies."""
-    G = AH_GROUPS
-    return f"""
-    WITH d AS (
-      SELECT doc_id,
-             doc_id % {G} AS g,
-             6 + (doc_id % {G}) % 5 AS w,
-             5 + (doc_id % {G}) % 4 AS h
-      FROM documents
-    ), px AS (
-      SELECT d.doc_id, d.g,
-             y.g AS oy, x.g AS ox, c.g AS ch,
-             ((((y.g * d.h) // {AH_TH}) * d.w + ((x.g * d.w) // {AH_TW}))
-              * 3 + c.g) AS src_i
-      FROM d,
-           generate_series(0, {AH_TH - 1}) AS y(g),
-           generate_series(0, {AH_TW - 1}) AS x(g),
-           generate_series(0, 2) AS c(g)
-    ), v AS (
-      SELECT doc_id, g, oy, ox,
-             (g * 131 + src_i * 7
-              + CASE WHEN src_i = doc_id % ((6 + g % 5) * (5 + g % 4) * 3)
-                     THEN (doc_id // {G}) % 7 ELSE 0 END) % 256 AS val
-      FROM px
-    ), gray AS (
-      SELECT doc_id, g, oy, ox,
-             CAST(sum(val) AS BIGINT) // 3 AS gv
-      FROM v GROUP BY 1, 2, 3, 4
-    ), mean16 AS (
-      SELECT doc_id, g,
-             CAST(sum(gv) AS BIGINT) // {AH_TW * AH_TH} AS mu
-      FROM gray GROUP BY 1, 2
-    ), sig AS (
-      SELECT gr.doc_id, gr.g,
-             CAST(sum(CASE WHEN gr.gv > m.mu
-                      THEN 1 << (gr.oy * {AH_TW} + gr.ox)
-                      ELSE 0 END) AS BIGINT) AS ahash
-      FROM gray gr JOIN mean16 m ON m.doc_id = gr.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT ahash,
-           CAST(count(*) AS BIGINT) AS n_images,
-           CAST(count(DISTINCT g) AS BIGINT) AS n_templates,
-           CAST(min(doc_id) AS BIGINT) AS min_doc_id,
-           CAST(count(*) * (count(*) - 1) // 2 AS BIGINT) AS n_dup_pairs
-    FROM sig GROUP BY 1
-    """
-
-
-@stage(
-    "docs_image_ahash_neardup",
-    oracle=_ahash_oracle(),
-    tags=("llm", "multimodal", "dedup", "image", "udf"),
-)
-def docs_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMAGE near-duplicate detection by AVERAGE HASH — the multimodal
-    member of the dedup family (text near-dup: MinHash/SimHash/
-    semantic; images previously had none): each document synthesizes a
-    deterministic PPM raster from a TEMPLATE id (doc_id % {G}) plus a
-    single perturbed byte (the near-dup ground truth: same template =
-    visually identical up to one scratch), the payload runs the REAL
-    multimodal pipeline — PNM encode → ``resize_images`` (decode +
-    numpy nearest-neighbor + re-encode) at the {tw}×{th} hash grid —
-    and the Arrow worker computes the classic aHash: integer grayscale
-    (r+g+b)÷3 per cell, cell mean ÷{cells}, bit = gray > mean, 16-bit
-    packed signature. Images sharing a signature bucket are the
-    near-dup candidates; the report is per-bucket (count, templates
-    folded, min doc = survivor, candidate-pair mass).
-
-    The DuckDB oracle replays the WHOLE chain in SQL (resample index
-    arithmetic, grayscale, threshold, bit packing), so the driver hash
-    pins the perceptual-hash geometry — a wrong stride, a half-pixel
-    shift, or a biased threshold all flip buckets.
-
-    Exactness: integers end to end (÷ are truncating integer divs on
-    identical non-negative operands).
-
-    Scale (100 TB): synth/decode/resize/hash are pure Arrow map stages
-    (no shuffle, worker memory bounded by batch size); ONE hash
-    aggregate on the 16-bit signature (≤65536 groups, never skewed
-    worse than the true duplicate distribution). Real corpora swap the
-    synth stage for payload bytes and (optionally) the 64-bit 8×8 grid
-    — one constant, same plan."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .multimodal import _make_pnm_decoder, resize_images
-
-    G = AH_GROUPS
-    tw, th = AH_TW, AH_TH
-
-    synth_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def synth(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                g = did % G
-                w, h = 6 + g % 5, 5 + g % 4
-                n = w * h * 3
-                v = (g * 131 + np.arange(n, dtype=np.int64) * 7) % 256
-                p = did % n
-                v[p] = (v[p] + (did // G) % 7) % 256
-                payloads.append(
-                    b"P6"
-                    + f"\n{w} {h}\n255\n".encode()
-                    + v.astype(np.uint8).tobytes()
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    sig_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("g", T.LongType()),
-            T.StructField("ahash", T.LongType()),
-        ]
-    )
-    decode = _make_pnm_decoder()
-
-    def ahash(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = {"doc_id": [], "g": [], "ahash": []}
-            for did, p in zip(pdf["doc_id"], pdf["payload"]):
-                raster = np.frombuffer(
-                    decode(bytes(p))["pixels"], dtype=np.uint8
-                ).astype(np.int64)
-                gray = raster.reshape(-1, 3).sum(axis=1) // 3
-                mu = int(gray.sum()) // gray.size
-                bits = gray > mu
-                sig = int(
-                    sum(1 << j for j, b in enumerate(bits) if b)
-                )
-                out["doc_id"].append(int(did))
-                out["g"].append(int(did) % G)
-                out["ahash"].append(sig)
-            yield pd.DataFrame(out)
-
-    d = load(spark, sf_dir, "documents").select("doc_id")
-    imgs = d.mapInPandas(synth, synth_schema)
-    resized = resize_images(imgs, width=tw, height=th)
-    sigs = resized.select("doc_id", "payload").mapInPandas(ahash, sig_schema)
-    return sigs.groupBy("ahash").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_images"),
-        F.countDistinct("g").cast("bigint").alias("n_templates"),
-        F.min("doc_id").cast("bigint").alias("min_doc_id"),
-        F.expr(
-            "CAST(count(1) * (count(1) - 1) DIV 2 AS BIGINT)"
-        ).alias("n_dup_pairs"),
-    )
-
-
-docs_image_ahash_neardup.__doc__ = (
-    docs_image_ahash_neardup.__doc__.replace("{G}", str(AH_GROUPS))
-    .replace("{tw}", str(AH_TW))
-    .replace("{th}", str(AH_TH))
-    .replace("{cells}", str(AH_TW * AH_TH))
-)
-
-
-# --------------------------------------------------------------------
 # Error context window (windowed-count range join over event streams)
 # --------------------------------------------------------------------
 
@@ -650,7 +217,7 @@ def _error_context_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_error_context_window",
     oracle=_error_context_oracle(),
     tags=("events", "join", "interval", "window"),
@@ -787,7 +354,7 @@ def _busday_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "lineitem_business_day_latency",
     oracle=_busday_oracle(),
     tags=("warehouse", "analytics", "calendar"),
@@ -862,111 +429,6 @@ lineitem_business_day_latency.__doc__ = (
 
 
 # --------------------------------------------------------------------
-# Deterministic Poisson bootstrap (resampling-based uncertainty)
-# --------------------------------------------------------------------
-
-BOOT_REPS = 48  # bootstrap replicates
-# Poisson(1) CDF, F(0)..F(6); u >= F(6) draws weight 7. The literals
-# are repr()-exact IEEE doubles embedded identically in BOTH engines'
-# SQL, so the inverse-CDF branch taken is identical bit-for-bit.
-BOOT_CDF = (
-    "0.36787944117144233",
-    "0.7357588823428847",
-    "0.9196986029286058",
-    "0.9810118431238463",
-    "0.9963401531726563",
-    "0.9994058151824183",
-    "0.999916758850712",
-)
-
-
-def _boot_weight_case(u: str) -> str:
-    """CASE cascade: the smallest k with u < F(k), else 7."""
-    branches = " ".join(
-        f"WHEN {u} < {f} THEN {k}" for k, f in enumerate(BOOT_CDF)
-    )
-    return f"(CASE {branches} ELSE 7 END)"
-
-
-def _bootstrap_oracle() -> str:
-    reps = ", ".join(str(r) for r in range(BOOT_REPS))
-    u = (
-        "(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || rep::VARCHAR),"
-        " 1, 15))::BIGINT % 4294967296 AS DOUBLE) / 4294967296.0)"
-    )
-    return f"""
-    WITH reps AS (
-      SELECT unnest([{reps}]) AS rep
-    ), w AS (
-      SELECT r.rep, d.n_chars,
-             {_boot_weight_case(u)} AS k
-      FROM documents d CROSS JOIN reps r
-    )
-    SELECT rep,
-           CAST(sum(k) AS BIGINT) AS n_eff,
-           CAST(sum(k * n_chars) AS BIGINT) AS sum_len,
-           CAST(sum(k * n_chars) * 1000000
-                // greatest(sum(k), 1) AS BIGINT) AS mean_len_micro
-    FROM w GROUP BY 1
-    """
-
-
-@stage(
-    "docs_length_bootstrap_ci",
-    oracle=_bootstrap_oracle(),
-    tags=("llm", "sampling", "statistics", "bootstrap"),
-)
-def docs_length_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DETERMINISTIC POISSON BOOTSTRAP of the mean document length —
-    the resampling family (the engine had stratified/quota/hash
-    sampling but no uncertainty quantification): {B} replicates, each
-    document drawing a Poisson(1) replication weight from an md5-
-    derived uniform (the distributed-bootstrap standard — Poisson
-    weights need NO shared n, so the resample is a pure map; Chamandy
-    et al., "Estimating uncertainty for massive data streams"). The
-    spread of the {B} replicate means IS the sampling distribution of
-    the corpus mean-length estimator — the error bar every corpus
-    stat report should carry.
-
-    Determinism/exactness: u = (md5(doc:rep) mod 2³²)/2³² with the
-    repo's cross-engine hash convention; the inverse-CDF thresholds
-    are repr()-exact double literals shared by both SQL texts, so
-    every (doc, rep) draws the IDENTICAL integer weight on both
-    engines; replicate sums are pure integers, means integer-micro.
-
-    Scale (100 TB): the weight draw is map-side (hash + CASE — no
-    shuffle, no shared state); the {B}-way fan-out feeds a {B}-group
-    hash aggregate with map-side combine, so shuffle traffic is {B}
-    rows per partition regardless of corpus size. Bootstrap compute
-    is intrinsically {B}× one scan — bound B, not the corpus."""
-    reps = spark.range(BOOT_REPS).select(F.col("id").cast("int").alias("rep"))
-    u = (
-        "(CAST(CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), ':',"
-        " CAST(rep AS STRING))), 1, 15), 16, 10) AS BIGINT) % 4294967296"
-        " AS DOUBLE) / 4294967296.0)"
-    )
-    w = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", "n_chars")
-        .crossJoin(F.broadcast(reps))
-        .withColumn("k", F.expr(_boot_weight_case(u)))
-    )
-    return w.groupBy("rep").agg(
-        F.sum("k").cast("bigint").alias("n_eff"),
-        F.sum(F.col("k") * F.col("n_chars")).cast("bigint").alias("sum_len"),
-        F.expr(
-            "CAST(sum(k * n_chars) * 1000000"
-            " DIV greatest(sum(k), 1) AS BIGINT)"
-        ).alias("mean_len_micro"),
-    )
-
-
-docs_length_bootstrap_ci.__doc__ = docs_length_bootstrap_ci.__doc__.replace(
-    "{B}", str(BOOT_REPS)
-)
-
-
-# --------------------------------------------------------------------
 # Character-entropy quality signal (compression proxy)
 # --------------------------------------------------------------------
 
@@ -1005,7 +467,7 @@ def _char_entropy_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_char_entropy_quality",
     oracle=_char_entropy_oracle(),
     tags=("llm", "quality", "entropy"),
@@ -1117,7 +579,7 @@ def _churn_frame_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "customer_churn_training_frame",
     oracle=_churn_frame_oracle(),
     tags=("warehouse", "ml", "labels", "point-in-time"),
@@ -1202,7 +664,7 @@ def _approx_pct_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "lineitem_approx_percentile_contract",
     oracle=_approx_pct_oracle(),
     tags=("warehouse", "aqp", "sketch", "contract"),
@@ -1317,7 +779,7 @@ def _dow_anomaly_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_dow_adjusted_anomalies",
     oracle=_dow_anomaly_oracle(),
     tags=("warehouse", "anomaly", "timeseries", "robust"),

@@ -1,9 +1,7 @@
-"""Round-18 registration candidates — seed slate started in round 10.
+"""Experimentation, forecasting and sequence queries, each registered
+with its DuckDB oracle.
 
-Same staging mechanism as ``staged_r8``–``staged_r17``; promotion in
-round 18 via ``staged_r18.promote_to_registry(R18_BATCH)``.
-
-The seed (operator families the engine does not cover yet):
+The operators:
 
 - ``events_ab_cuped_readout``: EXPERIMENTATION readout with CUPED
   variance reduction (Deng et al. 2013, "Improving the sensitivity of
@@ -23,9 +21,6 @@ The seed (operator families the engine does not cover yet):
   where funnels become visible). The trigram domain is bounded by the
   type vocabulary cubed, so the report is metadata-sized at any
   corpus scale.
-
-Round-11 growth (slate 3 -> 6):
-
 - ``events_weekly_retention_triangle``: the canonical cohort
   retention matrix — users cohorted by first-active week, active
   share per (cohort, age) in ppm; the growth-analytics table the
@@ -38,14 +33,8 @@ Round-11 growth (slate 3 -> 6):
   train/val/test split reported per source stratum (docs, token
   mass, shares ppm) — the dataset-card balance certificate; the r15
   leakage contract covers content, this covers size/balance.
-
-Round-11 close (slate 6 -> 10, the experimentation-platform shelf):
-
 - ``events_ab_srm_check``: sample-ratio mismatch — the two-cell
   chi-square gate every A/B readout must pass before anything else.
-- ``events_cuped_variance_report``: the CUPED payoff certificate —
-  raw vs adjusted metric variance per arm and the realized reduction
-  ppm (what the covariate actually buys).
 - ``orders_did_readout``: difference-in-differences — the
   quasi-experimental estimate for dated rollouts you could not
   randomize; four cell means + the DiD in exact micro.
@@ -56,67 +45,11 @@ Round-11 close (slate 6 -> 10, the experimentation-platform shelf):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import QueryFn
-
-
-@dataclass(frozen=True)
-class StagedQuery:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = ()
-
-
-STAGED: dict[str, StagedQuery] = {}
-
-R18_BATCH: tuple[str, ...] = (
-    "docs_stratified_split_manifest",
-    "events_ab_cuped_readout",
-    "events_ab_srm_check",
-    "events_cuped_variance_report",
-    "events_power_mde_planner",
-    "events_session_path_trigrams",
-    "events_type_entropy_rate",
-    "events_weekly_retention_triangle",
-    "orders_did_readout",
-    "orders_naive_forecast_eval",
-)
-
-
-def promote_to_registry(names: list[str]) -> list[str]:
-    """Round-18 registration in one call; ``names`` is REQUIRED —
-    whole-slate promotion must be spelled out (``list(STAGED)``)."""
-    from ..registry import register
-
-    if names is None:
-        raise ValueError(
-            "promote_to_registry requires an explicit name batch; "
-            "spell out whole-slate promotion as list(STAGED)"
-        )
-    promoted = []
-    for name in names:
-        q = STAGED[name]
-        register(name, q.oracle, q.tags)(q.fn)
-        promoted.append(name)
-    return promoted
-
-
-def stage(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Mirror of ``registry.register`` that records into ``STAGED``."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        STAGED[name] = StagedQuery(name, fn, oracle, tags)
-        return fn
-
-    return deco
+from ..registry import register
 
 
 # --------------------------------------------------------------------
@@ -175,7 +108,7 @@ def _cuped_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_ab_cuped_readout",
     oracle=_cuped_oracle(),
     tags=("events", "experimentation", "statistics"),
@@ -300,7 +233,7 @@ def _forecast_eval_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_naive_forecast_eval",
     oracle=_forecast_eval_oracle(),
     tags=("warehouse", "timeseries", "forecast", "eval"),
@@ -413,7 +346,7 @@ def _path_trigrams_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_session_path_trigrams",
     oracle=_path_trigrams_oracle(),
     tags=("events", "sessions", "sequence", "mining"),
@@ -488,7 +421,7 @@ def events_session_path_trigrams(
 
 
 # --------------------------------------------------------------------
-# Weekly retention triangle (round-11 growth)
+# Weekly retention triangle
 # --------------------------------------------------------------------
 
 
@@ -518,7 +451,7 @@ def _retention_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_weekly_retention_triangle",
     oracle=_retention_oracle(),
     tags=("analytics", "retention", "cohort", "growth"),
@@ -579,7 +512,7 @@ def events_weekly_retention_triangle(
 
 
 # --------------------------------------------------------------------
-# Markov entropy rate (round-11 growth)
+# Markov entropy rate
 # --------------------------------------------------------------------
 
 
@@ -616,7 +549,7 @@ def _entropy_rate_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_type_entropy_rate",
     oracle=_entropy_rate_oracle(),
     tags=("analytics", "markov", "entropy", "information"),
@@ -701,7 +634,7 @@ def events_type_entropy_rate(
 
 
 # --------------------------------------------------------------------
-# Stratified split manifest (round-11 growth)
+# Stratified split manifest
 # --------------------------------------------------------------------
 
 SPLIT_BUCKETS = 10  # md5 % 10: 0-7 train, 8 val, 9 test
@@ -740,7 +673,7 @@ def _split_manifest_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_stratified_split_manifest",
     oracle=_split_manifest_oracle(),
     tags=("llm", "curation", "split", "manifest"),
@@ -805,7 +738,7 @@ docs_stratified_split_manifest.__doc__ = (
 
 
 # --------------------------------------------------------------------
-# SRM check (round-11 growth: the #1 A/B sanity gate)
+# SRM check (the first A/B sanity gate)
 # --------------------------------------------------------------------
 
 # chi-square(df=1) critical value at alpha=0.05, Python literal in ppm
@@ -832,7 +765,7 @@ def _srm_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_ab_srm_check",
     oracle=_srm_oracle(),
     tags=("events", "experimentation", "quality", "srm"),
@@ -873,156 +806,7 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# CUPED variance report (round-11 growth: the payoff certificate)
-# --------------------------------------------------------------------
-
-
-def _cuped_variance_oracle() -> str:
-    return f"""
-    WITH e AS (
-      SELECT user_id,
-             date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
-             {CUPED_CENTS} AS cents
-      FROM events
-    ), per_user AS (
-      SELECT user_id,
-             CAST(user_id % 2 AS BIGINT) AS arm,
-             CAST(sum(CASE WHEN day < {CUPED_BOUNDARY_DAY}
-                      THEN cents ELSE 0 END) AS BIGINT) AS pre,
-             CAST(sum(CASE WHEN day >= {CUPED_BOUNDARY_DAY}
-                      THEN cents ELSE 0 END) AS BIGINT) AS post
-      FROM e GROUP BY 1, 2
-    ), moments AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(pre) AS BIGINT) AS sp,
-             CAST(sum(post) AS BIGINT) AS sq,
-             CAST(sum(pre * post) AS BIGINT) AS spq,
-             CAST(sum(pre * pre) AS BIGINT) AS spp
-      FROM per_user
-    ), theta AS (
-      SELECT round(CAST(n * spq - sp * sq AS DOUBLE)
-                   / greatest(n * spp - sp * sp, 1), 6) AS th,
-             sp // n AS mu_pre
-      FROM moments
-    ), adj AS (
-      SELECT u.arm, u.post,
-             u.post - CAST(round(t.th * (u.pre - t.mu_pre), 0) AS BIGINT)
-               AS y
-      FROM per_user u CROSS JOIN theta t
-    ), arms AS (
-      SELECT arm,
-             CAST(count(*) AS BIGINT) AS n_users,
-             CAST(sum(post) AS BIGINT) AS s1,
-             CAST(sum(post * post) AS BIGINT) AS s2,
-             CAST(sum(y) AS BIGINT) AS t1,
-             CAST(sum(y * y) AS BIGINT) AS t2
-      FROM adj GROUP BY 1
-    )
-    SELECT arm, n_users,
-           CAST(round((CAST(s2 AS DOUBLE) / n_users
-                 - (CAST(s1 AS DOUBLE) / n_users)
-                   * (CAST(s1 AS DOUBLE) / n_users)) * 100.0, 0)
-                AS BIGINT) AS var_post_e2,
-           CAST(round((CAST(t2 AS DOUBLE) / n_users
-                 - (CAST(t1 AS DOUBLE) / n_users)
-                   * (CAST(t1 AS DOUBLE) / n_users)) * 100.0, 0)
-                AS BIGINT) AS var_adj_e2,
-           CAST(round((1.0 - (CAST(t2 AS DOUBLE) / n_users
-                 - (CAST(t1 AS DOUBLE) / n_users)
-                   * (CAST(t1 AS DOUBLE) / n_users))
-                 / (CAST(s2 AS DOUBLE) / n_users
-                 - (CAST(s1 AS DOUBLE) / n_users)
-                   * (CAST(s1 AS DOUBLE) / n_users))) * 1000000.0, 0)
-                AS BIGINT) AS reduction_ppm
-    FROM arms
-    """
-
-
-@stage(
-    "events_cuped_variance_report",
-    oracle=_cuped_variance_oracle(),
-    tags=("events", "experimentation", "statistics", "variance"),
-)
-def events_cuped_variance_report(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The CUPED PAYOFF CERTIFICATE — per arm, the population variance
-    of the raw post-period metric vs the CUPED-adjusted metric and
-    the reduction in ppm (the realized 1−ρ² — how much experiment
-    runtime the covariate actually buys). Companion to the registered
-    ``events_ab_cuped_readout``, which reports the adjusted MEANS
-    this report prices.
-
-    Exactness: same pooled θ (6-dp double of exact n-scaled integer
-    moments); the adjusted value rounds PER USER to integer cents
-    (order-free integer sums — never a running double sum); variances
-    combine exact int64 moments in one identical IEEE double
-    expression per engine, rounded once at centi-cents² / ppm.
-
-    Scale (100 TB): one scan → per-user hash aggregate; θ and the
-    pre-mean are a broadcast 1-row frame; per-arm moments are a 2-row
-    aggregate. No data-sized joins, no windows."""
-    e = load(spark, sf_dir, "events").select(
-        "user_id",
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01")).alias(
-            "day"
-        ),
-        F.expr(CUPED_CENTS).alias("cents"),
-    )
-    pre = F.col("day") < CUPED_BOUNDARY_DAY
-    per_user = e.groupBy("user_id").agg(
-        F.sum(F.when(pre, F.col("cents")).otherwise(0))
-        .cast("bigint")
-        .alias("pre"),
-        F.sum(F.when(~pre, F.col("cents")).otherwise(0))
-        .cast("bigint")
-        .alias("post"),
-    ).selectExpr("CAST(user_id % 2 AS BIGINT) AS arm", "pre", "post")
-    mom = per_user.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("pre").cast("bigint").alias("sp"),
-        F.sum("post").cast("bigint").alias("sq"),
-        F.sum(F.col("pre") * F.col("post")).cast("bigint").alias("spq"),
-        F.sum(F.col("pre") * F.col("pre")).cast("bigint").alias("spp"),
-    ).selectExpr(
-        "round(CAST(n * spq - sp * sq AS DOUBLE)"
-        " / greatest(n * spp - sp * sp, 1), 6) AS th",
-        "sp DIV n AS mu_pre",
-    )
-    adj = per_user.crossJoin(F.broadcast(mom)).selectExpr(
-        "arm",
-        "post",
-        "post - CAST(round(th * (pre - mu_pre), 0) AS BIGINT) AS y",
-    )
-    arms = adj.groupBy("arm").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.sum("post").cast("bigint").alias("s1"),
-        F.sum(F.col("post") * F.col("post")).cast("bigint").alias("s2"),
-        F.sum("y").cast("bigint").alias("t1"),
-        F.sum(F.col("y") * F.col("y")).cast("bigint").alias("t2"),
-    )
-    vp = (
-        "(CAST(s2 AS DOUBLE) / n_users"
-        " - (CAST(s1 AS DOUBLE) / n_users)"
-        " * (CAST(s1 AS DOUBLE) / n_users))"
-    )
-    va = (
-        "(CAST(t2 AS DOUBLE) / n_users"
-        " - (CAST(t1 AS DOUBLE) / n_users)"
-        " * (CAST(t1 AS DOUBLE) / n_users))"
-    )
-    return arms.selectExpr(
-        "arm",
-        "n_users",
-        f"CAST(round({vp} * 100.0, 0) AS BIGINT) AS var_post_e2",
-        f"CAST(round({va} * 100.0, 0) AS BIGINT) AS var_adj_e2",
-        f"CAST(round((1.0 - {va} / {vp}) * 1000000.0, 0) AS BIGINT)"
-        " AS reduction_ppm",
-    )
-
-
-# --------------------------------------------------------------------
-# Difference-in-differences (round-11 growth)
+# Difference-in-differences
 # --------------------------------------------------------------------
 
 DID_BOUNDARY = "DATE '1995-06-01'"  # mid-fixture policy date
@@ -1059,7 +843,7 @@ def _did_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_did_readout",
     oracle=_did_oracle(),
     tags=("warehouse", "experimentation", "causal", "did"),
@@ -1112,7 +896,7 @@ def orders_did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# Power / MDE planner (round-11 growth)
+# Power / MDE planner
 # --------------------------------------------------------------------
 
 # two-sided alpha=0.05 and power=0.8 normal quantiles, Python literals
@@ -1156,7 +940,7 @@ def _mde_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_power_mde_planner",
     oracle=_mde_oracle(),
     tags=("events", "experimentation", "power", "planning"),

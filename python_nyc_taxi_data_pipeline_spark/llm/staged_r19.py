@@ -1,9 +1,7 @@
-"""Round-19 registration candidates — seed slate started in round 11.
+"""Layout-quality and classical-statistics queries, each registered
+with its DuckDB oracle.
 
-Same staging mechanism as ``staged_r8``–``staged_r18``; promotion in
-round 19 via ``staged_r19.promote_to_registry(R19_BATCH)``.
-
-The seed (operator families the engine does not cover yet):
+The operators:
 
 - ``orders_hilbert_vs_zorder_quality``: the LAYOUT-QUALITY contract
   the r10 VERDICT named — Hilbert curve vs Morton (z-order) on the
@@ -33,9 +31,6 @@ The seed (operator families the engine does not cover yet):
   risk). The fraud/data-quality screen auditors run on any monetary
   column; a synthetic fixture's deviation profile is itself a
   fingerprint the test pins.
-
-Round-11 growth (slate 3 -> 5):
-
 - ``part_price_type_anova``: one-way ANOVA F across part types —
   the categorical×numeric "does this dimension matter" gate, with
   per-group SS terms rounded once before the order-free global sum.
@@ -48,62 +43,12 @@ Round-11 growth (slate 3 -> 5):
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import QueryFn
-
-
-@dataclass(frozen=True)
-class StagedQuery:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = ()
-
-
-STAGED: dict[str, StagedQuery] = {}
-
-R19_BATCH: tuple[str, ...] = (
-    "orders_benford_first_digit",
-    "orders_hilbert_vs_zorder_quality",
-    "orders_priority_trend_ols",
-    "orders_runs_test",
-    "part_price_type_anova",
-)
-
-
-def promote_to_registry(names: list[str]) -> list[str]:
-    """Round-19 registration in one call; ``names`` is REQUIRED —
-    whole-slate promotion must be spelled out (``list(STAGED)``)."""
-    from ..registry import register
-
-    if names is None:
-        raise ValueError(
-            "promote_to_registry requires an explicit name batch; "
-            "spell out whole-slate promotion as list(STAGED)"
-        )
-    promoted = []
-    for name in names:
-        q = STAGED[name]
-        register(name, q.oracle, q.tags)(q.fn)
-        promoted.append(name)
-    return promoted
-
-
-def stage(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Mirror of ``registry.register`` that records into ``STAGED``."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        STAGED[name] = StagedQuery(name, fn, oracle, tags)
-        return fn
-
-    return deco
+from ..registry import register
 
 
 # --------------------------------------------------------------------
@@ -236,7 +181,7 @@ def _hilbert_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_hilbert_vs_zorder_quality",
     oracle=_hilbert_oracle(),
     tags=("layout", "pruning", "contract", "hilbert"),
@@ -414,7 +359,7 @@ def _ols_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_priority_trend_ols",
     oracle=_ols_oracle(),
     tags=("warehouse", "statistics", "regression", "trend"),
@@ -532,7 +477,7 @@ def _benford_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_benford_first_digit",
     oracle=_benford_oracle(),
     tags=("warehouse", "quality", "forensics", "benford"),
@@ -584,7 +529,7 @@ def orders_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# One-way ANOVA across part types (round-11 growth: slate 3 -> 5)
+# One-way ANOVA across part types
 # --------------------------------------------------------------------
 
 
@@ -631,7 +576,7 @@ def _anova_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "part_price_type_anova",
     oracle=_anova_oracle(),
     tags=("warehouse", "statistics", "anova", "contract"),
@@ -693,7 +638,7 @@ def part_price_type_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# Wald–Wolfowitz runs test (round-11 growth)
+# Wald–Wolfowitz runs test
 # --------------------------------------------------------------------
 
 
@@ -762,7 +707,7 @@ def _runs_test_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_runs_test",
     oracle=_runs_test_oracle(),
     tags=("warehouse", "statistics", "nonparametric", "randomness"),

@@ -1,21 +1,8 @@
-"""Round-7 registration candidates — implemented, oracle-twinned and
-pytest-verified in round 6, REGISTERED in round 7.
+"""Document-curation, analytics and graph queries, each registered
+with its DuckDB oracle.
 
-Why staged and not registered: the driver's correctness gate checks the
-FIRST 50 queries in stalest-evidence order each round, and round 6's
-window is exactly the ten r6 additions plus the forty remaining
-r3-evidence queries — the rotation the round-5 verdict prescribed
-(VERDICT.md "Next round #1"). An eleventh no-evidence query would sort
-ahead of an r3 query and evict it from the window, leaving its evidence
-stale for another round. So these stay OUT of ``registry`` until round
-7: one call to ``promote_to_registry(batch)`` from
-``registry._ensure_loaded`` is the whole registration step (it
-re-registers identical name/oracle/tags/fn rows; pass batches that
-respect the evidence-window math).
-
-The operators (all beyond-reference LLM-pipeline ops; the reference —
-``/root/reference`` — has no analog, its surface is the taxi medallion
-flow):
+The operators (LLM-pipeline and analytics ops beyond the reference's
+taxi medallion flow):
 
 - ``docs_minhash_oph_pairs``: one-permutation hashing (OPH) MinHash
   with densification (Li, Owen & Zhang NeurIPS'12; Shrivastava & Li
@@ -163,13 +150,11 @@ flow):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import fan_out_if_narrow, load
-from ..registry import QueryFn
+from ..catalog import EMB_DIM, fan_out_if_narrow, load
+from ..registry import register
 from .dedup import (
     DF_CEILING,
     GRAMS_CTE_SQL,
@@ -187,101 +172,6 @@ from .lm import _LM_ORACLE, docs_unigram_surprisal_filter
 from .quality import docs_gopher_quality
 from ..operators.merge_into import _MERGE_ORACLE
 from .similarity import NEARDUP_COSINE, _dot, _norm
-
-
-@dataclass(frozen=True)
-class StagedQuery:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = ()
-
-
-STAGED: dict[str, StagedQuery] = {}
-
-
-def promote_to_registry(names: list[str]) -> list[str]:
-    """Round-7 registration in one call: re-register staged queries
-    into the LIVE registry (identical name/oracle/tags/fn). Call from
-    ``registry._ensure_loaded`` with the batch to promote — e.g.
-    ``staged_r7.promote_to_registry(R7_BATCH)`` — instead of editing
-    every ``@stage`` decorator. ``names`` is REQUIRED and must be an
-    explicit batch: whole-slate promotion has to be spelled out
-    (e.g. ``list(STAGED)``) so the evidence-window math in the module
-    docstring is a conscious decision, never a default. Returns the
-    promoted names. Idempotent across re-imports is NOT needed —
-    ``registry.register`` raises on duplicates by design, so a double
-    promotion fails loudly."""
-    from ..registry import register
-
-    if names is None:  # defensive: callers passing None explicitly
-        raise ValueError(
-            "promote_to_registry requires an explicit name batch; "
-            "spell out whole-slate promotion as list(STAGED)"
-        )
-    promoted = []
-    for name in names:
-        q = STAGED[name]
-        register(name, q.oracle, q.tags)(q.fn)
-        promoted.append(name)
-    return promoted
-
-
-# Round-7 registration batch: the ENTIRE 32-query slate, spelled out
-# (promote_to_registry requires an explicit list by design). Window
-# math for the driver's 50-query stalest-first gate, r7 onward:
-#   r7: 32 new (below) + the multimodal resize query registered in
-#       multimodal.py = 33 new + the 17 OLDEST r4-evidence queries
-#       → 33 r4-evidence queries remain stale after r7.
-#   r8: cap NEW registrations at ≤ 17 so the window = ≤17 new + all
-#       remaining 33 r4 queries — finishing the r4 evidence refresh
-#       exactly (mirror of the r5→r6 rotation playbook).
-R7_BATCH: tuple[str, ...] = (
-    "docs_minhash_oph_pairs",
-    "docs_semantic_decontamination",
-    "corpus_vocab_growth",
-    "docs_quality_ensemble",
-    "events_markov_transitions",
-    "corpus_zipf_report",
-    "lineitem_brand_basket_lift",
-    "embeddings_margin_mining",
-    "docs_edit_similarity_pairs",
-    "embeddings_pca_power",
-    "docs_source_js_divergence",
-    "docs_ccnet_perplexity_buckets",
-    "docs_dup_cluster_report",
-    "docs_minhash_bbit_calibration",
-    "docs_ccnet_histogram_cut_contract",
-    "lineitem_brand_abc_classes",
-    "docs_quality_filter_agreement",
-    "orders_snapshot_diff",
-    "orders_gold_ivm",
-    "events_conversion_funnel",
-    "part_blocking_pairs",
-    "docs_kneser_ney_bigrams",
-    "customer_k_anonymity",
-    "events_interarrival_entropy",
-    "orders_rfm_segments",
-    "orders_benford_audit",
-    "orders_column_profile",
-    "customer_mad_outliers",
-    "nation_trade_pagerank",
-    "orders_zorder_skipping_contract",
-    "part_copurchase_triangles",
-    "docs_phrase_search",
-)
-
-
-def stage(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Mirror of ``registry.register`` that records into ``STAGED``."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        STAGED[name] = StagedQuery(name, fn, oracle, tags)
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------
@@ -390,7 +280,7 @@ def oph_band_index(
     ).select("doc_id", "band.band_idx", "band.band_hash")
 
 
-@stage(
+@register(
     "docs_minhash_oph_pairs",
     # Same brute-force oracle as docs_minhash_lsh_pairs: the verify
     # step makes precision exact by construction, and on the fixtures
@@ -467,7 +357,7 @@ def _split_hh(c: Column) -> Column:
 _DECON_ID_BITS = 40
 
 
-@stage(
+@register(
     "docs_semantic_decontamination",
     oracle=f"""
     WITH split AS (
@@ -600,7 +490,7 @@ def docs_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
 VOCAB_GROWTH_SLICES = 10
 
 
-@stage(
+@register(
     "corpus_vocab_growth",
     oracle=f"""
     WITH mx AS (
@@ -746,7 +636,7 @@ _ENSEMBLE_ORACLE = f"""
 """
 
 
-@stage(
+@register(
     "docs_quality_ensemble",
     oracle=_ENSEMBLE_ORACLE,
     tags=("llm", "quality", "ensemble"),
@@ -805,7 +695,7 @@ def docs_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
-@stage(
+@register(
     "events_markov_transitions",
     oracle="""
     WITH seq AS (
@@ -874,7 +764,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZIPF_TOP = 100
 
 
-@stage(
+@register(
     "corpus_zipf_report",
     oracle=f"""
     WITH toks AS (
@@ -948,7 +838,7 @@ def corpus_zipf_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
-@stage(
+@register(
     "lineitem_brand_basket_lift",
     oracle="""
     WITH ob AS (
@@ -1044,7 +934,7 @@ def lineitem_brand_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 MARGIN_KNN = 4  # neighborhood size for the margin normalizer
 
 
-@stage(
+@register(
     "embeddings_margin_mining",
     oracle=f"""
     WITH split AS (
@@ -1268,7 +1158,7 @@ def embeddings_margin_mining(
 EDIT_SIM_THRESHOLD = 0.5
 
 
-@stage(
+@register(
     "docs_edit_similarity_pairs",
     oracle=f"""
     WITH g AS (
@@ -1349,7 +1239,6 @@ def docs_edit_similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Distributed PCA: top principal component by power iteration
 # --------------------------------------------------------------------
 
-EMB_DIM = 64
 _PCA_SCALE = 1_000_000.0  # micro quantization of the per-row moments
 PCA_POWER_ITERS = 128  # fixed: determinism is the parity contract; 128 steps
 # also converge to cos >= 0.99 with numpy's top eigenvector even on the
@@ -1445,7 +1334,7 @@ def _pca_oracle_sql(t_iters: int = PCA_POWER_ITERS) -> str:
     return "".join(parts)
 
 
-@stage(
+@register(
     "embeddings_pca_power",
     oracle=_pca_oracle_sql(),
     tags=("llm", "embedding", "linalg"),
@@ -1602,7 +1491,7 @@ def embeddings_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 JS_TOP_V = 64
 _JS_OOV = " OOV "  # contains spaces: impossible as a space-split token
 
-@stage(
+@register(
     "docs_source_js_divergence",
     oracle=f"""
     WITH toks AS (
@@ -1759,7 +1648,7 @@ def docs_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CCNET_BUCKETS = {1: "head", 2: "middle", 3: "tail"}
 
 
-@stage(
+@register(
     "docs_ccnet_perplexity_buckets",
     oracle=f"""
     WITH scored AS (
@@ -1887,7 +1776,7 @@ def _cluster_report_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_dup_cluster_report",
     oracle=_cluster_report_oracle(),
     tags=("llm", "dedup", "report"),
@@ -1955,7 +1844,7 @@ BBIT_B = 2  # bits kept per minhash component (signature: 16×2 = 4 bytes/doc)
 BBIT_EST_ERR_CEILING = 0.35
 
 
-@stage(
+@register(
     "docs_minhash_bbit_calibration",
     oracle=f"""
     WITH g AS MATERIALIZED (
@@ -2071,7 +1960,7 @@ CCNET_AGREEMENT_FLOOR = 0.9
 _CCNET_KEY_SQL = "(s.sum_surprisal_micro * 1000000) // s.n_tokens"
 
 
-@stage(
+@register(
     "docs_ccnet_histogram_cut_contract",
     oracle=f"""
     WITH scored AS (
@@ -2209,7 +2098,7 @@ def docs_ccnet_histogram_cut_contract(
 # --------------------------------------------------------------------
 
 
-@stage(
+@register(
     "lineitem_brand_abc_classes",
     oracle="""
     WITH pr AS (
@@ -2249,8 +2138,7 @@ def lineitem_brand_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     discounted revenue within their brand, classified A while the
     cumulative share (self-inclusive) stays ≤ 80%, B to 95%, C after —
     the classic 80/15/5 revenue-concentration report inventory and
-    procurement planning runs. Balances the staged slate with a
-    transactional-analytics shape (the collocation→basket-lift lineage
+    procurement planning runs (the collocation→basket-lift lineage
     continued).
 
     Exactness: per-part revenue accumulates in DECIMAL(18,4) (the
@@ -2340,7 +2228,7 @@ def _agreement_pair_sql(a: str, b: str) -> str:
 """
 
 
-@stage(
+@register(
     "docs_quality_filter_agreement",
     oracle=f"""
     WITH votes AS ({_ENSEMBLE_ORACLE}
@@ -2448,7 +2336,7 @@ def docs_quality_filter_agreement(
 # --------------------------------------------------------------------
 
 
-@stage(
+@register(
     "orders_snapshot_diff",
     oracle=f"""
     WITH merged AS ({_MERGE_ORACLE}
@@ -2521,7 +2409,7 @@ def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
-@stage(
+@register(
     "orders_gold_ivm",
     oracle=f"""
     WITH merged AS ({_MERGE_ORACLE}
@@ -2651,7 +2539,7 @@ FUNNEL_WINDOW_HOURS = 12
 FUNNEL_STEPS = ("view", "click", "purchase")
 
 
-@stage(
+@register(
     "events_conversion_funnel",
     oracle=f"""
     WITH seq AS (
@@ -2826,7 +2714,7 @@ SNM_WINDOW = 4
 SNM_NUM, SNM_DEN = 2, 5
 
 
-@stage(
+@register(
     "part_blocking_pairs",
     oracle=f"""
     WITH p AS (
@@ -2963,7 +2851,7 @@ KN_DISCOUNT = 0.75  # the standard absolute-discounting constant
 KN_TOP = 100  # emitted table size (deterministic head of the LM)
 
 
-@stage(
+@register(
     "docs_kneser_ney_bigrams",
     oracle=f"""
     WITH base AS (
@@ -3101,7 +2989,7 @@ def docs_kneser_ney_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 KANON_THRESHOLDS = (2, 5, 10, 25)
 
 
-@stage(
+@register(
     "customer_k_anonymity",
     oracle=f"""
     WITH cls AS (
@@ -3197,7 +3085,7 @@ def customer_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 LOW_ENTROPY_MICRO = 500_000  # flag below 0.5 nats
 
 
-@stage(
+@register(
     "events_interarrival_entropy",
     oracle=f"""
     WITH g AS (
@@ -3315,7 +3203,7 @@ RFM_MONETARY_BUCKET_CENTS = 100_000
 RFM_QS = (1, 2, 3, 4)  # quintile boundaries
 
 
-@stage(
+@register(
     "orders_rfm_segments",
     oracle=f"""
     WITH ref AS (
@@ -3514,7 +3402,7 @@ BENFORD_P = tuple(round(_math.log10(1.0 + 1.0 / d), 9) for d in range(1, 10))
 BENFORD_CHI2_CRIT_MICRO = 26_125_000
 
 
-@stage(
+@register(
     "orders_benford_audit",
     oracle=f"""
     WITH cents0 AS (
@@ -3752,7 +3640,7 @@ def _profile_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_column_profile",
     oracle=_profile_oracle(),
     tags=("governance", "quality", "report"),
@@ -3856,7 +3744,7 @@ MAD_CONSISTENCY = 1.4826  # normal-consistency constant (published)
 MAD_Z_CUT = 3.0
 
 
-@stage(
+@register(
     "customer_mad_outliers",
     oracle=f"""
     WITH m AS (
@@ -4016,7 +3904,7 @@ def _pagerank_oracle() -> str:
     )
 
 
-@stage(
+@register(
     "nation_trade_pagerank",
     oracle=_pagerank_oracle(),
     tags=("graph", "iterative", "analytics"),
@@ -4288,7 +4176,7 @@ def zorder_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
 
 
-@stage(
+@register(
     "orders_zorder_skipping_contract",
     oracle=_zorder_oracle(),
     tags=("layout", "pruning", "contract"),
@@ -4400,7 +4288,7 @@ def orders_zorder_skipping_contract(
 TRI_MIN_SUPPORT = 2  # co-purchase edges need >= 2 shared orders
 
 
-@stage(
+@register(
     "part_copurchase_triangles",
     oracle=f"""
     WITH ip AS (
@@ -4554,7 +4442,7 @@ def _phrase_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_phrase_search",
     oracle=_phrase_oracle(),
     tags=("llm", "retrieval", "positional"),

@@ -1,20 +1,8 @@
-"""Round-8 registration candidates — implemented and oracle-twinned in
-round 7, REGISTERED in round 8.
+"""Token-space curation, retrieval, retention and PQ-ledger queries,
+each registered with its DuckDB oracle.
 
-Why staged (same mechanism as ``staged_r7``): the driver's correctness
-gate checks the FIRST 50 queries in stalest-evidence order. Round 7
-registered 33 new queries (the 32-query r7 slate + the PNM resize
-contract), so its window = 33 new + the 17 oldest r4-evidence rows,
-leaving 33 r4-evidence queries stale. **The r8 registration cap is
-therefore ≤ 17** — registering this slate (≤ 17 names) makes the r8
-window = |slate| new + the remaining r4 rows, retiring ALL r4 evidence
-in r8 exactly (the same two-round rotation the r5→r6 playbook ran).
-Promotion is one call: ``staged_r8.promote_to_registry(R8_BATCH)``
-from ``registry._ensure_loaded``.
-
-The slate (all beyond-reference LLM-pipeline / analytics operators;
-the reference — ``/root/reference`` — is an 808-LoC Postgres taxi ETL
-with no analog to any of these):
+The operators (LLM-pipeline and analytics ops beyond the reference's
+taxi ETL):
 
 - ``docs_token_space_contamination``: train/test decontamination in
   BPE TOKEN space — token trigrams of every held-out doc checked
@@ -92,83 +80,15 @@ with no analog to any of these):
   filter-tuning table; same constants and roundings as the
   registered battery.
 
-The slate is exactly 17 — the r8 registration cap (see above).
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import QueryFn
-
-
-@dataclass(frozen=True)
-class StagedQuery:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = ()
-
-
-STAGED: dict[str, StagedQuery] = {}
-
-# Round-8 registration batch (see module docstring for the ≤ 17 cap
-# derivation). Spelled out so promotion is a conscious decision.
-R8_BATCH: tuple[str, ...] = (
-    "docs_token_space_contamination",
-    "retrieval_rerank_cascade",
-    "docs_quality_brier_reliability",
-    "docs_source_distinctive_terms",
-    "docs_cross_source_duplication",
-    "events_weekly_retention_cohorts",
-    "events_user_lifecycle",
-    "docs_rag_chunk_plan",
-    "embeddings_dimension_stats",
-    "docs_lang_confusion_matrix",
-    "customer_spend_gini_contract",
-    "docs_dedup_survivorship_mix_shift",
-    "events_session_stats",
-    "docs_neardup_threshold_sweep",
-    "events_conversion_lag_histogram",
-    "embeddings_pq_distortion_report",
-    "docs_gopher_rule_attribution",
-)
-
-
-def promote_to_registry(names: list[str]) -> list[str]:
-    """Round-8 registration in one call (mirror of
-    ``staged_r7.promote_to_registry``): re-register staged queries into
-    the LIVE registry. ``names`` is REQUIRED — whole-slate promotion
-    must be spelled out (``list(STAGED)``)."""
-    from ..registry import register
-
-    if names is None:
-        raise ValueError(
-            "promote_to_registry requires an explicit name batch; "
-            "spell out whole-slate promotion as list(STAGED)"
-        )
-    promoted = []
-    for name in names:
-        q = STAGED[name]
-        register(name, q.oracle, q.tags)(q.fn)
-        promoted.append(name)
-    return promoted
-
-
-def stage(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Mirror of ``registry.register`` that records into ``STAGED``."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        STAGED[name] = StagedQuery(name, fn, oracle, tags)
-        return fn
-
-    return deco
+from ..registry import register
 
 
 def _split_hh(c: Column) -> Column:
@@ -235,7 +155,7 @@ def _token_contamination_oracle() -> str:
     )
 
 
-@stage(
+@register(
     "docs_token_space_contamination",
     oracle=_token_contamination_oracle(),
     tags=("llm", "decontamination", "tokenizer"),
@@ -392,7 +312,7 @@ def _rerank_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "retrieval_rerank_cascade",
     oracle=_rerank_oracle(),
     tags=("llm", "retrieval", "rerank"),
@@ -577,7 +497,7 @@ def _brier_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_quality_brier_reliability",
     oracle=_brier_oracle(),
     tags=("llm", "quality", "calibration", "report"),
@@ -697,7 +617,7 @@ def _distinctive_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_source_distinctive_terms",
     oracle=_distinctive_oracle(),
     tags=("llm", "text", "report"),
@@ -771,7 +691,7 @@ def _cross_source_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_cross_source_duplication",
     oracle=_cross_source_oracle(),
     tags=("llm", "dedup", "report"),
@@ -851,7 +771,7 @@ def _retention_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_weekly_retention_cohorts",
     oracle=_retention_oracle(),
     tags=("events", "analytics", "report"),
@@ -946,7 +866,7 @@ def _lifecycle_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_user_lifecycle",
     oracle=_lifecycle_oracle(),
     tags=("events", "analytics", "report"),
@@ -1047,7 +967,7 @@ def _chunk_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_rag_chunk_plan",
     oracle=_chunk_oracle(),
     tags=("llm", "rag", "chunking"),
@@ -1132,7 +1052,7 @@ def _dim_stats_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "embeddings_dimension_stats",
     oracle=_dim_stats_oracle(),
     tags=("llm", "embedding", "report"),
@@ -1220,7 +1140,7 @@ def _confusion_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_lang_confusion_matrix",
     oracle=_confusion_oracle(),
     tags=("llm", "classifier", "report"),
@@ -1275,7 +1195,7 @@ def docs_lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 GINI_BUCKET_CENTS = 100_000  # $1,000 buckets — domain-bounded histogram
 
 
-@stage(
+@register(
     "customer_spend_gini_contract",
     oracle=f"""
     WITH spend AS (
@@ -1408,7 +1328,7 @@ def _mix_shift_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_dedup_survivorship_mix_shift",
     oracle=_mix_shift_oracle(),
     tags=("llm", "dedup", "mixture", "report"),
@@ -1512,7 +1432,7 @@ def _session_stats_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_session_stats",
     oracle=_session_stats_oracle(),
     tags=("events", "analytics", "report"),
@@ -1606,7 +1526,7 @@ def _threshold_sweep_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_neardup_threshold_sweep",
     oracle=_threshold_sweep_oracle(),
     tags=("llm", "dedup", "report"),
@@ -1689,7 +1609,7 @@ def _conversion_lag_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_conversion_lag_histogram",
     oracle=_conversion_lag_oracle(),
     tags=("events", "analytics", "report"),
@@ -1747,8 +1667,7 @@ def events_conversion_lag_histogram(spark: SparkSession, sf_dir: str) -> DataFra
 def _pq_distortion_oracle() -> str:
     # Imported directly (NOT via registry.all_queries()) — this runs at
     # module-import time, and reading the registry here re-enters
-    # `_ensure_loaded` while THIS module is the one being imported,
-    # promoting a half-built STAGED dict.
+    # `_ensure_loaded` while THIS module is the one being imported.
     from .kmeans import PQ_CODES_ORACLE as base
 
     return f"""
@@ -1776,7 +1695,7 @@ def _pq_distortion_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "embeddings_pq_distortion_report",
     oracle=_pq_distortion_oracle(),
     tags=("llm", "embedding", "quantization", "report"),
@@ -1893,7 +1812,7 @@ def _rule_attribution_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_gopher_rule_attribution",
     oracle=_rule_attribution_oracle(),
     tags=("llm", "quality", "report"),

@@ -1,16 +1,7 @@
-"""Round-9 registration candidates — implemented and oracle-twinned in
-round 7, REGISTERED in round 9 (after the r8 slate lands).
+"""Tokenizer, association, privacy and calibration queries, each
+registered with its DuckDB oracle.
 
-Same staging mechanism as ``staged_r7``/``staged_r8``. Rotation math:
-r8 registers the 17-query r8 slate, whose window (17 new + 33 r4 rows)
-retires ALL r4 evidence; after r8 the stalest evidence is the 50 rows
-last verified in r5. Registering N new queries in r9 refreshes
-(50 − N) of those — this slate deliberately stays small (≤ 10) so most
-of the r5 cohort rotates in r9 and the remainder in r10, keeping the
-two-round staleness bound the r5→r6 and r7→r8 rotations held.
-Promotion: ``staged_r9.promote_to_registry(R9_BATCH)``.
-
-The slate (operator families the engine does not cover yet):
+The operators:
 
 - ``docs_bpe_roundtrip_contract``: losslessness audit of the trained
   BPE segmentation — per language: word types/tokens, round-trip
@@ -56,71 +47,11 @@ The slate (operator families the engine does not cover yet):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..registry import QueryFn
-
-
-@dataclass(frozen=True)
-class StagedQuery:
-    name: str
-    fn: QueryFn
-    oracle: str | None
-    tags: tuple[str, ...] = ()
-
-
-STAGED: dict[str, StagedQuery] = {}
-
-# Spelled out so promotion is a conscious decision (extended as
-# queries land; must equal sorted(STAGED) at registration time — see
-# the batch-hygiene test).
-R9_BATCH: tuple[str, ...] = (
-    "docs_bpe_roundtrip_contract",
-    "orders_basket_lift",
-    "lineitem_ship_latency_histogram",
-    "orders_seasonality_profile",
-    "embeddings_norm_outliers",
-    "customer_l_diversity",
-    "docs_boilerplate_ngram_mass",
-    "docs_pii_scrub_contract",
-    "events_error_cusum",
-    "embeddings_cosine_calibration",
-)
-
-
-def promote_to_registry(names: list[str]) -> list[str]:
-    """Round-9 registration in one call (mirror of
-    ``staged_r8.promote_to_registry``): ``names`` is REQUIRED —
-    whole-slate promotion must be spelled out (``list(STAGED)``)."""
-    from ..registry import register
-
-    if names is None:
-        raise ValueError(
-            "promote_to_registry requires an explicit name batch; "
-            "spell out whole-slate promotion as list(STAGED)"
-        )
-    promoted = []
-    for name in names:
-        q = STAGED[name]
-        register(name, q.oracle, q.tags)(q.fn)
-        promoted.append(name)
-    return promoted
-
-
-def stage(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
-    """Mirror of ``registry.register`` that records into ``STAGED``."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED:
-            raise ValueError(f"duplicate staged query name {name!r}")
-        STAGED[name] = StagedQuery(name, fn, oracle, tags)
-        return fn
-
-    return deco
+from ..registry import register
 
 
 # --------------------------------------------------------------------
@@ -158,7 +89,7 @@ def _bpe_roundtrip_oracle() -> str:
     )
 
 
-@stage(
+@register(
     "docs_bpe_roundtrip_contract",
     oracle=_bpe_roundtrip_oracle(),
     tags=("llm", "tokenizer", "contract"),
@@ -248,7 +179,7 @@ def _basket_lift_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_basket_lift",
     oracle=_basket_lift_oracle(),
     tags=("analytics", "association", "report"),
@@ -343,7 +274,7 @@ def _ship_latency_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "lineitem_ship_latency_histogram",
     oracle=_ship_latency_oracle(),
     tags=("analytics", "report"),
@@ -411,7 +342,7 @@ def _seasonality_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "orders_seasonality_profile",
     oracle=_seasonality_oracle(),
     tags=("analytics", "report"),
@@ -500,7 +431,7 @@ def _norm_outliers_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "embeddings_norm_outliers",
     oracle=_norm_outliers_oracle(),
     tags=("llm", "embedding", "quality", "report"),
@@ -600,7 +531,7 @@ def _l_diversity_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "customer_l_diversity",
     oracle=_l_diversity_oracle(),
     tags=("analytics", "privacy", "report"),
@@ -681,7 +612,7 @@ def _boilerplate_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_boilerplate_ngram_mass",
     oracle=_boilerplate_oracle(),
     tags=("llm", "text", "quality", "report"),
@@ -801,7 +732,7 @@ def _pii_scrub_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "docs_pii_scrub_contract",
     oracle=_pii_scrub_oracle(),
     tags=("llm", "privacy", "contract"),
@@ -909,7 +840,7 @@ def _cusum_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "events_error_cusum",
     oracle=_cusum_oracle(),
     tags=("events", "anomaly", "report"),
@@ -1025,7 +956,7 @@ def _cosine_calibration_oracle() -> str:
     """
 
 
-@stage(
+@register(
     "embeddings_cosine_calibration",
     oracle=_cosine_calibration_oracle(),
     tags=("llm", "embedding", "report"),

@@ -136,26 +136,30 @@ class MedallionPipeline:
         @contextlib.contextmanager
         def scope():
             key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+            advisory = self._write_advisory()
             if not MedallionPipeline._advisory_lock.acquire(blocking=False):
                 raise RuntimeError(
                     "_advisory_scope is not reentrant/concurrent: another "
                     "write holds the session-global AQE advisory override"
                 )
+            # Everything after the acquire sits inside the try whose
+            # finally releases the lock: a failing conf.set must not
+            # leave every later write locked out.
             try:
-                old = self.spark.conf.get(key)
-            except Exception:
-                old = None
-            self.spark.conf.set(key, self._write_advisory())
-            try:
-                yield
-            finally:
                 try:
+                    old = self.spark.conf.get(key)
+                except Exception:
+                    old = None
+                self.spark.conf.set(key, advisory)
+                try:
+                    yield
+                finally:
                     if old is None:
                         self.spark.conf.unset(key)
                     else:
                         self.spark.conf.set(key, old)
-                finally:
-                    MedallionPipeline._advisory_lock.release()
+            finally:
+                MedallionPipeline._advisory_lock.release()
 
         return scope()
 

@@ -251,3 +251,108 @@ def docs_source_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("lang").cast("long").alias("n_langs"),
         )
     )
+
+
+# --------------------------------------------------------------------
+# Deterministic Poisson bootstrap (resampling-based uncertainty)
+# --------------------------------------------------------------------
+
+BOOT_REPS = 48  # bootstrap replicates
+# Poisson(1) CDF, F(0)..F(6); u >= F(6) draws weight 7. The literals
+# are repr()-exact IEEE doubles embedded identically in BOTH engines'
+# SQL, so the inverse-CDF branch taken is identical bit-for-bit.
+BOOT_CDF = (
+    "0.36787944117144233",
+    "0.7357588823428847",
+    "0.9196986029286058",
+    "0.9810118431238463",
+    "0.9963401531726563",
+    "0.9994058151824183",
+    "0.999916758850712",
+)
+
+
+def _boot_weight_case(u: str) -> str:
+    """CASE cascade: the smallest k with u < F(k), else 7."""
+    branches = " ".join(
+        f"WHEN {u} < {f} THEN {k}" for k, f in enumerate(BOOT_CDF)
+    )
+    return f"(CASE {branches} ELSE 7 END)"
+
+
+def _bootstrap_oracle() -> str:
+    reps = ", ".join(str(r) for r in range(BOOT_REPS))
+    u = (
+        "(CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || rep::VARCHAR),"
+        " 1, 15))::BIGINT % 4294967296 AS DOUBLE) / 4294967296.0)"
+    )
+    return f"""
+    WITH reps AS (
+      SELECT unnest([{reps}]) AS rep
+    ), w AS (
+      SELECT r.rep, d.n_chars,
+             {_boot_weight_case(u)} AS k
+      FROM documents d CROSS JOIN reps r
+    )
+    SELECT rep,
+           CAST(sum(k) AS BIGINT) AS n_eff,
+           CAST(sum(k * n_chars) AS BIGINT) AS sum_len,
+           CAST(sum(k * n_chars) * 1000000
+                // greatest(sum(k), 1) AS BIGINT) AS mean_len_micro
+    FROM w GROUP BY 1
+    """
+
+
+@register(
+    "docs_length_bootstrap_ci",
+    oracle=_bootstrap_oracle(),
+    tags=("llm", "sampling", "statistics", "bootstrap"),
+)
+def docs_length_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DETERMINISTIC POISSON BOOTSTRAP of the mean document length —
+    the resampling family (the engine had stratified/quota/hash
+    sampling but no uncertainty quantification): {B} replicates, each
+    document drawing a Poisson(1) replication weight from an md5-
+    derived uniform (the distributed-bootstrap standard — Poisson
+    weights need NO shared n, so the resample is a pure map; Chamandy
+    et al., "Estimating uncertainty for massive data streams"). The
+    spread of the {B} replicate means IS the sampling distribution of
+    the corpus mean-length estimator — the error bar every corpus
+    stat report should carry.
+
+    Determinism/exactness: u = (md5(doc:rep) mod 2³²)/2³² with the
+    repo's cross-engine hash convention; the inverse-CDF thresholds
+    are repr()-exact double literals shared by both SQL texts, so
+    every (doc, rep) draws the IDENTICAL integer weight on both
+    engines; replicate sums are pure integers, means integer-micro.
+
+    Scale (100 TB): the weight draw is map-side (hash + CASE — no
+    shuffle, no shared state); the {B}-way fan-out feeds a {B}-group
+    hash aggregate with map-side combine, so shuffle traffic is {B}
+    rows per partition regardless of corpus size. Bootstrap compute
+    is intrinsically {B}× one scan — bound B, not the corpus."""
+    reps = spark.range(BOOT_REPS).select(F.col("id").cast("int").alias("rep"))
+    u = (
+        "(CAST(CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), ':',"
+        " CAST(rep AS STRING))), 1, 15), 16, 10) AS BIGINT) % 4294967296"
+        " AS DOUBLE) / 4294967296.0)"
+    )
+    w = (
+        load(spark, sf_dir, "documents")
+        .select("doc_id", "n_chars")
+        .crossJoin(F.broadcast(reps))
+        .withColumn("k", F.expr(_boot_weight_case(u)))
+    )
+    return w.groupBy("rep").agg(
+        F.sum("k").cast("bigint").alias("n_eff"),
+        F.sum(F.col("k") * F.col("n_chars")).cast("bigint").alias("sum_len"),
+        F.expr(
+            "CAST(sum(k * n_chars) * 1000000"
+            " DIV greatest(sum(k), 1) AS BIGINT)"
+        ).alias("mean_len_micro"),
+    )
+
+
+docs_length_bootstrap_ci.__doc__ = docs_length_bootstrap_ci.__doc__.replace(
+    "{B}", str(BOOT_REPS)
+)

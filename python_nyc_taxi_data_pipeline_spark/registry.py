@@ -46,70 +46,10 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-def _evidence() -> dict[str, int]:
-    """Per-query newest driver-green round. Reads ``evidence.json``
-    (written by ``tools/update_evidence.py``) and SELF-HEALS by also
-    scanning any ``CORRECTNESS_r*.json`` at the repo root that is newer
-    than the snapshot — so a round that lands new driver rows reorders
-    the window even if nobody re-ran the tool."""
-    import glob
-    import json
-    import os
-    import re
-
-    path = os.path.join(os.path.dirname(__file__), "evidence.json")
-    try:
-        with open(path) as f:
-            ev = {k: int(v) for k, v in json.load(f).items()}
-    except (OSError, ValueError):
-        ev = {}
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for cpath in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", cpath)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(cpath) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            # Only an affirmative oracle comparison (rows + hash matched)
-            # counts as green evidence. A rows-only run (rows_match null,
-            # spark_rows present) proves the query *ran*, not that it was
-            # verified — counting it would rotate a never-compared query
-            # out of the checked window ahead of real hash-green evidence.
-            # Exception: queries registered WITHOUT an oracle can never do
-            # better than rows-only, so for them a clean run is promoted.
-            if row.get("rows_match") is None:
-                reg = _REGISTRY.get(name)
-                oracle_free = reg is not None and reg.oracle is None
-                ok = oracle_free and not row.get("err") and row.get("spark_rows") is not None
-            else:
-                ok = not row.get("err") and bool(
-                    row.get("rows_match")
-                    and row.get("schema_match") is not False
-                    and row.get("hash_match") is not False
-                )
-            if ok:
-                ev[name] = max(ev.get(name, 0), rnd)
-            else:
-                ev.setdefault(name, 0)  # checked, never green
-    return ev
-
-
 def all_queries() -> dict[str, RegisteredQuery]:
-    """Registered queries, ordered so the driver's 50-query correctness
-    window always covers the weakest evidence first: brand-new queries
-    (no driver row yet, priority -1), then never-green ones (0), then
-    oldest-green ascending. Ties break by name for determinism."""
+    """Every registered query, in name order."""
     _ensure_loaded()
-    ev = _evidence()
-    ordered = sorted(_REGISTRY.values(), key=lambda q: (ev.get(q.name, -1), q.name))
-    return {q.name: q for q in ordered}
+    return {name: _REGISTRY[name] for name in sorted(_REGISTRY)}
 
 
 def queries() -> dict[str, QueryFn]:
@@ -126,16 +66,10 @@ _LOADED = False
 def _ensure_loaded() -> None:
     """Import every module that registers queries (idempotent).
 
-    Re-entrancy: staged slate modules compose some oracles from
-    already-registered queries via ``all_queries()`` AT IMPORT TIME
-    (e.g. ``staged_r8._pq_distortion_oracle`` reads the registered
-    ``embeddings_pq_codes`` oracle). When such a module is imported
-    from THIS function, the nested ``all_queries()`` must not restart
-    the load (double registration). ``_LOADED`` is therefore set
-    before the imports begin; the nested call sees the registry as
-    populated so far — every composed-from query registers ahead of
-    the slate that composes it (kmeans et al. are the first import
-    below; slates promote last)."""
+    Re-entrancy: ``_LOADED`` is set before the imports begin, so an
+    ``all_queries()`` call made while a registering module is being
+    imported sees the registry as populated so far instead of
+    restarting the load (which would register names twice)."""
     global _LOADED
     if _LOADED:
         return
@@ -150,10 +84,8 @@ def _ensure_loaded() -> None:
 
 
 def _load_all() -> None:
-    # Imports are for their registration side effects. Import order no
-    # longer determines the driver's 50-query window — `all_queries()`
-    # re-orders by evidence.json (never-green first, stalest-green next),
-    # so weak evidence always lands inside the checked window.
+    # Imports are for their registration side effects; `all_queries()`
+    # orders by name, so import order does not matter.
     from .llm import bpe, classifier, clusters, collocations, dedup, fusion, grouped, kmeans, lm, overlap, quality, retrieval, segdedup, semdedup, similarity, spans, text  # noqa: F401
     from .llm import multimodal  # noqa: F401
 
@@ -163,42 +95,5 @@ def _load_all() -> None:
     from .plans import curation, sampling, selection, skew, sqlport, textstats  # noqa: F401
     from .operators import merge_into  # noqa: F401
     from .plans import analytics, analytics2, core, tpch  # noqa: F401
-
-    # Round-7 registration: promote the full staged slate (explicit
-    # batch — see staged_r7.R7_BATCH for the evidence-window math).
-    from .llm import staged_r7
-
-    staged_r7.promote_to_registry(list(staged_r7.R7_BATCH))
-
-    # Round-8 registration: exactly the 17-query R8_BATCH — window math
-    # (17 new + the 33 remaining r4-stale = 50) retires ALL r4 evidence
-    # this round; see staged_r8's module docstring.
-    from .llm import staged_r8
-
-    staged_r8.promote_to_registry(list(staged_r8.R8_BATCH))
-
-    # Round-9 registration: the 10-query R9_BATCH — window math
-    # (10 new + the 40 stalest r5-evidence rows = 50) rotates most of
-    # the r5 cohort this round; see staged_r9's module docstring.
-    from .llm import staged_r9
-
-    staged_r9.promote_to_registry(list(staged_r9.R9_BATCH))
-
-    # Round-10 registration: the 10-query R10_BATCH (9 r10-built names
-    # + the hier-SemDeDup contract pulled forward from the r16 seed in
-    # exchange for embeddings_quantization_sweep — r9 VERDICT directive
-    # #2). Window math: 10 new + the 40 stalest (the 10 remaining r5
-    # rows + the 30 oldest r6 rows) = 50; registry 210 -> 220.
-    from .llm import staged_r10
-
-    staged_r10.promote_to_registry(list(staged_r10.R10_BATCH))
-
-    # Round-11 registration: the 10-query R11_BATCH — lands t-closeness
-    # (completing the privacy triad), the cross-encoder distillation
-    # labels, the stream<->batch MinHash parity contract, and the
-    # audio/video frame-geometry contracts. Window math: 10 new + the
-    # 40 stalest (the 20 remaining r6 rows + the 20 oldest r7 rows)
-    # = 50; registry 220 -> 230.
-    from .llm import staged_r11
-
-    staged_r11.promote_to_registry(list(staged_r11.R11_BATCH))
+    from .llm import staged_r7, staged_r8, staged_r9, staged_r10, staged_r11  # noqa: F401
+    from .llm import staged_r14, staged_r15, staged_r16, staged_r17, staged_r18, staged_r19  # noqa: F401

@@ -7,7 +7,7 @@ probed on PURPOSE-BUILT fixtures that force the boundary cases the
 sf fixtures may never hit: exact x.5 percentile boundaries, negative
 values through floor/percentile, and dirty whitespace (leading /
 trailing / doubled spaces, an all-spaces document) through token
-counting. Each probe runs the staged ENGINE query and its DuckDB
+counting. Each probe runs the registered ENGINE query and its DuckDB
 ORACLE on the same adversarial parquet and requires exact agreement
 via the driver-gate comparator (tools/oracle_check.compare).
 
@@ -20,12 +20,14 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 
-from python_nyc_taxi_data_pipeline_spark.llm.staged_r16 import STAGED as S16
+from python_nyc_taxi_data_pipeline_spark import registry
 from tools.oracle_check import compare
 
+QUERIES = registry.all_queries()
 
-def _run_pair(spark, fixture, staged_query, tables):
-    sdf = staged_query.fn(spark, str(fixture)).toPandas()
+
+def _run_pair(spark, fixture, query, tables):
+    sdf = query.fn(spark, str(fixture)).toPandas()
     con = duckdb.connect()
     for t in tables:
         # Spark writes <table>.parquet as a directory of part files
@@ -33,10 +35,10 @@ def _run_pair(spark, fixture, staged_query, tables):
             f"CREATE VIEW {t} AS"
             f" SELECT * FROM read_parquet('{fixture}/{t}.parquet/*.parquet')"
         )
-    ddf = con.execute(staged_query.oracle).fetchdf()
+    ddf = con.execute(query.oracle).fetchdf()
     con.close()
-    problems = compare(staged_query.name, sdf, ddf)
-    assert not problems, f"{staged_query.name}: {problems}"
+    problems = compare(query.name, sdf, ddf)
+    assert not problems, f"{query.name}: {problems}"
     assert len(sdf) > 0
     return sdf
 
@@ -81,7 +83,7 @@ def test_percentile_floor_on_exact_half_boundaries(spark, tmp_path):
     got = _run_pair(
         spark,
         fixture,
-        S16["customer_order_gap_percentiles"],
+        QUERIES["customer_order_gap_percentiles"],
         ["orders", "customer"],
     ).set_index("segment")
     assert got.loc["S1", "p50_gap_days"] == 1  # floor(1.5)
@@ -122,7 +124,7 @@ def test_iqr_trim_on_negative_values_and_half_quantiles(spark, tmp_path):
         "event_type", "value", "props",
     ).write.parquet(str(fixture / "events.parquet"))
     got = _run_pair(
-        spark, fixture, S16["events_value_iqr_trimmed_stats"], ["events"]
+        spark, fixture, QUERIES["events_value_iqr_trimmed_stats"], ["events"]
     ).set_index("event_type")
     assert got.loc["N", "p25_cents"] == -250
     assert got.loc["N", "n_trim"] == 3
@@ -160,7 +162,7 @@ def test_token_conventions_on_dirty_whitespace(spark, tmp_path):
         " n_chars long",
     ).write.parquet(str(fixture / "documents.parquet"))
     got = _run_pair(
-        spark, fixture, S16["docs_lang_temperature_ladder"], ["documents"]
+        spark, fixture, QUERIES["docs_lang_temperature_ladder"], ["documents"]
     )
     by_lang = (
         got[got["alpha"] == 1.0].set_index("lang")["n_tokens"].to_dict()
@@ -171,7 +173,7 @@ def test_token_conventions_on_dirty_whitespace(spark, tmp_path):
     # four empty tokens, the empty string to one — all excluded).
     assert by_lang == {"en": 7, "fr": 3}
     got2 = _run_pair(
-        spark, fixture, S16["docs_vocab_coverage_ladder"], ["documents"]
+        spark, fixture, QUERIES["docs_vocab_coverage_ladder"], ["documents"]
     )
     # total mass at the deepest rung covers every non-empty token (10)
     assert int(got2["top_mass"].max()) <= 10
@@ -191,10 +193,6 @@ def test_trigram_oracle_unbounded_on_long_sessions(spark, tmp_path):
     plus a 2-event user that must contribute none. The old bound
     would have produced 499/499 on the oracle vs 549/549 on the
     engine; the lateral path-length bound must agree exactly."""
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r18 import (
-        STAGED as S18,
-    )
-
     fixture = tmp_path / "longsess"
     fixture.mkdir()
     rows = [
@@ -214,7 +212,7 @@ def test_trigram_oracle_unbounded_on_long_sessions(spark, tmp_path):
         "event_type", "value", "props",
     ).write.parquet(str(fixture / "events.parquet"))
     got = _run_pair(
-        spark, fixture, S18["events_session_path_trigrams"], ["events"]
+        spark, fixture, QUERIES["events_session_path_trigrams"], ["events"]
     ).set_index("trigram")
     assert got.loc["a>b>a", "n_occurrences"] == 549
     assert got.loc["b>a>b", "n_occurrences"] == 549
@@ -229,10 +227,6 @@ def test_bootstrap_hash_exact_with_ansi_off(spark, tmp_path):
     output to DOUBLE and loses precision). Probe: run the full
     engine/oracle pair twice — ANSI on AND off — and require the
     identical hash-exact result both times."""
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r17 import (
-        STAGED as S17,
-    )
-
     fixture = tmp_path / "bootansi"
     fixture.mkdir()
     spark.createDataFrame(
@@ -240,7 +234,7 @@ def test_bootstrap_hash_exact_with_ansi_off(spark, tmp_path):
         "doc_id long, text string, source string, n_chars int",
     ).write.parquet(str(fixture / "documents.parquet"))
     prev = spark.conf.get("spark.sql.ansi.enabled")
-    q = S17["docs_length_bootstrap_ci"]
+    q = QUERIES["docs_length_bootstrap_ci"]
     try:
         spark.conf.set("spark.sql.ansi.enabled", "true")
         on = _run_pair(spark, fixture, q, ["documents"]).sort_values(
@@ -262,10 +256,6 @@ def test_business_day_closed_form_against_numpy_busday(spark, tmp_path):
     independent calendar authority — on top of engine/oracle parity.
     bus_days = weekdays in (d0, d1] = np.busday_count(d0+1, d1+1)."""
     import numpy as np
-
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r17 import (
-        STAGED as S17,
-    )
 
     fixture = tmp_path / "busday"
     fixture.mkdir()
@@ -298,7 +288,7 @@ def test_business_day_closed_form_against_numpy_busday(spark, tmp_path):
         "l_orderkey", "CAST(l_shipdate AS TIMESTAMP_NTZ) AS l_shipdate"
     ).write.parquet(str(fixture / "lineitem.parquet"))
     got = _run_pair(
-        spark, fixture, S17["lineitem_business_day_latency"], ["orders", "lineitem"]
+        spark, fixture, QUERIES["lineitem_business_day_latency"], ["orders", "lineitem"]
     )
     assert len(got) == 1
     assert int(got["n_lines"].iloc[0]) == ok
@@ -311,10 +301,6 @@ def test_error_context_cold_start_and_strict_boundaries(spark, tmp_path):
     both engines (not NULL); an event exactly AT err_ts − 5 min is
     INSIDE (>= lower bound); a same-microsecond tie at err_ts is
     OUTSIDE (strict <)."""
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r17 import (
-        STAGED as S17,
-    )
-
     fixture = tmp_path / "coldstart"
     fixture.mkdir()
     rows = [
@@ -337,7 +323,7 @@ def test_error_context_cold_start_and_strict_boundaries(spark, tmp_path):
         "event_type", "value", "props",
     ).write.parquet(str(fixture / "events.parquet"))
     got = _run_pair(
-        spark, fixture, S17["events_error_context_window"], ["events"]
+        spark, fixture, QUERIES["events_error_context_window"], ["events"]
     ).set_index("error_id")
     # user 1 cold start
     assert int(got.loc[10, "n_prior"]) == 0

@@ -1677,3 +1677,20 @@ def test_semdedup_hier_freezes_unsplittable_duplicate_clump(spark, tmp_path):
     # cosine(identical) = 1 >= epsilon: greedy prune keeps only id 0.
     kept = sorted(r.vec_id for r in in_clump if r.kept)
     assert kept == [0]
+
+
+def test_semdedup_seed_row_guard_raises_value_error(spark):
+    """The fixed-seed SemDeDup path refuses a k whose k·d seed doubles
+    exceed one broadcast row's budget, with a ValueError (not an
+    assert, which ``python -O`` strips), before any job runs."""
+    import pytest
+
+    from python_nyc_taxi_data_pipeline_spark.catalog import EMB_DIM
+    from python_nyc_taxi_data_pipeline_spark.llm.semdedup import (
+        SEED_ROW_MAX_DOUBLES,
+        semdedup,
+    )
+
+    too_many = SEED_ROW_MAX_DOUBLES // EMB_DIM + 1
+    with pytest.raises(ValueError, match="IVF variant"):
+        semdedup(spark, SF_DIR, k=too_many)

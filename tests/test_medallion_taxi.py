@@ -241,3 +241,27 @@ def test_gold_month_padding_flag(spark, taxi_df):
     create_gold_views(spark, silver, dims)  # default: unpadded
     months = [r["month"] for r in spark.table("gold_monthly_metrics").collect()]
     assert any(len(m) != 9 for m in months)
+
+
+def test_advisory_scope_releases_lock_when_conf_set_raises(spark, tmp_path, monkeypatch):
+    """A failing advisory ``conf.set`` must not leak the class-level
+    advisory lock: the next ``_advisory_scope()`` still enters."""
+    pipe = taxi_pipeline(spark, str(tmp_path / "wh_lock"))
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    real_set = spark.conf.set
+
+    def failing_set(k, v):
+        if k == key:
+            raise ValueError("rejected advisory value")
+        return real_set(k, v)
+
+    monkeypatch.setattr(spark.conf, "set", failing_set)
+    with pytest.raises(ValueError, match="rejected advisory value"):
+        with pipe._advisory_scope():
+            pass
+    monkeypatch.undo()
+
+    before = spark.conf.get(key, None)
+    with pipe._advisory_scope():
+        assert spark.conf.get(key) == pipe._write_advisory()
+    assert spark.conf.get(key, None) == before

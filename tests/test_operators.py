@@ -110,12 +110,12 @@ def test_read_and_next_watermark(spark):
     )
 
 
-def test_fanout_guard_semantics(spark, monkeypatch):
+def test_fanout_guard_semantics(spark):
     """The r12 scale-adaptive fan-out guard: repartitions to the
     session parallelism ONLY when the source scan plans fewer splits
     than the session has cores (the single-row-group fixture regime);
-    identity otherwise, and disabled outright by the A/B harness env.
-    Results must be row-identical either way (order-free check)."""
+    identity otherwise. Results must be row-identical either way
+    (order-free check)."""
     from python_nyc_taxi_data_pipeline_spark.catalog import (
         fan_out_if_narrow,
         load_fanned,
@@ -143,8 +143,3 @@ def test_fanout_guard_semantics(spark, monkeypatch):
     # an already-wide frame passes through untouched (guard self-disables)
     prefanned = plain.repartition(par)
     assert fan_out_if_narrow(prefanned, derived) is derived
-
-    # A/B harness kill switch: both helpers become identity
-    monkeypatch.setenv("SPARK_GRAFT_NO_FANOUT", "1")
-    assert load_fanned(spark, SF_DIR, "orders").rdd.getNumPartitions() < par
-    assert fan_out_if_narrow(plain, derived) is derived

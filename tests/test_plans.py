@@ -3,40 +3,30 @@
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import __spark_entry__ as E
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, plan_of
 
 
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def test_flagship_broadcasts_dim(spark):
-    p = plan_of(E.queries()["flagship_supplier_metrics"](spark, SF_DIR))
+def test_flagship_broadcasts_dim(built):
+    p = built("flagship_supplier_metrics").plan
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p  # the fact side must never shuffle for J1
 
 
-def test_watermark_filters_push_to_scan(spark):
-    p = plan_of(E.queries()["watermark_in_window"](spark, SF_DIR))
+def test_watermark_filters_push_to_scan(built):
+    p = built("watermark_in_window").plan
     assert "PushedFilters: [IsNotNull(o_orderdate), GreaterThan" in p
 
 
-def test_top_k_uses_take_ordered(spark):
-    p = plan_of(E.queries()["top_k_customers"](spark, SF_DIR))
+def test_top_k_uses_take_ordered(built):
+    p = built("top_k_customers").plan
     assert "TakeOrderedAndProject" in p
     assert "Exchange" not in p  # no global sort shuffle
 
 
-def test_q1_reads_only_needed_columns(spark):
-    p = plan_of(E.queries()["tpch_q1_pricing_summary"](spark, SF_DIR))
+def test_q1_reads_only_needed_columns(built):
+    p = built("tpch_q1_pricing_summary").plan
     # column pruning: the 7 used columns, not the full 11-column schema
     scan_lines = [line for line in p.splitlines() if "ReadSchema" in line]
     assert scan_lines
@@ -44,43 +34,42 @@ def test_q1_reads_only_needed_columns(spark):
     assert "l_quantity" in scan_lines[0]
 
 
-def test_dedup_exact_is_hash_aggregate_not_sort(spark):
-    p = plan_of(E.queries()["dedup_exact"](spark, SF_DIR))
+def test_dedup_exact_is_hash_aggregate_not_sort(built):
+    p = built("dedup_exact").plan
     assert "HashAggregate" in p
     assert "Window" not in p
 
 
-def test_q5_all_dims_broadcast(spark):
-    p = plan_of(E.queries()["tpch_q5_local_supplier_volume"](spark, SF_DIR))
+def test_q5_all_dims_broadcast(built):
+    p = built("tpch_q5_local_supplier_volume").plan
     # region/nation/supplier/customer all broadcast → ≥4 broadcast joins
     assert p.count("BroadcastHashJoin") >= 4
 
 
-def test_q6_predicates_and_projection_reach_scan(spark):
-    p = plan_of(E.queries()["tpch_q6_forecast_revenue"](spark, SF_DIR))
+def test_q6_predicates_and_projection_reach_scan(built):
+    p = built("tpch_q6_forecast_revenue").plan
     scan_lines = [line for line in p.splitlines() if "ReadSchema" in line]
     assert scan_lines and "l_orderkey" not in scan_lines[0]
     assert "PushedFilters" in p and "l_shipdate" in p.split("PushedFilters")[1][:200]
 
 
-def test_q4_semi_join_no_full_materialization(spark):
-    p = plan_of(E.queries()["tpch_q4_order_priority"](spark, SF_DIR))
+def test_q4_semi_join_no_full_materialization(built):
+    p = built("tpch_q4_order_priority").plan
     assert "LeftSemi" in p
 
 
-def test_q16_not_in_lowers_to_broadcast_anti_join(spark):
-    p = plan_of(E.queries()["tpch_q16_supplier_cnt"](spark, SF_DIR))
+def test_q16_not_in_lowers_to_broadcast_anti_join(built):
+    p = built("tpch_q16_supplier_cnt").plan
     assert "LeftAnti" in p and "BroadcastHashJoin" in p
 
 
-def test_q10_top20_uses_take_ordered(spark):
-    p = plan_of(E.queries()["tpch_q10_returned_items"](spark, SF_DIR))
+def test_q10_top20_uses_take_ordered(built):
+    p = built("tpch_q10_returned_items").plan
     assert "TakeOrderedAndProject" in p
 
 
-def test_neardup_is_block_partitioned_gemm(spark):
-    df = E.queries()["embeddings_neardup_pairs"](spark, SF_DIR)
-    p = plan_of(df)
+def test_neardup_is_block_partitioned_gemm(built):
+    p = built("embeddings_neardup_pairs").plan
     # block-partitioned exact all-pairs: no corpus broadcast, no
     # nested-loop join — the n² scoring runs as per-block-pair GEMMs
     # behind a shuffle on (bi, bj)
@@ -104,46 +93,46 @@ def test_join_strategy_hints_are_honored(spark):
     assert "SortMergeJoin" in plan_of(merged)
 
 
-def test_q9_dims_broadcast_one_agg_shuffle(spark):
-    p = plan_of(E.queries()["tpch_q9_product_type_profit"](spark, SF_DIR))
+def test_q9_dims_broadcast_one_agg_shuffle(built):
+    p = built("tpch_q9_product_type_profit").plan
     # part/supplier/nation are broadcast; only orders⋈lineitem may shuffle
     assert p.count("BroadcastHashJoin") >= 3
     assert "PushedFilters: [IsNotNull(p_name), StringContains(p_name,widget)" in p
 
 
-def test_q2_argmin_runs_on_deduped_pairs(spark):
-    p = plan_of(E.queries()["tpch_q2_min_cost_supplier"](spark, SF_DIR))
+def test_q2_argmin_runs_on_deduped_pairs(built):
+    p = built("tpch_q2_min_cost_supplier").plan
     # the distinct (partkey, suppkey) aggregate precedes the window
     assert "HashAggregate" in p and "Window" in p
     assert p.count("BroadcastHashJoin") >= 3
     assert "TakeOrderedAndProject" in p  # top-100 without a global sort
 
 
-def test_q21_single_orderkey_shuffle_no_self_joins(spark):
-    p = plan_of(E.queries()["tpch_q21_waiting_suppliers"](spark, SF_DIR))
+def test_q21_single_orderkey_shuffle_no_self_joins(built):
+    p = built("tpch_q21_waiting_suppliers").plan
     # the EXISTS/NOT-EXISTS pair is one grouped aggregate + window, not
     # two extra lineitem self-joins: exactly ONE lineitem scan
     assert p.count("lineitem.parquet") == 1
     assert "TakeOrderedAndProject" in p
 
 
-def test_salted_agg_is_two_stage_no_join(spark):
-    p = plan_of(E.queries()["events_type_value_salted"](spark, SF_DIR))
+def test_salted_agg_is_two_stage_no_join(built):
+    p = built("events_type_value_salted").plan
     # two groupBys → two shuffle exchanges (salted partial + merge), no join
     assert "Join" not in p
     assert p.count("Exchange") >= 2
 
 
-def test_dup_span_fraction_uses_window_not_join_for_df(spark):
-    p = plan_of(E.queries()["docs_corpus_dup_span_fraction"](spark, SF_DIR))
+def test_dup_span_fraction_uses_window_not_join_for_df(built):
+    p = built("docs_corpus_dup_span_fraction").plan
     # document frequency is a count window over the span hash — exactly
     # one join remains (the LEFT join back to the full corpus)
     assert "Window" in p
     assert p.count("SortMergeJoin") <= 1
 
 
-def test_pq_codes_broadcast_codebook_single_pass(spark):
-    p = plan_of(E.queries()["embeddings_pq_codes"](spark, SF_DIR))
+def test_pq_codes_broadcast_codebook_single_pass(built):
+    p = built("embeddings_pq_codes").plan
     # the codebook attaches via a broadcast NLJ against one row; the
     # corpus itself never shuffles (no Exchange hashpartitioning on it)
     assert "BroadcastNestedLoopJoin" in p
@@ -273,7 +262,7 @@ def _is_bounded_subtree(jplan) -> bool:
     return True
 
 
-def test_no_broadcast_hint_on_sf_scaled_relations(spark):
+def test_no_broadcast_hint_on_sf_scaled_relations(built):
     """Broadcast hints are only legal on provably-bounded sides: nation/
     region (25/5 rows at ANY scale factor), literal dims, or scalar
     aggregates. A hint on customer/supplier/part/orders/lineitem — or on
@@ -296,7 +285,7 @@ def test_no_broadcast_hint_on_sf_scaled_relations(spark):
             continue
         if not ({"tpch", "gold", "join", "agg", "validation"} & set(q.tags)):
             continue
-        jplan = q.fn(spark, SF_DIR)._jdf.queryExecution().analyzed()
+        jplan = built(name).df._jdf.queryExecution().analyzed()
         bad = []
         for n in _walk(jplan):
             if n.getClass().getSimpleName() != "ResolvedHint":
@@ -330,7 +319,18 @@ def test_aqe_broadcasts_dehinted_joins_at_runtime(spark):
         assert "SortMergeJoin" not in executed, name
 
 
-def test_no_plan_antipatterns_across_all_queries(spark):
+def plan_antipatterns(p: str) -> list[str]:
+    """The scale killers in a formatted plan: a cartesian product, a
+    row-at-a-time Python UDF, or a single-partition exchange whose
+    parent is not a scalar aggregate."""
+    hits = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
+    for nid in _single_partition_exchange_ids(p):
+        if not _benign_single_partition(p, nid):
+            hits.append(f"Exchange SinglePartition (node {nid})")
+    return hits
+
+
+def test_no_plan_antipatterns_across_all_queries(built):
     """Fleet-wide net: NO registered query may contain a cartesian
     product, a row-at-a-time Python UDF (BatchEvalPython — Arrow paths
     show as ArrowEvalPython/MapInPandas), or a single-partition exchange
@@ -344,18 +344,14 @@ def test_no_plan_antipatterns_across_all_queries(spark):
     from python_nyc_taxi_data_pipeline_spark import registry
 
     flagged = {}
-    for name, q in registry.all_queries().items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        hits = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        for nid in _single_partition_exchange_ids(p):
-            if not _benign_single_partition(p, nid):
-                hits.append(f"Exchange SinglePartition (node {nid})")
+    for name in registry.all_queries():
+        hits = plan_antipatterns(built(name).plan)
         if hits:
             flagged[name] = hits
     assert flagged == {}
 
 
-def test_no_sort_aggregate_across_all_queries(spark):
+def test_no_sort_aggregate_across_all_queries(built):
     """Fleet-wide net: struct/string-buffered aggregates silently plan
     as SortAggregate, which SORTS every group's rows within partitions
     — hit twice in round 6 (the NB classifier's struct argmin + its
@@ -369,22 +365,22 @@ def test_no_sort_aggregate_across_all_queries(spark):
     allowed: set = set()
     flagged = [
         name
-        for name, q in registry.all_queries().items()
-        if name not in allowed and "SortAggregate" in plan_of(q.fn(spark, SF_DIR))
+        for name in registry.all_queries()
+        if name not in allowed and "SortAggregate" in built(name).plan
     ]
     assert flagged == []
 
 
-def test_segment_dedup_keeper_is_primitive_hash_aggregate(spark):
+def test_segment_dedup_keeper_is_primitive_hash_aggregate(built):
     """Keeper election must stay a primitive-long HashAggregate (min of
     the packed key) — a struct min would silently fall back to
     SortAggregate and sort every segment within partitions."""
-    p = plan_of(E.queries()["docs_segment_dedup_apply"](spark, SF_DIR))
+    p = built("docs_segment_dedup_apply").plan
     assert "partial_min(pk" in p
     assert "SortAggregate" not in p
 
 
-def test_hybrid_rrf_dense_stage_broadcasts_anchor_block(spark):
+def test_hybrid_rrf_dense_stage_broadcasts_anchor_block(built):
     """The dense pass must stream the corpus once against a broadcast
     anchor block — never shuffle the embeddings for a q-row join. The
     only sort-merge join allowed is the full-outer fusion of the two
@@ -394,7 +390,7 @@ def test_hybrid_rrf_dense_stage_broadcasts_anchor_block(spark):
     audit, not here)."""
     import re
 
-    p = plan_of(E.queries()["retrieval_hybrid_rrf"](spark, SF_DIR))
+    p = built("retrieval_hybrid_rrf").plan
     assert "BroadcastNestedLoopJoin Inner" in p  # corpus vs broadcast anchors
     # exactly ONE sort-merge join node (formatted explain prints each
     # node twice — tree and detail — so count detail headers), and it

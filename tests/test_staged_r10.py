@@ -1,7 +1,6 @@
-"""Tests for llm/staged_r10.py — the round-10 registration candidates.
-
-Same structure as the r8/r9 batteries: fleet plan sweeps, oracle
-parity at sf0.001, and independent referees: the MW reweight
+"""Tests for the queries in llm/staged_r10.py. Oracle parity is
+checked registry-wide (tests/test_parity.py); these are independent
+referees: the MW reweight
 arithmetic replayed from the registered surprisal output, IVF load
 identities, degree-histogram corpus partition, a pandas rolling-window
 DAU/WAU replay, and the water-fill's conservation law (Σ take ==
@@ -10,67 +9,78 @@ budget exactly)."""
 from __future__ import annotations
 
 import duckdb
-import numpy as np
 import pandas as pd
 
-from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES
+from python_nyc_taxi_data_pipeline_spark import registry
+from python_nyc_taxi_data_pipeline_spark.llm import staged_r10
 from python_nyc_taxi_data_pipeline_spark.llm.staged_r10 import (
     BUDGET_SHARE_MICRO,
     DOREMI_ETA_DIV,
-    R10_BATCH,
-    STAGED,
     WAU_WINDOW_DAYS,
 )
+from tests import module_gates as gates
 from tests.conftest import SF_DIR
+
+QUERIES = registry.all_queries()
+
+
+# --------------------------------------------------------------------
+# Module-wide gates (parity and plans share the session's builds)
+# --------------------------------------------------------------------
+
+
+def test_r10_batch_names_the_whole_slate():
+    gates.assert_registers_exactly(
+        staged_r10,
+        (
+            "corpus_token_budget_plan",
+            "docs_contamination_attribution",
+            "docs_curriculum_shard_manifest",
+            "docs_dedup_graph_degrees",
+            "docs_doremi_reweight_step",
+            "embeddings_ivf_balance_report",
+            "embeddings_semdedup_hier_contract",
+            "events_dau_wau_stickiness",
+            "events_power_user_pareto",
+            "orders_priority_sla",
+        ),
+    )
+
+
+def test_staged_plans_carry_no_antipatterns(built):
+    gates.assert_plans_clean(staged_r10, built, sort_aggregate=True)
+
+
+def test_staged_oracle_parity_sf0001(parity):
+    gates.assert_parity(staged_r10, parity)
+
+
+def test_promote_to_registry_round_trip():
+    gates.assert_register_round_trip("embeddings_ivf_balance_report")
+
+
+def test_no_name_collisions_across_slates_and_registry():
+    """Every name the package passes to ``@register`` is registered
+    exactly once: a module that defines a name twice, or that
+    ``registry._load_all`` never imports, fails by name here instead
+    of as a missing query."""
+    import collections
+    import pathlib
+    import re
+
+    import python_nyc_taxi_data_pipeline_spark as pkg
+
+    found = collections.Counter()
+    for path in pathlib.Path(pkg.__file__).parent.rglob("*.py"):
+        found.update(re.findall(r'@register\(\s*"([a-z0-9_]+)"', path.read_text()))
+    assert {n for n, c in found.items() if c > 1} == set()
+    assert set(found) <= set(registry.all_queries())
 
 
 def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
     return duckdb.sql(
         f"SELECT * FROM read_parquet('{sf_dir}/{table}.parquet')"
     ).fetchdf()
-
-
-# --------------------------------------------------------------------
-# Fleet-wide gates
-# --------------------------------------------------------------------
-
-
-def test_staged_plans_carry_no_antipatterns(spark):
-    from tests.test_plans import (
-        _benign_single_partition,
-        _single_partition_exchange_ids,
-        plan_of,
-    )
-
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        hits = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        if "SortAggregate" in p:
-            hits.append("SortAggregate")
-        for nid in _single_partition_exchange_ids(p):
-            if not _benign_single_partition(p, nid):
-                hits.append(f"Exchange SinglePartition (node {nid})")
-        if hits:
-            flagged[name] = hits
-    assert flagged == {}
-
-
-def test_staged_oracle_parity_sf0001(spark):
-    from tools.oracle_check import compare
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    for name, q in STAGED.items():
-        sdf = q.fn(spark, SF_DIR).toPandas()
-        ddf = con.execute(q.oracle).fetchdf()
-        problems = compare(name, sdf, ddf)
-        assert not problems, f"{name}: {problems}"
-        assert len(sdf) > 0, f"{name}: degenerate empty result"
-    con.close()
 
 
 # --------------------------------------------------------------------
@@ -83,7 +93,7 @@ def test_doremi_step_replays_from_registered_surprisal(spark):
         docs_unigram_surprisal_filter,
     )
 
-    got = STAGED["docs_doremi_reweight_step"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["docs_doremi_reweight_step"].fn(spark, SF_DIR).toPandas()
     per_doc = docs_unigram_surprisal_filter(spark, SF_DIR).toPandas()
     src_of = _pd("documents").set_index("doc_id")["source"]
     per_doc["source"] = per_doc["doc_id"].map(src_of)
@@ -128,7 +138,7 @@ def test_doremi_step_replays_from_registered_surprisal(spark):
 
 
 def test_ivf_balance_identities(spark):
-    got = STAGED["embeddings_ivf_balance_report"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["embeddings_ivf_balance_report"].fn(spark, SF_DIR).toPandas()
     emb = _pd("embeddings")
     cells = emb.groupby("label").size()
     n, n_cells, max_cell = len(emb), len(cells), int(cells.max())
@@ -158,7 +168,7 @@ def test_degree_histogram_partitions_corpus(spark):
         docs_ngram_jaccard_pairs,
     )
 
-    got = STAGED["docs_dedup_graph_degrees"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["docs_dedup_graph_degrees"].fn(spark, SF_DIR).toPandas()
     pairs = docs_ngram_jaccard_pairs(spark, SF_DIR).toPandas()
     n_docs_total = len(_pd("documents"))
     assert got["n_docs"].sum() == n_docs_total
@@ -181,7 +191,7 @@ def test_degree_histogram_partitions_corpus(spark):
 
 def test_dau_wau_pandas_replay(spark):
     got = (
-        STAGED["events_dau_wau_stickiness"]
+        QUERIES["events_dau_wau_stickiness"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("day_idx", ignore_index=True)
@@ -217,7 +227,7 @@ def test_dau_wau_pandas_replay(spark):
 
 def test_budget_plan_conservation(spark):
     got = (
-        STAGED["corpus_token_budget_plan"]
+        QUERIES["corpus_token_budget_plan"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("bucket", ascending=False, ignore_index=True)
@@ -247,52 +257,14 @@ def test_budget_plan_conservation(spark):
 
 
 # --------------------------------------------------------------------
-# Registration hygiene
-# --------------------------------------------------------------------
-
-
-def test_r10_batch_names_the_whole_slate():
-    assert sorted(R10_BATCH) == sorted(STAGED)
-
-
-def test_promote_to_registry_round_trip():
-    from unittest import mock
-
-    import pytest as _pytest
-
-    from python_nyc_taxi_data_pipeline_spark import registry
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r10 import (
-        promote_to_registry,
-    )
-
-    pre = dict(registry._REGISTRY)
-    scratch: dict = {}
-    with mock.patch.object(registry, "_REGISTRY", scratch):
-        promoted = promote_to_registry(["embeddings_ivf_balance_report"])
-        assert promoted == ["embeddings_ivf_balance_report"]
-        row = scratch["embeddings_ivf_balance_report"]
-        assert row.fn is STAGED["embeddings_ivf_balance_report"].fn
-        assert row.oracle == STAGED["embeddings_ivf_balance_report"].oracle
-        with _pytest.raises(ValueError, match="duplicate"):
-            promote_to_registry(["embeddings_ivf_balance_report"])
-        with _pytest.raises(ValueError, match="explicit"):
-            promote_to_registry(None)
-    assert registry._REGISTRY == pre
-
-
-# --------------------------------------------------------------------
 # Contamination attribution — argmax referee vs the r8 audit
 # --------------------------------------------------------------------
 
 
 def test_attribution_consistent_with_contamination_audit(spark):
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r8 import (
-        STAGED as STAGED_R8,
-    )
-
-    attr = STAGED["docs_contamination_attribution"].fn(spark, SF_DIR).toPandas()
+    attr = QUERIES["docs_contamination_attribution"].fn(spark, SF_DIR).toPandas()
     audit = (
-        STAGED_R8["docs_token_space_contamination"].fn(spark, SF_DIR).toPandas()
+        QUERIES["docs_token_space_contamination"].fn(spark, SF_DIR).toPandas()
     )
     a = audit.set_index("doc_id")
     # Every attributed doc is held-out and its n_shared can't exceed
@@ -325,7 +297,7 @@ def test_attribution_consistent_with_contamination_audit(spark):
 
 def test_power_user_pareto_replay(spark):
     got = (
-        STAGED["events_power_user_pareto"]
+        QUERIES["events_power_user_pareto"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("bucket", ignore_index=True)
@@ -356,7 +328,7 @@ def test_priority_sla_replay(spark):
         SLA_SLOW_DAYS,
     )
 
-    got = STAGED["orders_priority_sla"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["orders_priority_sla"].fn(spark, SF_DIR).toPandas()
     li = _pd("lineitem")[["l_orderkey", "l_shipdate"]]
     o = _pd("orders")[["o_orderkey", "o_orderpriority", "o_orderdate"]]
     j = li.merge(o, left_on="l_orderkey", right_on="o_orderkey")
@@ -392,7 +364,7 @@ def test_curriculum_manifest_property(spark):
     )
 
     got = (
-        STAGED["docs_curriculum_shard_manifest"]
+        QUERIES["docs_curriculum_shard_manifest"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values(["shard", "bucket"], ascending=[True, False],
@@ -414,67 +386,6 @@ def test_curriculum_manifest_property(spark):
         assert next_pos - 1 == g["n_docs"].sum()
 
 
-def test_no_name_collisions_across_slates_and_registry():
-    """Every staged slate must be disjoint from the live registry AND
-    from every other slate — a collision only explodes on promotion
-    day (register() raises 'duplicate'), which is exactly the wrong
-    time to find out. (This caught the weekly-retention query
-    shadowing the registered daily one in round 7.)"""
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r11 import (
-        STAGED as S11,
-    )
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r12 import (
-        STAGED as S12,
-    )
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r13 import (
-        STAGED as S13,
-    )
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r14 import (
-        STAGED as S14,
-    )
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r15 import (
-        STAGED as S15,
-    )
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r16 import (
-        STAGED as S16,
-    )
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r17 import (
-        STAGED as S17,
-    )
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r18 import (
-        STAGED as S18,
-    )
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r19 import (
-        STAGED as S19,
-    )
-    from python_nyc_taxi_data_pipeline_spark.registry import all_queries
-
-    live = set(all_queries())
-    # staged_r8/r9/r10/r11 promoted into the registry in rounds
-    # 8/9/10/11 — they are now part of `live`, so only the
-    # still-pending slates are checked here. Promoted slates must be
-    # a SUBSET of live (the registration actually happened), never a
-    # partial overlap.
-    assert set(STAGED) <= live, set(STAGED) - live
-    assert set(S11) <= live, set(S11) - live
-    slates = {
-        "r12": set(S12),
-        "r13": set(S13),
-        "r14": set(S14),
-        "r15": set(S15),
-        "r16": set(S16),
-        "r17": set(S17),
-        "r18": set(S18),
-        "r19": set(S19),
-    }
-    for name, s in slates.items():
-        assert not (s & live), f"{name} collides with registry: {s & live}"
-    names = list(slates.items())
-    for i, (na, sa) in enumerate(names):
-        for nb, sb in names[i + 1:]:
-            assert not (sa & sb), f"{na}∩{nb}: {sa & sb}"
-
-
 def test_r11_seed_frame_sample_geometry(spark):
     """The r11 seed's frame-sample contract: the sampler must emit
     exactly the every-2nd frame indexes of each doc's (4 + id%5)
@@ -484,11 +395,10 @@ def test_r11_seed_frame_sample_geometry(spark):
         EVERY_NTH,
         FRAME_BYTES,
         N_VIDEO_DOCS,
-        STAGED as S11,
     )
 
     got = (
-        S11["docs_frame_sample_contract"]
+        QUERIES["docs_frame_sample_contract"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values(["doc_id", "frame_idx"], ignore_index=True)
@@ -509,7 +419,7 @@ def test_r11_seed_frame_sample_geometry(spark):
 
 def test_hier_contract_facts_all_hold(spark):
     got = (
-        STAGED["embeddings_semdedup_hier_contract"]
+        QUERIES["embeddings_semdedup_hier_contract"]
         .fn(spark, SF_DIR)
         .collect()
     )
@@ -546,7 +456,7 @@ def test_hier_contract_exempts_frozen_duplicate_clump(spark, tmp_path):
         clump + scatter, "vec_id long, embedding array<float>"
     ).write.parquet(str(fixture / "embeddings.parquet"))
     row = (
-        STAGED["embeddings_semdedup_hier_contract"]
+        QUERIES["embeddings_semdedup_hier_contract"]
         .fn(spark, str(fixture))
         .collect()[0]
     )

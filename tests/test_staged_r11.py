@@ -1,7 +1,6 @@
-"""Tests for llm/staged_r11.py — the round-11 registration candidates.
-
-Same structure as the r8–r10 batteries: fleet plan sweep, oracle
-parity at sf0.001, and independent referees: pure-Python replays of
+"""Tests for the queries in llm/staged_r11.py. Oracle parity is
+checked registry-wide (tests/test_parity.py); these are independent
+referees: pure-Python replays of
 the short-frame and audio-window geometry, the distillation labels
 recomputed from the cascade's own output, the stream↔batch parity
 totals checked against the registered one-shot LSH pair set, a
@@ -18,7 +17,8 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES
+from python_nyc_taxi_data_pipeline_spark import registry
+from python_nyc_taxi_data_pipeline_spark.llm import staged_r11
 from python_nyc_taxi_data_pipeline_spark.llm.staged_r11 import (
     AUDIO_HOP,
     AUDIO_N_DOCS,
@@ -27,18 +27,47 @@ from python_nyc_taxi_data_pipeline_spark.llm.staged_r11 import (
     IVF_RC_N_CENTROIDS,
     IVF_RC_NPROBES,
     N_STREAM_BATCHES,
-    R11_BATCH,
     SALT_BUCKETS,
     SFC_EVERY_NTH,
     SFC_FRAME_BYTES,
     SFC_N_DOCS,
-    STAGED,
     TCL_BUCKET_MICRO,
 )
-from python_nyc_taxi_data_pipeline_spark.llm.staged_r9 import (
-    STAGED as STAGED_R9,
-)
+from tests import module_gates as gates
 from tests.conftest import SF_DIR
+
+QUERIES = registry.all_queries()
+
+
+# --------------------------------------------------------------------
+# Module-wide gates (parity and plans share the session's builds)
+# --------------------------------------------------------------------
+
+
+def test_r11_batch_matches_staged():
+    gates.assert_registers_exactly(
+        staged_r11,
+        (
+            "customer_t_closeness",
+            "docs_audio_window_features",
+            "docs_frame_sample_contract",
+            "docs_minhash_stream_batch_parity",
+            "docs_ngram_novelty",
+            "docs_repetition_profile",
+            "docs_short_frame_contract",
+            "embeddings_ivf_recall_probe_curve",
+            "lineitem_salted_distinct_contract",
+            "retrieval_distillation_labels",
+        ),
+    )
+
+
+def test_staged_plans_carry_no_antipatterns(built):
+    gates.assert_plans_clean(staged_r11, built)
+
+
+def test_staged_oracle_parity_sf0001(parity):
+    gates.assert_parity(staged_r11, parity)
 
 
 def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
@@ -63,61 +92,13 @@ def _write_docs_fixture(tmp_path, texts: list[str]) -> str:
 
 
 # --------------------------------------------------------------------
-# Fleet-wide gates
-# --------------------------------------------------------------------
-
-
-def test_r11_batch_matches_staged():
-    assert sorted(R11_BATCH) == sorted(STAGED)
-    assert len(R11_BATCH) == 10
-
-
-def test_staged_plans_carry_no_antipatterns(spark):
-    from tests.test_plans import (
-        _benign_single_partition,
-        _single_partition_exchange_ids,
-        plan_of,
-    )
-
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        hits = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        if "SortAggregate" in p:
-            hits.append("SortAggregate")
-        for nid in _single_partition_exchange_ids(p):
-            if not _benign_single_partition(p, nid):
-                hits.append(f"Exchange SinglePartition (node {nid})")
-        if hits:
-            flagged[name] = hits
-    assert flagged == {}
-
-
-def test_staged_oracle_parity_sf0001(spark):
-    from tools.oracle_check import compare
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    for name, q in STAGED.items():
-        sdf = q.fn(spark, SF_DIR).toPandas()
-        ddf = con.execute(q.oracle).fetchdf()
-        problems = compare(name, sdf, ddf)
-        assert not problems, f"{name}: {problems}"
-        assert len(sdf) > 0, f"{name}: degenerate empty result"
-    con.close()
-
-
-# --------------------------------------------------------------------
 # Short-final-frame contract — pure-Python geometry replay
 # --------------------------------------------------------------------
 
 
 def test_short_frame_geometry_replay(spark):
     got = (
-        STAGED["docs_short_frame_contract"]
+        QUERIES["docs_short_frame_contract"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values(["doc_id", "frame_idx"], ignore_index=True)
@@ -176,7 +157,7 @@ def test_sample_frames_partial_flag_unit(spark):
 
 def test_audio_window_energy_replay(spark):
     got = (
-        STAGED["docs_audio_window_features"]
+        QUERIES["docs_audio_window_features"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values(["doc_id", "win_idx"], ignore_index=True)
@@ -216,7 +197,7 @@ def test_distillation_labels_replay_from_cascade(spark):
         retrieval_rerank_cascade,
     )
 
-    got = STAGED["retrieval_distillation_labels"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["retrieval_distillation_labels"].fn(spark, SF_DIR).toPandas()
     cas = retrieval_rerank_cascade(spark, SF_DIR).toPandas()
     assert (got["margin_micro"] >= 0).all()
     for q, grp in cas.groupby("query_doc_id"):
@@ -244,7 +225,7 @@ def test_stream_parity_totals_match_one_shot_lsh(spark):
     )
 
     got = (
-        STAGED["docs_minhash_stream_batch_parity"]
+        QUERIES["docs_minhash_stream_batch_parity"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("batch_id", ignore_index=True)
@@ -278,7 +259,7 @@ def test_repetition_profile_on_constructed_loops(spark, tmp_path):
     ]
     fixture = _write_docs_fixture(tmp_path, texts)
     got = (
-        STAGED["docs_repetition_profile"]
+        QUERIES["docs_repetition_profile"]
         .fn(spark, fixture)
         .toPandas()
         .set_index("doc_id")
@@ -295,7 +276,7 @@ def test_repetition_profile_on_constructed_loops(spark, tmp_path):
 
 def test_repetition_profile_real_fixture_replay(spark):
     got = (
-        STAGED["docs_repetition_profile"]
+        QUERIES["docs_repetition_profile"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("doc_id")
@@ -333,7 +314,7 @@ def test_novelty_laws_on_duplicate_fixture(spark, tmp_path):
     ]
     fixture = _write_docs_fixture(tmp_path, texts)
     got = (
-        STAGED["docs_ngram_novelty"]
+        QUERIES["docs_ngram_novelty"]
         .fn(spark, fixture)
         .toPandas()
         .set_index("doc_id")
@@ -348,7 +329,7 @@ def test_novelty_laws_on_duplicate_fixture(spark, tmp_path):
 
 
 def test_novelty_min_doc_is_always_novel(spark):
-    got = STAGED["docs_ngram_novelty"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["docs_ngram_novelty"].fn(spark, SF_DIR).toPandas()
     first = got.loc[got["doc_id"].idxmin()]
     assert int(first["novelty_micro"]) == 1_000_000
     assert (got["n_novel"] <= got["n_distinct_trigrams"]).all()
@@ -377,7 +358,7 @@ def test_novelty_min_doc_is_always_novel(spark):
 
 def test_ivf_recall_curve_laws(spark):
     got = (
-        STAGED["embeddings_ivf_recall_probe_curve"]
+        QUERIES["embeddings_ivf_recall_probe_curve"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("nprobe", ignore_index=True)
@@ -403,7 +384,7 @@ def test_salted_distinct_equals_direct(spark):
     from python_nyc_taxi_data_pipeline_spark.catalog import load
 
     got = (
-        STAGED["lineitem_salted_distinct_contract"]
+        QUERIES["lineitem_salted_distinct_contract"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("l_returnflag")
@@ -462,7 +443,7 @@ def _t_closeness_replay(cust: pd.DataFrame) -> pd.DataFrame:
 
 def test_t_closeness_pandas_replay(spark):
     got = (
-        STAGED["customer_t_closeness"]
+        QUERIES["customer_t_closeness"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("t_bucket")
@@ -478,8 +459,8 @@ def test_t_closeness_triad_consistency(spark):
     """The t-closeness report covers the exact class universe the
     l-diversity ladder sees (same QI), and every t is a valid total
     variation: 0 <= t_micro <= 1e6."""
-    tcl = STAGED["customer_t_closeness"].fn(spark, SF_DIR).toPandas()
-    ldiv = STAGED_R9["customer_l_diversity"].fn(spark, SF_DIR).toPandas()
+    tcl = QUERIES["customer_t_closeness"].fn(spark, SF_DIR).toPandas()
+    ldiv = QUERIES["customer_l_diversity"].fn(spark, SF_DIR).toPandas()
     assert tcl["n_classes"].sum() == ldiv["n_classes"].sum()
     assert tcl["n_customers"].sum() == ldiv["n_customers"].sum()
     assert (tcl["max_t_micro"] >= 0).all()

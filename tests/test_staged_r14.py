@@ -1,30 +1,21 @@
-"""Tests for llm/staged_r14.py — the round-14 seed slate.
+"""Tests for the queries in llm/staged_r14.py.
 
-Referees: a numpy PQ-ADC replay for one rung plus curve laws, a
-pandas zone-map replay with the zero-false-prune invariant and a
-constructed boundary fixture, and a license-propagation replay from
-the registered cluster map with conservation laws."""
+Referees: a license-propagation replay from the registered cluster
+map with conservation laws, and replays or law batteries for the
+tokenizer, cross-modal, session, join and graph contracts."""
 
 from __future__ import annotations
 
 import duckdb
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 
-from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES
-from python_nyc_taxi_data_pipeline_spark.llm.staged_r14 import (
-    PQR_CODES,
-    PQR_K,
-    PQR_MS,
-    PQR_N_PROBES,
-    R14_BATCH,
-    SPC_FILE_MOD,
-    SPC_PREFIXES,
-    STAGED,
-)
+from python_nyc_taxi_data_pipeline_spark import registry
+from python_nyc_taxi_data_pipeline_spark.llm import staged_r14
+from tests import module_gates as gates
 from tests.conftest import SF_DIR
+
+QUERIES = registry.all_queries()
 
 
 def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
@@ -39,198 +30,27 @@ def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
 
 
 def test_r14_batch_matches_staged():
-    assert sorted(R14_BATCH) == sorted(STAGED)
-    assert len(R14_BATCH) == 10
-
-
-def test_staged_plans_carry_no_antipatterns(spark):
-    from tests.test_plans import (
-        _benign_single_partition,
-        _single_partition_exchange_ids,
-        plan_of,
+    gates.assert_registers_exactly(
+        staged_r14,
+        (
+            "docs_bpe_vocab_size_curve",
+            "docs_image_text_alignment_contract",
+            "docs_license_propagation_contract",
+            "docs_simhash_bit_bias",
+            "events_session_survival_curve",
+            "lineitem_salted_join_contract",
+            "nation_trade_reciprocity",
+            "orders_temporal_dim_join",
+        ),
     )
 
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        bad = []
-        if "CartesianProduct" in p:
-            bad.append("cartesian")
-        if "BatchEvalPython" in p:
-            bad.append("row-udf")
-        sp = [
-            i
-            for i in _single_partition_exchange_ids(p)
-            if not _benign_single_partition(p, i)
-        ]
-        if sp:
-            bad.append(f"single-partition {sp}")
-        if bad:
-            flagged[name] = bad
-    assert flagged == {}
+
+def test_staged_plans_carry_no_antipatterns(built):
+    gates.assert_plans_clean(staged_r14, built)
 
 
-def test_staged_oracle_parity_sf0001(spark):
-    from tools.oracle_check import compare
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS"
-            f" SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    for name, q in STAGED.items():
-        sdf = q.fn(spark, SF_DIR).toPandas()
-        ddf = con.execute(q.oracle).fetchdf()
-        problems = compare(name, sdf, ddf)
-        assert not problems, f"{name}: {problems}"
-        assert len(sdf) > 0, f"{name}: degenerate empty result"
-    con.close()
-
-
-# --------------------------------------------------------------------
-# PQ-ADC recall — numpy replay for the largest rung + curve laws
-# --------------------------------------------------------------------
-
-
-def _micro(x: np.ndarray) -> np.ndarray:
-    return np.round(np.round(x, 6) * 1e6).astype(np.int64)
-
-
-def test_pq_recall_numpy_replay_largest_rung(spark):
-    got = (
-        STAGED["embeddings_pq_adc_recall_curve"]
-        .fn(spark, SF_DIR)
-        .toPandas()
-        .set_index("m_subq")
-        .sort_index()
-    )
-    emb = _pd("embeddings").sort_values("vec_id").reset_index(drop=True)
-    import hashlib
-
-    V = np.array([np.asarray(v, dtype=np.float64) for v in emb["embedding"]])
-    ids = emb["vec_id"].to_numpy()
-    hh = np.array(
-        [hashlib.md5(str(i).encode()).hexdigest()[:2] for i in ids]
-    )
-    probe_idx = np.where(hh >= "e6")[0][:PQR_N_PROBES]
-    seeds_idx = np.where(ids < PQR_CODES)[0]
-    mm = PQR_MS[-1]
-    sd = V.shape[1] // mm
-    # exact truth
-    found_total = 0
-    true_total = 0
-    for pi in probe_idx:
-        d2 = _micro(((V - V[pi]) ** 2).sum(axis=1))
-        order = np.lexsort((ids, d2))
-        order = order[ids[order] != ids[pi]]
-        truth = set(ids[order[:PQR_K]])
-        # codes: per (vec, m) argmin over seeds with code tie-break
-        adc = np.zeros(len(V), dtype=np.int64)
-        for m in range(mm):
-            sl = slice(m * sd, (m + 1) * sd)
-            dvs = np.stack(
-                [
-                    _micro(((V[:, sl] - V[si, sl]) ** 2).sum(axis=1))
-                    for si in seeds_idx
-                ],
-                axis=1,
-            )
-            code = np.argmin(dvs, axis=1)  # ties -> lowest code (argmin)
-            dps = np.array(
-                [
-                    _micro(
-                        np.array(
-                            [((V[pi, sl] - V[si, sl]) ** 2).sum()]
-                        )
-                    )[0]
-                    for si in seeds_idx
-                ]
-            )
-            adc += dps[code]
-        order_a = np.lexsort((ids, adc))
-        order_a = order_a[ids[order_a] != ids[pi]]
-        approx = set(ids[order_a[:PQR_K]])
-        found_total += len(truth & approx)
-        true_total += len(truth)
-    row = got.loc[mm]
-    assert row["n_true"] == true_total
-    assert row["n_found"] == found_total
-    assert row["recall_micro"] == found_total * 1_000_000 // true_total
-    # curve laws over all rungs
-    assert list(got.index) == list(PQR_MS)
-    assert (got["n_true"] == PQR_K * PQR_N_PROBES).all()
-    assert (got["recall_micro"] <= 1_000_000).all()
-
-
-# --------------------------------------------------------------------
-# String pruning — pandas replay + boundary fixture
-# --------------------------------------------------------------------
-
-
-def test_string_pruning_zero_false_prunes_and_replay(spark):
-    got = (
-        STAGED["docs_string_pruning_contract"]
-        .fn(spark, SF_DIR)
-        .toPandas()
-        .set_index("prefix")
-        .sort_index()
-    )
-    assert (got["n_false_prunes"] == 0).all()
-    docs = _pd("documents")
-    docs["file_id"] = docs["doc_id"] % SPC_FILE_MOD
-    footers = docs.groupby("file_id")["text"].agg(["min", "max"])
-    for p in SPC_PREFIXES:
-        qual = (
-            (footers["min"] <= p + "{") & (footers["max"] >= p)
-        ).sum()
-        match_files = docs[docs["text"].str.startswith(p)][
-            "file_id"
-        ].nunique()
-        match_rows = int(docs["text"].str.startswith(p).sum())
-        row = got.loc[p]
-        assert row["n_files"] == len(footers)
-        assert row["n_files_qualifying"] == qual, p
-        assert row["n_files_matching"] == match_files, p
-        assert row["n_match_rows"] == match_rows, p
-    # soundness: qualifying always covers matching
-    assert (got["n_files_qualifying"] >= got["n_files_matching"]).all()
-
-
-def test_string_pruning_boundary_fixture(spark, tmp_path):
-    """Files whose footer range brackets the prefix WITHOUT containing
-    a match must qualify (zone maps over-approximate, never under)."""
-    rows = [
-        (0, "apple pie", "en", "src0"),
-        (1, "zebra", "en", "src0"),  # file 0 range [apple, zebra]
-        (24, "keyhole", "en", "src0"),  # file 0 (24 % 24 == 0)
-        (2, "aaa", "en", "src0"),
-        (3, "abc", "en", "src0"),  # file 2/3: ranges far below 'key'
-    ]
-    tbl = pa.Table.from_pydict(
-        {
-            "doc_id": [r[0] for r in rows],
-            "text": [r[1] for r in rows],
-            "lang": [r[2] for r in rows],
-            "source": [r[3] for r in rows],
-            "n_chars": [len(r[1]) for r in rows],
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
-    got = (
-        STAGED["docs_string_pruning_contract"]
-        .fn(spark, str(tmp_path))
-        .toPandas()
-        .set_index("prefix")
-    )
-    key = got.loc["key"]
-    # file 0 holds 'keyhole' (match) and brackets 'key'; files 2,3 prune
-    assert key["n_files_matching"] == 1
-    assert key["n_files_qualifying"] == 1
-    assert key["n_false_prunes"] == 0
-    zz = got.loc["zz"]
-    assert zz["n_files_matching"] == 0
-    assert zz["n_match_rows"] == 0
+def test_staged_oracle_parity_sf0001(parity):
+    gates.assert_parity(staged_r14, parity)
 
 
 # --------------------------------------------------------------------
@@ -242,7 +62,7 @@ def test_license_propagation_replay_and_conservation(spark):
     from python_nyc_taxi_data_pipeline_spark.registry import all_queries
 
     got = (
-        STAGED["docs_license_propagation_contract"]
+        QUERIES["docs_license_propagation_contract"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("license_class")
@@ -290,7 +110,7 @@ def test_bpe_vocab_curve_laws(spark):
     )
 
     got = (
-        STAGED["docs_bpe_vocab_size_curve"]
+        QUERIES["docs_bpe_vocab_size_curve"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("n_merges_budget", ignore_index=True)
@@ -336,7 +156,7 @@ def test_alignment_numpy_replay(spark):
     )
 
     got = (
-        STAGED["docs_image_text_alignment_contract"]
+        QUERIES["docs_image_text_alignment_contract"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("bucket")
@@ -385,7 +205,7 @@ def test_session_survival_replay(spark):
     )
 
     got = (
-        STAGED["events_session_survival_curve"]
+        QUERIES["events_session_survival_curve"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("threshold_s", ignore_index=True)
@@ -421,7 +241,7 @@ def test_salted_join_equals_plain(spark):
     from python_nyc_taxi_data_pipeline_spark.catalog import load
 
     got = (
-        STAGED["lineitem_salted_join_contract"]
+        QUERIES["lineitem_salted_join_contract"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index(["l_returnflag", "supplier_nation"])
@@ -459,7 +279,7 @@ def test_temporal_join_partitions_orders_exactly(spark):
     )
 
     got = (
-        STAGED["orders_temporal_dim_join"]
+        QUERIES["orders_temporal_dim_join"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("valid_from", ignore_index=True)
@@ -488,7 +308,7 @@ def test_temporal_join_partitions_orders_exactly(spark):
 
 def test_reciprocity_laws_and_replay(spark):
     got = (
-        STAGED["nation_trade_reciprocity"]
+        QUERIES["nation_trade_reciprocity"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("nation")
@@ -554,7 +374,7 @@ def test_simhash_bit_bias_python_replay(spark):
     )
 
     got = (
-        STAGED["docs_simhash_bit_bias"]
+        QUERIES["docs_simhash_bit_bias"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("bit")

@@ -1,4 +1,4 @@
-"""Tests for llm/staged_r15.py — the round-15 seed (Fano burstiness)."""
+"""Tests for the queries in llm/staged_r15.py."""
 
 from __future__ import annotations
 
@@ -6,12 +6,12 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES
-from python_nyc_taxi_data_pipeline_spark.llm.staged_r15 import (
-    R15_BATCH,
-    STAGED,
-)
+from python_nyc_taxi_data_pipeline_spark import registry
+from python_nyc_taxi_data_pipeline_spark.llm import staged_r15
+from tests import module_gates as gates
 from tests.conftest import SF_DIR
+
+QUERIES = registry.all_queries()
 
 
 def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
@@ -21,58 +21,32 @@ def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
 
 
 def test_r15_batch_matches_staged():
-    assert sorted(R15_BATCH) == sorted(STAGED)
-    assert len(R15_BATCH) == 10
-
-
-def test_staged_plans_carry_no_antipatterns(spark):
-    from tests.test_plans import (
-        _benign_single_partition,
-        _single_partition_exchange_ids,
-        plan_of,
+    gates.assert_registers_exactly(
+        staged_r15,
+        (
+            "corpus_filter_ablation_lattice",
+            "docs_ttr_window_profile",
+            "events_burstiness_fano",
+            "events_halflife_engagement",
+            "orders_priority_mix_drift_tvd",
+            "orders_theil_sen_trend",
+            "orders_volume_changepoint",
+            "part_type_brand_hhi",
+        ),
     )
 
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        bad = []
-        if "CartesianProduct" in p:
-            bad.append("cartesian")
-        if "BatchEvalPython" in p:
-            bad.append("row-udf")
-        sp = [
-            i
-            for i in _single_partition_exchange_ids(p)
-            if not _benign_single_partition(p, i)
-        ]
-        if sp:
-            bad.append(f"single-partition {sp}")
-        if bad:
-            flagged[name] = bad
-    assert flagged == {}
+
+def test_staged_plans_carry_no_antipatterns(built):
+    gates.assert_plans_clean(staged_r15, built)
 
 
-def test_staged_oracle_parity_sf0001(spark):
-    from tools.oracle_check import compare
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS"
-            f" SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    for name, q in STAGED.items():
-        sdf = q.fn(spark, SF_DIR).toPandas()
-        ddf = con.execute(q.oracle).fetchdf()
-        problems = compare(name, sdf, ddf)
-        assert not problems, f"{name}: {problems}"
-        assert len(sdf) > 0, f"{name}: degenerate empty result"
-    con.close()
+def test_staged_oracle_parity_sf0001(parity):
+    gates.assert_parity(staged_r15, parity)
 
 
 def test_fano_numpy_replay_with_zero_hours(spark):
     got = (
-        STAGED["events_burstiness_fano"]
+        QUERIES["events_burstiness_fano"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("event_type")
@@ -113,7 +87,7 @@ def test_fano_numpy_replay_with_zero_hours(spark):
 
 def test_hhi_replay_and_bounds(spark):
     got = (
-        STAGED["part_type_brand_hhi"]
+        QUERIES["part_type_brand_hhi"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("p_type")
@@ -151,68 +125,6 @@ def test_hhi_replay_and_bounds(spark):
         assert row["top_share_micro"] <= 1_000_000
 
 
-def test_backlog_timeseries_replay_and_conservation(spark):
-    got = (
-        STAGED["orders_backlog_timeseries"]
-        .fn(spark, SF_DIR)
-        .toPandas()
-        .sort_values("month_start", ignore_index=True)
-    )
-    orders = _pd("orders").set_index("o_orderkey")
-    li = _pd("lineitem")
-    last_ship = li.groupby("l_orderkey")["l_shipdate"].max()
-    spans = pd.DataFrame(
-        {
-            "open": pd.to_datetime(
-                orders.loc[last_ship.index, "o_orderdate"]
-            ).dt.normalize(),
-            "close": pd.to_datetime(last_ship).dt.normalize()
-            + pd.Timedelta(days=1),
-        }
-    )
-    d0, d1 = spans["open"].min(), spans["close"].max()
-    days = pd.date_range(d0, d1, freq="D")
-    delta = np.zeros(len(days), dtype=np.int64)
-    opened = np.zeros(len(days), dtype=np.int64)
-    closed = np.zeros(len(days), dtype=np.int64)
-    for _, r in spans.iterrows():
-        delta[(r["open"] - d0).days] += 1
-        opened[(r["open"] - d0).days] += 1
-        delta[(r["close"] - d0).days] -= 1
-        closed[(r["close"] - d0).days] += 1
-    backlog = delta.cumsum()
-    frame = pd.DataFrame(
-        {
-            "month": days.to_period("M").to_timestamp(),
-            "opened": opened,
-            "closed": closed,
-            "backlog": backlog,
-        }
-    )
-    want = (
-        frame.groupby("month")
-        .agg(
-            opened=("opened", "sum"),
-            closed=("closed", "sum"),
-            peak_backlog=("backlog", "max"),
-            end_backlog=("backlog", "last"),
-        )
-        .reset_index()
-    )
-    got["month_start"] = pd.to_datetime(got["month_start"])
-    merged = got.merge(
-        want, left_on="month_start", right_on="month", suffixes=("", "_w")
-    )
-    assert len(merged) == len(got) == len(want)
-    for col in ("opened", "closed", "peak_backlog", "end_backlog"):
-        assert (merged[col] == merged[f"{col}_w"]).all(), col
-    # conservation: every span opens once and closes once, and the
-    # backlog returns to zero at the end of the spine
-    assert got["opened"].sum() == len(spans)
-    assert got["closed"].sum() == len(spans)
-    assert int(got.iloc[-1]["end_backlog"]) == 0
-
-
 def _words(text: str) -> list[str]:
     return [w for w in text.split(" ") if w != ""]
 
@@ -227,7 +139,7 @@ def test_ablation_lattice_replay_and_conservation(spark):
     )
 
     got = (
-        STAGED["corpus_filter_ablation_lattice"]
+        QUERIES["corpus_filter_ablation_lattice"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values(["q_keep", "d_keep", "l_keep"])
@@ -272,52 +184,9 @@ def test_ablation_lattice_replay_and_conservation(spark):
     assert got["token_mass"].sum() == rep["n_words"].sum()
 
 
-def test_split_leakage_replay_and_certificate(spark):
-    import hashlib
-
-    got = (
-        STAGED["docs_split_leakage_contract"].fn(spark, SF_DIR).toPandas()
-    )
-    docs = _pd("documents")
-    # the certificate: content-keyed splits can never straddle a dup
-    # group (same text => same bucket), and split counts partition docs
-    assert (got["leak_groups_content"] == 0).all()
-    assert (
-        got["n_train"] + got["n_val"] + got["n_test"] == got["n_docs"]
-    ).all()
-    assert got["n_docs"].sum() == len(docs)
-
-    def bucket(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:4], 16) % 10
-
-    def split_of(b: int) -> str:
-        return "train" if b < 8 else ("val" if b == 8 else "test")
-
-    docs = docs.assign(
-        h=docs["text"].map(
-            lambda t: hashlib.md5(t.encode()).hexdigest()
-        ),
-        c_split=docs["text"].map(lambda t: split_of(bucket(t))),
-        n_split=docs["doc_id"].map(lambda i: split_of(bucket(str(i)))),
-    )
-    for row in got.itertuples():
-        sub = docs[docs["source"] == row.source]
-        assert row.n_docs == len(sub)
-        assert row.n_train == int((sub["c_split"] == "train").sum())
-        assert row.n_val == int((sub["c_split"] == "val").sum())
-        assert row.n_test == int((sub["c_split"] == "test").sum())
-        g = sub.groupby("h").agg(
-            sz=("h", "size"), nk=("n_split", "nunique")
-        )
-        assert row.n_dup_groups == int((g["sz"] > 1).sum())
-        assert row.leak_groups_naive == int(
-            ((g["sz"] > 1) & (g["nk"] > 1)).sum()
-        )
-
-
 def test_priority_tvd_replay_and_bounds(spark):
     got = (
-        STAGED["orders_priority_mix_drift_tvd"]
+        QUERIES["orders_priority_mix_drift_tvd"]
         .fn(spark, SF_DIR)
         .toPandas()
     )
@@ -353,7 +222,7 @@ def test_priority_tvd_replay_and_bounds(spark):
 
 def test_halflife_engagement_replay_and_laws(spark):
     got = (
-        STAGED["events_halflife_engagement"]
+        QUERIES["events_halflife_engagement"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("band")
@@ -395,7 +264,7 @@ def test_ttr_window_profile_replay_and_short_tail(spark):
     )
 
     got = (
-        STAGED["docs_ttr_window_profile"].fn(spark, SF_DIR).toPandas()
+        QUERIES["docs_ttr_window_profile"].fn(spark, SF_DIR).toPandas()
     )
     docs = _pd("documents")
     W = TTR_WINDOW_WORDS
@@ -459,7 +328,7 @@ def _weekly_series():
 
 def test_theil_sen_matches_numpy_replay(spark):
     got = (
-        STAGED["orders_theil_sen_trend"]
+        QUERIES["orders_theil_sen_trend"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("priority")
@@ -529,7 +398,7 @@ def _gains(y):
 
 def test_changepoint_matches_numpy_replay(spark):
     got = (
-        STAGED["orders_volume_changepoint"]
+        QUERIES["orders_volume_changepoint"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("priority")

@@ -1,7 +1,6 @@
-"""Tests for llm/staged_r16.py — the round-16 slate (order-gap
-percentiles, session type lift, ladders, quantization sweep; the
-hier-SemDeDup contract moved to the r10 slate in the round-10
-pull-forward swap)."""
+"""Tests for the queries in llm/staged_r16.py (order-gap percentiles,
+ladders, quantization sweep) and for ``events_peak_concurrency``,
+which lives in streaming/windows.py."""
 
 from __future__ import annotations
 
@@ -9,13 +8,12 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES
-from python_nyc_taxi_data_pipeline_spark.llm.staged_r16 import (
-    R16_BATCH,
-    STAGED,
-    STL_GAP_S,
-)
+from python_nyc_taxi_data_pipeline_spark import registry
+from python_nyc_taxi_data_pipeline_spark.llm import staged_r16
+from tests import module_gates as gates
 from tests.conftest import SF_DIR
+
+QUERIES = registry.all_queries()
 
 
 def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
@@ -25,58 +23,31 @@ def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
 
 
 def test_r16_batch_matches_staged():
-    assert sorted(R16_BATCH) == sorted(STAGED)
-    assert len(R16_BATCH) == 10
-
-
-def test_staged_plans_carry_no_antipatterns(spark):
-    from tests.test_plans import (
-        _benign_single_partition,
-        _single_partition_exchange_ids,
-        plan_of,
+    gates.assert_registers_exactly(
+        staged_r16,
+        (
+            "customer_cohort_repeat_rate",
+            "customer_order_gap_percentiles",
+            "docs_lang_temperature_ladder",
+            "docs_source_lang_association",
+            "docs_vocab_coverage_ladder",
+            "embeddings_quantization_sweep",
+            "events_value_iqr_trimmed_stats",
+        ),
     )
 
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        bad = []
-        if "CartesianProduct" in p:
-            bad.append("cartesian")
-        if "BatchEvalPython" in p:
-            bad.append("row-udf")
-        sp = [
-            i
-            for i in _single_partition_exchange_ids(p)
-            if not _benign_single_partition(p, i)
-        ]
-        if sp:
-            bad.append(f"single-partition {sp}")
-        if bad:
-            flagged[name] = bad
-    assert flagged == {}
+
+def test_staged_plans_carry_no_antipatterns(built):
+    gates.assert_plans_clean(staged_r16, built)
 
 
-def test_staged_oracle_parity_sf0001(spark):
-    from tools.oracle_check import compare
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS"
-            f" SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    for name, q in STAGED.items():
-        sdf = q.fn(spark, SF_DIR).toPandas()
-        ddf = con.execute(q.oracle).fetchdf()
-        problems = compare(name, sdf, ddf)
-        assert not problems, f"{name}: {problems}"
-        assert len(sdf) > 0, f"{name}: degenerate empty result"
-    con.close()
+def test_staged_oracle_parity_sf0001(parity):
+    gates.assert_parity(staged_r16, parity)
 
 
 def test_order_gap_percentiles_numpy_replay(spark):
     got = (
-        STAGED["customer_order_gap_percentiles"]
+        QUERIES["customer_order_gap_percentiles"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("segment")
@@ -112,59 +83,13 @@ def test_order_gap_percentiles_numpy_replay(spark):
         assert row["max_gap_days"] == int(g.max())
 
 
-def test_session_type_lift_replay_and_laws(spark):
-    got = (
-        STAGED["events_session_type_lift"].fn(spark, SF_DIR).toPandas()
-    )
-    ev = _pd("events").sort_values(["user_id", "ts", "event_id"])
-    ts_us = ev["ts"].astype("datetime64[ns]").astype("int64") // 1000
-    ev = ev.assign(ts_us=ts_us)
-    sess_sets: dict[tuple, set] = {}
-    for uid, sub in ev.groupby("user_id"):
-        sid, prev = 0, None
-        for r in sub.sort_values(["ts_us", "event_id"]).itertuples():
-            if prev is None or r.ts_us - prev > STL_GAP_S * 1_000_000:
-                sid += 1
-            prev = r.ts_us
-            sess_sets.setdefault((uid, sid), set()).add(r.event_type)
-    n = len(sess_sets)
-    singles: dict[str, int] = {}
-    pairs: dict[tuple, int] = {}
-    for types in sess_sets.values():
-        ts = sorted(types)
-        for t in ts:
-            singles[t] = singles.get(t, 0) + 1
-        for i, a in enumerate(ts):
-            for b in ts[i + 1 :]:
-                pairs[(a, b)] = pairs.get((a, b), 0) + 1
-    exp_rows = {
-        (a, b): (
-            cnt,
-            cnt * 1_000_000 // n,
-            cnt * 1_000_000 // singles[a],
-            cnt * n * 1_000_000 // (singles[a] * singles[b]),
-        )
-        for (a, b), cnt in pairs.items()
-    }
-    assert len(got) == len(exp_rows)
-    for r in got.itertuples():
-        cnt, sup, conf, lift = exp_rows[(r.type_a, r.type_b)]
-        assert r.both_cnt == cnt
-        assert r.support_micro == sup
-        assert r.confidence_micro == conf
-        assert r.lift_micro == lift
-        # laws: confidence and support are probabilities; a < b only
-        assert 0 <= r.support_micro <= r.confidence_micro <= 1_000_000
-        assert r.type_a < r.type_b
-
-
 def test_vocab_coverage_ladder_replay_and_monotonicity(spark):
     from collections import Counter
 
     from python_nyc_taxi_data_pipeline_spark.llm.staged_r16 import VCL_KS
 
     got = (
-        STAGED["docs_vocab_coverage_ladder"]
+        QUERIES["docs_vocab_coverage_ladder"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("k")
@@ -187,12 +112,10 @@ def test_vocab_coverage_ladder_replay_and_monotonicity(spark):
 
 
 def test_peak_concurrency_replay_and_conservation(spark):
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r16 import (
-        PCC_GAP_S,
-    )
+    from python_nyc_taxi_data_pipeline_spark.streaming.windows import PCC_GAP_S
 
     got = (
-        STAGED["events_peak_concurrency"]
+        QUERIES["events_peak_concurrency"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("day")
@@ -238,7 +161,7 @@ def test_temperature_ladder_replay_and_limits(spark):
         TML_ALPHAS,
     )
 
-    got = STAGED["docs_lang_temperature_ladder"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["docs_lang_temperature_ladder"].fn(spark, SF_DIR).toPandas()
     docs = _pd("documents")
     # slate convention: single-space split, empty tokens excluded
     toks = docs["text"].map(
@@ -276,7 +199,7 @@ def test_cohort_repeat_rate_replay_and_conservation(spark):
         CRR_WINDOW_DAYS,
     )
 
-    got = STAGED["customer_cohort_repeat_rate"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["customer_cohort_repeat_rate"].fn(spark, SF_DIR).toPandas()
     got["cohort_month"] = pd.to_datetime(got["cohort_month"])
     got = got.set_index("cohort_month").sort_index()
     orders = _pd("orders")
@@ -313,7 +236,7 @@ def test_cohort_repeat_rate_replay_and_conservation(spark):
 
 def test_trimmed_stats_replay_and_robustness(spark):
     got = (
-        STAGED["events_value_iqr_trimmed_stats"]
+        QUERIES["events_value_iqr_trimmed_stats"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("event_type")
@@ -343,7 +266,7 @@ def test_trimmed_stats_replay_and_robustness(spark):
 
 def test_source_lang_association_replay_and_bounds(spark):
     got = (
-        STAGED["docs_source_lang_association"].fn(spark, SF_DIR).toPandas()
+        QUERIES["docs_source_lang_association"].fn(spark, SF_DIR).toPandas()
     )
     assert len(got) == 1
     docs = _pd("documents")
@@ -367,7 +290,7 @@ def test_quantization_sweep_replay(spark):
     )
 
     got = (
-        STAGED["embeddings_quantization_sweep"]
+        QUERIES["embeddings_quantization_sweep"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("quant_scale", ignore_index=True)
@@ -391,62 +314,3 @@ def test_quantization_sweep_replay(spark):
     assert got["n_exact"].is_monotonic_increasing
     assert got.iloc[-1]["n_exact"] == q4.size
     assert got.iloc[-1]["sum_abs_err_e4s"] == 0
-
-
-def test_concurrency_time_integral_replay_and_identity(spark):
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r16 import (
-        ECI_DAY_US,
-        PCC_GAP_S,
-    )
-
-    got = (
-        STAGED["events_concurrency_time_integral"]
-        .fn(spark, SF_DIR)
-        .toPandas()
-        .set_index("day")
-        .sort_index()
-    )
-    ev = _pd("events")
-    ts_us = ev["ts"].astype("datetime64[ns]").astype("int64") // 1000
-    ev = ev.assign(ts_us=ts_us)
-    spans = []
-    for _, sub in ev.groupby("user_id"):
-        t0 = prev = None
-        for r in sub.sort_values(["ts_us", "event_id"]).itertuples():
-            if prev is None or r.ts_us - prev > PCC_GAP_S * 1_000_000:
-                if t0 is not None:
-                    spans.append((t0, prev + 1))
-                t0 = r.ts_us
-            prev = r.ts_us
-        spans.append((t0, prev + 1))
-    busy: dict[int, int] = {}
-    active: dict[int, int] = {}
-    for t0, t1 in spans:
-        for day in range(t0 // ECI_DAY_US, (t1 - 1) // ECI_DAY_US + 1):
-            lo = max(t0, day * ECI_DAY_US)
-            hi = min(t1, (day + 1) * ECI_DAY_US)
-            busy[day] = busy.get(day, 0) + (hi - lo)
-            active[day] = active.get(day, 0) + 1
-    assert got.index.tolist() == sorted(busy)
-    for day in sorted(busy):
-        assert got.loc[day, "busy_user_us"] == busy[day]
-        assert got.loc[day, "n_sessions_active"] == active[day]
-        assert (
-            got.loc[day, "avg_concurrency_micro"] == busy[day] // 86400
-        )
-    # Little's-law bookkeeping: the day-clipped integral conserves the
-    # total session time exactly.
-    assert got["busy_user_us"].sum() == sum(t1 - t0 for t0, t1 in spans)
-    # and the integral is consistent with the sibling peak query:
-    # avg (busy/day) can never exceed that day's peak concurrency.
-    peak = (
-        STAGED["events_peak_concurrency"]
-        .fn(spark, SF_DIR)
-        .toPandas()
-        .set_index("day")
-    )
-    for day in got.index:
-        if day in peak.index:
-            assert got.loc[day, "avg_concurrency_micro"] <= (
-                peak.loc[day, "peak_concurrent"] * 1_000_000
-            )

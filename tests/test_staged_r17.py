@@ -1,5 +1,5 @@
-"""Tests for llm/staged_r17.py — the round-17 seed (interval-overlap
-pair join, daily autocorrelation, image aHash near-dup)."""
+"""Tests for the queries in llm/staged_r17.py and for
+``docs_length_bootstrap_ci``, which lives in plans/textstats.py."""
 
 from __future__ import annotations
 
@@ -7,19 +7,17 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES
+from python_nyc_taxi_data_pipeline_spark import registry
+from python_nyc_taxi_data_pipeline_spark.llm import staged_r17
 from python_nyc_taxi_data_pipeline_spark.llm.staged_r17 import (
-    AH_GROUPS,
-    AH_TH,
-    AH_TW,
     BDL_CUM,
-    CUP_GAP_S,
     DAC_LAGS,
     ECW_WINDOW_US,
-    R17_BATCH,
-    STAGED,
 )
+from tests import module_gates as gates
 from tests.conftest import SF_DIR
+
+QUERIES = registry.all_queries()
 
 
 def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
@@ -29,105 +27,31 @@ def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
 
 
 def test_r17_batch_matches_staged():
-    assert sorted(R17_BATCH) == sorted(STAGED)
-    assert len(R17_BATCH) == 10
-
-
-def test_staged_plans_carry_no_antipatterns(spark):
-    from tests.test_plans import (
-        _benign_single_partition,
-        _single_partition_exchange_ids,
-        plan_of,
+    gates.assert_registers_exactly(
+        staged_r17,
+        (
+            "customer_churn_training_frame",
+            "docs_char_entropy_quality",
+            "events_error_context_window",
+            "lineitem_approx_percentile_contract",
+            "lineitem_business_day_latency",
+            "orders_daily_autocorr",
+            "orders_dow_adjusted_anomalies",
+        ),
     )
 
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        bad = []
-        if "CartesianProduct" in p:
-            bad.append("cartesian")
-        if "BatchEvalPython" in p:
-            bad.append("row-udf")
-        sp = [
-            i
-            for i in _single_partition_exchange_ids(p)
-            if not _benign_single_partition(p, i)
-        ]
-        if sp:
-            bad.append(f"single-partition {sp}")
-        if bad:
-            flagged[name] = bad
-    assert flagged == {}
+
+def test_staged_plans_carry_no_antipatterns(built):
+    gates.assert_plans_clean(staged_r17, built)
 
 
-def test_staged_oracle_parity_sf0001(spark):
-    from tools.oracle_check import compare
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS"
-            f" SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    for name, q in STAGED.items():
-        sdf = q.fn(spark, SF_DIR).toPandas()
-        ddf = con.execute(q.oracle).fetchdf()
-        problems = compare(name, sdf, ddf)
-        assert not problems, f"{name}: {problems}"
-        assert len(sdf) > 0, f"{name}: degenerate empty result"
-    con.close()
+def test_staged_oracle_parity_sf0001(parity):
+    gates.assert_parity(staged_r17, parity)
 
 
 # --------------------------------------------------------------------
 # Interval-overlap pairs — brute-force pandas referee + laws
 # --------------------------------------------------------------------
-
-
-def _sessions(ev: pd.DataFrame, gap_s: int) -> list[tuple[int, int, int]]:
-    ts_us = ev["ts"].astype("datetime64[ns]").astype("int64") // 1000
-    ev = ev.assign(ts_us=ts_us)
-    spans = []
-    for uid, sub in ev.groupby("user_id"):
-        t0 = prev = None
-        for r in sub.sort_values(["ts_us", "event_id"]).itertuples():
-            if prev is None or r.ts_us - prev > gap_s * 1_000_000:
-                if t0 is not None:
-                    spans.append((int(uid), t0, prev + 1))
-                t0 = r.ts_us
-            prev = r.ts_us
-        spans.append((int(uid), t0, prev + 1))
-    return spans
-
-
-def test_concurrent_pairs_bruteforce_replay(spark):
-    got = (
-        STAGED["events_concurrent_user_pairs"]
-        .fn(spark, SF_DIR)
-        .toPandas()
-        .set_index(["user_a", "user_b"])
-        .sort_index()
-    )
-    spans = _sessions(_pd("events"), CUP_GAP_S)
-    want: dict[tuple, list[int]] = {}
-    for i, (ua, a0, a1) in enumerate(spans):
-        for ub, b0, b1 in spans[i + 1:]:
-            if ua == ub:
-                continue
-            lo, hi = max(a0, b0), min(a1, b1)
-            if lo < hi:
-                key = (min(ua, ub), max(ua, ub))
-                w = want.setdefault(key, [0, 0])
-                w[0] += 1
-                w[1] += hi - lo
-    assert sorted(got.index) == sorted(want)
-    for key, (n, us) in want.items():
-        assert got.loc[key, "n_overlaps"] == n
-        assert got.loc[key, "overlap_us"] == us
-    # laws: canonical pair order; every overlap is at least 1 µs
-    assert (
-        got.index.get_level_values(0) < got.index.get_level_values(1)
-    ).all()
-    assert (got["overlap_us"] >= got["n_overlaps"]).all()
 
 
 # --------------------------------------------------------------------
@@ -137,7 +61,7 @@ def test_concurrent_pairs_bruteforce_replay(spark):
 
 def test_daily_autocorr_numpy_replay(spark):
     got = (
-        STAGED["orders_daily_autocorr"]
+        QUERIES["orders_daily_autocorr"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("lag_days")
@@ -175,59 +99,6 @@ def test_daily_autocorr_numpy_replay(spark):
 # --------------------------------------------------------------------
 
 
-def _ahash_of(doc_id: int) -> tuple[int, int]:
-    g = doc_id % AH_GROUPS
-    w, h = 6 + g % 5, 5 + g % 4
-    n = w * h * 3
-    v = [(g * 131 + i * 7) % 256 for i in range(n)]
-    p = doc_id % n
-    v[p] = (v[p] + (doc_id // AH_GROUPS) % 7) % 256
-    gray = []
-    for y in range(AH_TH):
-        for x in range(AH_TW):
-            sy, sx = (y * h) // AH_TH, (x * w) // AH_TW
-            base = (sy * w + sx) * 3
-            gray.append((v[base] + v[base + 1] + v[base + 2]) // 3)
-    mu = sum(gray) // len(gray)
-    sig = sum(1 << j for j, gv in enumerate(gray) if gv > mu)
-    return g, sig
-
-
-def test_image_ahash_python_replay(spark):
-    got = (
-        STAGED["docs_image_ahash_neardup"]
-        .fn(spark, SF_DIR)
-        .toPandas()
-        .set_index("ahash")
-        .sort_index()
-    )
-    doc_ids = sorted(_pd("documents")["doc_id"].astype(int))
-    buckets: dict[int, list[tuple[int, int]]] = {}
-    for did in doc_ids:
-        g, sig = _ahash_of(did)
-        buckets.setdefault(sig, []).append((did, g))
-    assert got.index.tolist() == sorted(buckets)
-    for sig, members in buckets.items():
-        row = got.loc[sig]
-        assert row["n_images"] == len(members)
-        assert row["n_templates"] == len({g for _, g in members})
-        assert row["min_doc_id"] == min(d for d, _ in members)
-        assert row["n_dup_pairs"] == len(members) * (len(members) - 1) // 2
-    # conservation: buckets partition the corpus
-    assert int(got["n_images"].sum()) == len(doc_ids)
-    # near-dup recall law: the single-byte scratch leaves most group
-    # members in ONE bucket — every template must have a dominant
-    # bucket holding a strict majority of its members.
-    per_template: dict[int, dict[int, int]] = {}
-    for sig, members in buckets.items():
-        for _, g in members:
-            per_template.setdefault(g, {}).setdefault(sig, 0)
-            per_template[g][sig] += 1
-    for g, sigs in per_template.items():
-        total = sum(sigs.values())
-        assert max(sigs.values()) * 2 > total, (g, sigs)
-
-
 # --------------------------------------------------------------------
 # Error context window — brute-force pandas referee + laws
 # --------------------------------------------------------------------
@@ -235,7 +106,7 @@ def test_image_ahash_python_replay(spark):
 
 def test_error_context_window_bruteforce_replay(spark):
     got = (
-        STAGED["events_error_context_window"]
+        QUERIES["events_error_context_window"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("error_id")
@@ -277,7 +148,7 @@ def test_business_day_closed_form_matches_datetime_walk(spark):
     from datetime import date, timedelta
 
     got = (
-        STAGED["lineitem_business_day_latency"]
+        QUERIES["lineitem_business_day_latency"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("priority")
@@ -345,13 +216,13 @@ def test_business_day_closed_form_matches_datetime_walk(spark):
 def test_bootstrap_deterministic_replay_and_spread(spark):
     import hashlib
 
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r17 import (
+    from python_nyc_taxi_data_pipeline_spark.plans.textstats import (
         BOOT_CDF,
         BOOT_REPS,
     )
 
     got = (
-        STAGED["docs_length_bootstrap_ci"]
+        QUERIES["docs_length_bootstrap_ci"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("rep")
@@ -404,7 +275,7 @@ def test_char_entropy_python_replay(spark):
     )
 
     got = (
-        STAGED["docs_char_entropy_quality"]
+        QUERIES["docs_char_entropy_quality"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("source")
@@ -447,7 +318,7 @@ def test_churn_frame_replay_and_leakage_law(spark):
     )
 
     got = (
-        STAGED["customer_churn_training_frame"]
+        QUERIES["customer_churn_training_frame"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("custkey")
@@ -506,7 +377,7 @@ def test_approx_percentile_contract_holds_and_is_tight(spark):
     )
 
     got = (
-        STAGED["lineitem_approx_percentile_contract"]
+        QUERIES["lineitem_approx_percentile_contract"]
         .fn(spark, SF_DIR)
         .toPandas()
     )
@@ -532,7 +403,7 @@ def test_dow_anomalies_numpy_replay(spark):
     )
 
     got = (
-        STAGED["orders_dow_adjusted_anomalies"]
+        QUERIES["orders_dow_adjusted_anomalies"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("day")

@@ -1,5 +1,6 @@
-"""Tests for llm/staged_r18.py — the round-18 seed (CUPED readout,
-naive-forecast eval, session path trigrams)."""
+"""Tests for the queries in llm/staged_r18.py (CUPED readout,
+naive-forecast eval, session path trigrams and the experimentation
+shelf)."""
 
 from __future__ import annotations
 
@@ -9,15 +10,17 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES
+from python_nyc_taxi_data_pipeline_spark import registry
+from python_nyc_taxi_data_pipeline_spark.llm import staged_r18
 from python_nyc_taxi_data_pipeline_spark.llm.staged_r18 import (
     CUPED_BOUNDARY_DAY,
     NFE_LAG_DAYS,
-    R18_BATCH,
     SPT_GAP_S,
-    STAGED,
 )
+from tests import module_gates as gates
 from tests.conftest import SF_DIR
+
+QUERIES = registry.all_queries()
 
 
 def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
@@ -27,53 +30,28 @@ def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
 
 
 def test_r18_batch_matches_staged():
-    assert sorted(R18_BATCH) == sorted(STAGED)
-    assert len(R18_BATCH) == 10
-
-
-def test_staged_plans_carry_no_antipatterns(spark):
-    from tests.test_plans import (
-        _benign_single_partition,
-        _single_partition_exchange_ids,
-        plan_of,
+    gates.assert_registers_exactly(
+        staged_r18,
+        (
+            "docs_stratified_split_manifest",
+            "events_ab_cuped_readout",
+            "events_ab_srm_check",
+            "events_power_mde_planner",
+            "events_session_path_trigrams",
+            "events_type_entropy_rate",
+            "events_weekly_retention_triangle",
+            "orders_did_readout",
+            "orders_naive_forecast_eval",
+        ),
     )
 
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        bad = []
-        if "CartesianProduct" in p:
-            bad.append("cartesian")
-        if "BatchEvalPython" in p:
-            bad.append("row-udf")
-        sp = [
-            i
-            for i in _single_partition_exchange_ids(p)
-            if not _benign_single_partition(p, i)
-        ]
-        if sp:
-            bad.append(f"single-partition {sp}")
-        if bad:
-            flagged[name] = bad
-    assert flagged == {}
+
+def test_staged_plans_carry_no_antipatterns(built):
+    gates.assert_plans_clean(staged_r18, built)
 
 
-def test_staged_oracle_parity_sf0001(spark):
-    from tools.oracle_check import compare
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS"
-            f" SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    for name, q in STAGED.items():
-        sdf = q.fn(spark, SF_DIR).toPandas()
-        ddf = con.execute(q.oracle).fetchdf()
-        problems = compare(name, sdf, ddf)
-        assert not problems, f"{name}: {problems}"
-        assert len(sdf) > 0, f"{name}: degenerate empty result"
-    con.close()
+def test_staged_oracle_parity_sf0001(parity):
+    gates.assert_parity(staged_r18, parity)
 
 
 # --------------------------------------------------------------------
@@ -83,7 +61,7 @@ def test_staged_oracle_parity_sf0001(spark):
 
 def test_cuped_numpy_replay_and_identity(spark):
     got = (
-        STAGED["events_ab_cuped_readout"]
+        QUERIES["events_ab_cuped_readout"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("arm")
@@ -139,7 +117,7 @@ def test_cuped_numpy_replay_and_identity(spark):
 
 def test_forecast_eval_numpy_replay(spark):
     got = (
-        STAGED["orders_naive_forecast_eval"]
+        QUERIES["orders_naive_forecast_eval"]
         .fn(spark, SF_DIR)
         .toPandas()
     )
@@ -188,7 +166,7 @@ def test_forecast_eval_numpy_replay(spark):
 
 def test_path_trigrams_python_replay(spark):
     got = (
-        STAGED["events_session_path_trigrams"]
+        QUERIES["events_session_path_trigrams"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("trigram")
@@ -232,7 +210,7 @@ def test_path_trigrams_python_replay(spark):
 
 def test_retention_triangle_pandas_replay(spark):
     got = (
-        STAGED["events_weekly_retention_triangle"]
+        QUERIES["events_weekly_retention_triangle"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values(["cohort_week", "age_weeks"], ignore_index=True)
@@ -276,7 +254,7 @@ def test_retention_triangle_pandas_replay(spark):
 
 def test_entropy_rate_pandas_replay(spark):
     got = (
-        STAGED["events_type_entropy_rate"]
+        QUERIES["events_type_entropy_rate"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("src")
@@ -333,7 +311,7 @@ def test_split_manifest_hashlib_replay(spark):
     import hashlib
 
     got = (
-        STAGED["docs_stratified_split_manifest"]
+        QUERIES["docs_stratified_split_manifest"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values(["source", "split"], ignore_index=True)
@@ -389,7 +367,7 @@ def test_split_manifest_hashlib_replay(spark):
 
 def test_srm_check_replay_and_identity(spark):
     got = (
-        STAGED["events_ab_srm_check"]
+        QUERIES["events_ab_srm_check"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("arm")
@@ -414,65 +392,13 @@ def test_srm_check_replay_and_identity(spark):
 
 
 # --------------------------------------------------------------------
-# CUPED variance report (round-11 close) — replay
-# --------------------------------------------------------------------
-
-
-def test_cuped_variance_report_replay(spark):
-    got = (
-        STAGED["events_cuped_variance_report"]
-        .fn(spark, SF_DIR)
-        .toPandas()
-        .set_index("arm")
-        .sort_index()
-    )
-    ev = _pd("events")
-    day = (
-        pd.to_datetime(ev["ts"]).dt.normalize()
-        - pd.Timestamp("1970-01-01")
-    ).dt.days
-    cents = (ev["value"] * 100).round().astype("int64")
-    df = pd.DataFrame({"u": ev["user_id"], "day": day, "cents": cents})
-    pu = {}
-    for u, sub in df.groupby("u"):
-        pre = int(sub.loc[sub["day"] < CUPED_BOUNDARY_DAY, "cents"].sum())
-        post = int(
-            sub.loc[sub["day"] >= CUPED_BOUNDARY_DAY, "cents"].sum()
-        )
-        pu[int(u)] = (int(u) % 2, pre, post)
-    n = len(pu)
-    sp = sum(p for _, p, _ in pu.values())
-    sq = sum(q for _, _, q in pu.values())
-    spq = sum(p * q for _, p, q in pu.values())
-    spp = sum(p * p for _, p, _ in pu.values())
-    th = round((n * spq - sp * sq) / max(n * spp - sp * sp, 1), 6)
-    mu_pre = sp // n
-    for arm in (0, 1):
-        posts = [q for a, _, q in pu.values() if a == arm]
-        ys = [
-            q - int(round(th * (p - mu_pre)))
-            for a, p, q in pu.values()
-            if a == arm
-        ]
-        na = len(posts)
-        vp = sum(x * x for x in posts) / na - (sum(posts) / na) ** 2
-        va = sum(x * x for x in ys) / na - (sum(ys) / na) ** 2
-        row = got.loc[arm]
-        assert row["n_users"] == na
-        assert row["var_post_e2"] == int(round(vp * 100))
-        assert row["var_adj_e2"] == int(round(va * 100))
-        assert row["reduction_ppm"] == int(round((1 - va / vp) * 1e6))
-        assert row["var_post_e2"] >= 0 and row["var_adj_e2"] >= 0
-
-
-# --------------------------------------------------------------------
 # DiD (round-11 close) — replay + the four-cell identity
 # --------------------------------------------------------------------
 
 
 def test_did_replay_and_identity(spark):
     got = (
-        STAGED["orders_did_readout"]
+        QUERIES["orders_did_readout"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values(["grp", "period"], ignore_index=True)
@@ -515,7 +441,7 @@ def test_mde_planner_replay_and_sqrt_law(spark):
     )
 
     got = (
-        STAGED["events_power_mde_planner"]
+        QUERIES["events_power_mde_planner"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("mult")

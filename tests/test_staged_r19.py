@@ -1,4 +1,4 @@
-"""Tests for llm/staged_r19.py — the round-19 seed (Hilbert-vs-zorder
+"""Tests for the queries in llm/staged_r19.py (Hilbert-vs-zorder
 layout quality, per-priority OLS trend, Benford first-digit screen).
 
 Referees: the generated Hilbert SQL is proven against the DEFINING
@@ -18,16 +18,18 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES
+from python_nyc_taxi_data_pipeline_spark import registry
+from python_nyc_taxi_data_pipeline_spark.llm import staged_r19
 from python_nyc_taxi_data_pipeline_spark.llm.staged_r19 import (
     BENFORD_PPM,
     HIL_FILE_SPAN,
-    R19_BATCH,
-    STAGED,
     Z_DIM,
     _hilbert_steps,
 )
+from tests import module_gates as gates
 from tests.conftest import SF_DIR
+
+QUERIES = registry.all_queries()
 
 
 def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
@@ -37,53 +39,24 @@ def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
 
 
 def test_r19_batch_matches_staged():
-    assert sorted(R19_BATCH) == sorted(STAGED)
-    assert len(R19_BATCH) == 5
-
-
-def test_staged_plans_carry_no_antipatterns(spark):
-    from tests.test_plans import (
-        _benign_single_partition,
-        _single_partition_exchange_ids,
-        plan_of,
+    gates.assert_registers_exactly(
+        staged_r19,
+        (
+            "orders_benford_first_digit",
+            "orders_hilbert_vs_zorder_quality",
+            "orders_priority_trend_ols",
+            "orders_runs_test",
+            "part_price_type_anova",
+        ),
     )
 
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        bad = []
-        if "CartesianProduct" in p:
-            bad.append("cartesian")
-        if "BatchEvalPython" in p:
-            bad.append("row-udf")
-        sp = [
-            i
-            for i in _single_partition_exchange_ids(p)
-            if not _benign_single_partition(p, i)
-        ]
-        if sp:
-            bad.append(f"single-partition {sp}")
-        if bad:
-            flagged[name] = bad
-    assert flagged == {}
+
+def test_staged_plans_carry_no_antipatterns(built):
+    gates.assert_plans_clean(staged_r19, built)
 
 
-def test_staged_oracle_parity_sf0001(spark):
-    from tools.oracle_check import compare
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS"
-            f" SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    for name, q in STAGED.items():
-        sdf = q.fn(spark, SF_DIR).toPandas()
-        ddf = con.execute(q.oracle).fetchdf()
-        problems = compare(name, sdf, ddf)
-        assert not problems, f"{name}: {problems}"
-        assert len(sdf) > 0, f"{name}: degenerate empty result"
-    con.close()
+def test_staged_oracle_parity_sf0001(parity):
+    gates.assert_parity(staged_r19, parity)
 
 
 # --------------------------------------------------------------------
@@ -149,7 +122,7 @@ def test_hilbert_sql_is_a_true_hilbert_curve():
 
 def test_hilbert_beats_zorder_at_nonaligned_span(spark):
     got = (
-        STAGED["orders_hilbert_vs_zorder_quality"]
+        QUERIES["orders_hilbert_vs_zorder_quality"]
         .fn(spark, SF_DIR)
         .toPandas()
     )
@@ -188,7 +161,7 @@ def test_curves_degenerate_identically_at_aligned_span():
 
 def test_ols_matches_numpy_polyfit(spark):
     got = (
-        STAGED["orders_priority_trend_ols"]
+        QUERIES["orders_priority_trend_ols"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("priority")
@@ -235,7 +208,7 @@ def test_benford_expected_ppm_table():
 
 def test_benford_pandas_replay(spark):
     got = (
-        STAGED["orders_benford_first_digit"]
+        QUERIES["orders_benford_first_digit"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values(["priority", "digit"], ignore_index=True)
@@ -279,7 +252,7 @@ def test_benford_pandas_replay(spark):
 
 def test_anova_matches_numpy_replay(spark):
     got = (
-        STAGED["part_price_type_anova"]
+        QUERIES["part_price_type_anova"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("p_type")
@@ -336,7 +309,7 @@ def _runs_z(signs: np.ndarray) -> tuple[int, int, int, float]:
 
 def test_runs_test_matches_numpy_replay(spark):
     got = (
-        STAGED["orders_runs_test"]
+        QUERIES["orders_runs_test"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index("priority")

@@ -1,8 +1,7 @@
-"""Tests for llm/staged_r7.py — the round-7 registration candidates.
+"""Tests for the queries in llm/staged_r7.py.
 
-Besides the fixture-level oracle parity (also swept standalone by
-``tools/staged_check.py`` at all three SFs), these pin the parts an
-oracle hash can't localize when it breaks: the OPH densification
+Oracle parity is checked registry-wide (tests/test_parity.py); these
+pin the parts an oracle hash can't localize when it breaks: the OPH densification
 algorithm against a pure-Python replay, the OPH candidate recall
 against the registered k-permutation family, the decontamination
 argmax against a numpy brute force, and the vocabulary-growth
@@ -11,68 +10,48 @@ arithmetic against a from-scratch pandas replay.
 
 from __future__ import annotations
 
-import duckdb
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES
+from python_nyc_taxi_data_pipeline_spark import registry
+from python_nyc_taxi_data_pipeline_spark.llm import staged_r7
 from python_nyc_taxi_data_pipeline_spark.llm.dedup import docs_minhash_lsh_pairs
 from python_nyc_taxi_data_pipeline_spark.llm.staged_r7 import (
     OPH_BINS,
-    STAGED,
     corpus_vocab_growth,
     docs_minhash_oph_pairs,
     docs_semantic_decontamination,
     oph_hashed,
     oph_signature,
 )
+from tests import module_gates as gates
 from tests.conftest import SF_DIR
 
-
-def test_staged_plans_carry_no_antipatterns(spark):
-    """The staged queries must already clear the fleet-wide plan sweep
-    they will join on registration: no cartesian product, no
-    row-at-a-time Python UDF, no non-benign single-partition exchange
-    (same rules as test_plans.py::
-    test_no_plan_antipatterns_across_all_queries)."""
-    from tests.test_plans import (
-        _benign_single_partition,
-        _single_partition_exchange_ids,
-        plan_of,
-    )
-
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        hits = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        for nid in _single_partition_exchange_ids(p):
-            if not _benign_single_partition(p, nid):
-                hits.append(f"Exchange SinglePartition (node {nid})")
-        if hits:
-            flagged[name] = hits
-    assert flagged == {}
+QUERIES = registry.all_queries()
 
 
-def test_staged_oracle_parity_sf0001(spark):
-    """Every staged query hash-matches its DuckDB oracle at sf0.001 —
-    the exact driver-gate comparison they will face when registered in
-    round 7 (tools/staged_check.py re-runs this at sf0.01 and sf0.1)."""
-    from tools.oracle_check import compare
+# --------------------------------------------------------------------
+# Module-wide gates (parity and plans share the session's builds)
+# --------------------------------------------------------------------
 
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    assert len(STAGED) >= 8
-    for name, q in STAGED.items():
-        sdf = q.fn(spark, SF_DIR).toPandas()
-        ddf = con.execute(q.oracle).fetchdf()
-        problems = compare(name, sdf, ddf)
-        assert not problems, f"{name}: {problems}"
-        assert len(sdf) > 0, f"{name}: degenerate empty result"
-    con.close()
+
+def test_staged_plans_carry_no_antipatterns(built):
+    gates.assert_plans_clean(staged_r7, built)
+
+
+def test_staged_plans_avoid_sort_aggregate(built):
+    """Struct and string min/max silently plan as SortAggregate,
+    which sorts every group's rows within partitions."""
+    gates.assert_plans_clean(staged_r7, built, sort_aggregate=True)
+
+
+def test_staged_oracle_parity_sf0001(parity):
+    gates.assert_parity(staged_r7, parity)
+
+
+def test_promote_to_registry_round_trip():
+    gates.assert_register_round_trip("orders_benford_audit")
 
 
 # --------------------------------------------------------------------
@@ -436,27 +415,6 @@ def test_margin_mining_matches_numpy_replay(spark):
         r = got[int(t)]
         assert r["train_doc_id"] == -best_nid, f"test doc {t}"
         assert abs(r["margin"] - best_m) <= 1e-9, f"test doc {t}"
-
-
-def test_staged_plans_avoid_sort_aggregate(spark):
-    """Struct min/max silently plans as SortAggregate (sorts every
-    group's rows within partitions — the segdedup keeper-election
-    hazard, re-hit by the decontamination argmax during round 6). Pin
-    every staged plan SortAggregate-free except the documented
-    exception: margin mining's ratio argmax, whose data-dependent
-    margin can't pack into a primitive key and whose input frame the
-    k-NN windows already partition-sort."""
-    from tests.test_plans import plan_of
-
-    allowed = {"embeddings_margin_mining"}
-    flagged = {}
-    for name, q in STAGED.items():
-        if name in allowed:
-            continue
-        p = plan_of(q.fn(spark, SF_DIR))
-        if "SortAggregate" in p:
-            flagged[name] = "SortAggregate"
-    assert flagged == {}
 
 
 _DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -968,9 +926,7 @@ def test_js_divergence_oov_bucket_engages_beyond_top_v(spark, tmp_path):
         "CREATE VIEW documents AS SELECT * FROM "
         f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
     )
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r7 import STAGED
-
-    duck = con.execute(STAGED["docs_source_js_divergence"].oracle).fetchdf()
+    duck = con.execute(QUERIES["docs_source_js_divergence"].oracle).fetchdf()
     assert len(duck) == 1
     assert int(duck["js_micro"].iloc[0]) == r.js_micro
 
@@ -1870,34 +1826,3 @@ def test_zorder_layout_prunes_real_parquet_rowgroups(spark, tmp_path):
     # measured is ~1/4; assert the conservative bound
     assert z_hit <= 0.5 * z_total
     assert z_hit < l_hit
-
-
-def test_promote_to_registry_round_trip():
-    """The r7 registration helper registers a staged query with an
-    identical (name, oracle, tags, fn) row and fails loudly on a
-    double promotion. Exercised against a scratch registry dict so
-    the live registry is untouched."""
-    from unittest import mock
-
-    import pytest as _pytest
-
-    from python_nyc_taxi_data_pipeline_spark import registry
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r7 import (
-        promote_to_registry,
-    )
-
-    # Snapshot the live registry: since the r7 slate actually IS
-    # registered now, the leak check is "unchanged", not "absent"
-    # (the old absent-assertion broke once _ensure_loaded had run).
-    pre = dict(registry._REGISTRY)
-    scratch: dict = {}
-    with mock.patch.object(registry, "_REGISTRY", scratch):
-        promoted = promote_to_registry(["orders_benford_audit"])
-        assert promoted == ["orders_benford_audit"]
-        row = scratch["orders_benford_audit"]
-        assert row.fn is STAGED["orders_benford_audit"].fn
-        assert row.oracle == STAGED["orders_benford_audit"].oracle
-        assert row.tags == STAGED["orders_benford_audit"].tags
-        with _pytest.raises(ValueError, match="duplicate"):
-            promote_to_registry(["orders_benford_audit"])
-    assert registry._REGISTRY == pre

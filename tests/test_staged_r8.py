@@ -1,8 +1,7 @@
-"""Tests for llm/staged_r8.py — the round-8 registration candidates.
+"""Tests for the queries in llm/staged_r8.py.
 
-Besides fixture-level oracle parity (also swept standalone by
-``tools/staged_check.py --module r8`` at multiple SFs), these pin the
-parts an oracle hash can't localize when it breaks: independent
+Oracle parity is checked registry-wide (tests/test_parity.py); these
+pin the parts an oracle hash can't localize when it breaks: independent
 pure-Python/pandas/numpy replays of the growth-accounting states, the
 histogram-Gini identity, the chunk-boundary arithmetic, the
 per-dimension moments, and the rerank cascade's lexical cross-score —
@@ -19,7 +18,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES
+from python_nyc_taxi_data_pipeline_spark import registry
+from python_nyc_taxi_data_pipeline_spark.llm import staged_r8
 from python_nyc_taxi_data_pipeline_spark.llm.staged_r8 import (
     CASCADE_N_PROBES,
     CASCADE_STAGE1_K,
@@ -27,79 +27,65 @@ from python_nyc_taxi_data_pipeline_spark.llm.staged_r8 import (
     CHUNK_S,
     CHUNK_W,
     GINI_BUCKET_CENTS,
-    STAGED,
 )
+from tests import module_gates as gates
 from tests.conftest import SF_DIR
+
+QUERIES = registry.all_queries()
+
+
+# --------------------------------------------------------------------
+# Module-wide gates (parity and plans share the session's builds)
+# --------------------------------------------------------------------
+
+
+def test_r8_batch_names_the_whole_slate():
+    gates.assert_registers_exactly(
+        staged_r8,
+        (
+            "customer_spend_gini_contract",
+            "docs_cross_source_duplication",
+            "docs_dedup_survivorship_mix_shift",
+            "docs_gopher_rule_attribution",
+            "docs_lang_confusion_matrix",
+            "docs_neardup_threshold_sweep",
+            "docs_quality_brier_reliability",
+            "docs_rag_chunk_plan",
+            "docs_source_distinctive_terms",
+            "docs_token_space_contamination",
+            "embeddings_dimension_stats",
+            "embeddings_pq_distortion_report",
+            "events_conversion_lag_histogram",
+            "events_session_stats",
+            "events_user_lifecycle",
+            "events_weekly_retention_cohorts",
+            "retrieval_rerank_cascade",
+        ),
+    )
+
+
+def test_staged_plans_carry_no_antipatterns(built):
+    gates.assert_plans_clean(staged_r8, built)
+
+
+def test_staged_plans_avoid_sort_aggregate(built):
+    """Struct and string min/max silently plan as SortAggregate,
+    which sorts every group's rows within partitions."""
+    gates.assert_plans_clean(staged_r8, built, sort_aggregate=True)
+
+
+def test_staged_oracle_parity_sf0001(parity):
+    gates.assert_parity(staged_r8, parity)
+
+
+def test_promote_to_registry_round_trip():
+    gates.assert_register_round_trip("events_session_stats")
 
 
 def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
     return duckdb.sql(
         f"SELECT * FROM read_parquet('{sf_dir}/{table}.parquet')"
     ).fetchdf()
-
-
-# --------------------------------------------------------------------
-# Fleet-wide gates the slate must already clear
-# --------------------------------------------------------------------
-
-
-def test_staged_plans_carry_no_antipatterns(spark):
-    """The staged queries must already clear the fleet-wide plan sweep
-    they will join on registration: no cartesian product, no
-    row-at-a-time Python UDF, no non-benign single-partition exchange
-    (same rules as test_plans.py::
-    test_no_plan_antipatterns_across_all_queries)."""
-    from tests.test_plans import (
-        _benign_single_partition,
-        _single_partition_exchange_ids,
-        plan_of,
-    )
-
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        hits = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        for nid in _single_partition_exchange_ids(p):
-            if not _benign_single_partition(p, nid):
-                hits.append(f"Exchange SinglePartition (node {nid})")
-        if hits:
-            flagged[name] = hits
-    assert flagged == {}
-
-
-def test_staged_plans_avoid_sort_aggregate(spark):
-    """Struct min/max silently plans as SortAggregate (sorts every
-    group's rows within partitions). No r8 query needs one — pin the
-    whole slate SortAggregate-free."""
-    from tests.test_plans import plan_of
-
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        if "SortAggregate" in p:
-            flagged[name] = "SortAggregate"
-    assert flagged == {}
-
-
-def test_staged_oracle_parity_sf0001(spark):
-    """Every staged query hash-matches its DuckDB oracle at sf0.001 —
-    the exact driver-gate comparison they will face when registered in
-    round 8 (tools/staged_check.py re-runs this at sf0.01)."""
-    from tools.oracle_check import compare
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    assert len(STAGED) >= 8
-    for name, q in STAGED.items():
-        sdf = q.fn(spark, SF_DIR).toPandas()
-        ddf = con.execute(q.oracle).fetchdf()
-        problems = compare(name, sdf, ddf)
-        assert not problems, f"{name}: {problems}"
-        assert len(sdf) > 0, f"{name}: degenerate empty result"
-    con.close()
 
 
 # --------------------------------------------------------------------
@@ -119,7 +105,7 @@ def _user_weeks() -> pd.DataFrame:
 
 def test_user_lifecycle_pandas_replay(spark):
     got = (
-        STAGED["events_user_lifecycle"]
+        QUERIES["events_user_lifecycle"]
         .fn(spark, SF_DIR)
         .toPandas()
         .set_index(["week", "state"])["n_users"]
@@ -153,7 +139,7 @@ def test_user_lifecycle_pandas_replay(spark):
 def test_lifecycle_growth_accounting_identity(spark):
     """actives(w) = new(w) + retained(w) + resurrected(w) for every
     week — the identity the decomposition exists to satisfy."""
-    df = STAGED["events_user_lifecycle"].fn(spark, SF_DIR).toPandas()
+    df = QUERIES["events_user_lifecycle"].fn(spark, SF_DIR).toPandas()
     active_states = df[df["state"] != "churned"]
     per_week = active_states.groupby("week")["n_users"].sum()
     uw = _user_weeks()
@@ -166,7 +152,7 @@ def test_retention_cohort_diagonal(spark):
     """Offset-0 cells are the cohort definition: n_active ==
     cohort_size and retention exactly 1e6; every other retention is
     ≤ 1e6; cohort sizes partition the user population."""
-    df = STAGED["events_weekly_retention_cohorts"].fn(spark, SF_DIR).toPandas()
+    df = QUERIES["events_weekly_retention_cohorts"].fn(spark, SF_DIR).toPandas()
     diag = df[df["week_offset"] == 0]
     assert (diag["n_active"] == diag["cohort_size"]).all()
     assert (diag["retention_micro"] == 1_000_000).all()
@@ -181,7 +167,7 @@ def test_retention_cohort_diagonal(spark):
 
 
 def test_gini_histogram_identity_replay(spark):
-    got = STAGED["customer_spend_gini_contract"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["customer_spend_gini_contract"].fn(spark, SF_DIR).toPandas()
     assert len(got) == 1
     r = got.iloc[0]
 
@@ -213,7 +199,7 @@ def test_gini_histogram_identity_replay(spark):
 
 def test_chunk_plan_replay_and_coverage(spark):
     got = (
-        STAGED["docs_rag_chunk_plan"]
+        QUERIES["docs_rag_chunk_plan"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values(["doc_id", "chunk_idx"], ignore_index=True)
@@ -253,7 +239,7 @@ def test_chunk_plan_replay_and_coverage(spark):
 
 def test_dimension_stats_numpy_replay(spark):
     got = (
-        STAGED["embeddings_dimension_stats"]
+        QUERIES["embeddings_dimension_stats"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("dim", ignore_index=True)
@@ -287,7 +273,7 @@ def test_dimension_stats_numpy_replay(spark):
 
 
 def test_brier_reliability_invariants(spark):
-    df = STAGED["docs_quality_brier_reliability"].fn(spark, SF_DIR).toPandas()
+    df = QUERIES["docs_quality_brier_reliability"].fn(spark, SF_DIR).toPandas()
     n_docs_total = len(_pd("documents"))
     assert df["n_docs"].sum() == n_docs_total
     assert df["bin"].between(0, 9).all()
@@ -310,7 +296,7 @@ def test_brier_reliability_invariants(spark):
 
 
 def test_rerank_cascade_contracts_and_lexical_referee(spark):
-    df = STAGED["retrieval_rerank_cascade"].fn(spark, SF_DIR).toPandas()
+    df = QUERIES["retrieval_rerank_cascade"].fn(spark, SF_DIR).toPandas()
     # Cascade shape: ≤ N_PROBES probes, exactly STAGE2_K rows each
     # (fixture corpus ≫ K), ranks in range, stage-2 drawn from stage 1.
     assert df["query_doc_id"].nunique() <= CASCADE_N_PROBES
@@ -347,7 +333,7 @@ def test_cross_source_matrix_partitions_the_pairs(spark):
         docs_ngram_jaccard_pairs,
     )
 
-    matrix = STAGED["docs_cross_source_duplication"].fn(spark, SF_DIR).toPandas()
+    matrix = QUERIES["docs_cross_source_duplication"].fn(spark, SF_DIR).toPandas()
     pairs = docs_ngram_jaccard_pairs(spark, SF_DIR).toPandas()
     assert matrix["n_pairs"].sum() == len(pairs)
     assert (matrix["source_a"] <= matrix["source_b"]).all()
@@ -382,7 +368,7 @@ def test_cross_source_matrix_partitions_the_pairs(spark):
 def test_mix_shift_ledger_identities(spark):
     from python_nyc_taxi_data_pipeline_spark.llm.clusters import docs_dup_clusters
 
-    df = STAGED["docs_dedup_survivorship_mix_shift"].fn(spark, SF_DIR).toPandas()
+    df = QUERIES["docs_dedup_survivorship_mix_shift"].fn(spark, SF_DIR).toPandas()
     clus = docs_dup_clusters(spark, SF_DIR).toPandas()
     assert (df["n_removed"] == df["n_before"] - df["n_after"]).all()
     assert (df["n_removed"] >= 0).all()
@@ -403,7 +389,7 @@ def test_mix_shift_ledger_identities(spark):
 
 
 def test_distinctive_terms_pandas_replay(spark):
-    got = STAGED["docs_source_distinctive_terms"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["docs_source_distinctive_terms"].fn(spark, SF_DIR).toPandas()
     d = _pd("documents")
     tf = (
         d.assign(term=d["text"].str.split(" "))
@@ -436,7 +422,7 @@ def test_confusion_matrix_consistency(spark):
         docs_nb_lang_classifier,
     )
 
-    df = STAGED["docs_lang_confusion_matrix"].fn(spark, SF_DIR).toPandas()
+    df = QUERIES["docs_lang_confusion_matrix"].fn(spark, SF_DIR).toPandas()
     preds = docs_nb_lang_classifier(spark, SF_DIR).toPandas()
     assert df["n"].sum() == len(preds)
     want = preds.groupby(["lang", "pred_lang"]).size().rename("n")
@@ -459,7 +445,7 @@ def test_confusion_matrix_consistency(spark):
 
 
 def test_token_contamination_bounds_and_split(spark):
-    df = STAGED["docs_token_space_contamination"].fn(spark, SF_DIR).toPandas()
+    df = QUERIES["docs_token_space_contamination"].fn(spark, SF_DIR).toPandas()
     # Every emitted doc is held-out under the md5 convention.
     hh = df["doc_id"].map(lambda i: hashlib.md5(str(i).encode()).hexdigest()[:2])
     assert (hh >= "e6").all()
@@ -497,7 +483,7 @@ def test_session_stats_pandas_replay(spark):
     from python_nyc_taxi_data_pipeline_spark.llm.staged_r8 import SESSION_GAP_SEC
 
     got = (
-        STAGED["events_session_stats"]
+        QUERIES["events_session_stats"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("n_events", ignore_index=True)
@@ -546,7 +532,7 @@ def test_threshold_sweep_cumulative_identity(spark):
     )
 
     got = (
-        STAGED["docs_neardup_threshold_sweep"]
+        QUERIES["docs_neardup_threshold_sweep"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("bucket", ignore_index=True)
@@ -573,7 +559,7 @@ def test_conversion_lag_pandas_replay(spark):
     from python_nyc_taxi_data_pipeline_spark.llm.staged_r8 import LAG_BUCKET_SEC
 
     got = (
-        STAGED["events_conversion_lag_histogram"]
+        QUERIES["events_conversion_lag_histogram"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("lag_bucket_hours", ignore_index=True)
@@ -611,7 +597,7 @@ def test_pq_distortion_ledger_identities(spark):
         embeddings_pq_codes,
     )
 
-    df = STAGED["embeddings_pq_distortion_report"].fn(spark, SF_DIR).toPandas()
+    df = QUERIES["embeddings_pq_distortion_report"].fn(spark, SF_DIR).toPandas()
     codes = embeddings_pq_codes(spark, SF_DIR).toPandas()
     n_vecs = codes["vec_id"].nunique()
     assert set(df["subspace"]) == set(range(PQ_M))
@@ -643,7 +629,7 @@ def test_pq_distortion_ledger_identities(spark):
 def test_rule_attribution_vs_gopher_battery(spark):
     from python_nyc_taxi_data_pipeline_spark.registry import all_queries
 
-    df = STAGED["docs_gopher_rule_attribution"].fn(spark, SF_DIR).toPandas()
+    df = QUERIES["docs_gopher_rule_attribution"].fn(spark, SF_DIR).toPandas()
     assert sorted(df["rule"]) == [
         "distinct_frac",
         "mean_word_len",
@@ -668,52 +654,3 @@ def test_rule_attribution_vs_gopher_battery(spark):
     if keep_col:
         g = gopher.fn(spark, SF_DIR).toPandas()
         assert n_killed == int((~g[keep_col[0]].astype(bool)).sum())
-
-
-# --------------------------------------------------------------------
-# Registration helper — scratch-registry round trip + batch hygiene
-# --------------------------------------------------------------------
-
-
-def test_r8_batch_names_the_whole_slate():
-    """R8_BATCH is the spelled-out registration list; it must stay in
-    lockstep with the slate (17 = the r8 evidence-window cap derived
-    in the module docstring)."""
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r8 import R8_BATCH
-
-    assert sorted(R8_BATCH) == sorted(STAGED)
-    assert len(R8_BATCH) == 17
-
-
-def test_promote_to_registry_round_trip():
-    """The r8 registration helper registers a staged query with an
-    identical (name, oracle, tags, fn) row, fails loudly on a double
-    promotion, and refuses an implicit whole-slate call. Exercised
-    against a scratch registry dict so the live registry is
-    untouched."""
-    from unittest import mock
-
-    import pytest as _pytest
-
-    from python_nyc_taxi_data_pipeline_spark import registry
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r8 import (
-        promote_to_registry,
-    )
-
-    # Snapshot-compare the live registry rather than asserting the
-    # name absent, so this test survives the actual r8 promotion
-    # (the r7 twin broke exactly this way once its slate registered).
-    pre = dict(registry._REGISTRY)
-    scratch: dict = {}
-    with mock.patch.object(registry, "_REGISTRY", scratch):
-        promoted = promote_to_registry(["events_session_stats"])
-        assert promoted == ["events_session_stats"]
-        row = scratch["events_session_stats"]
-        assert row.fn is STAGED["events_session_stats"].fn
-        assert row.oracle == STAGED["events_session_stats"].oracle
-        assert row.tags == STAGED["events_session_stats"].tags
-        with _pytest.raises(ValueError, match="duplicate"):
-            promote_to_registry(["events_session_stats"])
-        with _pytest.raises(ValueError, match="explicit"):
-            promote_to_registry(None)
-    assert registry._REGISTRY == pre

@@ -1,10 +1,8 @@
-"""Tests for llm/staged_r9.py — the round-9 registration candidates.
-
-Same structure as the r8 battery: fleet plan sweeps, oracle parity at
-sf0.001, independent pure-Python/pandas/numpy referees for the parts a
-hash mismatch can't localize (BPE round-trip reconstruction, basket
-lift arithmetic, the engine-free day-of-week convention, norm-fence
-moments, boilerplate mass), and the registration-helper hygiene."""
+"""Tests for the queries in llm/staged_r9.py: independent
+pure-Python/pandas/numpy referees for the parts a hash mismatch can't
+localize (BPE round-trip reconstruction, basket lift arithmetic, the
+engine-free day-of-week convention, norm-fence moments, boilerplate
+mass). Oracle parity is checked registry-wide (tests/test_parity.py)."""
 
 from __future__ import annotations
 
@@ -12,63 +10,57 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES
+from python_nyc_taxi_data_pipeline_spark import registry
+from python_nyc_taxi_data_pipeline_spark.llm import staged_r9
 from python_nyc_taxi_data_pipeline_spark.llm.staged_r9 import (
     BASKET_MIN_SUPPORT,
     BOILER_MIN_DOCS,
-    R9_BATCH,
-    STAGED,
 )
+from tests import module_gates as gates
 from tests.conftest import SF_DIR
+
+QUERIES = registry.all_queries()
+
+
+# --------------------------------------------------------------------
+# Module-wide gates (parity and plans share the session's builds)
+# --------------------------------------------------------------------
+
+
+def test_r9_batch_names_the_whole_slate():
+    gates.assert_registers_exactly(
+        staged_r9,
+        (
+            "customer_l_diversity",
+            "docs_boilerplate_ngram_mass",
+            "docs_bpe_roundtrip_contract",
+            "docs_pii_scrub_contract",
+            "embeddings_cosine_calibration",
+            "embeddings_norm_outliers",
+            "events_error_cusum",
+            "lineitem_ship_latency_histogram",
+            "orders_basket_lift",
+            "orders_seasonality_profile",
+        ),
+    )
+
+
+def test_staged_plans_carry_no_antipatterns(built):
+    gates.assert_plans_clean(staged_r9, built)
+
+
+def test_staged_oracle_parity_sf0001(parity):
+    gates.assert_parity(staged_r9, parity)
+
+
+def test_promote_to_registry_round_trip():
+    gates.assert_register_round_trip("customer_l_diversity")
 
 
 def _pd(table: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
     return duckdb.sql(
         f"SELECT * FROM read_parquet('{sf_dir}/{table}.parquet')"
     ).fetchdf()
-
-
-# --------------------------------------------------------------------
-# Fleet-wide gates
-# --------------------------------------------------------------------
-
-
-def test_staged_plans_carry_no_antipatterns(spark):
-    from tests.test_plans import (
-        _benign_single_partition,
-        _single_partition_exchange_ids,
-        plan_of,
-    )
-
-    flagged = {}
-    for name, q in STAGED.items():
-        p = plan_of(q.fn(spark, SF_DIR))
-        hits = [pat for pat in ("CartesianProduct", "BatchEvalPython") if pat in p]
-        if "SortAggregate" in p:
-            hits.append("SortAggregate")
-        for nid in _single_partition_exchange_ids(p):
-            if not _benign_single_partition(p, nid):
-                hits.append(f"Exchange SinglePartition (node {nid})")
-        if hits:
-            flagged[name] = hits
-    assert flagged == {}
-
-
-def test_staged_oracle_parity_sf0001(spark):
-    from tools.oracle_check import compare
-
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    for name, q in STAGED.items():
-        sdf = q.fn(spark, SF_DIR).toPandas()
-        ddf = con.execute(q.oracle).fetchdf()
-        problems = compare(name, sdf, ddf)
-        assert not problems, f"{name}: {problems}"
-        assert len(sdf) > 0, f"{name}: degenerate empty result"
-    con.close()
 
 
 # --------------------------------------------------------------------
@@ -80,7 +72,7 @@ def test_staged_oracle_parity_sf0001(spark):
 def test_bpe_roundtrip_holds_and_ratio_replays(spark):
     from python_nyc_taxi_data_pipeline_spark.llm.bpe import EOW, bpe_train
 
-    got = STAGED["docs_bpe_roundtrip_contract"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["docs_bpe_roundtrip_contract"].fn(spark, SF_DIR).toPandas()
     assert (got["n_roundtrip_failures"] == 0).all()
     assert (got["n_symbols"] <= got["n_word_tokens"].map(lambda _: 10**18)).all()
     # Replay one language's aggregate from the raw vocab + corpus.
@@ -110,7 +102,7 @@ def test_bpe_roundtrip_holds_and_ratio_replays(spark):
 
 
 def test_basket_lift_pandas_replay(spark):
-    got = STAGED["orders_basket_lift"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["orders_basket_lift"].fn(spark, SF_DIR).toPandas()
     li = _pd("lineitem")[["l_orderkey", "l_partkey"]]
     part = _pd("part")[["p_partkey", "p_brand"]]
     items = (
@@ -154,7 +146,7 @@ def test_ship_latency_bucket_convention(spark):
         LATENCY_BUCKET_DAYS,
     )
 
-    got = STAGED["lineitem_ship_latency_histogram"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["lineitem_ship_latency_histogram"].fn(spark, SF_DIR).toPandas()
     li = _pd("lineitem")[["l_orderkey", "l_returnflag", "l_shipdate"]]
     o = _pd("orders")[["o_orderkey", "o_orderdate"]]
     j = li.merge(o, left_on="l_orderkey", right_on="o_orderkey")
@@ -187,7 +179,7 @@ def test_ship_latency_bucket_convention(spark):
 
 
 def test_seasonality_dow_is_calendar_weekday(spark):
-    got = STAGED["orders_seasonality_profile"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["orders_seasonality_profile"].fn(spark, SF_DIR).toPandas()
     o = _pd("orders")
     d = o["o_orderdate"].dt.normalize()
     want = (
@@ -214,7 +206,7 @@ def test_seasonality_dow_is_calendar_weekday(spark):
 
 
 def test_norm_outliers_numpy_replay(spark):
-    got = STAGED["embeddings_norm_outliers"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["embeddings_norm_outliers"].fn(spark, SF_DIR).toPandas()
     assert len(got) == 1
     r = got.iloc[0]
     emb = np.stack(_pd("embeddings")["embedding"].to_numpy()).astype(np.float64)
@@ -244,7 +236,7 @@ def test_norm_outliers_numpy_replay(spark):
 
 
 def test_l_diversity_pandas_replay(spark):
-    got = STAGED["customer_l_diversity"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["customer_l_diversity"].fn(spark, SF_DIR).toPandas()
     c = _pd("customer")
     cls = (
         c.assign(bal_bucket=np.floor(c["c_acctbal"] / 1000.0).astype(int))
@@ -273,7 +265,7 @@ def test_l_diversity_pandas_replay(spark):
 
 
 def test_boilerplate_mass_pandas_replay(spark):
-    got = STAGED["docs_boilerplate_ngram_mass"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["docs_boilerplate_ngram_mass"].fn(spark, SF_DIR).toPandas()
     d = _pd("documents")
     rows = []
     for r in d.itertuples():
@@ -301,46 +293,12 @@ def test_boilerplate_mass_pandas_replay(spark):
 
 
 # --------------------------------------------------------------------
-# Registration hygiene
-# --------------------------------------------------------------------
-
-
-def test_r9_batch_names_the_whole_slate():
-    assert sorted(R9_BATCH) == sorted(STAGED)
-
-
-def test_promote_to_registry_round_trip():
-    from unittest import mock
-
-    import pytest as _pytest
-
-    from python_nyc_taxi_data_pipeline_spark import registry
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r9 import (
-        promote_to_registry,
-    )
-
-    pre = dict(registry._REGISTRY)
-    scratch: dict = {}
-    with mock.patch.object(registry, "_REGISTRY", scratch):
-        promoted = promote_to_registry(["customer_l_diversity"])
-        assert promoted == ["customer_l_diversity"]
-        row = scratch["customer_l_diversity"]
-        assert row.fn is STAGED["customer_l_diversity"].fn
-        assert row.oracle == STAGED["customer_l_diversity"].oracle
-        with _pytest.raises(ValueError, match="duplicate"):
-            promote_to_registry(["customer_l_diversity"])
-        with _pytest.raises(ValueError, match="explicit"):
-            promote_to_registry(None)
-    assert registry._REGISTRY == pre
-
-
-# --------------------------------------------------------------------
 # PII scrub — the residual-zero certificate + exact planted counts
 # --------------------------------------------------------------------
 
 
 def test_pii_scrub_certificate(spark):
-    got = STAGED["docs_pii_scrub_contract"].fn(spark, SF_DIR).toPandas()
+    got = QUERIES["docs_pii_scrub_contract"].fn(spark, SF_DIR).toPandas()
     d = _pd("documents")
     # The base corpus is provably digit/@-free (the plant premise).
     assert not d["text"].str.contains("[0-9@]", regex=True).any()
@@ -376,7 +334,7 @@ def test_cusum_equals_sequential_recursion(spark):
     from python_nyc_taxi_data_pipeline_spark.llm.staged_r9 import CUSUM_H_MULT
 
     got = (
-        STAGED["events_error_cusum"]
+        QUERIES["events_error_cusum"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("day_idx", ignore_index=True)
@@ -411,7 +369,7 @@ def test_cosine_calibration_numpy_replay(spark):
     )
 
     got = (
-        STAGED["embeddings_cosine_calibration"]
+        QUERIES["embeddings_cosine_calibration"]
         .fn(spark, SF_DIR)
         .toPandas()
         .sort_values("bucket", ignore_index=True)

@@ -338,10 +338,8 @@ def test_stream_watermark_drop_parity_with_simulation(spark, tmp_path):
     exactly the rows an exact simulation of Spark's watermark
     semantics predicts — wm := max(wm, batch_max_ts − delay) at batch
     boundaries, a row dropped iff its WINDOW END ≤ wm at arrival.
-    This is the engine-behavior anchor for the (registration-staged)
-    ``events_late_arrival_watermark_sweep`` pricing table: the sweep
-    prices candidate delays from history; this test proves the engine
-    the price list is for actually drops what the model says."""
+    This proves the engine actually drops what the watermark model
+    says."""
     import time
     from datetime import datetime, timedelta
 

@@ -10,6 +10,7 @@ columns, NaN-safe). Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -17,7 +18,8 @@ import traceback
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# Check the tree this script lives in, wherever it is checked out.
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from python_nyc_taxi_data_pipeline_spark.catalog import FIXTURE_TABLES  # noqa: E402
 from python_nyc_taxi_data_pipeline_spark.session import get_session  # noqa: E402

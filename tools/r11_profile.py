@@ -98,22 +98,7 @@ def main() -> int:
 
     benchmod._warm(spark, SF_DIR)
 
-    qs = all_queries()
-    fn = None
-    if name in qs:
-        fn = qs[name].fn
-    else:
-        from bench import _staged_modules
-        import importlib
-
-        for cand in _staged_modules():
-            slate = importlib.import_module(
-                f"python_nyc_taxi_data_pipeline_spark.llm.staged_{cand}"
-            ).STAGED
-            if name in slate:
-                fn = slate[name].fn
-                break
-    assert fn is not None, name
+    fn = all_queries()[name].fn
 
     times = []
     for i in range(repeats):

@@ -106,17 +106,6 @@ def _incremental_dedup_shufflejoin(spark, sf_dir):
     return all_queries()["docs_incremental_exact_dedup"].fn(spark, sf_dir)
 
 
-def _staged(name: str):
-    """Resolve a round-7 STAGED query (not yet in the live registry)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r7 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
 def _margin_mining_fixedq(spark, sf_dir):
     """embeddings_margin_mining with the held-out side PINNED to the
     base copy (doc_id < the inflation shift): the production shape —
@@ -178,466 +167,29 @@ EXTRA_FNS = {
     "docs_incremental_exact_dedup_shufflejoin": _incremental_dedup_shufflejoin,
     "embeddings_semdedup_ivf_scaledk": _semdedup_ivf_scaledk,
     "embeddings_semdedup_hier_scaledk": _semdedup_hier_scaledk,
-    # round-7 staged candidates (llm/staged_r7.py)
-    "docs_minhash_oph_pairs": _staged("docs_minhash_oph_pairs"),
-    "docs_semantic_decontamination": _staged("docs_semantic_decontamination"),
-    "corpus_vocab_growth": _staged("corpus_vocab_growth"),
     "embeddings_margin_mining_fixedq": _margin_mining_fixedq,
     "knn_cosine_gemm_fixedq": _knn_gemm_fixedq,
-    "docs_edit_similarity_pairs": _staged("docs_edit_similarity_pairs"),
-    "embeddings_pca_power": _staged("embeddings_pca_power"),
-    "docs_source_js_divergence": _staged("docs_source_js_divergence"),
-    "docs_ccnet_perplexity_buckets": _staged("docs_ccnet_perplexity_buckets"),
-    "docs_ccnet_histogram_cut_contract": _staged(
-        "docs_ccnet_histogram_cut_contract"
-    ),
-    "docs_dup_cluster_report": _staged("docs_dup_cluster_report"),
-    "docs_kneser_ney_bigrams": _staged("docs_kneser_ney_bigrams"),
-    "orders_benford_audit": _staged("orders_benford_audit"),
-    "orders_column_profile": _staged("orders_column_profile"),
-    "orders_rfm_segments": _staged("orders_rfm_segments"),
-    "orders_zorder_skipping_contract": _staged(
-        "orders_zorder_skipping_contract"
-    ),
-    "nation_trade_pagerank": _staged("nation_trade_pagerank"),
-    "customer_mad_outliers": _staged("customer_mad_outliers"),
-    "customer_k_anonymity": _staged("customer_k_anonymity"),
-    "events_interarrival_entropy": _staged("events_interarrival_entropy"),
-    "docs_phrase_search": _staged("docs_phrase_search"),
 }
 
 
-def _staged8(name: str):
-    """Resolve a round-8 STAGED query (llm/staged_r8.py, not yet in
-    the live registry)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r8 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-def _staged9(name: str):
-    """Resolve a round-9 STAGED query (llm/staged_r9.py)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r9 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-def _staged10(name: str):
-    """Resolve a round-10 STAGED query (llm/staged_r10.py)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r10 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-def _staged11(name: str):
-    """Resolve a round-11 STAGED query (llm/staged_r11.py)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r11 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-def _staged12(name: str):
-    """Resolve a round-12 STAGED query (llm/staged_r12.py)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r12 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-def _staged13(name: str):
-    """Resolve a round-13 STAGED query (llm/staged_r13.py)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r13 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-def _staged14(name: str):
-    """Resolve a round-14 STAGED query (llm/staged_r14.py)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r14 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-def _staged15(name: str):
-    """Resolve a round-15 STAGED query (llm/staged_r15.py)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r15 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-def _staged16(name: str):
-    """Resolve a round-16 STAGED query (llm/staged_r16.py)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r16 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-def _staged17(name: str):
-    """Resolve a round-17 STAGED query (llm/staged_r17.py)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r17 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-def _staged18(name: str):
-    """Resolve a round-18 STAGED query (llm/staged_r18.py)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r18 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-def _staged19(name: str):
-    """Resolve a round-19 STAGED query (llm/staged_r19.py)."""
-
-    def fn(spark, sf_dir):
-        from python_nyc_taxi_data_pipeline_spark.llm.staged_r19 import STAGED
-
-        return STAGED[name].fn(spark, sf_dir)
-
-    return fn
-
-
-# round-10 staged candidates (llm/staged_r10.py)
-EXTRA_FNS_R10 = (
-    "docs_doremi_reweight_step",
-    "embeddings_ivf_balance_report",
-    "docs_dedup_graph_degrees",
-    "events_dau_wau_stickiness",
-    "corpus_token_budget_plan",
-    "docs_contamination_attribution",
-    "events_power_user_pareto",
-    "orders_priority_sla",
-    "docs_curriculum_shard_manifest",
-)
-
-
-EXTRA_FNS.update({name: _staged10(name) for name in EXTRA_FNS_R10})
-
-# round-11 staged candidates (llm/staged_r11.py). The bounded
-# synthetic-block contracts (frame/short-frame/audio: doc_id < 150-200,
-# zero shuffle) and the constant-bounded retrieval composition
-# (distillation labels: |probes|·k rows) are included for regression
-# cover even though their work does not grow with the corpus.
-EXTRA_FNS.update(
-    {
-        name: _staged11(name)
-        for name in (
-            "docs_frame_sample_contract",
-            "docs_short_frame_contract",
-            "docs_audio_window_features",
-            "retrieval_distillation_labels",
-            "docs_minhash_stream_batch_parity",
-            "docs_repetition_profile",
-            "docs_ngram_novelty",
-            "embeddings_ivf_recall_probe_curve",
-            "lineitem_salted_distinct_contract",
-            "customer_t_closeness",
-        )
-    }
-)
-
-# round-12 staged candidates (llm/staged_r12.py). The synthetic-block
-# multimodal contracts (VAD, patchify: doc_id < 150, zero/keyed
-# shuffle) and the constant-block probes (mutual-kNN: 128² in one
-# broadcast self-join; nDCG: the bounded IVF probe battery) are
-# included for regression cover even though their work does not grow
-# with the corpus; the corpus-scaling members are the KS drift
-# (value-domain aggregate), the watermark sweep (keyed window), the
-# compaction planner (metadata aggregate), the Markov chain (per-user
-# window + |states|² iterations), the novelty curve (gram aggregate)
-# and the deletion contract (anti-joins).
-EXTRA_FNS.update(
-    {
-        name: _staged12(name)
-        for name in (
-            "docs_length_ks_drift",
-            "events_late_arrival_watermark_sweep",
-            "lineitem_compaction_plan",
-            "events_markov_stationary",
-            "docs_audio_vad_segments",
-            "docs_patchify_contract",
-            "docs_deletion_propagation_contract",
-            "retrieval_ndcg_eval",
-            "corpus_source_novelty_curve",
-            "embeddings_mutual_knn_fraction",
-        )
-    }
-)
-
-# round-13 staged candidates (llm/staged_r13.py): the AUC's two-level
-# prefix sum and the manifest digests are one-hash-aggregate shapes;
-# the BT step's duel join is id-adjacent and everything after is
-# |sources|²-bounded.
-EXTRA_FNS.update(
-    {
-        name: _staged13(name)
-        for name in (
-            "docs_quality_auc_rank",
-            "corpus_shard_manifest_digests",
-            "orders_bradley_terry_step",
-            "docs_dup_cluster_stability",
-            "embeddings_label_centroid_shift",
-            "embeddings_matryoshka_recall_curve",
-            "events_stream_state_size_sweep",
-            "events_funnel_attribution_models",
-            "corpus_token_budget_ladder",
-            "docs_dedup_roi_curve",
-        )
-    }
-)
-
-# round-14 staged candidates (llm/staged_r14.py): the PQ curve
-# streams the corpus vs broadcast codebooks per rung; the pruning
-# contract is per-file footers + a predicate-ladder fanout; license
-# propagation rides the registered cluster map's plan.
-EXTRA_FNS.update(
-    {
-        name: _staged14(name)
-        for name in (
-            "embeddings_pq_adc_recall_curve",
-            "docs_string_pruning_contract",
-            "docs_license_propagation_contract",
-            "docs_bpe_vocab_size_curve",
-            "docs_image_text_alignment_contract",
-            "events_session_survival_curve",
-            "lineitem_salted_join_contract",
-            "orders_temporal_dim_join",
-            "nation_trade_reciprocity",
-        )
-    }
-)
-
-# round-15 staged slate (llm/staged_r15.py)
-EXTRA_FNS.update(
-    {
-        name: _staged15(name)
-        for name in (
-            "events_burstiness_fano",
-            "part_type_brand_hhi",
-            "orders_backlog_timeseries",
-            "corpus_filter_ablation_lattice",
-            "docs_split_leakage_contract",
-            "docs_ttr_window_profile",
-            "events_halflife_engagement",
-            "orders_priority_mix_drift_tvd",
-        )
-    }
-)
-
 def _hier_contract_shufflejoin(spark, sf_dir):
-    """The hier contract (r10 slate after the round-10 pull-forward
-    swap) with broadcast disabled — the same measurement rule as
+    """The hier contract with broadcast disabled — the same measurement rule as
     _semdedup_hier_scaledk: both its clusterer pair joins cross the
     AQE broadcast threshold between 1x and 2x, which reads as a fake
     super-linear step (measured 1.371 with broadcast on, from the 1x
     frames riding BHJ for free)."""
-    from python_nyc_taxi_data_pipeline_spark.llm.staged_r10 import STAGED
+    from python_nyc_taxi_data_pipeline_spark.registry import all_queries
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    return STAGED["embeddings_semdedup_hier_contract"].fn(spark, sf_dir)
+    return all_queries()["embeddings_semdedup_hier_contract"].fn(spark, sf_dir)
 
 
-# registered r10 slate member with a bespoke measurement rule
+# registered query with a bespoke measurement rule
 EXTRA_FNS.update(
     {"embeddings_semdedup_hier_contract": _hier_contract_shufflejoin}
 )
 
-# round-16 staged seed (llm/staged_r16.py)
-EXTRA_FNS.update(
-    {
-        "embeddings_quantization_sweep": _staged16(
-            "embeddings_quantization_sweep"
-        ),
-        "customer_order_gap_percentiles": _staged16(
-            "customer_order_gap_percentiles"
-        ),
-        "events_session_type_lift": _staged16("events_session_type_lift"),
-        "docs_vocab_coverage_ladder": _staged16(
-            "docs_vocab_coverage_ladder"
-        ),
-        "events_peak_concurrency": _staged16("events_peak_concurrency"),
-        "docs_lang_temperature_ladder": _staged16(
-            "docs_lang_temperature_ladder"
-        ),
-        "customer_cohort_repeat_rate": _staged16(
-            "customer_cohort_repeat_rate"
-        ),
-        "events_value_iqr_trimmed_stats": _staged16(
-            "events_value_iqr_trimmed_stats"
-        ),
-        "docs_source_lang_association": _staged16(
-            "docs_source_lang_association"
-        ),
-        "events_concurrency_time_integral": _staged16(
-            "events_concurrency_time_integral"
-        ),
-    }
-)
 
-# round-17 staged seed (llm/staged_r17.py)
-EXTRA_FNS.update(
-    {
-        "events_concurrent_user_pairs": _staged17(
-            "events_concurrent_user_pairs"
-        ),
-        "orders_daily_autocorr": _staged17("orders_daily_autocorr"),
-        "docs_image_ahash_neardup": _staged17("docs_image_ahash_neardup"),
-        "events_error_context_window": _staged17(
-            "events_error_context_window"
-        ),
-        "lineitem_business_day_latency": _staged17(
-            "lineitem_business_day_latency"
-        ),
-        "docs_length_bootstrap_ci": _staged17("docs_length_bootstrap_ci"),
-        "docs_char_entropy_quality": _staged17("docs_char_entropy_quality"),
-        "customer_churn_training_frame": _staged17(
-            "customer_churn_training_frame"
-        ),
-        "lineitem_approx_percentile_contract": _staged17(
-            "lineitem_approx_percentile_contract"
-        ),
-        "orders_dow_adjusted_anomalies": _staged17(
-            "orders_dow_adjusted_anomalies"
-        ),
-    }
-)
-
-# round-18 staged seed (llm/staged_r18.py)
-EXTRA_FNS.update(
-    {
-        "events_ab_cuped_readout": _staged18("events_ab_cuped_readout"),
-        "orders_naive_forecast_eval": _staged18(
-            "orders_naive_forecast_eval"
-        ),
-        "events_session_path_trigrams": _staged18(
-            "events_session_path_trigrams"
-        ),
-    }
-)
-
-# round-19 staged seed (llm/staged_r19.py)
-EXTRA_FNS.update(
-    {
-        "orders_hilbert_vs_zorder_quality": _staged19(
-            "orders_hilbert_vs_zorder_quality"
-        ),
-        "orders_priority_trend_ols": _staged19("orders_priority_trend_ols"),
-        "orders_benford_first_digit": _staged19("orders_benford_first_digit"),
-    }
-)
-
-# round-11 slate growth: r15 -> 10, r14 -> 10, r18 -> 6
-EXTRA_FNS.update(
-    {
-        "orders_theil_sen_trend": _staged15("orders_theil_sen_trend"),
-        "orders_volume_changepoint": _staged15("orders_volume_changepoint"),
-        "docs_simhash_bit_bias": _staged14("docs_simhash_bit_bias"),
-        "events_weekly_retention_triangle": _staged18(
-            "events_weekly_retention_triangle"
-        ),
-        "events_type_entropy_rate": _staged18("events_type_entropy_rate"),
-        "docs_stratified_split_manifest": _staged18(
-            "docs_stratified_split_manifest"
-        ),
-        "events_ab_srm_check": _staged18("events_ab_srm_check"),
-        "events_cuped_variance_report": _staged18(
-            "events_cuped_variance_report"
-        ),
-        "orders_did_readout": _staged18("orders_did_readout"),
-        "events_power_mde_planner": _staged18("events_power_mde_planner"),
-        "part_price_type_anova": _staged19("part_price_type_anova"),
-        "orders_runs_test": _staged19("orders_runs_test"),
-    }
-)
-
-# round-9 staged candidates (llm/staged_r9.py). orders_basket_lift is
-# deliberately absent: the key-shift inflater duplicates baskets, so
-# SUPPORT itself inflates (the triangle-counting caveat class).
-EXTRA_FNS.update(
-    {
-        name: _staged9(name)
-        for name in (
-            "docs_bpe_roundtrip_contract",
-            "lineitem_ship_latency_histogram",
-            "orders_seasonality_profile",
-            "embeddings_norm_outliers",
-            "customer_l_diversity",
-            "docs_boilerplate_ngram_mass",
-            "docs_pii_scrub_contract",
-            "events_error_cusum",
-            "embeddings_cosine_calibration",
-        )
-    }
-)
-
-# round-8 staged candidates (llm/staged_r8.py)
-EXTRA_FNS.update(
-    {
-        name: _staged8(name)
-        for name in (
-            "docs_token_space_contamination",
-            "retrieval_rerank_cascade",
-            "docs_quality_brier_reliability",
-            "docs_source_distinctive_terms",
-            "docs_cross_source_duplication",
-            "events_weekly_retention_cohorts",
-            "events_user_lifecycle",
-            "docs_rag_chunk_plan",
-            "embeddings_dimension_stats",
-            "docs_lang_confusion_matrix",
-            "customer_spend_gini_contract",
-            "docs_dedup_survivorship_mix_shift",
-            "events_session_stats",
-            "docs_neardup_threshold_sweep",
-            "events_conversion_lag_histogram",
-            "embeddings_pq_distortion_report",
-            "docs_gopher_rule_attribution",
-        )
-    }
-)
 MAX_EXPONENT = {
     # Near-dup family (r4): banded LSH / label propagation are linear;
     # embeddings_dedup_apply rides the documented exact all-pairs GEMM.
@@ -842,7 +394,6 @@ MAX_EXPONENT = {
     # bounded manifest rollup; the quantization sweep is a scan with a
     # constant 4-way fan-out into a 4-group agg.
     "docs_curriculum_shard_manifest": 1.35,
-    "embeddings_quantization_sweep": 1.35,
     # r11 seed: three chained Arrow map stages over a BOUNDED synthetic
     # video block (doc_id < 200) — zero shuffle at every scale (the
     # vacuous-pass class, like docs_rag_chunk_plan).
@@ -869,178 +420,60 @@ MAX_EXPONENT = {
     # r11 closer: t-closeness is one corpus scan to the (QI × segment)
     # hash aggregate; everything downstream is QI-domain metadata.
     "customer_t_closeness": 1.35,
-    # r12 slate: all claimed linear-or-better shuffle designs — the KS
-    # drift aggregates to the (source × length-value) domain; the
-    # watermark sweep is a keyed window + |sources|-row rollup; the
-    # compaction planner and novelty curve reduce to metadata frames;
-    # the Markov chain is a per-user window + |states|² iterations; the
-    # deletion contract is anti-joins with a bounded tombstone side;
-    # VAD/patchify are synthetic-block Arrow maps (zero/keyed shuffle);
-    # nDCG and mutual-kNN stream the corpus against constant frames.
-    "docs_length_ks_drift": 1.35,
-    "events_late_arrival_watermark_sweep": 1.35,
-    "lineitem_compaction_plan": 1.35,
-    "events_markov_stationary": 1.35,
-    "docs_audio_vad_segments": 1.35,
-    "docs_patchify_contract": 1.35,
-    "docs_deletion_propagation_contract": 1.35,
-    "retrieval_ndcg_eval": 1.35,
-    "corpus_source_novelty_curve": 1.35,
-    "embeddings_mutual_knn_fraction": 1.35,
-    # r13 seed: AUC = (source, score)-domain hash agg + two-level
-    # prefix sum; manifest = one map-side-combinable aggregate; BT =
-    # id-adjacent duel join + |sources|²-bounded fit.
-    "docs_quality_auc_rank": 1.35,
-    "corpus_shard_manifest_digests": 1.35,
-    "orders_bradley_terry_step": 1.35,
-    # cluster stability composes the posting-list pair plan (bounded
-    # by the registered docs_dup_clusters behavior) x 3 CC rungs;
-    # centroid shift is the (label x dim) moment shape; matryoshka
-    # streams the corpus per rung vs the broadcast probe block; the
-    # state sweep is two keyed hash aggregates.
-    "docs_dup_cluster_stability": 1.35,
-    "embeddings_label_centroid_shift": 1.35,
-    "embeddings_matryoshka_recall_curve": 1.35,
-    "events_stream_state_size_sweep": 1.35,
-    # attribution's touch join fans out per user (bounded activity);
-    # the budget ladder and ROI curve reduce to metadata frames on top
-    # of registered member plans.
-    "events_funnel_attribution_models": 1.35,
-    "corpus_token_budget_ladder": 1.35,
-    "docs_dedup_roi_curve": 1.35,
-    # r14 seed: linear-or-better by construction (broadcast codebooks,
-    # footer metadata, cluster-map composition).
-    "embeddings_pq_adc_recall_curve": 1.35,
-    "docs_string_pruning_contract": 1.35,
-    "docs_license_propagation_contract": 1.35,
-    # BPE curve rides the serial trainer's Zipf-compressed word frame;
-    # alignment is a constant block; survival is keyed windows + a
-    # session-frame ladder.
-    "docs_bpe_vocab_size_curve": 1.35,
-    "docs_image_text_alignment_contract": 1.35,
-    "events_session_survival_curve": 1.35,
-    # salted join shuffles the fact once on the salted key; temporal
-    # join is a broadcast interval BNLJ + |versions|-row rollup.
-    "lineitem_salted_join_contract": 1.35,
-    "orders_temporal_dim_join": 1.35,
-    # reciprocity = the PageRank edge aggregate + a ≤|nations|²
-    # self-join on the aggregated frame.
-    "nation_trade_reciprocity": 1.35,
-    # r15 seed: one (type, hour) hash aggregate + calendar spine;
-    # HHI = one broadcast-dim join to a fixed-vocabulary domain.
-    "events_burstiness_fano": 1.35,
-    "part_type_brand_hhi": 1.35,
-    # backlog = per-order span aggregate + day-domain prefix scaffold.
-    "orders_backlog_timeseries": 1.35,
-    # r15 growth: ablation lattice = the dedup-keep-first window + an
-    # 8-group aggregate; split contract = two source-keyed aggregates
-    # (the group agg rides the same text-hash shuffle exact dedup
-    # pays); TTR is map-side array math + a (source, band) aggregate;
-    # half-life is map-side weight arithmetic + per-user then per-band
-    # aggregates (users ~k under key-shifted inflation); TVD runs on
-    # the (month, priority) metadata domain.
-    "corpus_filter_ablation_lattice": 1.35,
-    "docs_split_leakage_contract": 1.35,
-    "docs_ttr_window_profile": 1.35,
-    "events_halflife_engagement": 1.35,
-    "orders_priority_mix_drift_tvd": 1.35,
-    # r16 seed: the hier contract runs the O(n log k) tree (stressed
-    # standalone at 1.173) plus the flat scaled-k comparator (0.967);
-    # gap percentiles are a keyed lag window + 5-group exact
-    # percentile buffers; session lift is the shared sessionization
-    # window + a session-keyed pair emit bounded by the fixed type
-    # vocabulary (C(8,2) per session).
+    # the hier contract runs the O(n log k) tree (stressed standalone
+    # at 1.173) plus the flat scaled-k comparator (0.967).
     "embeddings_semdedup_hier_contract": 1.35,
-    "customer_order_gap_percentiles": 1.35,
-    "events_session_type_lift": 1.35,
-    # coverage ladder = one word-count aggregate + a constant top-500
-    # head; peak concurrency = sessionization + a 2-rows-per-session
+    # peak concurrency = sessionization + a 2-rows-per-session
     # boundary frame on the banded prefix scaffold.
-    "docs_vocab_coverage_ladder": 1.35,
     "events_peak_concurrency": 1.35,
-    # temperature ladder = one per-lang token aggregate + metadata
-    # math; cohort repeat = two custkey-keyed aggregates + one
-    # same-key join (exchange reuse), cohort rollup calendar-bounded.
-    "docs_lang_temperature_ladder": 1.35,
-    "customer_cohort_repeat_rate": 1.35,
-    # trimmed stats = per-type exact-percentile aggregate + one
-    # broadcast-bounds conditional aggregate; association runs on the
-    # vocabulary-bounded contingency domain after one scan.
-    "events_value_iqr_trimmed_stats": 1.35,
-    "docs_source_lang_association": 1.35,
-    # time integral = the shared keyed sessionization + a ~1-fan day
-    # explode + one day-group agg — event-volume work is the window
-    # pass, like the peak query it twins.
-    "events_concurrency_time_integral": 1.35,
-    # r17 seed. concurrent pairs' banded self-join grows with hourly
-    # concurrency² — under uniform event inflation concurrency rises
-    # linearly, so the pair stage is intrinsically steeper than the
-    # scan (like the registered q·n kNN contracts); the 1.9 ceiling
-    # pins it BELOW the all-pairs cliff while admitting the output's
-    # own quadratic density growth. Autocorr is one day-group agg +
-    # metadata-spine math; aHash is pure Arrow map stages + a ≤2^16-
-    # group agg.
-    "events_concurrent_user_pairs": 1.9,
-    "orders_daily_autocorr": 1.35,
-    "docs_image_ahash_neardup": 1.35,
-    # error context is a SAME-USER (user, band) equi-join — the
-    # inflater key-shifts users, so per-key density stays constant and
-    # the join grows with the error count; business-day latency is the
-    # co-partitioned fact join + a 5-group agg of O(1) integer math.
-    "events_error_context_window": 1.35,
-    "lineitem_business_day_latency": 1.35,
-    # bootstrap is a map-side weight draw + a B-group agg; char
-    # entropy's explode collapses behind a (doc, char) map-side
-    # combine; churn frame and the AQP contract are single-key/
-    # one-row aggregates; DOW anomalies run on the calendar-bounded
-    # spine after one per-day count.
+    # bootstrap is a map-side weight draw + a B-group agg.
     "docs_length_bootstrap_ci": 1.35,
-    "docs_char_entropy_quality": 1.35,
+    # llm/staged_r14–staged_r19: aggregates over bounded metadata
+    # domains after one scan, so near-linear like the rest.
+    "corpus_filter_ablation_lattice": 1.35,
     "customer_churn_training_frame": 1.35,
-    "lineitem_approx_percentile_contract": 1.35,
-    "orders_dow_adjusted_anomalies": 1.35,
-    # r18 seed: CUPED is one user-key agg + scalar moments; forecast
-    # eval runs on the calendar spine after one per-day count; path
-    # trigrams ride the shared sessionization window into a
-    # vocabulary-bounded (<=|types|^3) aggregate.
+    "customer_cohort_repeat_rate": 1.35,
+    "customer_order_gap_percentiles": 1.35,
+    "docs_bpe_vocab_size_curve": 1.35,
+    "docs_char_entropy_quality": 1.35,
+    "docs_image_text_alignment_contract": 1.35,
+    "docs_lang_temperature_ladder": 1.35,
+    "docs_license_propagation_contract": 1.35,
+    "docs_simhash_bit_bias": 1.35,
+    "docs_source_lang_association": 1.35,
+    "docs_stratified_split_manifest": 1.35,
+    "docs_ttr_window_profile": 1.35,
+    "docs_vocab_coverage_ladder": 1.35,
+    "embeddings_quantization_sweep": 1.35,
     "events_ab_cuped_readout": 1.35,
-    "orders_naive_forecast_eval": 1.35,
+    "events_ab_srm_check": 1.35,
+    "events_burstiness_fano": 1.35,
+    "events_error_context_window": 1.35,
+    "events_halflife_engagement": 1.35,
+    "events_power_mde_planner": 1.35,
     "events_session_path_trigrams": 1.35,
-    # r19 seed: both curve keys are computed map-side in one orders
-    # scan (the anchor is a broadcast 1-row aggregate) and everything
-    # after the (layout, file) zone-map agg is metadata-sized; the OLS
-    # trend and the Benford screen are single-scan hash aggregates
-    # onto calendar/digit-bounded groups.
-    "orders_hilbert_vs_zorder_quality": 1.35,
-    "orders_priority_trend_ols": 1.35,
+    "events_session_survival_curve": 1.35,
+    "events_type_entropy_rate": 1.35,
+    "events_value_iqr_trimmed_stats": 1.35,
+    "events_weekly_retention_triangle": 1.35,
+    "lineitem_approx_percentile_contract": 1.35,
+    "lineitem_business_day_latency": 1.35,
+    "lineitem_salted_join_contract": 1.35,
+    "nation_trade_reciprocity": 1.35,
     "orders_benford_first_digit": 1.35,
-    # r11 slate growth: Theil–Sen and the changepoint run their pair /
-    # window work on calendar-bounded metadata after one hash agg; the
-    # bit-bias screen is the simhash_table one-shuffle layout into a
-    # 60-group unpivot; the retention triangle is distinct + a
-    # user-keyed join into a calendar²-bounded matrix; entropy rate is
-    # the Markov lead-window into |types|² metadata; the split
-    # manifest is a single-scan two-level aggregate.
+    "orders_daily_autocorr": 1.35,
+    "orders_did_readout": 1.35,
+    "orders_dow_adjusted_anomalies": 1.35,
+    "orders_hilbert_vs_zorder_quality": 1.35,
+    "orders_naive_forecast_eval": 1.35,
+    "orders_priority_mix_drift_tvd": 1.35,
+    "orders_priority_trend_ols": 1.35,
+    "orders_runs_test": 1.35,
+    "orders_temporal_dim_join": 1.35,
     "orders_theil_sen_trend": 1.35,
     "orders_volume_changepoint": 1.35,
-    "docs_simhash_bit_bias": 1.35,
-    "events_weekly_retention_triangle": 1.35,
-    "events_type_entropy_rate": 1.35,
-    "docs_stratified_split_manifest": 1.35,
-    # r18 close (experimentation shelf): SRM and the MDE planner are
-    # distinct-user / per-user hash aggregates into 2-4 row frames;
-    # the CUPED variance report is the CUPED per-user aggregate plus
-    # scalar-moment broadcasts; DiD is a 4-group aggregate with a
-    # 1-row pivot broadcast back.
-    "events_ab_srm_check": 1.35,
-    "events_cuped_variance_report": 1.35,
-    "orders_did_readout": 1.35,
-    "events_power_mde_planner": 1.35,
-    # r19 growth: ANOVA is one |types|-group aggregate + a 1-row F
-    # broadcast; the runs test does its lag window on the
-    # calendar-bounded spine after one (priority, day) hash agg.
     "part_price_type_anova": 1.35,
-    "orders_runs_test": 1.35,
+    "part_type_brand_hhi": 1.35,
 }
 EVENTLOG_DIR = "/tmp/spark-stress-eventlogs"
 
