@@ -33,8 +33,6 @@ FIXTURE_TABLES = (
 # Length of every ``embeddings.embedding`` vector in the fixtures.
 EMB_DIM = 64
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

@@ -61,8 +61,9 @@ EOW = "▁"  # end-of-word marker (SentencePiece-style block char)
 # oracles replay, so every registered query at N_MERGES=6 stays on the
 # exact path); budgets above it default to the batched top-m
 # non-overlapping trainer (batch=8, measured 2.21× at 200 merges in
-# BENCH_r06.json `bpe_200_merges`) — the production-tokenizer path,
-# where a 30k-merge run cannot afford one shuffle+argmax per merge.
+# bench_archive/BENCH_r06.json `bpe_200_merges`) — the
+# production-tokenizer path, where a 30k-merge run cannot afford one
+# shuffle+argmax per merge.
 BPE_BATCH_THRESHOLD = 16
 BPE_BATCH = 8
 

@@ -41,6 +41,7 @@ import time
 from dataclasses import dataclass
 from datetime import datetime
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -71,19 +72,13 @@ class MedallionConfig:
     dead_letter_keys: tuple[str, ...]
     default_watermark: datetime
     partition_col: str = "load_month"  # derived yyyy-MM partition column
-    # Driver-side pyarrow/footer shortcuts only apply on a local
-    # filesystem; False forces the distributed Spark paths everywhere —
-    # the code a real cluster (s3://, hdfs://) runs, kept testable
-    # locally by flipping this flag.
-    local_fastpaths: bool = True
     # AQE advisory partition size applied around the bronze/silver
-    # writes (REBALANCE hint sizing). None → $SPARK_GRAFT_WRITE_ADVISORY
-    # or "4m". The local default keeps a MB-scale month batch spread
-    # over several encode tasks instead of one straggler (measured
-    # 0.93 s -> 0.56 s per batch write at sf0.1); production should set
-    # 256m-512m so post-compression parquet files land in the
-    # 128 MB - 1 GB range the I/O guide targets.
-    write_advisory: str | None = None
+    # writes (REBALANCE hint sizing). The "4m" default keeps a MB-scale
+    # month batch spread over several encode tasks instead of one
+    # straggler (measured 0.93 s -> 0.56 s per batch write at sf0.1);
+    # production should set 256m-512m so post-compression parquet
+    # files land in the 128 MB - 1 GB range the I/O guide targets.
+    write_advisory: str = "4m"
 
 
 @dataclass(frozen=True)
@@ -105,17 +100,15 @@ class MedallionPipeline:
         self.silver_path = os.path.join(w, "silver")
         self.gold_path = os.path.join(w, "gold")
 
-    def _local(self, path: str) -> bool:
+    @staticmethod
+    def _local(path: str) -> bool:
         """True when driver-side pyarrow/footer shortcuts may be used
-        for ``path`` (local filesystem AND not disabled by config)."""
-        return self.cfg.local_fastpaths and "://" not in path
+        for ``path``: a plain local path. Any ``scheme://`` path
+        (``file://`` included) takes the distributed Spark paths a
+        cluster warehouse (s3://, hdfs://) runs."""
+        return "://" not in path
 
     # -- table access -----------------------------------------------------
-
-    def _write_advisory(self) -> str:
-        return self.cfg.write_advisory or os.environ.get(
-            "SPARK_GRAFT_WRITE_ADVISORY", "4m"
-        )
 
     # Class-level guard enforcing the single-threaded invariant the
     # docstring below relies on: the session conf is GLOBAL, so a
@@ -136,7 +129,7 @@ class MedallionPipeline:
         @contextlib.contextmanager
         def scope():
             key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-            advisory = self._write_advisory()
+            advisory = self.cfg.write_advisory
             if not MedallionPipeline._advisory_lock.acquire(blocking=False):
                 raise RuntimeError(
                     "_advisory_scope is not reentrant/concurrent: another "
@@ -164,15 +157,22 @@ class MedallionPipeline:
         return scope()
 
     def _read_or_none(self, path: str) -> DataFrame | None:
+        """The table at ``path``, or None when it does not exist yet.
+        Only "absent" maps to None: a missing path, or a directory with
+        no data files (an empty partitioned write leaves just
+        ``_SUCCESS``). Every other read failure (a corrupt file, a
+        permission or network error) propagates, so it can never pass
+        for an empty table and reset the watermark."""
         # Local-path existence check first: avoids Spark logging a noisy
-        # FileNotFound stacktrace for the expected first-run case. The
-        # try/except stays for non-local filesystems (s3://, hdfs://).
-        if "://" not in path and not os.path.exists(path):
+        # FileNotFound stacktrace for the expected first-run case.
+        if self._local(path) and not os.path.exists(path):
             return None
         try:
             return self.spark.read.parquet(path)
-        except Exception:
-            return None
+        except AnalysisException as exc:
+            if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                return None
+            raise
 
     def bronze(self) -> DataFrame | None:
         return self._read_or_none(self.bronze_path)
@@ -409,7 +409,10 @@ class MedallionPipeline:
         """X6 — destructive environment reset (the reference's
         DROP DATABASE ... WITH (FORCE) + recreate,
         `src/utils/database_connection.py:45-73`, `db_setup.py:59-60`):
-        removes the whole warehouse directory tree."""
-        import shutil
-
-        shutil.rmtree(self.cfg.warehouse, ignore_errors=True)
+        removes the whole warehouse tree through the Hadoop FileSystem
+        of its path, so local, ``file://`` and remote warehouses take
+        the same code path."""
+        jvm = self.spark.sparkContext._jvm
+        path = jvm.org.apache.hadoop.fs.Path(self.cfg.warehouse)
+        fs = path.getFileSystem(self.spark.sparkContext._jsc.hadoopConfiguration())
+        fs.delete(path, True)

@@ -30,9 +30,7 @@ from ..sources.schemas import (
 DEFAULT_WATERMARK = datetime(2024, 1, 1)
 
 
-def taxi_pipeline(
-    spark: SparkSession, warehouse: str, local_fastpaths: bool = True
-) -> MedallionPipeline:
+def taxi_pipeline(spark: SparkSession, warehouse: str) -> MedallionPipeline:
     return MedallionPipeline(
         spark,
         MedallionConfig(
@@ -40,7 +38,6 @@ def taxi_pipeline(
             ts_col="tpep_pickup_datetime",
             dead_letter_keys=INVALID_RECORDS_KEY,
             default_watermark=DEFAULT_WATERMARK,
-            local_fastpaths=local_fastpaths,
         ),
     )
 
@@ -151,16 +148,15 @@ def run_pipeline(
     spark: SparkSession,
     warehouse: str,
     monthly_batches: list[tuple[DataFrame, "MonthWindow"]],
-    local_fastpaths: bool = True,
 ) -> MedallionPipeline:
     """End-to-end: ingest each month incrementally, then silver full
     refresh, then gold views (`etl_pipeline_run.py:9-24`).
 
-    ``local_fastpaths=False`` forces the distributed (s3://-equivalent)
-    code paths for watermark reads and metadata appends — what a real
-    cluster runs; benched separately so the headline number doesn't ride
-    driver-side pyarrow shortcuts."""
-    pipe = taxi_pipeline(spark, warehouse, local_fastpaths=local_fastpaths)
+    A plain local ``warehouse`` path uses the driver-side pyarrow
+    shortcuts for watermark reads and metadata appends; a
+    ``scheme://`` warehouse (``file://`` included) runs the distributed
+    code paths a real cluster takes."""
+    pipe = taxi_pipeline(spark, warehouse)
     for batch, window in monthly_batches:
         pipe.ingest_batch(batch, window)
     pipe.silver_refresh(silver_transform, partition_col="pickup_month")

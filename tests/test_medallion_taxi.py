@@ -44,14 +44,14 @@ def win(month: int) -> MonthWindow:
     return MonthWindow(datetime(2024, month, 1), datetime(2024, month + 1, 1))
 
 
-@pytest.mark.parametrize("local_fastpaths", [True, False], ids=["local", "cluster"])
-def test_full_medallion_run(spark, taxi_df, tmp_path, local_fastpaths):
-    # local=True exercises the driver-side pyarrow/footer shortcuts;
-    # cluster=False forces the distributed Spark code paths a real
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["local", "cluster"])
+def test_full_medallion_run(spark, taxi_df, tmp_path, scheme):
+    # A plain path exercises the driver-side pyarrow/footer shortcuts;
+    # a file:// warehouse takes the distributed Spark code paths a real
     # s3://-warehouse deployment runs (watermark read, footer-free
     # watermark recompute, Spark meta append) — same end-to-end
     # idempotency evidence on both.
-    pipe = taxi_pipeline(spark, str(tmp_path / "wh"), local_fastpaths=local_fastpaths)
+    pipe = taxi_pipeline(spark, scheme + str(tmp_path / "wh"))
 
     jan = month_batch(taxi_df, 1)
     feb = month_batch(taxi_df, 2).cache()
@@ -110,6 +110,10 @@ def test_full_medallion_run(spark, taxi_df, tmp_path, local_fastpaths):
     assert len(pm) == 7
     mm = spark.sql("SELECT * FROM gold_monthly_metrics").collect()
     assert {r["month"] for r in mm} == {"January", "February"}
+
+    # destroy() removes the warehouse for a plain path and a URI alike
+    pipe.destroy()
+    assert not (tmp_path / "wh").exists()
 
 
 def test_fetch_month_to_bronze_offline(spark, taxi_df, tmp_path):
@@ -263,5 +267,31 @@ def test_advisory_scope_releases_lock_when_conf_set_raises(spark, tmp_path, monk
 
     before = spark.conf.get(key, None)
     with pipe._advisory_scope():
-        assert spark.conf.get(key) == pipe._write_advisory()
+        assert spark.conf.get(key) == pipe.cfg.write_advisory
     assert spark.conf.get(key, None) == before
+
+
+def test_uri_warehouse_raises_on_corrupt_meta(spark, tmp_path):
+    """A failed read of a ``scheme://`` table is not "table absent": a
+    non-parquet file in ``meta/runs`` must raise, not reset the
+    watermark to its default."""
+    wh = tmp_path / "wh"
+    pipe = taxi_pipeline(spark, "file://" + str(wh))
+    assert pipe.current_watermark() == pipe.cfg.default_watermark  # absent
+    runs = wh / "meta" / "runs"
+    runs.mkdir(parents=True)
+    (runs / "run-corrupt.parquet").write_text("not a parquet file")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        pipe.current_watermark()
+
+
+def test_uri_warehouse_empty_first_batch(spark, taxi_df, tmp_path):
+    """An empty partitioned bronze write leaves only ``_SUCCESS``; that
+    table reads as absent, so the ingest and the silver refresh succeed
+    with zero rows on a ``scheme://`` warehouse."""
+    pipe = taxi_pipeline(spark, "file://" + str(tmp_path / "wh"))
+    res = pipe.ingest_batch(month_batch(taxi_df, 1).limit(0), win(1))
+    assert res.loaded == 0 and res.dead_lettered == 0
+    assert res.watermark == pipe.cfg.default_watermark
+    assert pipe.bronze() is None
+    assert pipe.silver_refresh(silver_transform) == 0

@@ -5,7 +5,7 @@ Usage:
 
 Writes OUT_DIR/<query>_<TAG>.txt (e.g. ``plans/r12 before ...`` then
 ``plans/r12 after ...``). Driver-only (no job execution). The fixture
-directory is ``catalog.DEFAULT_SF_DIR`` ($SPARK_GRAFT_SF_DIR).
+directory is $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
 
 from __future__ import annotations
@@ -22,9 +22,9 @@ def main() -> int:
         print(__doc__, file=sys.stderr)
         return 2
     out_dir, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
 
-    from python_nyc_taxi_data_pipeline_spark.catalog import DEFAULT_SF_DIR as SF_DIR
     from python_nyc_taxi_data_pipeline_spark.registry import all_queries
     from python_nyc_taxi_data_pipeline_spark.session import get_session
 
@@ -34,13 +34,13 @@ def main() -> int:
         if name not in qs:
             print(f"SKIP {name}: not registered", file=sys.stderr)
             continue
-        df = qs[name].fn(spark, SF_DIR)
+        df = qs[name].fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
-            f.write(f"# {name} — explain('formatted') at {SF_DIR} ({tag})\n")
+            f.write(f"# {name} — explain('formatted') at {sf_dir} ({tag})\n")
             f.write(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
     spark.stop()

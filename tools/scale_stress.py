@@ -27,8 +27,7 @@ Inflation preserves semantics-per-copy:
   exact path's pair count is intrinsically quadratic-rate there).
 
 Usage:  python tools/scale_stress.py [base_sf_dir]
-Writes STRESS_local.json at the repo root; bench.py folds the summary
-into its compact line when the file exists.
+Writes STRESS_local.json at the repo root.
 """
 
 from __future__ import annotations
