@@ -8,13 +8,21 @@ names to files, so plans never hard-code paths.
 Scale note: reads go through ``spark.read.parquet`` so Catalyst gets
 predicate pushdown / column pruning / partition pruning for free; no
 schema inference happens on the driver beyond parquet footer reads.
+
+Rows built on the driver (dims, ladders, centroids, collected results)
+enter Spark through ``local_frame`` alone, as an Arrow ``LocalRelation``.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 # Driver-provided synthetic fixture tables (TESTDATA.md).
 FIXTURE_TABLES = (
@@ -120,3 +128,39 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view (for spark.sql plans)."""
     for name in FIXTURE_TABLES:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def arrow_table(rows: Iterable[Sequence], schema: T.StructType | str) -> pa.Table:
+    """Driver-side rows as a ``pyarrow.Table`` whose column types are
+    exactly ``schema``'s Spark types (a DDL string or ``StructType``).
+    Each row passes the type check ``createDataFrame`` applies to a
+    list, so a float in a ``bigint`` column raises ``TypeError``
+    instead of truncating in ``pa.array``."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    rows = list(rows)
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    return pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: T.StructType | str
+) -> DataFrame:
+    """The one way driver-side rows enter Spark: an Arrow
+    ``LocalRelation`` (the rows travel inside the plan), never the
+    Python-RDD ``LogicalRDD`` that ``createDataFrame`` plans for a list:
+    every action on that one runs a Python-worker job (a ``collect`` of
+    the 7-row payment_type dim took 0.25-0.31 s that way against
+    0.007-0.015 s as Arrow, on a 4-core host). Same schema and rows as
+    the list path, with or without
+    ``spark.sql.execution.arrow.pyspark.enabled``."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import register
 
 N_MERGES = 6
@@ -358,7 +358,8 @@ def docs_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per round with the merged pair and its exact weighted count
     (see module docstring for the distributed loop)."""
     merges, _ = bpe_train(spark, sf_dir, exact=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, a, b, c) for r, a, b, c in merges],
         "round int, left_sym string, right_sym string, pair_count long",
     )

@@ -37,7 +37,10 @@ def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 25
 ) -> DataFrame:
     """Min-label propagation. Input: undirected edge list. Output:
-    (node, component) where component = min node id reachable."""
+    (node, component) where component = min node id reachable.
+
+    Raises ``ValueError`` when ``max_iter`` rounds pass without a round
+    that moves no label: the labels would not be the components yet."""
     sym = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
@@ -102,6 +105,10 @@ def connected_components(
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
+    else:
+        raise ValueError(
+            f"connected_components did not converge in max_iter={max_iter} rounds"
+        )
     return labels
 
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import register
 
 PHRASE_DELTA = 5  # discount: suppresses rare-pair flukes
@@ -113,7 +113,8 @@ def docs_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = scored.orderBy(
         F.desc("phrase_score"), F.asc("a"), F.asc("b")
     ).take(TOP_PHRASES)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (r["a"], r["b"], r["c_ab"], r["c_a"], r["c_b"], r["phrase_score"], i + 1)
             for i, r in enumerate(top)

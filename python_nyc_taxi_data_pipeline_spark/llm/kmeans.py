@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import register
 
 K_CENTROIDS = 8
@@ -34,6 +34,16 @@ Centroid = tuple[int, list[float]]
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _centroid_frame(spark: SparkSession, centroids: list[Centroid]) -> DataFrame:
+    """The k×d centroid matrix (or PQ codebook) as a one-row ``cents``
+    frame for a broadcast attach."""
+    return local_frame(
+        spark,
+        [([{"c": int(cid), "v": [float(x) for x in cvec]} for cid, cvec in centroids],)],
+        "cents array<struct<c:bigint,v:array<double>>>",
+    )
 
 
 def assign_nearest(vectors: DataFrame, centroids: list[Centroid]) -> DataFrame:
@@ -48,16 +58,7 @@ def assign_nearest(vectors: DataFrame, centroids: list[Centroid]) -> DataFrame:
     variant spent ~5s/iteration in parse+analyze+codegen of a
     512-constant tree, re-paid every Lloyd round, dwarfing the actual
     scan. The argmin expression itself is constant-size in k and d."""
-    spark = vectors.sparkSession
-    cmat_df = spark.createDataFrame(
-        [(
-            [
-                {"c": int(cid), "v": [float(x) for x in cvec]}
-                for cid, cvec in centroids
-            ],
-        )],
-        "cents array<struct<c:bigint,v:array<double>>>",
-    )
+    cmat_df = _centroid_frame(vectors.sparkSession, centroids)
     best = F.expr(
         """array_min(transform(cents, s -> named_struct(
               'd', aggregate(zip_with(evec, s.v, (a, b) -> (a-b)*(a-b)),
@@ -287,6 +288,40 @@ PQ_CODES_ORACLE = f"""
     """
 
 
+def _pq_sub_dist(vec: str, cent: str, m: str, sub_dim: int) -> str:
+    """SQL: squared L2 distance between subspace ``m`` (0-based) of the
+    arrays ``vec`` and ``cent``, folded in dimension order."""
+    return f"""aggregate(
+        zip_with(slice({vec}, {m} * {sub_dim} + 1, {sub_dim}),
+                 slice({cent}, {m} * {sub_dim} + 1, {sub_dim}),
+                 (a, b) -> (a-b)*(a-b)),
+        CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"""
+
+
+def _pq_coded(vectors: DataFrame, seeds: list[Centroid], *keep: str) -> DataFrame:
+    """(``keep``…, m, best): one row per (vector, subspace ``m``) with
+    ``best.c`` the nearest codebook entry of that sub-vector (exact L2,
+    tie-break on the lowest code) and ``best.d`` its squared distance.
+    The codebook ``seeds`` is attached as a broadcast one-row frame (see
+    ``assign_nearest``); the explode to ``PQ_M`` rows is the only
+    fan-out, with no shuffle."""
+    sub_dim = len(seeds[0][1]) // PQ_M
+    best = F.expr(
+        "array_min(transform(cents, s -> named_struct("
+        f"'d', {_pq_sub_dist('evec', 's.v', 'm', sub_dim)}, 'c', s.c)))"
+    )
+    return (
+        vectors.crossJoin(F.broadcast(_centroid_frame(vectors.sparkSession, seeds)))
+        .select(
+            *keep,
+            "evec",
+            "cents",
+            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
+        )
+        .select(*keep, "m", best.alias("best"))
+    )
+
+
 @register(
     "embeddings_pq_codes",
     oracle=PQ_CODES_ORACLE,
@@ -317,87 +352,16 @@ def embeddings_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "embeddings"), vectors_plain
     )
     seeds = _seed_centroids(vectors_plain, PQ_K)
-    cmat_df = spark.createDataFrame(
-        [(
-            [
-                {"c": int(cid), "v": [float(x) for x in cvec]}
-                for cid, cvec in seeds
-            ],
-        )],
-        "cents array<struct<c:bigint,v:array<double>>>",
-    )
-    sub_dim = len(seeds[0][1]) // PQ_M
-    best = F.expr(
-        f"""array_min(transform(cents, s -> named_struct(
-              'd', aggregate(
-                     zip_with(slice(evec, m * {sub_dim} + 1, {sub_dim}),
-                              slice(s.v,  m * {sub_dim} + 1, {sub_dim}),
-                              (a, b) -> (a-b)*(a-b)),
-                     CAST(0.0 AS DOUBLE), (acc, x) -> acc + x),
-              'c', s.c)))"""
-    )
-    return (
-        vectors.crossJoin(F.broadcast(cmat_df))
-        .select(
-            "vec_id",
-            "evec",
-            "cents",
-            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        )
-        .select(
-            "vec_id",
-            F.col("m").cast("long").alias("subspace"),
-            best["c"].alias("code"),
-            F.round(best["d"], 4).alias("dist_sq"),
-        )
+    return _pq_coded(vectors, seeds, "vec_id").select(
+        "vec_id",
+        F.col("m").cast("long").alias("subspace"),
+        F.col("best.c").alias("code"),
+        F.round("best.d", 4).alias("dist_sq"),
     )
 
 
 # ---------------------------------------------------------------------------
 # IVF-PQ search: coarse-cell pruning + asymmetric distance computation (ADC)
-
-
-def _pq_codes_with_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, label, m, code): every vector's per-subspace PQ code,
-    carrying the coarse cell (``label``) for IVF pruning."""
-    # fan-out measured and rejected here (r12 A/B: knn_pq_adc warm
-    # 2.29→2.56 with it) — see _load_vectors.
-    vectors = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double(F.col("embedding")).alias("evec")
-    )
-    seeds = _seed_centroids(
-        vectors.select("vec_id", "evec"), PQ_K
-    )
-    cmat_df = spark.createDataFrame(
-        [(
-            [
-                {"c": int(cid), "v": [float(x) for x in cvec]}
-                for cid, cvec in seeds
-            ],
-        )],
-        "cents array<struct<c:bigint,v:array<double>>>",
-    )
-    sub_dim = len(seeds[0][1]) // PQ_M
-    best = F.expr(
-        f"""array_min(transform(cents, s -> named_struct(
-              'd', aggregate(
-                     zip_with(slice(evec, m * {sub_dim} + 1, {sub_dim}),
-                              slice(s.v,  m * {sub_dim} + 1, {sub_dim}),
-                              (a, b) -> (a-b)*(a-b)),
-                     CAST(0.0 AS DOUBLE), (acc, x) -> acc + x),
-              'c', s.c)))"""
-    )
-    return (
-        vectors.crossJoin(F.broadcast(cmat_df))
-        .select(
-            "vec_id",
-            "label",
-            "evec",
-            "cents",
-            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("m"),
-        )
-        .select("vec_id", "label", "evec", "m", best["c"].alias("code"))
-    )
 
 
 def _adc_oracle() -> str:
@@ -481,23 +445,16 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .similarity import QUERY_MOD, TOP_K
 
-    codes = _pq_codes_with_label(spark, sf_dir)
-    seeds = _seed_centroids(
-        load(spark, sf_dir, "embeddings").select(
-            "vec_id", _as_double(F.col("embedding")).alias("evec")
-        ),
-        PQ_K,
+    # fan-out measured and rejected here (r12 A/B: knn_pq_adc warm
+    # 2.29→2.56 with it) — see _load_vectors.
+    vectors = load(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", _as_double(F.col("embedding")).alias("evec")
+    )
+    seeds = _seed_centroids(vectors, PQ_K)  # the one codebook collect
+    codes = _pq_coded(vectors, seeds, "vec_id", "label").select(
+        "vec_id", "label", "m", F.col("best.c").alias("code")
     )
     sub_dim = len(seeds[0][1]) // PQ_M
-    cmat_df = spark.createDataFrame(
-        [(
-            [
-                {"c": int(cid), "v": [float(x) for x in cvec]}
-                for cid, cvec in seeds
-            ],
-        )],
-        "cents array<struct<c:bigint,v:array<double>>>",
-    )
     # LUT: per (query, subspace, code) partial distance — exact query
     # vector vs codebook centroid. One generator per select (Spark
     # allows a single explode per projection): subspaces first, then
@@ -512,7 +469,7 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     lut = (
-        queries.crossJoin(F.broadcast(cmat_df))
+        queries.crossJoin(F.broadcast(_centroid_frame(spark, seeds)))
         .select(
             "query_id",
             "qlabel",
@@ -532,16 +489,10 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qlabel",
             "qm",
             F.col("cent.c").alias("qcode"),
-            F.expr(
-                f"""aggregate(
-                      zip_with(slice(qvec, qm * {sub_dim} + 1, {sub_dim}),
-                               slice(cent.v, qm * {sub_dim} + 1, {sub_dim}),
-                               (a, b) -> (a-b)*(a-b)),
-                      CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"""
-            ).alias("pd"),
+            F.expr(_pq_sub_dist("qvec", "cent.v", "qm", sub_dim)).alias("pd"),
         )
     )
-    scored = codes.select("vec_id", "label", "m", "code").join(
+    scored = codes.join(
         F.broadcast(lut),
         (F.col("m") == F.col("qm"))
         & (F.col("code") == F.col("qcode"))

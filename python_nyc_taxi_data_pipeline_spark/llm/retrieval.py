@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import register
 
 BM25_K1 = 1.2
@@ -152,7 +152,7 @@ def docs_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query, doc), bounded top-k window."""
     d = load(spark, sf_dir, "documents")
     terms_df = F.broadcast(
-        spark.createDataFrame(_terms(), "query_id long, term_idx int, term string")
+        local_frame(spark, _terms(), "query_id long, term_idx int, term string")
     )
     vocab = sorted({t for _, _, t in _terms()})
 

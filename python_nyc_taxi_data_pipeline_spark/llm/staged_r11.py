@@ -73,7 +73,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import register
 
 
@@ -1099,9 +1099,7 @@ def embeddings_ivf_recall_probe_curve(
             ["probe_id", "cluster"],
         )
     )
-    ladder = spark.createDataFrame(
-        [(p,) for p in IVF_RC_NPROBES], "nprobe long"
-    )
+    ladder = local_frame(spark, [(p,) for p in IVF_RC_NPROBES], "nprobe long")
     return (
         found.crossJoin(F.broadcast(ladder))
         .groupBy("nprobe")

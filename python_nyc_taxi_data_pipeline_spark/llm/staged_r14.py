@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import register
 
 
@@ -483,9 +483,7 @@ def events_session_survival_curve(
     durations = sess.groupBy("user_id", "sess_id").agg(
         (F.max("ts_us") - F.min("ts_us")).alias("dur_us")
     )
-    ladder = spark.createDataFrame(
-        [(t,) for t in SSC_THRESH_S], "t long"
-    )
+    ladder = local_frame(spark, [(t,) for t in SSC_THRESH_S], "t long")
     return (
         durations.crossJoin(F.broadcast(ladder))
         .groupBy(F.col("t").alias("threshold_s"))
@@ -577,9 +575,7 @@ def lineitem_salted_join_contract(
         )
         .select("s_suppkey", F.col("n_name").alias("supplier_nation"))
     )
-    salts = spark.createDataFrame(
-        [(s,) for s in range(SJC_SALTS)], "salt long"
-    )
+    salts = local_frame(spark, [(s,) for s in range(SJC_SALTS)], "salt long")
     dim_rep = dim.crossJoin(F.broadcast(salts))
     return (
         li.join(
@@ -664,7 +660,8 @@ def orders_temporal_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("price_cents"),
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [(a, b, r) for a, b, r in TDJ_EPOCHS],
         "valid_from string, valid_to string, tariff long",
     ).select(

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import register
 
 
@@ -198,7 +198,7 @@ def docs_vocab_coverage_ladder(
         .groupBy("word", "n")
         .agg(F.count(F.lit(1)).alias("rk"))
     )
-    ladder = spark.createDataFrame([(k,) for k in VCL_KS], "k long")
+    ladder = local_frame(spark, [(k,) for k in VCL_KS], "k long")
     return (
         ranked.crossJoin(F.broadcast(ladder))
         .groupBy("k")
@@ -302,9 +302,7 @@ def docs_lang_temperature_ladder(
         .localCheckpoint(eager=True)
     )
     tot = per_lang.agg(F.sum("n_tokens").cast("double").alias("total"))
-    ladder = spark.createDataFrame(
-        [(a,) for a in TML_ALPHAS], "alpha double"
-    )
+    ladder = local_frame(spark, [(a,) for a in TML_ALPHAS], "alpha double")
     scored = (
         per_lang.crossJoin(F.broadcast(ladder))
         .crossJoin(F.broadcast(tot))

@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import register
 
 
@@ -146,7 +146,7 @@ def orders_daily_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     den = resid.agg(F.sum(F.col("r") * F.col("r")).cast("bigint").alias("den"))
-    lags = spark.createDataFrame([(k,) for k in DAC_LAGS], "lag bigint")
+    lags = local_frame(spark, [(k,) for k in DAC_LAGS], "lag bigint")
     a = resid.select(F.col("day").alias("a_day"), F.col("r").alias("a_r"))
     b = resid.select(F.col("day").alias("b_day"), F.col("r").alias("b_r"))
     num = (

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..registry import register
 
 
@@ -975,9 +975,7 @@ def events_power_mde_planner(
         F.sum("spend").cast("bigint").alias("s1"),
         F.sum(F.col("spend") * F.col("spend")).cast("bigint").alias("s2"),
     )
-    ladder = spark.createDataFrame(
-        [(m,) for m in MDE_LADDER], "mult bigint"
-    )
+    ladder = local_frame(spark, [(m,) for m in MDE_LADDER], "mult bigint")
     var = (
         "(CAST(s2 AS DOUBLE) / n"
         " - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))"

@@ -57,15 +57,13 @@ from ..registry import register
 
 # Reuse the r7 z-order contract's bucket geometry and predicate bank so
 # the two layout contracts are directly comparable.
-from .staged_r7 import (  # noqa: E402  (constants, not code reuse)
+from .staged_r7 import (  # noqa: E402
     L_FILE_SPAN as _L_SPAN,  # noqa: F401  (documented sibling)
     Z_BITS,
     Z_DIM,
-    Z_FILE_SPAN,
-    ZPRED_CB,
-    ZPRED_DB_HI,
-    ZPRED_DB_LO,
+    ZPRED_VALUES_SQL,
     _z_expr,
+    zorder_predicates,
 )
 
 
@@ -150,14 +148,7 @@ def _hilbert_oracle() -> str:
              CAST(sum(nr) AS BIGINT) AS total_rows
       FROM stats GROUP BY 1
     ), preds AS (
-      SELECT * FROM (VALUES
-        ('cust_point', CAST({ZPRED_CB} AS BIGINT),
-         CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)),
-        ('day_range', CAST(NULL AS BIGINT),
-         CAST({ZPRED_DB_LO} AS BIGINT), CAST({ZPRED_DB_HI} AS BIGINT)),
-        ('cust_and_day', CAST({ZPRED_CB} AS BIGINT),
-         CAST({ZPRED_DB_LO} AS BIGINT), CAST({ZPRED_DB_HI} AS BIGINT))
-      ) AS t(predicate, cb_point, db_lo, db_hi)
+      {ZPRED_VALUES_SQL}
     ), scanned AS (
       SELECT s.layout, p.predicate,
              CAST(sum(CASE WHEN
@@ -253,14 +244,7 @@ def orders_hilbert_vs_zorder_quality(
         .alias("bbox_area"),
         F.sum("nr").cast("bigint").alias("total_rows"),
     )
-    preds = spark.createDataFrame(
-        [
-            ("cust_point", ZPRED_CB, None, None),
-            ("day_range", None, ZPRED_DB_LO, ZPRED_DB_HI),
-            ("cust_and_day", ZPRED_CB, ZPRED_DB_LO, ZPRED_DB_HI),
-        ],
-        "predicate string, cb_point bigint, db_lo bigint, db_hi bigint",
-    )
+    preds = zorder_predicates(spark)
     hit = (
         (
             F.col("cb_point").isNull()

@@ -153,7 +153,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import EMB_DIM, fan_out_if_narrow, load
+from ..catalog import EMB_DIM, fan_out_if_narrow, load, local_frame
 from ..registry import register
 from .dedup import (
     DF_CEILING,
@@ -1468,9 +1468,7 @@ def embeddings_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(d):
         tr += C[i][i]
     rows = [(i, v[i], lam, lam / tr) for i in range(d)]
-    raw = spark.createDataFrame(
-        rows, "dim_idx bigint, l double, e double, r double"
-    )
+    raw = local_frame(spark, rows, "dim_idx bigint, l double, e double, r double")
     return raw.select(
         "dim_idx",
         (F.round("l", 6) + F.lit(0.0)).alias("loading"),
@@ -3498,7 +3496,8 @@ def orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # un-checkpointed plan read orders 4x)
         .localCheckpoint(eager=True)
     )
-    digits = spark.createDataFrame(
+    digits = local_frame(
+        spark,
         [(d, p) for d, p in zip(range(1, 10), BENFORD_P)],
         "digit int, p_exp double",
     )
@@ -4032,7 +4031,8 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for node, name in node_rows
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "nation string, pagerank_pico bigint, out_strength_e4 bigint,"
         " in_strength_e4 bigint, is_dangling boolean",
@@ -4050,6 +4050,29 @@ Z_FILE_SPAN = (Z_DIM * Z_DIM) // Z_FILES  # z-values per z-order file
 L_FILE_SPAN = Z_DIM // Z_FILES            # day-buckets per linear file
 ZPRED_CB = 37        # point predicate: customer bucket
 ZPRED_DB_LO, ZPRED_DB_HI = 96, 127  # range predicate: day buckets
+# The oracles' copy of the predicate bank ``zorder_predicates`` builds.
+ZPRED_VALUES_SQL = f"""SELECT * FROM (VALUES
+        ('cust_point', CAST({ZPRED_CB} AS BIGINT),
+         CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)),
+        ('day_range', CAST(NULL AS BIGINT),
+         CAST({ZPRED_DB_LO} AS BIGINT), CAST({ZPRED_DB_HI} AS BIGINT)),
+        ('cust_and_day', CAST({ZPRED_CB} AS BIGINT),
+         CAST({ZPRED_DB_LO} AS BIGINT), CAST({ZPRED_DB_HI} AS BIGINT))
+      ) AS t(predicate, cb_point, db_lo, db_hi)"""
+
+
+def zorder_predicates(spark: SparkSession) -> DataFrame:
+    """The predicate bank every layout contract evaluates (this one and
+    staged_r19's Hilbert comparison); a NULL bound is unconstrained."""
+    return local_frame(
+        spark,
+        [
+            ("cust_point", ZPRED_CB, None, None),
+            ("day_range", None, ZPRED_DB_LO, ZPRED_DB_HI),
+            ("cust_and_day", ZPRED_CB, ZPRED_DB_LO, ZPRED_DB_HI),
+        ],
+        "predicate string, cb_point bigint, db_lo bigint, db_hi bigint",
+    )
 
 
 def _z_expr(shift_fn: str) -> str:
@@ -4096,14 +4119,7 @@ def _zorder_oracle() -> str:
              CAST(count(*) AS BIGINT) AS nr
       FROM files GROUP BY 1, 2
     ), preds AS (
-      SELECT * FROM (VALUES
-        ('cust_point', CAST({ZPRED_CB} AS BIGINT),
-         CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)),
-        ('day_range', CAST(NULL AS BIGINT),
-         CAST({ZPRED_DB_LO} AS BIGINT), CAST({ZPRED_DB_HI} AS BIGINT)),
-        ('cust_and_day', CAST({ZPRED_CB} AS BIGINT),
-         CAST({ZPRED_DB_LO} AS BIGINT), CAST({ZPRED_DB_HI} AS BIGINT))
-      ) AS t(predicate, cb_point, db_lo, db_hi)
+      {ZPRED_VALUES_SQL}
     ), sel AS (
       SELECT 'cust_point' AS predicate,
              CAST(count(CASE WHEN cb = {ZPRED_CB} THEN 1 END) AS BIGINT)
@@ -4223,14 +4239,7 @@ def orders_zorder_skipping_contract(
         F.max("db").alias("mxdb"),
         F.count(F.lit(1)).alias("nr"),
     )
-    preds = spark.createDataFrame(
-        [
-            ("cust_point", ZPRED_CB, None, None),
-            ("day_range", None, ZPRED_DB_LO, ZPRED_DB_HI),
-            ("cust_and_day", ZPRED_CB, ZPRED_DB_LO, ZPRED_DB_HI),
-        ],
-        "predicate string, cb_point bigint, db_lo bigint, db_hi bigint",
-    )
+    preds = zorder_predicates(spark)
     in_day = F.col("db").between(ZPRED_DB_LO, ZPRED_DB_HI)
     sel = rz.agg(
         F.count(F.when(F.col("cb") == ZPRED_CB, 1))

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import arrow_table, local_frame
 from ..operators.upsert import insert_if_absent
 from ..operators.watermark import (
     MonthWindow,
@@ -108,6 +109,13 @@ class MedallionPipeline:
         cluster warehouse (s3://, hdfs://) runs."""
         return "://" not in path
 
+    def _hadoop_fs(self, path: str):
+        """(Hadoop FileSystem, Hadoop Path) for ``path``: one code path
+        for local, ``file://`` and remote warehouses."""
+        sc = self.spark.sparkContext
+        hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+        return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
+
     # -- table access -----------------------------------------------------
 
     # Class-level guard enforcing the single-threaded invariant the
@@ -163,9 +171,11 @@ class MedallionPipeline:
         ``_SUCCESS``). Every other read failure (a corrupt file, a
         permission or network error) propagates, so it can never pass
         for an empty table and reset the watermark."""
-        # Local-path existence check first: avoids Spark logging a noisy
-        # FileNotFound stacktrace for the expected first-run case.
-        if self._local(path) and not os.path.exists(path):
+        # Existence check first, for every scheme: the expected
+        # first-run case then never reaches Spark's reader, which logs a
+        # stack trace for a missing path before raising.
+        fs, hpath = self._hadoop_fs(path)
+        if not fs.exists(hpath):
             return None
         try:
             return self.spark.read.parquet(path)
@@ -339,32 +349,22 @@ class MedallionPipeline:
         runtime: float,
         error: str | None,
     ) -> None:
+        row = [(wm, status, float(runtime), error)]
         if self._local(self.meta_path):
             # driver-side metadata append: one pyarrow file write, no
             # Spark job (see current_watermark)
             import uuid
 
-            import pyarrow as pa
             import pyarrow.parquet as pq
 
             os.makedirs(self.meta_path, exist_ok=True)
-            tbl = pa.table(
-                {
-                    "last_load_date": pa.array([wm], pa.timestamp("us")),
-                    "status": pa.array([status], pa.string()),
-                    "runtime_seconds": pa.array([float(runtime)], pa.float64()),
-                    "error_message": pa.array([error], pa.string()),
-                }
-            )
             pq.write_table(
-                tbl, os.path.join(self.meta_path, f"run-{uuid.uuid4().hex}.parquet")
+                arrow_table(row, META_SCHEMA),
+                os.path.join(self.meta_path, f"run-{uuid.uuid4().hex}.parquet"),
             )
             return
-        row = [(wm, status, float(runtime), error)]
-        (
-            self.spark.createDataFrame(row, META_SCHEMA)
-            .write.mode("append")
-            .parquet(self.meta_path)
+        local_frame(self.spark, row, META_SCHEMA).write.mode("append").parquet(
+            self.meta_path
         )
 
     # -- silver / gold ----------------------------------------------------
@@ -412,7 +412,5 @@ class MedallionPipeline:
         removes the whole warehouse tree through the Hadoop FileSystem
         of its path, so local, ``file://`` and remote warehouses take
         the same code path."""
-        jvm = self.spark.sparkContext._jvm
-        path = jvm.org.apache.hadoop.fs.Path(self.cfg.warehouse)
-        fs = path.getFileSystem(self.spark.sparkContext._jsc.hadoopConfiguration())
-        fs.delete(path, True)
+        fs, hpath = self._hadoop_fs(self.cfg.warehouse)
+        fs.delete(hpath, True)

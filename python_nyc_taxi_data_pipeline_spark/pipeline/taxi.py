@@ -15,6 +15,7 @@ from datetime import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import local_frame
 from ..functions.scalars import case_decode, duration_minutes, month_name, text_to_int
 from ..operators.dedup import dedup_exact
 from ..pipeline.medallion import MedallionConfig, MedallionPipeline
@@ -85,8 +86,8 @@ def build_dims(spark: SparkSession, bronze: DataFrame) -> dict[str, DataFrame]:
         .distinct()
         .withColumn("vendor", case_decode("vendorid", VENDOR_DECODE))
     )
-    ratecode = spark.createDataFrame(RATECODE_ROWS, RATECODE_SCHEMA)
-    payment_type = spark.createDataFrame(PAYMENT_TYPE_ROWS, PAYMENT_TYPE_SCHEMA)
+    ratecode = local_frame(spark, RATECODE_ROWS, RATECODE_SCHEMA)
+    payment_type = local_frame(spark, PAYMENT_TYPE_ROWS, PAYMENT_TYPE_SCHEMA)
     return {"vendor": vendor, "ratecode": ratecode, "payment_type": payment_type}
 
 

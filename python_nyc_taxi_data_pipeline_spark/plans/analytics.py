@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load, register_views
+from ..catalog import load, local_frame, register_views
 from ..registry import register
 
 
@@ -317,7 +317,8 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     fractions = SAMPLE_FRACTIONS
     sampled = stratified_sample_raw(spark, sf_dir)
-    frac_df = spark.createDataFrame(
+    frac_df = local_frame(
+        spark,
         [(k, float(v)) for k, v in fractions.items()],
         "lang string, target_frac double",
     )

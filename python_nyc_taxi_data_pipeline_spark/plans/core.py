@@ -120,7 +120,8 @@ def monthly_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c.c_mktsegment AS segment,
            count(*) AS total_orders,
            CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
-           round(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(o.o_totalprice), 2) AS avg_order_value
+           round(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+                 / count(o.o_totalprice), 2) AS avg_order_value
     FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY 1
     ORDER BY total_orders DESC

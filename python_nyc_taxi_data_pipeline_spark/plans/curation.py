@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load
+from ..catalog import load, local_frame
 from ..llm.clusters import _clusters_oracle, docs_dup_clusters
 from ..llm.dedup import GRAMS_CTE_SQL, JACCARD_PAIRS_SQL, docs_ngram_jaccard_pairs
 from ..registry import register
@@ -133,9 +133,7 @@ def pack_by_budget(
     for pid, sub in subtotals:
         bases[pid] = acc
         acc += sub
-    base_df = spark.createDataFrame(
-        [(pid, base) for pid, base in bases.items()], "__pid int, __base long"
-    )
+    base_df = local_frame(spark, bases.items(), "__pid int, __base long")
     w = (
         Window.partitionBy("__pid")
         .orderBy(order_col)
@@ -180,7 +178,8 @@ def docs_train_test_contamination(spark: SparkSession, sf_dir: str) -> DataFrame
     deterministic md5 train/val/test split — each one is evaluation
     leakage (the test doc has a near-copy in training). Composes the
     shared Jaccard pair plan with two lookups of the per-doc split
-    label (SF-scaled, so unhinted — AQE broadcasts while they fit) (the split is derived, not stored — zero extra state)."""
+    label (SF-scaled, so unhinted — AQE broadcasts while they fit) (the
+    split is derived, not stored — zero extra state)."""
     pairs = docs_ngram_jaccard_pairs(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     hh = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)

@@ -86,7 +86,9 @@ def _ensure_loaded() -> None:
 def _load_all() -> None:
     # Imports are for their registration side effects; `all_queries()`
     # orders by name, so import order does not matter.
-    from .llm import bpe, classifier, clusters, collocations, dedup, fusion, grouped, kmeans, lm, overlap, quality, retrieval, segdedup, semdedup, similarity, spans, text  # noqa: F401
+    from .llm import bpe, classifier, clusters, collocations, dedup, fusion  # noqa: F401
+    from .llm import grouped, kmeans, lm, overlap, quality, retrieval  # noqa: F401
+    from .llm import segdedup, semdedup, similarity, spans, text  # noqa: F401
     from .llm import multimodal  # noqa: F401
 
     multimodal.register_binary_features()

@@ -114,6 +114,23 @@ def test_dup_clusters_match_union_find(spark):
     assert all(got[d] == d for d in singles)
 
 
+def test_connected_components_raises_when_max_iter_runs_out(spark):
+    """A 40-node path needs more rounds than ``max_iter=2`` allows: after
+    two rounds node 39 still holds label 37, not the component's 0, so
+    the call must raise instead of returning those labels."""
+    import pytest
+
+    from python_nyc_taxi_data_pipeline_spark.llm.clusters import connected_components
+
+    edges = spark.range(39).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    with pytest.raises(ValueError, match="did not converge"):
+        connected_components(edges, max_iter=2)
+    comp = connected_components(edges)
+    assert {r["component"] for r in comp.collect()} == {0}
+
+
 def test_knn_gemm_matches_bruteforce(spark):
     """Vectorized GEMM top-k ≡ exact baseline (tolerance for float
     summation order)."""

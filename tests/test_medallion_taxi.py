@@ -295,3 +295,18 @@ def test_uri_warehouse_empty_first_batch(spark, taxi_df, tmp_path):
     assert res.watermark == pipe.cfg.default_watermark
     assert pipe.bronze() is None
     assert pipe.silver_refresh(silver_transform) == 0
+
+
+def test_uri_warehouse_absent_table_skips_reader(spark, tmp_path, monkeypatch):
+    """Before the first batch, the tables of a ``scheme://`` warehouse
+    read as None from a FileSystem existence check alone: Spark's reader,
+    which logs a stack trace for a missing path, is never called."""
+    pipe = taxi_pipeline(spark, "file://" + str(tmp_path / "wh"))
+
+    def no_read(self):
+        raise AssertionError("spark.read called for an absent table")
+
+    monkeypatch.setattr(type(spark), "read", property(no_read))
+    assert pipe.meta() is None
+    assert pipe.invalid_records() is None
+    assert pipe.bronze() is None

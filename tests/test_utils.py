@@ -1,10 +1,17 @@
-"""Tests for sql runner, logger, skew operators, and http source."""
+"""Tests for sql runner, logger, skew operators, http source and the catalog (incl. local_frame)."""
 
 from __future__ import annotations
 
+import ast
+import datetime
+import decimal
+import inspect
+import pathlib
+
+import pytest
 from pyspark.sql import functions as F
 
-from python_nyc_taxi_data_pipeline_spark.catalog import load, register_views
+from python_nyc_taxi_data_pipeline_spark.catalog import load, local_frame, register_views
 from python_nyc_taxi_data_pipeline_spark.operators.skew import (
     replicate_broadcast_join,
     salted_count_sum,
@@ -141,3 +148,55 @@ def test_catalog_load_events_handles_nanos_and_micros(spark, tmp_path):
             "2024-01-01T00:00:00",
             "2024-01-01T01:00:00.123456",
         ], unit
+
+
+@pytest.mark.parametrize(
+    "rows, ddl",
+    [
+        ([(1, "a", 1.5), (2, None, None)], "k int, s string, d double"),
+        ([], "k int, s string"),
+        (
+            [([{"c": 1, "v": [1.0, 2.0]}, {"c": 2, "v": [3.0]}],)],
+            "cents array<struct<c:bigint,v:array<double>>>",
+        ),
+        (
+            [(decimal.Decimal("1.25"), datetime.datetime(2020, 1, 2, 3, 4, 5, 6), True)],
+            "x decimal(18,2), t timestamp_ntz, b boolean",
+        ),
+    ],
+    ids=["flat", "empty", "nested", "decimal_ntz"],
+)
+def test_local_frame_matches_list_path(spark, rows, ddl):
+    """``local_frame`` gives the list path's schema and rows, planned as a
+    ``LocalRelation`` (no Python-RDD job per action)."""
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+
+
+def test_local_frame_rejects_wrong_python_type(spark):
+    """A float in a bigint column raises, as on the list path, instead of
+    being truncated by the Arrow conversion."""
+    with pytest.raises(TypeError):
+        local_frame(spark, [(1.5,)], "k bigint")
+
+
+def test_driver_rows_enter_spark_only_through_local_frame():
+    """The package calls ``createDataFrame`` in one place: inside
+    ``catalog.local_frame``. Checked on the source, because a plan rule
+    against ``LogicalRDD`` would also flag ``localCheckpoint`` output."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "python_nyc_taxi_data_pipeline_spark"
+    calls = [
+        (path.relative_to(pkg).as_posix(), node.lineno)
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+    ]
+    src, first = inspect.getsourcelines(local_frame)
+    helper = range(first, first + len(src))
+    assert len(calls) == 1 and calls[0][0] == "catalog.py" and calls[0][1] in helper, calls

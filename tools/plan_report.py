@@ -255,47 +255,105 @@ HEADLINERS = [
     ),
     (
         "events_conversion_funnel",
-        "Windowed conversion funnel: ONE user-key Exchange + ONE Sort carry BOTH running-max windows back to back (identical partitioning/ordering, so Catalyst plans no second sort) — the naive funnel is an events-to-events self-join per step; this is one pass. The per-user rollup partial-aggregates on the already-partitioned key, the 3-row report is the one benign scalar exchange, and `stack` generates the step rows driver-free.",
+        "Windowed conversion funnel: ONE user-key Exchange + ONE Sort carry BOTH "
+        "running-max windows back to back (identical partitioning/ordering, so "
+        "Catalyst plans no second sort) — the naive funnel is an events-to-events "
+        "self-join per step; this is one pass. The per-user rollup partial-aggregates "
+        "on the already-partitioned key, the 3-row report is the one benign scalar "
+        "exchange, and `stack` generates the step rows driver-free.",
     ),
     (
         "part_blocking_pairs",
-        "Blocked sorted-neighborhood pairing: the ranked frame is checkpointed once and feeds both join sides (no double sort/split); each row explodes into SNM_WINDOW (block, rank+delta) probe keys so the neighbor pairing is an exact EQUI-join — AQE broadcasts the probe side at fixture scale and degrades to a hash-partitioned shuffle join on (block, rnk) beyond the threshold; either way no per-block theta-join (which would be quadratic per block). The similarity cut compares cross-multiplied integers.",
+        "Blocked sorted-neighborhood pairing: the ranked frame is checkpointed once "
+        "and feeds both join sides (no double sort/split); each row explodes into "
+        "SNM_WINDOW (block, rank+delta) probe keys so the neighbor pairing is an exact"
+        " EQUI-join — AQE broadcasts the probe side at fixture scale and degrades to a"
+        " hash-partitioned shuffle join on (block, rnk) beyond the threshold; either "
+        "way no per-block theta-join (which would be quadratic per block). The "
+        "similarity cut compares cross-multiplied integers.",
     ),
     (
         "docs_kneser_ney_bigrams",
-        "Kneser-Ney bigram table: the corpus is exploded ONCE into the bigram count aggregate, localCheckpointed; the context (n_prefix, n_follow_types), continuation (n_prec_types), and the final join tree all scan that ExistingRDD — bigram-type scale, never the corpus. Both enrichment sides broadcast after their word-key aggregates; the head is TakeOrderedAndProject (no global sort materialization). Stress: near-flat shuffle under 4x inflation (exponent 0.084).",
+        "Kneser-Ney bigram table: the corpus is exploded ONCE into the bigram count "
+        "aggregate, localCheckpointed; the context (n_prefix, n_follow_types), "
+        "continuation (n_prec_types), and the final join tree all scan that "
+        "ExistingRDD — bigram-type scale, never the corpus. Both enrichment sides "
+        "broadcast after their word-key aggregates; the head is TakeOrderedAndProject "
+        "(no global sort materialization). Stress: near-flat shuffle under 4x "
+        "inflation (exponent 0.084).",
     ),
     (
         "customer_k_anonymity",
-        "k-anonymity audit: ONE shuffle — the quasi-identifier hash aggregate (map-side combined). The class-size frame is QI-domain-bounded, so the threshold explode and the per-k rollup happen on dimension-table cardinalities; the per-k aggregate's Exchange moves ~4 keys.",
+        "k-anonymity audit: ONE shuffle — the quasi-identifier hash aggregate "
+        "(map-side combined). The class-size frame is QI-domain-bounded, so the "
+        "threshold explode and the per-k rollup happen on dimension-table "
+        "cardinalities; the per-k aggregate's Exchange moves ~4 keys.",
     ),
     (
         "events_interarrival_entropy",
-        "Inter-arrival entropy: one user-key Exchange+Sort for the lag window; the (user, digit-bucket) and per-user aggregates ride the same key (map-side combined, <=13 buckets/user); the terms join is user-keyed over two already-aggregated frames. Gap microseconds come from NTZ-native timestampdiff, so the plan carries no timezone-dependent expression.",
+        "Inter-arrival entropy: one user-key Exchange+Sort for the lag window; the "
+        "(user, digit-bucket) and per-user aggregates ride the same key (map-side "
+        "combined, <=13 buckets/user); the terms join is user-keyed over two "
+        "already-aggregated frames. Gap microseconds come from NTZ-native "
+        "timestampdiff, so the plan carries no timezone-dependent expression.",
     ),
     (
         "orders_rfm_segments",
-        "RFM segmentation: the RFM frame is one o_custkey hash aggregate, checkpointed for its two consumers; quintiles come from the sortless histogram cut — the (metric, bucket) histogram is DOMAIN-bounded, its cumulative is a triangular self-join on that bounded frame (no window over customers anywhere), the 12-row boundary table broadcasts into the assignment join, and scores re-aggregate on the customer key. The ref-date anchor is a 1-row broadcast; all timestamp arithmetic is NTZ (see the DST-shift note in the docstring).",
+        "RFM segmentation: the RFM frame is one o_custkey hash aggregate, checkpointed"
+        " for its two consumers; quintiles come from the sortless histogram cut — the "
+        "(metric, bucket) histogram is DOMAIN-bounded, its cumulative is a triangular "
+        "self-join on that bounded frame (no window over customers anywhere), the "
+        "12-row boundary table broadcasts into the assignment join, and scores "
+        "re-aggregate on the customer key. The ref-date anchor is a 1-row broadcast; "
+        "all timestamp arithmetic is NTZ (see the DST-shift note in the docstring).",
     ),
     (
         "orders_benford_audit",
-        "Benford audit: the single parquet scan lives under the 9-row `obs` localCheckpoint (the un-checkpointed plan replayed it 4x through the tot/terms/chi branches — post-fix the physical plan shows ZERO parquet scans, everything downstream is 9-row ExistingRDD work); the digit frame LEFT-joins observed counts and the two scalar frames (total, chi-square sum) attach as broadcast one-row BNLJs.",
+        "Benford audit: the single parquet scan lives under the 9-row `obs` "
+        "localCheckpoint (the un-checkpointed plan replayed it 4x through the "
+        "tot/terms/chi branches — post-fix the physical plan shows ZERO parquet scans,"
+        " everything downstream is 9-row ExistingRDD work); the digit frame LEFT-joins"
+        " observed counts and the two scalar frames (total, chi-square sum) attach as "
+        "broadcast one-row BNLJs.",
     ),
     (
         "orders_column_profile",
-        "Column profile: ONE scan -> Generate (stack long form) -> two chained HashAggregates ((col, value) map-side combined, then the 6-group rollup), plus a wide 1-row native min/max HashAggregate broadcast back onto the 6-row frame. Free-form string columns carry NULL min/max by design: an exact string min/max has an immutable aggregation buffer and falls back to SortAggregate — a per-partition sort of the whole distinct frame — which the fleet sweep forbids (caught there, rewritten to this form). Every aggregate in the plan is a HashAggregate.",
+        "Column profile: ONE scan -> Generate (stack long form) -> two chained "
+        "HashAggregates ((col, value) map-side combined, then the 6-group rollup), "
+        "plus a wide 1-row native min/max HashAggregate broadcast back onto the 6-row "
+        "frame. Free-form string columns carry NULL min/max by design: an exact string"
+        " min/max has an immutable aggregation buffer and falls back to SortAggregate "
+        "— a per-partition sort of the whole distinct frame — which the fleet sweep "
+        "forbids (caught there, rewritten to this form). Every aggregate in the plan "
+        "is a HashAggregate.",
     ),
     (
         "customer_mad_outliers",
-        "MAD outlier gate: the two exact percentiles are single-reduce ObjectHashAggregates (median, then MAD over the med-broadcast deviation pass); both land as broadcast one-row frames over the final scoring scan. Exact-percentile passes are the documented scale cost; the approx_percentile swap removes them at trillion-row scale.",
+        "MAD outlier gate: the two exact percentiles are single-reduce "
+        "ObjectHashAggregates (median, then MAD over the med-broadcast deviation "
+        "pass); both land as broadcast one-row frames over the final scoring scan. "
+        "Exact-percentile passes are the documented scale cost; the approx_percentile "
+        "swap removes them at trillion-row scale.",
     ),
     (
         "nation_trade_pagerank",
-        "Weighted PageRank (driver replay): the 4-table edge aggregation — the only fact-scale job — runs at collect time; the 5 iterations replay DRIVER-side over the ≤625-row collected edge list (dimension-bounded at any corpus size — each round previously paid plan+codegen+checkpoint+2 broadcast builds of pure scheduling on 25-row frames), so the visible plan is the final createDataFrame scan only. Arithmetic replicates the removed plan op-for-op (integer sums order-free, HALF_UP shortest-repr rounding); the unrolled-CTE oracle and a pure-Python replay referee test pin it.",
+        "Weighted PageRank (driver replay): the 4-table edge aggregation — the only "
+        "fact-scale job — runs at collect time; the 5 iterations replay DRIVER-side "
+        "over the ≤625-row collected edge list (dimension-bounded at any corpus size —"
+        " each round previously paid plan+codegen+checkpoint+2 broadcast builds of "
+        "pure scheduling on 25-row frames), so the visible plan is the final "
+        "LocalTableScan of the local_frame rows only. Arithmetic replicates the removed plan op-for-op "
+        "(integer sums order-free, HALF_UP shortest-repr rounding); the unrolled-CTE "
+        "oracle and a pure-Python replay referee test pin it.",
     ),
     (
         "orders_zorder_skipping_contract",
-        "Z-order skipping contract: buckets + Morton codes are per-row integer expressions over the broadcast date anchor, pinned once by the `rz` localCheckpoint that feeds BOTH the zone-map build (stack -> (layout, file) HashAggregate, 128 groups) and the selected-row conditional aggregate; pruning evaluation is a broadcast cross of the 128-row stats frame with the 3-row predicate table.",
+        "Z-order skipping contract: buckets + Morton codes are per-row integer "
+        "expressions over the broadcast date anchor, pinned once by the `rz` "
+        "localCheckpoint that feeds BOTH the zone-map build (stack -> (layout, file) "
+        "HashAggregate, 128 groups) and the selected-row conditional aggregate; "
+        "pruning evaluation is a broadcast cross of the 128-row stats frame with the "
+        "3-row predicate table.",
     ),
     (
         "embeddings_pca_power",
