@@ -29,7 +29,7 @@ from ..registry import register
 # before round 3), so the early rounds run the plain 2-shuffle pass and
 # the jump arms only for the long-chain tail where its O(log diameter)
 # collapse actually pays (r12 interleaved A/B: always-jump vs never-jump
-# vs gate — numbers in OPTIMIZATION_r12.md).
+# vs gate — numbers in bench_archive/OPTIMIZATION_r12.md).
 CC_JUMP_AFTER = 3
 
 

@@ -100,6 +100,10 @@ class MedallionPipeline:
         self.meta_path = os.path.join(w, "meta", "runs")
         self.silver_path = os.path.join(w, "silver")
         self.gold_path = os.path.join(w, "gold")
+        # Schema of each table known to hold data, by path. A read given
+        # a schema skips the footer-inference job Spark runs for every
+        # schema-less ``spark.read.parquet`` (one per table read).
+        self._schemas: dict[str, T.StructType] = {}
 
     @staticmethod
     def _local(path: str) -> bool:
@@ -178,11 +182,36 @@ class MedallionPipeline:
         if not fs.exists(hpath):
             return None
         try:
-            return self.spark.read.parquet(path)
+            return self._read(path)
         except AnalysisException as exc:
             if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
                 return None
             raise
+
+    def _read(self, path: str) -> DataFrame:
+        """``spark.read.parquet(path)``, given the table's schema once it
+        is known. A schema is remembered only for a table that holds
+        data: a table without data files must still fail to infer, so
+        that ``_read_or_none`` reads it as absent."""
+        schema = self._schemas.get(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        df = reader.parquet(path)
+        self._schemas[path] = df.schema
+        return df
+
+    def _wrote(
+        self, path: str, df: DataFrame, rows: int, partition_cols: tuple[str, ...] = (), replace: bool = False
+    ) -> None:
+        """Remember the schema of ``df`` just written to ``path`` with
+        ``rows`` rows: an append of rows makes a table hold data, an
+        overwrite (``replace``) sets its schema anew. Partition columns
+        are left out, so a read infers their types from the directory
+        names exactly as a schema-less read does; Spark reads a given
+        file schema as nullable."""
+        if replace:
+            self._schemas.pop(path, None)
+        if rows > 0 and path not in self._schemas:
+            self._schemas[path] = T.StructType([f for f in df.schema.fields if f.name not in partition_cols])
 
     def bronze(self) -> DataFrame | None:
         return self._read_or_none(self.bronze_path)
@@ -260,6 +289,7 @@ class MedallionPipeline:
                     .parquet(self.bronze_path)
                 )
             loaded = int(obs_in.get["n"])
+            self._wrote(self.bronze_path, in_win, loaded, (self.cfg.partition_col,))
 
             # dead-letter with cross-run key dedup (U1/S8).
             existing_invalid = self.invalid_records()
@@ -275,6 +305,7 @@ class MedallionPipeline:
                 "append"
             ).parquet(self.invalid_path)
             dead = int(obs_dead.get["n"])
+            self._wrote(self.invalid_path, novel, dead)
 
             # watermark recompute FROM THE TARGET, bounded to the window (I4).
             # The month window maps 1:1 onto the load_month partition, so
@@ -397,11 +428,14 @@ class MedallionPipeline:
         )
         if partition_col:
             writer = writer.partitionBy(partition_col)
-        writer.parquet(os.path.join(self.silver_path, name))
-        return int(obs.get["n"])
+        path = os.path.join(self.silver_path, name)
+        writer.parquet(path)
+        rows = int(obs.get["n"])
+        self._wrote(path, out, rows, (partition_col,) if partition_col else (), replace=True)
+        return rows
 
     def read_silver(self, name: str = "fact") -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.silver_path, name))
+        return self._read(os.path.join(self.silver_path, name))
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -414,3 +448,4 @@ class MedallionPipeline:
         the same code path."""
         fs, hpath = self._hadoop_fs(self.cfg.warehouse)
         fs.delete(hpath, True)
+        self._schemas.clear()

@@ -310,3 +310,134 @@ def test_uri_warehouse_absent_table_skips_reader(spark, tmp_path, monkeypatch):
     assert pipe.meta() is None
     assert pipe.invalid_records() is None
     assert pipe.bronze() is None
+
+
+def _lazy_gold_views(silver, dims, padded_month):
+    """The gold views as the per-view lazy DataFrames they were before
+    ``create_gold_views`` computed them in one pass: the referee for its
+    rows, order and schema."""
+    from python_nyc_taxi_data_pipeline_spark.functions.scalars import month_name
+
+    yt = silver
+    vendor = (
+        yt.join(F.broadcast(dims["vendor"]), "vendorid", "left")
+        .groupBy("vendor")
+        .agg(
+            F.count(F.lit(1)).alias("total_trips"),
+            F.sum("total_amount").cast("double").alias("total_revenue"),
+            F.round(F.avg(F.col("minute_duration")), 2).alias("avg_duration_minutes"),
+        )
+        .orderBy(F.desc("total_revenue"))
+    )
+    monthly = (
+        yt.groupBy(
+            F.date_trunc("month", "tpep_pickup_datetime").alias("month_start"),
+            month_name("tpep_pickup_datetime", padded=padded_month).alias("month"),
+        )
+        .agg(
+            F.count(F.lit(1)).alias("total_rides"),
+            F.round(F.avg("trip_distance"), 2).alias("avg_trip_distance"),
+            F.round(F.avg("minute_duration"), 2).alias("avg_duration_minutes"),
+        )
+        .orderBy(F.desc("total_rides"))
+    )
+    pt_dim = dims["payment_type"]
+    payment = (
+        yt.join(F.broadcast(pt_dim), yt.payment_type == pt_dim.payment_type_id, "left")
+        .groupBy(pt_dim["payment_type"].alias("payment_type_name"))
+        .agg(
+            F.count(F.lit(1)).alias("total_trip_by_payment"),
+            F.round(F.avg("total_amount"), 2).alias("avg_amount"),
+        )
+        .orderBy(F.desc("total_trip_by_payment"))
+    )
+    return {
+        "gold_vendor_metrics": (vendor, "total_revenue"),
+        "gold_monthly_metrics": (monthly, "total_rides"),
+        "gold_payment_metrics": (payment, "total_trip_by_payment"),
+    }
+
+
+@pytest.mark.parametrize("padded_month", [False, True], ids=["unpadded", "padded"])
+def test_gold_views_equal_lazy_per_view_frames(spark, taxi_df, padded_month):
+    """The one-pass gold views hold the rows, the order (where the sort
+    key is distinct) and the schema of the per-view lazy frames."""
+    silver = silver_transform(taxi_df)
+    dims = build_dims(spark, taxi_df)
+    create_gold_views(spark, silver, dims, padded_month=padded_month)
+    for view, (lazy, key) in _lazy_gold_views(silver, dims, padded_month).items():
+        got_df = spark.table(view)
+        assert got_df.schema == lazy.schema, view
+        got, want = got_df.collect(), lazy.collect()
+        assert sorted(got, key=repr) == sorted(want, key=repr), view
+        keys = [r[key] for r in want]
+        if len(set(keys)) == len(keys):
+            assert got == want, view
+        else:
+            assert [r[key] for r in got] == keys, view
+
+
+def _jobs_run(spark, action) -> int:
+    """Spark jobs started by ``action()``, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_gold_reads_run_no_spark_job(spark, taxi_df):
+    silver = silver_transform(taxi_df)
+    dims = build_dims(spark, taxi_df)
+    create_gold_views(spark, silver, dims)
+    assert _jobs_run(spark, lambda: silver.count()) > 0  # the probe counts jobs
+    for view in ("gold_vendor_metrics", "gold_monthly_metrics", "gold_payment_metrics"):
+        assert _jobs_run(spark, lambda: spark.sql(f"SELECT * FROM {view}").collect()) == 0, view
+
+
+def _first_batch_warehouse(spark, taxi_df, warehouse):
+    """A pipeline after one batch (with 7 dead-lettered strays) and a
+    silver refresh."""
+    pipe = taxi_pipeline(spark, warehouse)
+    strays = month_batch(taxi_df, 2).orderBy("tpep_pickup_datetime").limit(7)
+    res = pipe.ingest_batch(month_batch(taxi_df, 1).union(strays), win(1))
+    assert res.loaded > 0 and res.dead_lettered == 7
+    pipe.silver_refresh(silver_transform, partition_col="pickup_month")
+    return pipe
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["local", "cluster"])
+def test_pipeline_reads_skip_schema_inference(spark, taxi_df, tmp_path, scheme):
+    """After the first batch, the bronze, dead-letter and silver reads
+    run no Spark job (no footer-inference job) and give the schema a
+    plain ``spark.read.parquet`` infers."""
+    pipe = _first_batch_warehouse(spark, taxi_df, scheme + str(tmp_path / "wh"))
+    silver_path = pipe.silver_path + "/fact"
+    for read, path in (
+        (pipe.bronze, pipe.bronze_path),
+        (pipe.invalid_records, pipe.invalid_path),
+        (pipe.read_silver, silver_path),
+    ):
+        frames = []
+        assert _jobs_run(spark, lambda: frames.append(read())) == 0, path
+        assert frames[0].schema == spark.read.parquet(path).schema, path
+        # a second read goes through the schema taken from the first
+        assert _jobs_run(spark, read) == 0, path
+        assert read().schema == frames[0].schema, path
+
+
+def test_fresh_pipeline_reads_equal_rows(spark, taxi_df, tmp_path):
+    """A new pipeline object on the same warehouse, which has no schema
+    remembered, reads the same rows and schemas."""
+    warehouse = str(tmp_path / "wh")
+    pipe = _first_batch_warehouse(spark, taxi_df, warehouse)
+    fresh = taxi_pipeline(spark, warehouse)
+    for name in ("bronze", "invalid_records", "read_silver"):
+        old_df, new_df = getattr(pipe, name)(), getattr(fresh, name)()
+        assert old_df.schema == new_df.schema, name
+        assert sorted(old_df.collect(), key=repr) == sorted(new_df.collect(), key=repr), name

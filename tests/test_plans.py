@@ -400,3 +400,29 @@ def test_hybrid_rrf_dense_stage_broadcasts_anchor_block(built):
     # the corpus is scanned exactly 3 times by construction (dense
     # candidates, anchor semi-probe, anchor vector fetch) — never more
     assert p.count("embeddings.parquet") <= 3
+
+
+def test_plan_report_normalizes_run_dependent_numbers():
+    """PLANS.md is diffable: two runs of one plan that differ only in
+    expression, exchange and RDD ids, JVM hash codes and the session's
+    partition count normalize to the same text; a partition count set
+    in code stays."""
+    from tools.plan_report import normalize_plan
+
+    def plan(ids, parts):
+        a, b, p, r = ids
+        return (
+            f"Arguments: hashpartitioning(k#{a}, md5(t#{b}), {parts}), ENSURE_REQUIREMENTS, [plan_id={p}]\n"
+            f"Arguments: RoundRobinPartitioning({parts}), REPARTITION_BY_NUM, [plan_id={p + 1}]\n"
+            f"Arguments: rangepartitioning(t#{b} DESC NULLS LAST, 200), MapPartitionsRDD[{r}], "
+            f"explode(UnsafeArrayData@{r:08x}), count#{a}L"
+        )
+
+    one = normalize_plan(plan((4, 9, 25, 34), 32), {32})
+    assert one == normalize_plan(plan((812, 77, 3, 1290), 4), {4})
+    assert one == (
+        "Arguments: hashpartitioning(k#1, md5(t#2), <n>), ENSURE_REQUIREMENTS, [plan_id=1]\n"
+        "Arguments: RoundRobinPartitioning(<n>), REPARTITION_BY_NUM, [plan_id=2]\n"
+        "Arguments: rangepartitioning(t#2 DESC NULLS LAST, 200), MapPartitionsRDD[1], "
+        "explode(UnsafeArrayData@…), count#1L"
+    )

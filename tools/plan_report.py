@@ -522,16 +522,62 @@ def tripwire(prev: dict[str, Counter], new: dict[str, Counter]) -> list[str]:
     return hits
 
 
+# Numbers in a plan's text that change from run to run or host to host
+# without the plan changing: expression ids (``l_quantity#4``, ``count#64L``),
+# exchange ids (``plan_id=25``), RDD ids of checkpointed frames
+# (``MapPartitionsRDD[34]``) and JVM object hash codes (``@582dcbb3``).
+_RUN_IDS = (
+    re.compile(r"(?<=#)\d+"),
+    re.compile(r"(?<=plan_id=)\d+"),
+    re.compile(r"(?<=RDD\[)\d+(?=\])"),
+)
+_HASH_CODE = re.compile(r"@[0-9a-f]{6,8}\b")
+_PARTITIONING = re.compile(r"(?:RoundRobinPartitioning|hashpartitioning|rangepartitioning)\(")
+
+
+def _renumber(pattern: re.Pattern, text: str) -> str:
+    """Replace each distinct match with its rank of first appearance."""
+    seen: dict[str, int] = {}
+    return pattern.sub(lambda m: str(seen.setdefault(m.group(0), len(seen) + 1)), text)
+
+
+def _unpin_partitions(text: str, counts: set[int]) -> str:
+    """Write a partitioning's partition count as ``<n>`` when it is the
+    session's (shuffle partitions or default parallelism, which follow
+    the host's core count); counts set in code stay."""
+    out, pos = [], 0
+    for m in _PARTITIONING.finditer(text):
+        depth, i = 1, m.end()
+        while depth and i < len(text):
+            depth += {"(": 1, ")": -1}.get(text[i], 0)
+            i += 1
+        head, last = re.fullmatch(r"(.*?)(\d*)", text[m.start():i - 1], re.S).groups()
+        if last and head.endswith(("(", ", ")) and int(last) in counts:
+            out += [text[pos:m.start()], head, "<n>)"]
+            pos = i
+    return "".join(out) + text[pos:]
+
+
+def normalize_plan(plan: str, counts: set[int]) -> str:
+    """``plan`` with its run-dependent ids renumbered in order of first
+    appearance, JVM hash codes blanked and the session's partition count
+    written as ``<n>``, so two runs of an unchanged plan print the same
+    text on any host and a diff of PLANS.md shows only plan changes."""
+    for pattern in _RUN_IDS:
+        plan = _renumber(pattern, plan)
+    return _unpin_partitions(_HASH_CODE.sub("@…", plan), counts)
+
+
 def build_plans(spark) -> dict[str, str]:
     from python_nyc_taxi_data_pipeline_spark.registry import all_queries
 
+    counts = {int(spark.conf.get("spark.sql.shuffle.partitions")), spark.sparkContext.defaultParallelism}
     qs = all_queries()
     plans: dict[str, str] = {}
     for name, _ in HEADLINERS:
         df = qs[name].fn(spark, SF_DIR)
-        plans[name] = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        ).rstrip()
+        plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        plans[name] = normalize_plan(plan.rstrip(), counts)
     return plans
 
 
@@ -573,6 +619,10 @@ def main() -> int:
         "Invariants are enforced by `tests/test_plans.py`; this file is",
         "the human-readable audit trail. Every regeneration first runs",
         "the operator-multiset tripwire against the previous snapshot.",
+        "Expression, exchange and RDD ids are renumbered per plan in order",
+        "of appearance, JVM hash codes are written `@…`, and `<n>` stands",
+        "for the session's partition count (the host's core count), so the",
+        "file reads the same from any host until a plan changes.",
         "",
     ]
     notes = dict(HEADLINERS)
