@@ -44,11 +44,12 @@ def decimal_avg(
 def case_decode(col: str | Column, mapping: dict, otherwise=None) -> Column:
     """F1 — CASE WHEN id THEN name … END decode
     (`silver_full_refresh_transformation.sql:4-9`); unmatched → NULL."""
+    if not mapping:
+        raise ValueError("case_decode needs a non-empty mapping")
     c = F.col(col) if isinstance(col, str) else col
     expr: Column | None = None
     for k, v in mapping.items():
         expr = F.when(c == k, v) if expr is None else expr.when(c == k, v)
-    assert expr is not None, "empty mapping"
     return expr.otherwise(otherwise) if otherwise is not None else expr
 
 

@@ -13,29 +13,23 @@ Scale design (100 TB corpus):
   re-derived per round from a checkpointed base (symbol arrays stay
   distributed; nothing corpus-sized ever reaches the driver).
 - Each round is: explode adjacent symbol pairs weighted by word freq
-  (projection), ONE groupBy(a, b) sum shuffle, and a 1-ROW ordered
+  (projection), ONE groupBy(a, b) sum shuffle, and a few-row ordered
   ``take`` (argmax with a deterministic ``count DESC, a, b``
   tie-break — a metadata-sized collect, not a corpus collect).
 - The chosen rule is applied with a codegen ``aggregate`` lambda (a
   left fold over the symbol array that coalesces adjacent (a, b) into
   ab) — pure JVM expression, no Python, no shuffle.
-- Lineage is truncated every round with ``localCheckpoint`` so the
-  plan does not grow O(rounds) (the same pattern as
-  ``llm.clusters.connected_components``).
-- Measured at realistic merge counts (``tools/scale_stress.py
-  --bpe-only``, vocabulary-inflated fixture so the full budget is
-  learnable): 200/200 merges on sf0.1 at ~0.19 s/round serial — fully
-  fixed-overhead-dominated once the distinct-word table is small. A
-  30k-merge production tokenizer wants top-m NON-OVERLAPPING merges
-  applied per round (the standard fast-BPE approximation) to amortize
-  the per-round job overhead: ``bpe_train_batched`` implements it
-  (measured 2.4-3.4× over serial at batch=8; batch=1 reproduces the
-  exact trainer, property-tested). ``bpe_train`` gates between the
-  two on the merge budget (serial ≤ ``BPE_BATCH_THRESHOLD``, batched
-  above) — so the REGISTERED queries (N_MERGES=6) stay on the serial
-  exact-oracle trainer while production-scale budgets default to the
-  batched path, whose intra-batch counts are intentionally stale, a
-  documented approximation.
+- Lineage is truncated with an eager ``localCheckpoint`` every 3
+  folds and at the end, so the plan does not grow O(rounds) (the same
+  pattern as ``llm.clusters.connected_components``).
+- One loop, ``bpe_train``, serves every budget. ``batch=1`` (the
+  default, and what every registered query uses) is the exact greedy
+  trainer. ``batch > 1`` applies the top-``batch`` NON-OVERLAPPING
+  pairs per round, the standard fast-BPE approximation: its picks carry
+  pre-round counts. Measured at 200 merges (``tools/scale_stress.py
+  --bpe-only``, vocabulary-inflated sf0.1 fixture): ~0.19 s a merge at
+  batch=1, fixed-overhead-dominated once the distinct-word table is
+  small, and 2.4–3.4× faster at batch=8.
 
 Cross-engine exactness: the DuckDB oracle REPLAYS the whole training
 run as chained CTEs — same char split (``regexp_extract_all(word,
@@ -55,17 +49,6 @@ from ..registry import register
 
 N_MERGES = 6
 EOW = "▁"  # end-of-word marker (SentencePiece-style block char)
-
-# ``bpe_train`` gate: merge budgets up to the threshold train with the
-# EXACT serial loop (one argmax per merge — what the chained-CTE DuckDB
-# oracles replay, so every registered query at N_MERGES=6 stays on the
-# exact path); budgets above it default to the batched top-m
-# non-overlapping trainer (batch=8, measured 2.21× at 200 merges in
-# bench_archive/BENCH_r06.json `bpe_200_merges`) — the
-# production-tokenizer path, where a 30k-merge run cannot afford one
-# shuffle+argmax per merge.
-BPE_BATCH_THRESHOLD = 16
-BPE_BATCH = 8
 
 
 def _merge_col(left: str, right: str) -> Column:
@@ -87,14 +70,10 @@ def _merge_col(left: str, right: str) -> Column:
     )
 
 
-# r12: the cross-query merge-table memo (`_MERGES_CACHE`, r8–r11) is
-# GONE. It replayed learned merges across queries within one bench
-# process, so in-suite timings of every BPE consumer after the first
-# measured replay, not training — exactly the memoised-result pattern
-# the round rules forbid (r11 VERDICT "What's wrong #4"). Every trainer
-# call now computes from the parquet fixtures; within ONE query
-# invocation the trained words frame is still shared by its own
-# consumers (that is plan reuse, not cross-run memoisation).
+# Every trainer call computes from the parquet fixtures: no merge table
+# is memoised across calls, or every BPE consumer after the first would
+# time a replay, not training. Within ONE query invocation the trained
+# words frame is still shared by its own consumers (plan reuse).
 
 
 def _base_words(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,78 +99,43 @@ def _base_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _apply_merges(
-    words: DataFrame, merges: list[tuple[int, str, str, int]]
-) -> DataFrame:
-    """Replay an already-learned merge table over the word table: a
-    chain of fold projections (no shuffle, no argmax). Lineage is
-    truncated every 8 folds so a long merge table doesn't grow the
-    plan/codegen unboundedly."""
-    for i, (_, a, b, _) in enumerate(merges, 1):
-        words = words.select("word", "freq", _merge_col(a, b).alias("syms"))
-        if i % 8 == 0 and i < len(merges):
-            words = words.localCheckpoint(eager=True)
-    return words
-
-
 def bpe_train(
     spark: SparkSession,
     sf_dir: str,
     n_merges: int = N_MERGES,
-    exact: bool | None = None,
-):
-    """Default training entrypoint — gated on the merge budget:
-    ``n_merges <= BPE_BATCH_THRESHOLD`` runs the exact serial loop
-    (``bpe_train_serial``; one argmax per merge, what the DuckDB
-    oracles replay), larger budgets run the batched top-m
-    non-overlapping trainer (``bpe_train_batched``, batch=8) — the
-    standard fast-BPE approximation production tokenizers use.
+    batch: int = 1,
+    snapshot_rounds: tuple[int, ...] = (),
+) -> tuple[list[tuple[int, str, str, int]], DataFrame, dict[int, DataFrame]]:
+    """Train up to ``n_merges`` BPE merges; returns ``(merges, words,
+    snapshots)``: the ordered merge list ``[(merge, left, right,
+    pair_count)]``, the final distinct-word segmentation frame ``(word,
+    freq, syms)`` (the vocabulary mapping ``docs_bpe_encode`` joins
+    against) and ``{m: words frame after merge m}`` for each requested
+    ``snapshot_rounds`` entry that training reached (0 = the char
+    baseline).
 
-    ``exact`` pins the path regardless of the budget gate: ``True``
-    forces the serial trainer (what an exact-replay DuckDB oracle
-    needs — pass it from any oracle-twinned caller so a future budget
-    bump can't silently cross the threshold into the approximation),
-    ``False`` forces the batched trainer, ``None`` (default) applies
-    the gate.
+    Each round runs one pair-count aggregate and one ordered ``take``,
+    then applies up to ``batch`` mutually NON-OVERLAPPING pairs (no
+    symbol in two picked pairs) in count order. ``batch=1`` is the exact
+    greedy trainer — one argmax per merge, what the DuckDB oracles
+    replay — and every registered query trains with it. ``batch > 1`` is
+    the standard fast-BPE approximation: it amortizes the per-round job
+    ~batch× but records every pick at its PRE-round count, and a merge
+    can create a pair that would have out-counted a later pick.
 
-    Returns the ordered merge list ``[(round, left, right,
-    pair_count)]`` plus the final distinct-word segmentation frame."""
-    batched = n_merges > BPE_BATCH_THRESHOLD if exact is None else not exact
-    if batched:
-        return bpe_train_batched(spark, sf_dir, n_merges, batch=BPE_BATCH)
-    return bpe_train_serial(spark, sf_dir, n_merges)
-
-
-def bpe_train_serial(
-    spark: SparkSession,
-    sf_dir: str,
-    n_merges: int = N_MERGES,
-    snapshot_rounds: tuple[int, ...] | None = None,
-):
-    """Run the EXACT distributed training loop (one pair-count shuffle
-    + argmax per merge); returns the ordered merge list
-    ``[(round, left, right, pair_count)]`` plus the final
-    distinct-word segmentation frame ``(word, freq, syms)`` — the
-    trained tokenizer's vocabulary mapping, consumed by
-    ``docs_bpe_encode``.
-
-    ``snapshot_rounds``: when given, ALSO return ``{m: words frame
-    after merge m}`` for each requested rung (round 0 = the char
-    baseline), as a third tuple element. Greedy training is
-    deterministic (argmax with a total-order tie-break), so the state
-    after m merges of one run to ``n_merges`` IS the result of training
-    to budget m — callers that need a budget curve train ONE trajectory
-    instead of one per rung (what the vocab-curve oracle already
-    replays as a single CTE chain). Snapshots are plain lazy frames:
-    consuming one replays at most the ≤2 fold projections since the
-    last checkpoint."""
+    Greedy training is deterministic, so the state after m merges of one
+    run IS the result of training to budget m: a budget curve trains one
+    trajectory and reads its snapshots. Lineage is truncated with an
+    eager ``localCheckpoint`` once 3 folds have accumulated since the
+    last pin and when the budget is reached; replaying ≤2 fold
+    projections over the pinned table is cheaper than a materialization
+    job per merge, and the plan stays bounded."""
     words = _base_words(spark, sf_dir).localCheckpoint(eager=True)
+    wanted = set(snapshot_rounds)
     snaps: dict[int, DataFrame] = {}
-    wanted = set(snapshot_rounds or ())
-    if 0 in wanted:
-        snaps[0] = words
     merges: list[tuple[int, str, str, int]] = []
-    for rnd in range(1, n_merges + 1):
+    unpinned = 0
+    while len(merges) < n_merges:
         pairs = words.select(
             "freq",
             F.explode(
@@ -204,73 +148,13 @@ def bpe_train_serial(
                 )
             ).alias("p"),
         ).select("freq", "p.a", "p.b")
+        # over-fetch so the non-overlap filter can still fill the batch
+        # after skipping conflicting pairs
         top = (
             pairs.groupBy("a", "b")
             .agg(F.sum("freq").alias("pair_count"))
             .orderBy(F.desc("pair_count"), F.asc("a"), F.asc("b"))
-            .take(1)
-        )
-        if not top:
-            break
-        a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["pair_count"])
-        merges.append((rnd, a, b, cnt))
-        words = words.select("word", "freq", _merge_col(a, b).alias("syms"))
-        # Truncate lineage every 3rd round and at the end (r11: was
-        # every round — one materialization JOB per merge; replaying
-        # <=2 fold projections over the checkpointed distinct-word
-        # table is cheaper than the job it saves, and the plan stays
-        # bounded).
-        if rnd % 3 == 0 or rnd == n_merges:
-            words = words.localCheckpoint(eager=True)
-        if rnd in wanted:
-            snaps[rnd] = words
-    if snapshot_rounds is not None:
-        return merges, words, snaps
-    return merges, words
-
-
-def bpe_train_batched(
-    spark: SparkSession,
-    sf_dir: str,
-    n_merges: int = N_MERGES,
-    batch: int = 8,
-):
-    """Batched BPE: per ROUND, take the top-``batch`` pairs by count
-    that are mutually NON-OVERLAPPING (no symbol appears in two
-    selected pairs), apply them as one fold-projection chain, recount.
-    This is the standard fast-BPE approximation (amortizes the
-    per-round shuffle + argmax job overhead ~batch×); the recorded
-    count for every pair in a batch is the PRE-batch count, which for
-    pairs after the first can be stale by the earlier merges' effect —
-    the non-overlap filter guarantees the merged OCCURRENCES never
-    interact, but a merge can still create brand-new pairs that
-    out-count a later pick. ``batch=1`` reproduces the exact serial
-    trainer merge-for-merge (property-tested). Since round 7 this is
-    the DEFAULT path for merge budgets above ``BPE_BATCH_THRESHOLD``
-    (via the ``bpe_train`` gate); the registered queries train at
-    N_MERGES=6 and therefore stay on the exact-oracle serial trainer."""
-    words = _base_words(spark, sf_dir).localCheckpoint(eager=True)
-    merges: list[tuple[int, str, str, int]] = []
-    rnd = 0
-    while len(merges) < n_merges:
-        rnd += 1
-        pairs = words.select(
-            "freq",
-            F.explode(
-                F.expr(
-                    "case when size(syms) < 2 then"
-                    " array() else transform(sequence(1, size(syms) - 1),"
-                    " i -> struct(syms[i - 1] as a, syms[i] as b)) end"
-                )
-            ).alias("p"),
-        ).select("freq", "p.a", "p.b")
-        # over-fetch so the greedy non-overlap filter can still fill the
-        # batch after skipping conflicting pairs
-        top = (
-            pairs.groupBy("a", "b")
-            .agg(F.sum("freq").alias("pair_count"))
-            .orderBy(F.desc("pair_count"), F.asc("a"), F.asc("b"))
-            .take(batch * 4)
+            .take(4 * batch)
         )
         if not top:
             break
@@ -282,13 +166,22 @@ def bpe_train_batched(
                 continue
             picked.append((a, b, int(row["pair_count"])))
             used.update((a, b, a + b))
-            if len(picked) >= min(batch, n_merges - len(merges)):
+            if len(picked) == min(batch, n_merges - len(merges)):
                 break
         for a, b, cnt in picked:
+            # the state after merge m is recorded as merge m + 1 starts,
+            # so a round's last merge is recorded after its pin
+            if len(merges) in wanted:
+                snaps[len(merges)] = words
             merges.append((len(merges) + 1, a, b, cnt))
             words = words.select("word", "freq", _merge_col(a, b).alias("syms"))
-        words = words.localCheckpoint(eager=True)
-    return merges, words
+        unpinned += len(picked)
+        if unpinned >= 3 or len(merges) == n_merges:
+            words = words.localCheckpoint(eager=True)
+            unpinned = 0
+    if len(merges) in wanted:
+        snaps[len(merges)] = words
+    return merges, words, snaps
 
 
 def _duck_merge() -> str:
@@ -357,7 +250,7 @@ def docs_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First {N_MERGES} BPE merge rules learned from the corpus: one
     row per round with the merged pair and its exact weighted count
     (see module docstring for the distributed loop)."""
-    merges, _ = bpe_train(spark, sf_dir, exact=True)
+    merges, _, _ = bpe_train(spark, sf_dir)
     return local_frame(
         spark,
         [(r, a, b, c) for r, a, b, c in merges],
@@ -422,7 +315,7 @@ def docs_bpe_fertility_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     source instead of doc: one join + one low-cardinality groupBy with
     map-side combine. Counts are exact integers; the two ratios are
     single IEEE divisions rounded to 4 dp — bit-identical cross-engine."""
-    _, vocab = bpe_train(spark, sf_dir, exact=True)
+    _, vocab, _ = bpe_train(spark, sf_dir)
     toks = load(spark, sf_dir, "documents").select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("word")
     )
@@ -461,7 +354,7 @@ def docs_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-sized table, never re-running the merge fold per occurrence).
     One groupBy(doc_id) rollup; counts are exact integers, the only
     float is one division rounded to 4 dp."""
-    _, vocab = bpe_train(spark, sf_dir, exact=True)
+    _, vocab, _ = bpe_train(spark, sf_dir)
     toks = load(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     )

@@ -20,20 +20,17 @@ Scale design (100 TB of embeddings, k clusters, d dims):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, local_frame
 from ..registry import register
+from .similarity import _as_double
 
 K_CENTROIDS = 8
 LLOYD_ITERATIONS = 3
 
 Centroid = tuple[int, list[float]]
-
-
-def _as_double(col: Column) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
 
 
 def _centroid_frame(spark: SparkSession, centroids: list[Centroid]) -> DataFrame:
@@ -127,21 +124,17 @@ def embeddings_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lloyd_iterate(
-    vectors: DataFrame,
-    centroids: list[Centroid],
-    iterations: int,
-    *,
-    return_inertia: bool = False,
-) -> list[Centroid] | tuple[list[Centroid], list[float]]:
-    """Run ``iterations`` Lloyd rounds; returns the final centroids.
-    One k·d-group aggregation shuffle per round; the per-row assignment
-    is fused into the same stage (no join back to the corpus).
+    vectors: DataFrame, centroids: list[Centroid], iterations: int
+) -> tuple[list[Centroid], list[float]]:
+    """Run ``iterations`` Lloyd rounds; returns the final centroids and
+    each round's inertia. One k·d-group aggregation shuffle per round;
+    the per-row assignment is fused into the same stage (no join back
+    to the corpus).
 
     Each round's inertia (Σ dist_sq vs that round's INPUT centroids)
     rides along in the same shuffle for free: after posexplode every
     row contributes its dist_sq to exactly d (cluster, dim) groups, so
-    Σ_groups sum(dist_sq) = d·inertia — no separate corpus pass. With
-    ``return_inertia`` the per-round list is returned too."""
+    Σ_groups sum(dist_sq) = d·inertia — no separate corpus pass."""
     inertias: list[float] = []
     for _ in range(iterations):
         sums = (
@@ -168,34 +161,7 @@ def lloyd_iterate(
             (cid, [dims[i] for i in range(len(dims))])
             for cid, dims in sorted(by_cid.items())
         ]
-    if return_inertia:
-        return centroids, inertias
-    return centroids
-
-
-def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lloyd k-means (k=8, 3 iterations, deterministic seed = lowest
-    vec_ids): returns per-cluster size and inertia. Each iteration is
-    one map-only assignment fused with one k·d-group aggregation.
-    Unregistered helper — per-cluster double means are partition-order
-    sensitive in the last ulps, so the registered query wraps this in
-    an exactly-checkable contract instead (``embeddings_kmeans``)."""
-    vectors = _load_vectors(spark, sf_dir).cache()
-    try:
-        centroids = lloyd_iterate(
-            vectors, _seed_centroids(vectors, K_CENTROIDS), LLOYD_ITERATIONS
-        )
-        final = assign_nearest(vectors, centroids)
-        return (
-            final.groupBy("cluster_id")
-            .agg(
-                F.count("*").alias("n_points"),
-                F.round(F.sum("dist_sq"), 2).alias("inertia"),
-            )
-            .orderBy("cluster_id")
-        )
-    finally:
-        vectors.unpersist(blocking=False)
+    return centroids, inertias
 
 
 @register(
@@ -217,16 +183,13 @@ def embeddings_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly one cluster; the count the oracle recomputes), cluster
     count bounded by k, and non-increasing inertia vs the seeded
     assignment. A broken assignment or update step flips a boolean and
-    fails the driver hash. Per-cluster detail stays available via
-    ``kmeans_cluster_profile`` (pytest-verified against NumPy)."""
+    fails the driver hash."""
     vectors = _load_vectors(spark, sf_dir).cache()
     try:
         seeds = _seed_centroids(vectors, K_CENTROIDS)
         # inertia_0 (vs the seeds) rides along in the first Lloyd
         # shuffle — no separate seed-assignment pass over the corpus.
-        centroids, inertias = lloyd_iterate(
-            vectors, seeds, LLOYD_ITERATIONS, return_inertia=True
-        )
+        centroids, inertias = lloyd_iterate(vectors, seeds, LLOYD_ITERATIONS)
         final = assign_nearest(vectors, centroids).agg(
             F.count("*").alias("total_points"),
             F.countDistinct("cluster_id").alias("k_used"),

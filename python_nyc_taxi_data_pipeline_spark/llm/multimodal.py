@@ -146,12 +146,6 @@ def _make_pnm_decoder():
 decode_image = _make_pnm_decoder()
 
 
-def encode_ppm(width: int, height: int, channels: int, pixels: bytes) -> bytes:
-    """Re-encode a decoded raster as binary PPM (P6) / PGM (P5)."""
-    magic = b"P6" if channels == 3 else b"P5"
-    return magic + f"\n{width} {height}\n255\n".encode() + pixels
-
-
 def fake_feature_extractor(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
     """Deterministic stand-in for decode→featurize: buckets byte values
     into a fixed-dim histogram (pure function of the payload)."""

@@ -271,7 +271,7 @@ def semdedup_ivf(
     if base is None:
         e = e.cache()
     try:
-        centroids = lloyd_iterate(e, _seed_centroids(e, k), iterations)
+        centroids, _ = lloyd_iterate(e, _seed_centroids(e, k), iterations)
         assign = (
             assign_nearest(e, centroids)
             .select(

@@ -682,7 +682,7 @@ def docs_contamination_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     from .bpe import bpe_train
     from .staged_r8 import TOKEN_NGRAM_N, _split_hh
 
-    _, vocab = bpe_train(spark, sf_dir, exact=True)
+    _, vocab, _ = bpe_train(spark, sf_dir)
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
         _split_hh(F.col("doc_id")).alias("hh"),

@@ -12,7 +12,7 @@ The operators:
   is the audit that catches it. Composes the registered cluster map
   verbatim on both engines.
 - ``docs_bpe_vocab_size_curve``: corpus tokens + fertility as a
-  function of the BPE merge budget (0/2/4/6, exact serial trainer) —
+  function of the BPE merge budget (0/2/4/6, exact trainer) —
   the compression-vs-vocab curve; the oracle replays one training
   trajectory and summarizes its intermediate word tables.
 - ``docs_image_text_alignment_contract``: cross-modal retrieval
@@ -163,7 +163,8 @@ BVC_BUDGETS = (0, 2, 4, 6)  # merge budgets; 0 = character baseline
 def _bpe_vocab_curve_oracle() -> str:
     from .bpe import N_MERGES, _bpe_oracle
 
-    assert max(BVC_BUDGETS) <= N_MERGES
+    if max(BVC_BUDGETS) > N_MERGES:
+        raise ValueError(f"BVC budget {max(BVC_BUDGETS)} exceeds N_MERGES={N_MERGES}")
     rows = "\n    UNION ALL\n    ".join(
         f"""SELECT CAST({m} AS BIGINT) AS n_merges_budget,
            CAST(count(*) AS BIGINT) AS n_distinct_words,
@@ -186,8 +187,8 @@ def docs_bpe_vocab_size_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tokenizer vocab-size design table: corpus token count and
     fertility (tokens per word, micro) as a function of the BPE merge
     budget m ∈ {BVC_BUDGETS} — m=0 is the character baseline, each
-    rung replays the EXACT serial trainer (the registered
-    ``docs_bpe_merges`` algorithm) to its budget and measures what
+    rung is the EXACT trainer (the registered ``docs_bpe_merges``
+    algorithm) at its budget and measures what
     the corpus costs to encode under that vocabulary. This is the
     curve read when sizing a vocabulary: fertility falls
     monotonically with merges, and the knee prices each additional
@@ -200,18 +201,16 @@ def docs_bpe_vocab_size_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain's intermediate word table), so merges, segmentations and
     counts are bit-identical; outputs are integer counts + micro DIV.
 
-    Scale (100 TB): training cost is the registered serial trainer's
+    Scale (100 TB): training cost is the registered exact trainer's
     (per merge: one pair-count shuffle over the DISTINCT-word frame —
     Zipf-compressed vs the corpus — and a driver argmax scalar);
     the curve adds only per-rung scalar aggregates of that frame."""
-    from .bpe import bpe_train_serial
+    from .bpe import bpe_train
 
-    # ONE training trajectory to the max budget with per-rung snapshots
-    # (r12): greedy serial training is deterministic, so the word table
-    # after m merges IS the budget-m result — the oracle already replays
-    # exactly this single CTE chain. Previously each rung retrained from
-    # scratch (0+2+4+6 = 12 merge rounds; now 6).
-    _, final_words, snaps = bpe_train_serial(
+    # One training trajectory to the max budget with per-rung snapshots:
+    # greedy training is deterministic, so the word table after m merges
+    # IS the budget-m result, the single CTE chain the oracle replays.
+    _, final_words, snaps = bpe_train(
         spark, sf_dir, n_merges=max(BVC_BUDGETS), snapshot_rounds=BVC_BUDGETS
     )
     out = None

@@ -185,7 +185,7 @@ def docs_token_space_contamination(spark: SparkSession, sf_dir: str) -> DataFram
     The held-out side is eval-sized by construction."""
     from .bpe import bpe_train
 
-    _, vocab = bpe_train(spark, sf_dir, exact=True)
+    _, vocab, _ = bpe_train(spark, sf_dir)
     from ..catalog import load_fanned
 
     # load_fanned (guide §2.5): the corpus-wide posexplode (~300 word

@@ -116,7 +116,7 @@ def docs_bpe_roundtrip_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. No per-doc re-training, no sort."""
     from .bpe import EOW, bpe_train
 
-    _, vocab = bpe_train(spark, sf_dir, exact=True)
+    _, vocab, _ = bpe_train(spark, sf_dir)
     usage = load(spark, sf_dir, "documents").select(
         "lang", F.explode(F.split("text", " ")).alias("word")
     )

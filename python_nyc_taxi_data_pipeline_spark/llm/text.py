@@ -229,19 +229,6 @@ def fingerprint_sets_of(d: DataFrame) -> DataFrame:
     )
 
 
-def fingerprint_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing document fingerprint (Schleimer et al. '03 shape):
-    8-char shingle hashes → min per sliding window of 4 → distinct
-    fingerprints. Deterministic but xxhash64-based (no DuckDB twin);
-    the registered ``docs_fingerprint`` query wraps this in an
-    oracle-checkable contract."""
-    return fingerprint_sets(spark, sf_dir).select(
-        "doc_id",
-        "n_fingerprints",
-        F.array_min("fp").alias("min_fingerprint"),
-    )
-
-
 FP_NEARDUP_OVERLAP = 0.5  # measured fixture near-dup min overlap: 1.0; random-pair max ≈ 0.4
 
 

@@ -3,8 +3,8 @@
 Re-expresses the reference's PL/pgSQL procedure
 (`/root/reference/src/sql/bronze_incremental_load.sql:1-81`) and
 orchestrator (`src/etl_pipeline_run.py:9-24`) as parquet tables + pure
-DataFrame ops. Schema-agnostic: the taxi instantiation lives in
-``pipeline.taxi``; tests drive an orders-shaped instantiation.
+DataFrame ops. Schema-agnostic: the one instantiation,
+``pipeline.taxi.taxi_pipeline``, supplies the taxi columns and keys.
 
 Semantics parity notes:
 - Watermark freshness filter is strictly `>` (re-runs pass nothing).

@@ -144,10 +144,10 @@ def create_gold_views(
 ) -> None:
     """The three gold views (`gold_aggregate_layer.sql:3-38`) as a
     snapshot of ``silver``: one grouping-sets aggregate over silver
-    joined to the broadcast dims computes all three, the driver collects
-    its rows (one per vendor, month and payment type), sorts each view as
-    its ``ORDER BY ... DESC`` does and registers it over a local
-    relation. Reading a view runs no Spark job; after a silver refresh,
+    joined to the broadcast payment-type dim computes all three, the
+    driver collects its rows (one per vendor, month and payment type),
+    sorts each view as its ``ORDER BY ... DESC`` does and registers it
+    over a local relation. Reading a view runs no Spark job; after a silver refresh,
     call this again. ``padded_month=True`` reproduces Postgres
     ``TO_CHAR('Month')`` 9-char padding (`gold_aggregate_layer.sql:17`)
     bit-for-bit; default stays the documented unpadded divergence
@@ -155,11 +155,13 @@ def create_gold_views(
     payment_type = dims["payment_type"].select(
         "payment_type_id", F.col("payment_type").alias("payment_type_name")
     )
+    # The vendor name is decoded from silver's own ids, with the decode
+    # ``build_dims`` applies to bronze's distinct ids; silver derives from
+    # bronze, so the result equals the dim join without scanning bronze.
     trips = (
-        silver.join(F.broadcast(dims["vendor"]), "vendorid", "left")
-        .join(F.broadcast(payment_type), F.col("payment_type") == F.col("payment_type_id"), "left")
+        silver.join(F.broadcast(payment_type), F.col("payment_type") == F.col("payment_type_id"), "left")
         .select(
-            "vendor",
+            case_decode("vendorid", VENDOR_DECODE).alias("vendor"),
             F.date_trunc("month", "tpep_pickup_datetime").alias("month_start"),
             month_name("tpep_pickup_datetime", padded=padded_month).alias("month"),
             "payment_type_name",

@@ -76,5 +76,6 @@ def orders_as_taxi(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFra
             ]
         ],
     )
-    assert [f.name for f in BRONZE_TAXI_SCHEMA.fields] == taxi.columns
+    if [f.name for f in BRONZE_TAXI_SCHEMA.fields] != taxi.columns:
+        raise ValueError(f"taxi columns {taxi.columns} are not in BRONZE_TAXI_SCHEMA order")
     return taxi

@@ -72,7 +72,7 @@ def test_lloyd_inertia_non_increasing(spark):
         centroids = _seed_centroids(vectors, K_CENTROIDS)
         inertias = [_inertia(vectors, centroids)]
         for _ in range(3):
-            centroids = lloyd_iterate(vectors, centroids, 1)
+            centroids, _ = lloyd_iterate(vectors, centroids, 1)
             inertias.append(_inertia(vectors, centroids))
     finally:
         vectors.unpersist(blocking=False)

@@ -1081,20 +1081,20 @@ def test_dedup_apply_best_picks_longest_member(spark):
         assert r["n_words"] == docs[expect]
 
 
-def test_bpe_merges_match_pure_python_replay(spark):
-    """Distributed BPE trainer ≡ a reference-textbook in-memory BPE on
-    the same corpus (greedy left-to-right merge, count-desc/lex
-    tie-break)."""
+def _textbook_bpe(spark, n_merges):
+    """Reference in-memory BPE on the fixture corpus (greedy
+    left-to-right merge, count-desc/lex tie-break): the merge list and
+    the final segmentation of every distinct word."""
     from collections import Counter
 
-    from python_nyc_taxi_data_pipeline_spark.llm.bpe import EOW, N_MERGES, bpe_train
+    from python_nyc_taxi_data_pipeline_spark.llm.bpe import EOW
 
     texts = [r["text"] for r in load(spark, SF_DIR, "documents").collect()]
     vocab = Counter(w for t in texts for w in t.split(" "))
     words = {w: (list(w) + [EOW], c) for w, c in vocab.items()}
 
     expected = []
-    for rnd in range(1, N_MERGES + 1):
+    for rnd in range(1, n_merges + 1):
         counts = Counter()
         for syms, c in words.values():
             for i in range(len(syms) - 1):
@@ -1111,72 +1111,45 @@ def test_bpe_merges_match_pure_python_replay(spark):
                 else:
                     out.append(s)
             words[w] = (out, c)
+    return expected, {w: syms for w, (syms, _) in words.items()}
 
-    got, vocab = bpe_train(spark, SF_DIR)
+
+def test_bpe_merges_match_pure_python_replay(spark):
+    """Distributed BPE trainer ≡ a reference-textbook in-memory BPE on
+    the same corpus (greedy left-to-right merge, count-desc/lex
+    tie-break)."""
+    from python_nyc_taxi_data_pipeline_spark.llm.bpe import N_MERGES, bpe_train
+
+    expected, final = _textbook_bpe(spark, N_MERGES)
+    got, vocab, _ = bpe_train(spark, SF_DIR)
     assert got == expected
     # the returned vocabulary mapping matches the replay's final state
-    final = {r["word"]: r["syms"] for r in vocab.collect()}
-    assert final == {w: syms for w, (syms, _) in words.items()}
+    assert {r["word"]: r["syms"] for r in vocab.collect()} == final
 
 
-def test_bpe_batched_batch1_equals_serial(spark):
-    """bpe_train_batched(batch=1) must reproduce the exact serial
-    trainer merge-for-merge — the batched form's only divergence is the
-    intra-batch stale counts, which batch=1 cannot have."""
-    from python_nyc_taxi_data_pipeline_spark.llm.bpe import (
-        N_MERGES,
-        bpe_train,
-        bpe_train_batched,
-    )
+def test_bpe_large_budget_trains_exactly(spark):
+    """A budget of 18 merges trains the exact greedy trajectory too:
+    the default ``batch=1`` holds at every budget."""
+    from python_nyc_taxi_data_pipeline_spark.llm.bpe import bpe_train
 
-    serial, _ = bpe_train(spark, SF_DIR, n_merges=N_MERGES)
-    batched, _ = bpe_train_batched(spark, SF_DIR, n_merges=N_MERGES, batch=1)
-    assert batched == serial
+    expected, final = _textbook_bpe(spark, 18)
+    got, vocab, _ = bpe_train(spark, SF_DIR, n_merges=18)
+    assert len(got) == 18
+    assert got == expected
+    assert {r["word"]: r["syms"] for r in vocab.collect()} == final
 
 
 def test_bpe_batched_final_vocab_matches_serial(spark):
-    """With batch>1 the merge ORDER may differ, but the non-overlap
-    filter keeps each batch's merges independent; on this fixture the
-    final segmentation must still be a valid full replay (spot contract:
-    same number of merges learned, all serial merges' fused symbols
-    reachable)."""
-    from python_nyc_taxi_data_pipeline_spark.llm.bpe import (
-        bpe_train,
-        bpe_train_batched,
-    )
+    """With batch>1 the merge ORDER may differ from batch=1, but the
+    non-overlap filter must still fill the whole 12-merge budget on this
+    fixture, each pick carrying a positive count."""
+    from python_nyc_taxi_data_pipeline_spark.llm.bpe import bpe_train
 
-    serial, _ = bpe_train(spark, SF_DIR, n_merges=12)
-    batched, _ = bpe_train_batched(spark, SF_DIR, n_merges=12, batch=4)
+    serial, _, _ = bpe_train(spark, SF_DIR, n_merges=12)
+    batched, _, _ = bpe_train(spark, SF_DIR, n_merges=12, batch=4)
     assert len(batched) == len(serial) == 12
     # every batched pick carries the count it was measured at — positive
     assert all(cnt > 0 for _, _, _, cnt in batched)
-
-
-def test_bpe_train_gate_dispatches_on_merge_budget(spark):
-    """The default ``bpe_train`` entrypoint gates on the merge budget:
-    ≤ BPE_BATCH_THRESHOLD trains with the exact serial loop (what the
-    registered queries' DuckDB oracles replay), above it the batched-8
-    fast-BPE path is the default (the r6 VERDICT directive). The r11
-    cross-query merge memo is gone (r12 — memoised results keyed on the
-    fixture violated the bench rules), so dispatch is observed by
-    comparing against the explicit trainers on a tiny fixture."""
-    from python_nyc_taxi_data_pipeline_spark.llm import bpe
-
-    small, _ = bpe.bpe_train(spark, SF_DIR, n_merges=2)
-    serial, _ = bpe.bpe_train_serial(spark, SF_DIR, n_merges=2)
-    assert len(small) == 2
-    assert small == serial, "small budget must train on the exact serial path"
-
-    big = bpe.BPE_BATCH_THRESHOLD + 2
-    merges, _ = bpe.bpe_train(spark, SF_DIR, n_merges=big)
-    batched, _ = bpe.bpe_train_batched(
-        spark, SF_DIR, n_merges=big, batch=bpe.BPE_BATCH
-    )
-    assert merges == batched, "large budget must train on the batched path"
-    assert 0 < len(merges) <= big
-    # the exact prefix property: the very first batched pick is the
-    # global argmax, identical to serial round 1
-    assert merges[0][1:] == small[0][1:]
 
 
 def test_bpe_train_recomputes_from_regenerated_fixture(spark, tmp_path):
@@ -1197,9 +1170,9 @@ def test_bpe_train_recomputes_from_regenerated_fixture(spark, tmp_path):
         ).write.mode("overwrite").parquet(path)
 
     write_docs("ab ab ab cd")
-    merges1, _ = bpe_train(spark, str(fixture), n_merges=2)
+    merges1, _, _ = bpe_train(spark, str(fixture), n_merges=2)
     write_docs("xy xy xy qr")  # regenerate in place: new part files
-    merges2, _ = bpe_train(spark, str(fixture), n_merges=2)
+    merges2, _, _ = bpe_train(spark, str(fixture), n_merges=2)
     assert merges1 != merges2
     assert {a for _, a, _, _ in merges2} & {"x", "q"}
 

@@ -130,9 +130,7 @@ def test_bpe_vocab_curve_laws(spark):
     # each merge round with pair_count c removes exactly c tokens
     from python_nyc_taxi_data_pipeline_spark.llm.bpe import bpe_train
 
-    merges, _ = bpe_train(
-        spark, SF_DIR, n_merges=int(got["n_merges_budget"].max()), exact=True
-    )
+    merges, _, _ = bpe_train(spark, SF_DIR, n_merges=int(got["n_merges_budget"].max()))
     counts = {m: c for (m, _, _, c) in merges}
     for lo, hi in zip(
         got.itertuples(), got.iloc[1:].itertuples()

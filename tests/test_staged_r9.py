@@ -76,7 +76,7 @@ def test_bpe_roundtrip_holds_and_ratio_replays(spark):
     assert (got["n_roundtrip_failures"] == 0).all()
     assert (got["n_symbols"] <= got["n_word_tokens"].map(lambda _: 10**18)).all()
     # Replay one language's aggregate from the raw vocab + corpus.
-    _, vocab = bpe_train(spark, SF_DIR)
+    _, vocab, _ = bpe_train(spark, SF_DIR)
     v = vocab.toPandas().set_index("word")["syms"]
     d = _pd("documents")
     lang = got["lang"].iloc[0]

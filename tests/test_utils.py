@@ -1,4 +1,5 @@
-"""Tests for sql runner, logger, skew operators, http source and the catalog (incl. local_frame)."""
+"""Tests for sql runner, logger, skew operators, http source, the catalog
+(incl. local_frame) and the package's input guards."""
 
 from __future__ import annotations
 
@@ -10,8 +11,10 @@ import pathlib
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from python_nyc_taxi_data_pipeline_spark.catalog import load, local_frame, register_views
+from python_nyc_taxi_data_pipeline_spark.functions.scalars import case_decode
 from python_nyc_taxi_data_pipeline_spark.operators.skew import (
     replicate_broadcast_join,
     salted_count_sum,
@@ -200,3 +203,39 @@ def test_driver_rows_enter_spark_only_through_local_frame():
     src, first = inspect.getsourcelines(local_frame)
     helper = range(first, first + len(src))
     assert len(calls) == 1 and calls[0][0] == "catalog.py" and calls[0][1] in helper, calls
+
+
+def test_package_has_no_assert_statements():
+    """Guards raise ``ValueError``: ``python -O`` strips ``assert``
+    statements, and a failed one says nothing about the bad input."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "python_nyc_taxi_data_pipeline_spark"
+    asserts = [
+        (path.relative_to(pkg).as_posix(), node.lineno)
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Assert)
+    ]
+    assert asserts == [], asserts
+
+
+def test_case_decode_rejects_empty_mapping(spark):
+    with pytest.raises(ValueError, match="non-empty mapping"):
+        case_decode("vendorid", {})
+
+
+def test_orders_as_taxi_rejects_columns_out_of_schema_order(spark, monkeypatch):
+    from python_nyc_taxi_data_pipeline_spark.sources import fixture_taxi
+
+    reordered = T.StructType(list(reversed(BRONZE_TAXI_SCHEMA.fields)))
+    monkeypatch.setattr(fixture_taxi, "BRONZE_TAXI_SCHEMA", reordered)
+    with pytest.raises(ValueError, match="BRONZE_TAXI_SCHEMA order"):
+        fixture_taxi.orders_as_taxi(spark, SF_DIR)
+
+
+def test_bpe_vocab_curve_rejects_budget_above_n_merges(monkeypatch):
+    from python_nyc_taxi_data_pipeline_spark.llm import staged_r14
+    from python_nyc_taxi_data_pipeline_spark.llm.bpe import N_MERGES
+
+    monkeypatch.setattr(staged_r14, "BVC_BUDGETS", (0, N_MERGES + 1))
+    with pytest.raises(ValueError, match="exceeds N_MERGES"):
+        staged_r14._bpe_vocab_curve_oracle()

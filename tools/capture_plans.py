@@ -3,8 +3,9 @@
 Usage:
     python tools/capture_plans.py OUT_DIR TAG q1 q2 ...
 
-Writes OUT_DIR/<query>_<TAG>.txt (e.g. ``plans/r12 before ...`` then
-``plans/r12 after ...``). Driver-only (no job execution). The fixture
+Writes OUT_DIR/<query>_<TAG>.txt (e.g. ``/tmp/plans before q1`` then
+``/tmp/plans after q1`` around a change; earlier rounds' dumps are in
+``bench_archive/plans/``). Driver-only (no job execution). The fixture
 directory is $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
 

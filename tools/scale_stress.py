@@ -716,32 +716,26 @@ def bpe_merge_cost(base: str, n_merges: int = 200) -> dict:
     """BPE training at a realistic merge count (stress-only; the oracle
     query proves the mechanism at N_MERGES=6), on the vocabulary-
     inflated fixture so the full merge budget is actually learnable.
-    Measures (a) the serial driver-loop cost — each round is one
-    pair-count shuffle + a 1-row take, so per-round wall time ≈ fixed
-    job-scheduling overhead once the distinct-word table is small — and
-    (b) the batched top-m non-overlapping variant (`bpe_train_batched`,
-    batch=8), quantifying what the standard fast-BPE approximation buys
-    back from that overhead."""
+    Measures (a) the exact ``batch=1`` driver-loop cost — each round is
+    one pair-count shuffle + a few-row take, so per-round wall time ≈
+    fixed job-scheduling overhead once the distinct-word table is small
+    — and (b) ``batch=8``, the top-m non-overlapping fast-BPE
+    approximation, quantifying what it buys back from that overhead."""
     from python_nyc_taxi_data_pipeline_spark.llm import bpe
     from python_nyc_taxi_data_pipeline_spark.session import get_session
 
     fixture = build_bpe_vocab_fixture(base, "/tmp/stress_bpe_vocab")
     spark = get_session("stress-bpe200")
 
-    # no merge memo to evict since r12: every trainer call recomputes
-    # from the fixture, so the two arms below are independently timed
+    # every trainer call recomputes from the fixture, so the two arms
+    # below are independently timed
     t0 = time.perf_counter()
-    # explicit serial trainer: this is the SERIAL-baseline measurement —
-    # the bpe_train gate would route a 200-merge budget to the batched
-    # path and the serial-vs-batched comparison would measure batched twice
-    merges, words = bpe.bpe_train_serial(spark, fixture, n_merges=n_merges)
+    merges, words, _ = bpe.bpe_train(spark, fixture, n_merges=n_merges)
     words.write.format("noop").mode("overwrite").save()
     total = round(time.perf_counter() - t0, 3)
 
     t0 = time.perf_counter()
-    bmerges, bwords = bpe.bpe_train_batched(
-        spark, fixture, n_merges=n_merges, batch=8
-    )
+    bmerges, bwords, _ = bpe.bpe_train(spark, fixture, n_merges=n_merges, batch=8)
     bwords.write.format("noop").mode("overwrite").save()
     btotal = round(time.perf_counter() - t0, 3)
     spark.stop()
